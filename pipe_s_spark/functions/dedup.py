@@ -671,30 +671,6 @@ def connected_components(
     ).select("v", F.coalesce("component", "r0").alias("component"))
 
 
-def tfidf_cosine_pairs(
-    sh: DataFrame,
-    n_docs: int,
-    id_col: str = "doc_id",
-    df_cap: int = 100,
-    threshold: float = 0.3,
-) -> DataFrame:
-    """IDF-weighted cosine similarity pairs over distinct-shingle sets
-    — the SPARSE-vector leg between set-overlap dedup (jaccard_pairs:
-    every shingle counts equally) and dense-embedding cosine: a shared
-    RARE shingle is strong evidence of duplication, a shared common one
-    almost none, and idf^2 weighting encodes exactly that.
-
-    Same df-capped inverted-list core as :func:`jaccard_pairs` (two
-    shuffles, narrow pair generation, fan-out <= C(df_cap, 2) per
-    shingle). Determinism: idf is quantized to integer milli-nats ONCE
-    per shingle (the text_surprisal pattern), so dot products and
-    squared norms are exact BIGINT sums — the only floats are two
-    sqrts and one division at the very end, rounded to 6.
-    """
-    inv = tfidf_inverted(sh, n_docs, id_col=id_col, df_cap=df_cap)
-    return tfidf_pairs_from_inverted(inv, threshold=threshold)
-
-
 def tfidf_inverted(
     sh: DataFrame, n_docs: int, id_col: str = "doc_id", df_cap: int = 100
 ) -> DataFrame:

@@ -116,7 +116,7 @@ def dquantiles(
     vc = src.groupBy(*keys, "_bkt", value_col).agg(F.count(F.lit(1)).alias("_c"))
     # r16 rev 2: vc feeds TWO branches (the per-bucket totals `bt` and
     # the within-bucket window), duplicating the scan+bounds+bucket+
-    # distinct subtree in the logical plan; an eager pin_small
+    # distinct subtree in the logical plan; a scale-gated eager
     # localCheckpoint was tried here to collapse it (r16 session 1) and
     # REMOVED after a full-timing interleaved A/B (construction +
     # action, the bench's exact methodology): the checkpoint

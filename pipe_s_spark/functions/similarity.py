@@ -1250,42 +1250,6 @@ def knn_graph_blocked(
     )
 
 
-def cosine_batch_kernel(
-    query_matrix: "pd.DataFrame",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-):
-    """mapInPandas kernel factory: numpy-matmul scoring of each corpus
-    partition against a driver-broadcast query matrix — the wide-corpus
-    fast path (Arrow batches in, top-k rows out)."""
-    import numpy as np
-
-    qids = query_matrix[id_col].to_numpy()
-    qm = np.stack(query_matrix[vec_col].to_numpy())
-    _nq = np.linalg.norm(qm, axis=1, keepdims=True)
-    qn = qm / np.where(_nq == 0.0, 1.0, _nq)  # zero vec -> cos 0, not NaN
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            cm = np.stack(pdf[vec_col].to_numpy())
-            _nc = np.linalg.norm(cm, axis=1, keepdims=True)
-            cn = cm / np.where(_nc == 0.0, 1.0, _nc)  # zero vec -> cos 0
-            sims = cn @ qn.T  # corpus x queries
-            for qi, qid in enumerate(qids):
-                order = sims[:, qi].argsort()[::-1][: k + 1]
-                out = pd.DataFrame(
-                    {
-                        "query_id": qid,
-                        "neighbor_id": pdf[id_col].to_numpy()[order],
-                        "cos_sim": sims[order, qi].round(6),
-                    }
-                )
-                yield out[out["neighbor_id"] != qid].head(k)
-
-    return kernel
-
-
 def multi_table_signatures(
     corpus: DataFrame,
     id_col: str = "vec_id",

@@ -34,26 +34,6 @@ from pyspark.sql import types as T
 
 OPERATIONS = ("insert", "update", "delete")
 
-#: Typed schema for a homogeneous change stream (known target table).
-#: old_row / new_row become typed structs of the target table; for
-#: multi-table streams use CHANGE_EVENT_JSON_SCHEMA instead.
-def change_event_schema(row_schema: T.StructType) -> T.StructType:
-    return T.StructType(
-        [
-            T.StructField("id", T.StringType(), False),
-            T.StructField("seq", T.LongType(), False),
-            T.StructField("db", T.StringType(), False),
-            T.StructField("table_name", T.StringType(), False),
-            T.StructField("db_time", T.LongType(), True),
-            T.StructField("event_time", T.LongType(), True),
-            T.StructField("op", T.StringType(), False),
-            T.StructField("old_row", row_schema, True),
-            T.StructField("new_row", row_schema, True),
-            T.StructField("extra", T.MapType(T.StringType(), T.StringType()), True),
-        ]
-    )
-
-
 #: Envelope for heterogeneous multi-table streams: payloads stay JSON
 #: strings until per-table fan-out applies a concrete schema.
 CHANGE_EVENT_JSON_SCHEMA = T.StructType(

@@ -53,8 +53,8 @@ def get_spark(
         # points size themselves instead (r13, pipe_s_spark.sizing):
         # compact_changelog embeds a keyed repartition from the
         # input's byte estimate, and MergeApplyTarget.apply_batch
-        # scopes this conf around its merge write — no caller conf
-        # needed.
+        # sizes its merge write's clustering exchange the same way —
+        # no caller conf needed.
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

@@ -25,13 +25,10 @@ fits:
   Spark plans ONE exchange with the aggregate running at ``n``
   partitions (verified: `Exchange hashpartitioning(..., n),
   REPARTITION_BY_NUM` directly under the agg).
-- ``scoped_initial_partitions(spark, n)`` for ACTION sites
-  (streaming.merge_apply.MergeApplyTarget.apply_batch): sets
-  ``spark.sql.adaptive.coalescePartitions.initialPartitionNum`` for
-  exactly the duration of the write and restores the prior value
-  (unset if none), so the remaining bulk shuffles (anti-join / LWW
-  window) scale too while small-epoch streams on the same session are
-  untouched the moment the scope exits.
+- ``bulk_partitions(size_of)`` as the width of an explicit exchange
+  at ACTION sites (streaming.merge_apply's bucket-clustered staged
+  write): the merge's only shuffle is that exchange, so sizing it
+  sizes the whole write with no session-conf mutation either.
 
 Small inputs are exempt by construction: sizing only engages when the
 derived count EXCEEDS the session's shuffle partitions, so streaming
@@ -45,7 +42,6 @@ from __future__ import annotations
 
 import math
 import os
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -214,28 +210,6 @@ def _scan_starved(df: DataFrame, par: int, size_of: DataFrame | None = None) -> 
     return splits < max(2, par // 2) and splits <= FAN_OUT_MAX_SPLITS
 
 
-def pin_small(df: DataFrame, *, size_of: DataFrame | None = None) -> DataFrame:
-    """Scale-gated eager ``localCheckpoint`` for MULTI-CONSUMER
-    relations (r16, guide §3.3/§5: "materialising an intermediate
-    truncates the plan"). A relation consumed by two branches of one
-    query appears TWICE in the logical plan; Catalyst optimizes both
-    copies (planning time grows with the duplication — profiled 738 ms
-    of pure driver gap on stats_median_profile's doubled
-    scan+bounds+distinct subtree) and only runtime ReusedExchange saves
-    the recompute. Checkpointing collapses every consumer to a leaf.
-
-    Gated exactly like ``fan_out`` (estimated scan splits of the
-    ``size_of`` proxy): at cluster scale this returns ``df`` unchanged
-    — no forced materialization of a data-sized intermediate enters a
-    100 TB plan, where ReusedExchange already deduplicates the physical
-    work and plan-prep time is amortized by real execution."""
-    spark = df.sparkSession
-    par = spark.sparkContext.defaultParallelism
-    if not _scan_starved(df, par, size_of=size_of):
-        return df
-    return df.localCheckpoint(eager=True)
-
-
 def kernel_parts(spark: SparkSession) -> int:
     """Fan-out width for Python-kernel (mapInPandas/mapInArrow) call
     sites: HALF the session parallelism, floor 4. Each kernel task
@@ -252,27 +226,3 @@ def session_shuffle_partitions(spark: SparkSession) -> int:
         return int(spark.conf.get("spark.sql.shuffle.partitions"))
     except Exception:  # noqa: BLE001
         return 200  # Spark's own default
-
-
-@contextmanager
-def scoped_initial_partitions(spark: SparkSession, n: int):
-    """Raise AQE's initial shuffle-partition count to ``n`` for the
-    duration of the scope and RESTORE the prior value (unset when none
-    was set — r12 advice: a hardcoded reset leaks a conf that differs
-    from the session default on non-32-core hosts). Runtime conf is
-    session-global: keep the scope tight around one action; a query
-    planned concurrently on the same session would see ``n`` as its
-    initial count, which AQE coalesces back down for small shuffles."""
-    key = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
-    try:
-        prior = spark.conf.get(key)
-    except Exception:  # noqa: BLE001 — unset
-        prior = None
-    spark.conf.set(key, str(n))
-    try:
-        yield
-    finally:
-        if prior is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prior)

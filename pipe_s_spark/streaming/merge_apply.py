@@ -13,10 +13,10 @@ pkg/output/mysql/batch/*):
   apply (batchoutput.go:164-190)      the batch; cross-batch order from
                                       sequential epochs
 - changelog compaction + multi-row -> operators.compaction.compact_changelog
-  upsert (batchmessage.go)            + merge_apply inside foreachBatch
+  upsert (batchmessage.go)            + MergeApplyTarget inside foreachBatch
 - at-least-once + idempotent SQL   -> exactly-once *effects*: epoch
-  (utils/mysql.go:197-218)            replays re-run merge_apply, which
-                                      is idempotent (upsert semantics)
+  (utils/mysql.go:197-218)            replays re-run the merge, which is
+                                      idempotent (upsert semantics)
 
 The target here is a parquet directory swapped atomically per epoch
 (no Delta in this environment); on a cluster the same foreachBatch body
@@ -32,7 +32,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from pipe_s_spark.operators.compaction import compact_changelog, merge_apply
+from pipe_s_spark.operators.compaction import compact_changelog
 
 
 def _trace(target_path: str, msg: str) -> None:
@@ -79,6 +79,37 @@ def stream_changelog_json(
     )
 
 
+def _cluster_by_bucket(
+    df: DataFrame, key_cols: Sequence[str], num_buckets: int, size_of: DataFrame
+) -> DataFrame:
+    """Repartition ``df`` (carrying its ``bucket`` column) so every task
+    holds whole (bucket, ``__salt``) slices; callers drop ``__salt``.
+    The ``partitionBy("bucket")`` writer then emits one file per bucket
+    and salt, not one per bucket each task happens to see (n_tasks x
+    num_buckets small files that the next epoch scans and rewrites; an
+    x10 bulk A/B measured 8-16 s and 2274 files vs 2-3.2 s and 130).
+    Below bulk size there is one salt and the session's partition
+    count. A bulk ``size_of`` sizes the shuffle from its estimated bytes
+    and spreads each bucket over ``n // num_buckets`` salts; the salt is
+    xxhash64-based so it is independent of the murmur3 bucket
+    (``hash(keys) % s`` is a function of ``hash(keys) % N`` whenever s
+    divides N). All rows of a key share a slice, so per-key work after
+    this exchange needs no second shuffle."""
+    from pyspark.sql import functions as F
+
+    from pipe_s_spark.sizing import bulk_partitions, session_shuffle_partitions
+
+    par = session_shuffle_partitions(df.sparkSession)
+    n = bulk_partitions(size_of)
+    bulk = n is not None and n > par
+    if not bulk:
+        n = par
+    salts = max(1, n // num_buckets) if bulk else 1
+    return df.withColumn(
+        "__salt", F.pmod(F.xxhash64(*[F.col(c) for c in key_cols]), F.lit(salts))
+    ).repartition(n, F.col("bucket"), F.col("__salt"))
+
+
 class MergeApplyTarget:
     """Key-hash-bucketed parquet upsert target: the Delta-MERGE-shaped
     alternative when no transactional table format is available.
@@ -87,8 +118,11 @@ class MergeApplyTarget:
     Per epoch only buckets containing touched keys are read, merged and
     swapped — untouched bucket directories are not rewritten (at 100 TB
     a micro-batch touches a small key set, so the rewrite is
-    O(touched-buckets), not O(table)). On a cluster the same foreachBatch
-    body targets Delta MERGE or JDBC upsert unchanged.
+    O(touched-buckets), not O(table)). Every epoch writes one file per
+    touched bucket (per salt when bulk, ``_cluster_by_bucket``), and
+    reads reuse the schema this instance last committed instead of
+    inferring it from a parquet footer each epoch. On a cluster the
+    same foreachBatch body targets Delta MERGE or JDBC upsert unchanged.
 
     One logical stream (checkpoint) owns a target: epoch ids must be
     monotonic across restarts, which Structured Streaming guarantees
@@ -160,6 +194,10 @@ class MergeApplyTarget:
         self._col_types: dict[str, T.DataType] = {
             f.name: f.dataType for f in FLAT_CHANGELOG_SCHEMA.fields
         }
+        #: (fence epoch, stored data schema) this instance last committed
+        #: or inferred. Valid only while the fence still holds that
+        #: epoch: another writer's commit may have widened the types.
+        self._schema: tuple[int, T.StructType] | None = None
 
     def _bucket(self, df: DataFrame):
         from pyspark.sql import functions as F
@@ -294,15 +332,14 @@ class MergeApplyTarget:
             # pre-rebucket bucket count must refuse, not read)
             self._recover_locked()
             self._check_layout_locked()
+            fence = self._read_fence()
         cols = self.key_cols + self.payload_cols
         if self.lww and internal:
             cols = cols + [self._SEQ, self._TOMB]
         import glob as _glob
 
-        has_data = os.path.isdir(self.path) and bool(
-            _glob.glob(os.path.join(self.path, "bucket=*", "*.parquet"))
-        )
-        if not has_data:
+        files = _glob.glob(os.path.join(self.path, "bucket=*", "*.parquet"))
+        if not files:
             # the LWW-internal seq/tomb columns are target-managed, not
             # batch columns — they get fixed types below, never lookup
             user_cols = [c for c in cols if c not in (self._SEQ, self._TOMB)]
@@ -320,7 +357,17 @@ class MergeApplyTarget:
                     T.StructField(self._TOMB, T.BooleanType()),
                 ]
             return spark.createDataFrame([], T.StructType(fields))
-        df = spark.read.option("basePath", self.path).parquet(self.path)
+        if self._schema is None or self._schema[0] != fence:
+            # infer once, from the newest file: each merge unions stored
+            # rows with the batch, so it carries the widest types (Spark
+            # infers from the first file by path, maybe an older, narrower one)
+            newest = max(files, key=os.path.getmtime)
+            self._schema = (fence, spark.read.parquet(newest).schema)
+        df = (
+            spark.read.schema(self._schema[1])
+            .option("basePath", self.path)
+            .parquet(self.path)
+        )
         if buckets is not None:
             # partition pruning: only the touched bucket dirs are scanned
             df = df.filter(F.col("bucket").isin(list(buckets)))
@@ -328,31 +375,47 @@ class MergeApplyTarget:
             df = df.filter(~F.col(self._TOMB))
         return df.select(*cols)
 
-    def _merge_lww(self, base: DataFrame, compacted: DataFrame) -> DataFrame:
-        """Highest-seq-wins merge: union stored state with the incoming
-        net effects and keep, per key, the row with the larger seq
-        (ties -> incoming, i.e. an exact replay is idempotent). One
-        shuffle on the key, same as the blind merge."""
+    def _merge(
+        self, base: DataFrame, compacted: DataFrame, size_of: DataFrame
+    ) -> DataFrame:
+        """Stored rows of the touched buckets unioned with the batch's
+        net effects, clustered by bucket, one row kept per key inside
+        each write task (the clustering is the merge's only shuffle).
+        Blind: the incoming row wins, deletes remove the key. LWW: the
+        larger seq wins (ties -> incoming, so an exact replay is
+        idempotent) and deletes stay as tombstones."""
         from pyspark.sql import functions as F
         from pyspark.sql.window import Window
 
         keys = self.key_cols
         pays = self.payload_cols
-        inc = compacted.select(
-            *keys,
-            *pays,
-            F.col("last_seq").alias(self._SEQ),
-            (F.col("net_op") == "delete").alias(self._TOMB),
-            F.lit(1).alias("__pri"),
+        tomb = (F.col("net_op") == "delete").alias(self._TOMB)
+        if self.lww:
+            inc = compacted.select(*keys, *pays, F.col("last_seq").alias(self._SEQ), tomb)
+            cur = base.select(*keys, *pays, self._SEQ, self._TOMB)
+            order = [F.desc(self._SEQ), F.desc("__pri")]
+        else:
+            inc = compacted.select(*keys, *pays, tomb)
+            cur = base.select(*keys, *pays, F.lit(False).alias(self._TOMB))
+            order = [F.desc("__pri")]
+        union = cur.withColumn("__pri", F.lit(0)).unionByName(
+            inc.withColumn("__pri", F.lit(1))
         )
-        cur = base.select(*keys, *pays, self._SEQ, self._TOMB, F.lit(0).alias("__pri"))
-        w = Window.partitionBy(*keys).orderBy(F.desc(self._SEQ), F.desc("__pri"))
-        return (
-            cur.unionByName(inc)
-            .withColumn("__rn", F.row_number().over(w))
+        clustered = _cluster_by_bucket(
+            union.withColumn("bucket", self._bucket(union)),
+            keys,
+            self.num_buckets,
+            size_of,
+        )
+        w = Window.partitionBy("bucket", "__salt", *keys).orderBy(*order)
+        merged = (
+            clustered.withColumn("__rn", F.row_number().over(w))
             .filter(F.col("__rn") == 1)
-            .drop("__rn", "__pri")
+            .drop("__rn", "__pri", "__salt")
         )
+        if self.lww:
+            return merged
+        return merged.filter(~F.col(self._TOMB)).drop(self._TOMB)
 
     #: wall-clock of the most recent apply_batch's phases (seconds) —
     #: the same attribution telemetry the index epochs carry
@@ -419,18 +482,15 @@ class MergeApplyTarget:
                     self.path,
                     f"epoch={epoch_id} START rows={rows} min_seq={agg} touched={touched}",
                 )
-            if self.lww:
-                merged = self._merge_lww(
-                    self.read_current(spark, buckets=touched, internal=True), compacted
-                )
-            else:
-                merged = merge_apply(
-                    self.read_current(spark, buckets=touched),
-                    compacted,
-                    self.key_cols,
-                    self.payload_cols,
-                )
-            merged = merged.withColumn("bucket", self._bucket(merged))
+            _t_write = _time.perf_counter()
+            # sized from THIS batch's estimated bytes, so streaming
+            # micro-batches never engage bulk sizing
+            merged = self._merge(
+                self.read_current(spark, buckets=touched, internal=True),
+                compacted,
+                size_of=batch,
+            )
+            schema = merged.drop("bucket").schema
             # stage dir is unique PER ATTEMPT, not per epoch: a zombie
             # writer and a live replay of the same epoch would otherwise
             # overwrite one stage dir concurrently and the lock winner
@@ -439,56 +499,7 @@ class MergeApplyTarget:
             import uuid
 
             stage = f"{self.path}.stage-{epoch_id}-{uuid.uuid4().hex[:8]}"
-            # data-proportional reduce parallelism for the merge's own
-            # shuffles (anti-join / LWW window): a bulk batch (backfill,
-            # initial load) must not run its merge over core-count
-            # reducers (r12 verdict #3 — the compact shuffle is already
-            # sized inside compact_changelog; this covers the join).
-            # Sized from THIS batch's estimated bytes, so streaming
-            # micro-batches never engage it and the conf is restored
-            # the moment the write returns.
-            from pipe_s_spark.sizing import (
-                bulk_partitions,
-                scoped_initial_partitions,
-                session_shuffle_partitions,
-            )
-
-            _t_write = _time.perf_counter()
-            n_bulk = bulk_partitions(batch)
-            if n_bulk is not None and n_bulk > session_shuffle_partitions(spark):
-                # bulk staged write: align tasks with output partitions
-                # BEFORE the dynamic-partition writer. Without this,
-                # every write task holds rows of up to num_buckets
-                # partition values and the writer opens num_buckets
-                # parquet writers per task (n x num_buckets small
-                # files, column buffers for each open writer, a local
-                # sort per task) — an interleaved x10 A/B measured the
-                # direct form 8-16s vs 2-3.2s salted, 2274 vs 130
-                # files (r13 verdict #4: this term, not the merge
-                # compute, was the write phase's growth). The salt is
-                # xxhash64-based so it is independent of the
-                # murmur3-derived bucket (hash(keys) % s would be a
-                # function of hash(keys) % N whenever s divides N —
-                # collapsing the fan-out to one task per bucket).
-                from pyspark.sql import functions as F
-
-                s = max(1, n_bulk // self.num_buckets)
-                staged_df = (
-                    merged.withColumn(
-                        "__salt",
-                        F.pmod(
-                            F.xxhash64(*[F.col(c) for c in self.key_cols]), F.lit(s)
-                        ),
-                    )
-                    .repartition(n_bulk, F.col("bucket"), F.col("__salt"))
-                    .drop("__salt")
-                )
-                with scoped_initial_partitions(spark, n_bulk):
-                    staged_df.write.mode("overwrite").partitionBy("bucket").parquet(
-                        stage
-                    )
-            else:
-                merged.write.mode("overwrite").partitionBy("bucket").parquet(stage)
+            merged.write.mode("overwrite").partitionBy("bucket").parquet(stage)
             _prof["write"] = _time.perf_counter() - _t_write
             _t_swap = _time.perf_counter()
             with self._lock():
@@ -516,6 +527,7 @@ class MergeApplyTarget:
                         os.rename(live, os.path.join(trash, f"bucket={k}"))
                     os.rename(staged, live)
                 self._write_fence(epoch_id)  # commit point
+                self._schema = (epoch_id, schema)
                 _trace(self.path, f"epoch={epoch_id} COMMIT")
                 shutil.rmtree(trash, ignore_errors=True)
             shutil.rmtree(stage, ignore_errors=True)
@@ -674,12 +686,6 @@ def rebucket_target(
         # fresh one). Reduce parallelism is data-proportional — a
         # 100 TB rebucket must not funnel through core-count reducers.
         if live_buckets:
-            from pipe_s_spark.sizing import (
-                bulk_partitions,
-                scoped_initial_partitions,
-                session_shuffle_partitions,
-            )
-
             df = (
                 spark.read.option("basePath", path)
                 .parquet(*[os.path.join(path, b) for b in live_buckets])
@@ -692,26 +698,8 @@ def rebucket_target(
                     F.lit(int(new_num_buckets)),
                 ),
             )
-            n_bulk = bulk_partitions(df)
-            if n_bulk is not None and n_bulk > session_shuffle_partitions(spark):
-                # task/partition alignment before the dynamic-partition
-                # writer, same rationale as apply_batch's bulk write
-                s = max(1, n_bulk // int(new_num_buckets))
-                df = (
-                    df.withColumn(
-                        "__salt",
-                        F.pmod(
-                            F.xxhash64(*[F.col(c) for c in disk["key_cols"]]),
-                            F.lit(s),
-                        ),
-                    )
-                    .repartition(n_bulk, F.col("bucket"), F.col("__salt"))
-                    .drop("__salt")
-                )
-                with scoped_initial_partitions(spark, n_bulk):
-                    df.write.mode("overwrite").partitionBy("bucket").parquet(stage)
-            else:
-                df.write.mode("overwrite").partitionBy("bucket").parquet(stage)
+            df = _cluster_by_bucket(df, disk["key_cols"], int(new_num_buckets), size_of=df)
+            df.drop("__salt").write.mode("overwrite").partitionBy("bucket").parquet(stage)
         else:
             os.makedirs(stage, exist_ok=True)
         trash = os.path.join(path, f".rebucket-trash-{suffix}")

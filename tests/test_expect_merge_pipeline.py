@@ -134,8 +134,11 @@ def test_committed_example_config_parses_and_runs(spark, tmp_path, monkeypatch):
     runnable: rewrite its /tmp paths into the test sandbox and execute
     it end-to-end."""
     import json
+    import os
 
-    spec = json.load(open("/root/repo/examples/expect_compact_merge.json"))
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    with open(os.path.join(repo, "examples", "expect_compact_merge.json")) as f:
+        spec = json.load(f)
 
     def rewrite(obj):
         if isinstance(obj, dict):

@@ -566,12 +566,12 @@ def test_compact_reducers_scale_with_input(spark, monkeypatch, tmp_path):
 
 
 def test_merge_apply_bulk_conf_scope_restores(spark, monkeypatch, tmp_path):
-    """apply_batch raises AQE's initialPartitionNum only for the
-    duration of a BULK batch's stage write and must restore the prior
-    state exactly (r12 advice: the old bench-tool reset hardcoded 32,
-    leaking a conf that differs from the session default on other
-    hosts). Unset before -> unset after; set before -> same value
-    after; and a small streaming-grade batch never sets it at all."""
+    """apply_batch sizes a BULK batch's write through its explicit
+    clustering exchange, so it must leave AQE's initialPartitionNum
+    exactly as it found it (r12 advice: the old bench-tool reset
+    hardcoded 32, leaking a conf that differs from the session default
+    on other hosts). Unset before -> unset after; set before -> same
+    value after; and a small streaming-grade batch leaves it unset."""
     from pipe_s_spark import sizing
     from pipe_s_spark.streaming.merge_apply import MergeApplyTarget
 
@@ -609,21 +609,12 @@ def test_merge_apply_bulk_conf_scope_restores(spark, monkeypatch, tmp_path):
     finally:
         spark.conf.unset(key)
 
-    # small batch: sizing stays out entirely (no flicker a concurrent
-    # query could observe) — bulk_partitions at the REAL target is
-    # under the session ceiling for a 100-row batch
+    # small batch: bulk_partitions at the REAL target is under the
+    # session ceiling for a 100-row batch
     monkeypatch.setattr(sizing, "BULK_TARGET_PARTITION_BYTES", 64 * 1024 * 1024)
-    seen = []
-    orig = sizing.scoped_initial_partitions
-
-    def spy(s, n):
-        seen.append(n)
-        return orig(s, n)
-
-    monkeypatch.setattr(sizing, "scoped_initial_partitions", spy)
     tgt3 = MergeApplyTarget(str(tmp_path / "t3"))
     assert tgt3.apply_batch(make_log(100), epoch_id=1)
-    assert not seen, f"streaming-grade batch engaged bulk sizing: {seen}"
+    assert conf_state() is None, "streaming-grade batch set the conf"
 
 
 def test_bulk_staged_write_is_partition_aligned(spark, monkeypatch, tmp_path):
@@ -634,7 +625,7 @@ def test_bulk_staged_write_is_partition_aligned(spark, monkeypatch, tmp_path):
     2-3s and ~130 files aligned — the term behind merge alpha 0.82).
     Guard: total parquet file count stays bounded by the (bucket,
     salt) combo count, never the task x bucket product; and the
-    merged contents are identical to a small-batch (unsalted) apply."""
+    merged contents are identical to a small-batch (single-salt) apply."""
     from pipe_s_spark import sizing
     from pipe_s_spark.sizing import bulk_partitions
     from pipe_s_spark.streaming.merge_apply import MergeApplyTarget
@@ -671,10 +662,71 @@ def test_bulk_staged_write_is_partition_aligned(spark, monkeypatch, tmp_path):
         f"(expected <= num_buckets x salt = {16 * s}): the bulk write lost "
         "its (bucket, salt) alignment and is fanning out per-task writers"
     )
-    # identical logical contents to the small-batch (unaligned) path
+    # identical logical contents to the small-batch (single-salt) path
     monkeypatch.setattr(sizing, "BULK_TARGET_PARTITION_BYTES", 64 * 1024 * 1024)
     ref = MergeApplyTarget(str(tmp_path / "ref"), num_buckets=16)
     assert ref.apply_batch(batch, epoch_id=1)
     got = {tuple(r) for r in tgt.read_current(spark).collect()}
     want = {tuple(r) for r in ref.read_current(spark).collect()}
     assert got == want and len(got) == 50_000
+
+
+def test_merge_epoch_writes_one_file_per_bucket(spark, tmp_path):
+    """Every staged write clusters its rows by bucket before the
+    ``partitionBy("bucket")`` writer, so a streaming-sized epoch writes
+    exactly one parquet file per touched bucket. Unclustered, each
+    write task emitted one file per bucket it saw (3-6 files per bucket
+    in this test), and the next epoch scanned and rewrote all of them.
+    The merge's per-key pick runs after that clustering exchange (its
+    only shuffle, no broadcast of the batch keys), and reads reuse the
+    schema the target last committed, so a steady-state epoch runs no
+    footer-inference job. Pin both: after epochs that each touch every
+    bucket, every ``bucket=K`` directory holds one file, and a
+    steady-state epoch launches no more Spark jobs than measured: 6 on
+    Spark 4.1.2 with AQE on (4 for the compaction and the touched-bucket
+    collect, 2 for the clustered write), where the unclustered write
+    with per-epoch inference took 7. The count is read through the
+    public statusTracker job-group API, as in
+    ``test_ivf_epoch_job_count_pinned``."""
+    import glob
+    import os
+
+    from pipe_s_spark.streaming.merge_apply import MergeApplyTarget
+
+    def epoch_log(e):
+        # 2000 distinct keys per epoch, overlapping the previous epoch's
+        # keys by half: inserts, updates and replacements in every bucket
+        return spark.range(2000).select(
+            (F.col("id") + e * 10_000).alias("seq"),
+            F.lit("t").alias("table_name"),
+            (F.col("id") + e * 1000).alias("pk"),
+            F.lit("insert").alias("op"),
+            F.lit(e).cast("int").alias("k"),
+            (F.col("id") * 0.5).alias("value"),
+        )
+
+    tgt = MergeApplyTarget(str(tmp_path / "t"), num_buckets=16)
+    for e in range(3):
+        assert tgt.apply_batch(epoch_log(e), epoch_id=e)
+    sc = spark.sparkContext
+    sc.setJobGroup("merge_epoch_pin", "steady-state merge epoch job-count pin")
+    try:
+        assert tgt.apply_batch(epoch_log(3), epoch_id=3)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup("merge_epoch_pin"))
+    per_bucket = {
+        b: len(glob.glob(os.path.join(tgt.path, b, "*.parquet")))
+        for b in os.listdir(tgt.path)
+        if b.startswith("bucket=")
+    }
+    assert len(per_bucket) == 16 and set(per_bucket.values()) == {1}, (
+        f"parquet files per bucket after 4 epochs: {per_bucket} — the staged "
+        "write lost its bucket clustering and fans out per-task writers"
+    )
+    assert jobs <= 6, (
+        f"steady-state merge epoch launched {jobs} Spark jobs (pinned <= 6): "
+        "a per-epoch job crept back in (schema inference? a second merge "
+        "shuffle or broadcast? extra action?)"
+    )
+    assert tgt.read_current(spark).count() == 2000 + 3 * 1000

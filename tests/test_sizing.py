@@ -60,38 +60,6 @@ def test_bulk_partitions_rule(spark):
     assert sizing.bulk_partitions(df, target_bytes=1) == sizing.BULK_MAX_PARTITIONS
 
 
-def test_scoped_initial_partitions_nested_restore(spark):
-    key = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
-
-    def state():
-        try:
-            return spark.conf.get(key)
-        except Exception:  # noqa: BLE001
-            return None
-
-    assert state() is None
-    with sizing.scoped_initial_partitions(spark, 64):
-        assert state() == "64"
-        with sizing.scoped_initial_partitions(spark, 128):
-            assert state() == "128"
-        assert state() == "64"
-    assert state() is None
-
-
-def test_scoped_initial_partitions_restores_on_error(spark):
-    key = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
-    try:
-        with sizing.scoped_initial_partitions(spark, 64):
-            raise RuntimeError("boom")
-    except RuntimeError:
-        pass
-    try:
-        val = spark.conf.get(key)
-    except Exception:  # noqa: BLE001
-        val = None
-    assert val is None
-
-
 # --- fan_out (r15) --------------------------------------------------------
 
 

@@ -156,6 +156,53 @@ def test_merge_target_rewrites_only_touched_buckets(spark, tmp_path):
     assert got[0] == 99.0 and got[5] == 5.0 and len(got) == 20
 
 
+def test_merge_target_reads_widened_schema(spark, tmp_path):
+    """Epoch 1 stores ``k`` as int; epoch 2 widens it to bigint in some
+    buckets only, leaving int files in the others. The writing instance
+    reads with the schema it committed, and a fresh instance infers
+    from the newest file: both must read back every row. Epoch 2 stays
+    out of bucket 0, whose file Spark's own footer inference would pick
+    (first by path), so an int schema would be inferred and the bigint
+    files refused. A fresh instance must also keep merging."""
+
+    def log(rows, ktype):
+        return spark.createDataFrame(
+            rows, f"seq long, table_name string, pk long, op string, k {ktype}, value double"
+        )
+
+    first = log([(i, "t", i, "insert", i, float(i)) for i in range(100)], "int")
+    bucket = {
+        r["pk"]: r["b"]
+        for r in first.select("pk", F.pmod(F.hash("table_name", "pk"), F.lit(8)).alias("b"))
+        .collect()
+    }
+    path = str(tmp_path / "t")
+    writer = MergeApplyTarget(path, num_buckets=8)
+    assert writer.apply_batch(first, 1)
+    want = {i: (i, float(i)) for i in range(100)}
+    wide = [pk for pk in range(100) if bucket[pk] != 0][:5]
+    assert len({bucket[pk] for pk in wide}) > 1
+    assert writer.apply_batch(
+        log([(1000 + pk, "t", pk, "update", (1 << 40) + pk, -1.0) for pk in wide], "bigint"),
+        2,
+    )
+    want.update({pk: ((1 << 40) + pk, -1.0) for pk in wide})
+
+    def state(t):
+        return {r["pk"]: (r["k"], r["value"]) for r in t.read_current(spark).collect()}
+
+    assert state(writer) == want
+    fresh = MergeApplyTarget(path, num_buckets=8)
+    assert state(fresh) == want
+    zero = [pk for pk in range(100) if bucket[pk] == 0][:3]
+    assert fresh.apply_batch(
+        log([(2000 + pk, "t", pk, "update", pk, 7.0) for pk in zero], "int"), 3
+    )
+    want.update({pk: (pk, 7.0) for pk in zero})
+    assert state(fresh) == want
+    assert state(MergeApplyTarget(path, num_buckets=8)) == want
+
+
 def test_merge_target_recovers_dangling_swap(spark, tmp_path):
     """A crash mid-swap (trash dir with epoch beyond the fence) must
     roll back to the fenced state, not read as an empty/partial bucket;

@@ -31,7 +31,7 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
@@ -49,9 +49,10 @@ def main() -> None:
     # Reducer sizing note (r12 verdict #3): the CDC legs used to pass
     # initialPartitionNum=256 as a bench-tool conf; that knob now lives
     # INSIDE the library (pipe_s_spark.sizing — compact_changelog
-    # embeds a keyed repartition, apply_batch scopes the AQE conf per
-    # action), so the bench runs the legs exactly as a production
-    # caller would, with no session mutation to reset afterwards.
+    # embeds a keyed repartition, apply_batch sizes its clustering
+    # shuffle from the batch), so the bench runs the legs exactly as a
+    # production caller would, with no session mutation to reset
+    # afterwards.
     spark.sparkContext.setLogLevel("ERROR")
 
     # machine-state probe (same fixed workload as bench.py): stream-leg
