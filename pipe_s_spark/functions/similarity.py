@@ -12,8 +12,9 @@
   oracle-reproducible; candidates are pairs sharing a bucket —
   an equi-join, which is the 100 TB-scalable path (the cross product
   never materializes).
-- A Pandas-UDF batch kernel (numpy matmul) is provided for wide
-  corpora where the expression fold dominates; same semantics.
+- One numpy block kernel (``_block_kernel``, run per applyInPandas
+  group) scores every blocked or grouped candidate set, for the
+  all-pairs, LSH/IVF verify and kNN-graph entries; same semantics.
 """
 
 from __future__ import annotations
@@ -105,17 +106,13 @@ def brute_force_topk(
     qid_type = queries.schema[id_col].dataType.simpleString()
     cid_type = corpus.schema[id_col].dataType.simpleString()
     q_ids = np.asarray([r["query_id"] for r in q_rows])
-    qm = np.array([r["qv"] for r in q_rows], dtype="float64")
-    _nq = np.linalg.norm(qm, axis=1, keepdims=True)
-    qm = qm / np.where(_nq == 0.0, 1.0, _nq)
+    qm = _unit_rows(np.array([r["qv"] for r in q_rows], dtype="float64"))
     kk = int(k)
 
     def local_topk(batches):
         for b in batches:
             ids = b[id_col].to_numpy()
-            m = np.stack(b["_v"].to_numpy()).astype("float64")
-            _nm = np.linalg.norm(m, axis=1, keepdims=True)
-            m = m / np.where(_nm == 0.0, 1.0, _nm)
+            m = _unit_rows(np.stack(b["_v"].to_numpy()).astype("float64"))
             # sims: nq x batch, rounded BEFORE ranking (parity with the
             # old F.round(cosine(...), 6) -> window order)
             sims = (qm @ m.T).round(6)
@@ -459,96 +456,274 @@ def ivf_cells_values_sql(n_cells: int = IVF_CELLS, dim: int = 64) -> str:
     return f"(VALUES {rows}) AS cells(cell, cv)"
 
 
+#: Decimals every cosine rounds to before it is thresholded, ranked or
+#: emitted (the oracle's ROUND(..., 6)): the rounding absorbs the
+#: last-ulp drift between matmul and sequential summation.
+ROUND_TO = 6
+
+#: Hash blocks of the exact all-pairs block-matrix join: B blocks give
+#: B * (B + 1) / 2 block-pair groups, each holding at most 2n/B rows.
+NUM_BLOCKS = 4
+
+#: Elements of one batched score matrix (~16 MB of float64): bounds
+#: worker memory however many groups share a size class.
+_BLOCK_BUDGET = 2_000_000
+
+
+def _decode(col: pd.Series, packed: bool, dtype: str):
+    """Row matrix of an array column, or of little-endian ``dtype``
+    bytes (``ndarray.tobytes()``) when ``packed``."""
+    import numpy as np
+
+    if packed:
+        return np.frombuffer(b"".join(col), dtype=dtype).reshape(len(col), -1)
+    return np.stack(col.to_numpy()).astype(dtype)
+
+
+def _unit_rows(m):
+    """Rows scaled to unit norm; a zero row stays zero, so its cosine
+    is 0.0 against everything, never NaN (NaN would rank first in a
+    desc window and last in an ascending aggregate)."""
+    import numpy as np
+
+    n = np.linalg.norm(m, axis=1, keepdims=True)
+    return m / np.where(n == 0.0, 1.0, n)
+
+
+def _cosine(packed: bool = False):
+    """Exact-cosine scorer over ``_v``: unit rows, one matmul."""
+    import numpy as np
+
+    def prepare(left, right):
+        lm = _unit_rows(_decode(left["_v"], packed, "<f8"))
+        rm = lm if right is left else _unit_rows(_decode(right["_v"], packed, "<f8"))
+        return lm, rm, lambda a, b: np.matmul(a, b.swapaxes(1, 2))
+
+    return prepare
+
+
+def _adc(m: int, k_codes: int, packed: bool, books, dim: int):
+    """ADC scorer: query LUTs (``_v``; built here from the packed int64
+    query when ``books`` is given) against member PQ codes (``_w``).
+    Scores are exact int64 sums of m LUT entries, computed as
+    ``LUT @ onehot(codes)`` when m * max|LUT| < 2^53 keeps every float64
+    partial sum an exact integer, else by an int64 gather loop."""
+    import numpy as np
+
+    books_np = _pq_books_np(books, m, k_codes) if books is not None else None
+    sub = dim // m
+
+    def gather(a, b):
+        s = np.zeros((a.shape[0], a.shape[1], b.shape[1]), dtype="int64")
+        for j in range(m):
+            s += np.take_along_axis(a, b[:, None, :, j] + j * k_codes, axis=2)
+        return s
+
+    def prepare(left, right):
+        if books_np is None:
+            lut = _decode(left["_v"], packed, "<i8")
+        else:
+            xq = _decode(left["_v"], True, "<i8")
+            lut = np.zeros((len(xq), m * k_codes), dtype="int64")
+            for j, (live, cw, _csq) in enumerate(books_np):
+                lut[:, j * k_codes + live] = _fold_dot_np(xq[:, j * sub : (j + 1) * sub], cw)
+        codes = _decode(right["_w"], False, "int64")
+        if m * (np.abs(lut).max() if lut.size else 0) >= 2**53:
+            return lut, codes, gather
+        onehot = np.zeros((len(codes), m * k_codes))
+        onehot[np.arange(len(codes))[:, None], codes + np.arange(m) * k_codes] = 1.0
+        return (
+            lut.astype("float64"),
+            onehot,
+            lambda a, b: np.matmul(a, b.swapaxes(1, 2)).astype("int64"),
+        )
+
+    return prepare
+
+
+def _threshold(thr: float):
+    """Pair emitter: id_l < id_r and round6(score) >= ``thr``. Preselects
+    unrounded at thr - 1e-6 (rounding is monotone and moves a value by
+    at most 0.5e-6), so only the survivors are rounded."""
+    import numpy as np
+
+    def emit(s, idl, idr, own):
+        w, r, c = np.nonzero(s >= thr - 1e-6)
+        v = s[w, r, c].round(ROUND_TO)
+        keep = (v >= thr) & (idl[w, r] < idr[w, c]) & own(w, r, c)
+        return w[keep], r[keep], c[keep], v[keep]
+
+    return emit
+
+
+def _topk(k: int):
+    """Per-row top-``k`` emitter under (-round6(score), neighbor_id),
+    excluding id_l == id_r. The k-th largest raw score bounds the
+    candidates (a 2e-6 margin covers rounding; int scores need none),
+    and one lexsort over all rows' survivors picks the first k."""
+    import numpy as np
+
+    def emit(s, idl, idr, own):
+        g, a, b = s.shape
+        valid = (idl[:, :, None] != idr[:, None, :]) & own(*np.ogrid[:g, :a, :b])
+        exact = s.dtype.kind == "i"
+        # finite sentinels: np.partition degrades ~80x on -inf
+        s = np.where(valid, s, -(2**62) if exact else -2.0)
+        kth = np.partition(s, b - min(k, b), axis=2)[:, :, b - min(k, b), None]
+        w, r, c = np.nonzero(valid & (s >= kth - (0 if exact else 2e-6)))
+        v = s[w, r, c] if exact else s[w, r, c].round(ROUND_TO)
+        row = w * a + r
+        o = np.lexsort((idr[w, c], -v, row))
+        o = o[np.arange(len(o)) - np.searchsorted(row[o], row[o]) < k]
+        return w[o], r[o], c[o], v[o]
+
+    return emit
+
+
+def _anyone(w, r, c):
+    """Ownership mask of groups that own all their pairs."""
+    return True
+
+
+def _owned(bl, br, g):
+    """Ownership mask of block-pair groups ``g = ba * NUM_BLOCKS + bb``
+    over the blocks ``bl``/``br`` of their left/right rows: a pair is
+    owned when its (min, max) block pair is (ba, bb). Every row of the
+    group sits in block ba or bb, so off the diagonal that means the
+    two blocks differ."""
+    diag = g // NUM_BLOCKS == g % NUM_BLOCKS
+    return lambda w, r, c: (bl[w, r] != br[w, c]) | diag[w]
+
+
+def _by_group(frame: pd.DataFrame):
+    """Row order sorting ``frame`` by (_g, _id), with the sorted frame's
+    group keys, run starts and run lengths."""
+    import numpy as np
+
+    g = frame["_g"].to_numpy()
+    order = np.lexsort((frame["_id"].to_numpy(), g))
+    g = g[order]
+    starts = np.flatnonzero(np.r_[True, g[1:] != g[:-1]])
+    return order, g[starts], starts, np.diff(np.r_[starts, len(g)])
+
+
+def _block_kernel(pdf, score, emit, names, group=None, cap=None) -> pd.DataFrame:
+    """Score the rows of one Spark group that share ``_g`` and emit
+    (left id, right id[, group], score) rows under ``names``.
+
+    ``pdf`` holds ``_g``, ``_id`` and the scorer's payload columns.
+    With a ``_role`` column, query rows ('q') meet member rows ('m');
+    without it, the rows meet each other. ``_blk`` marks block-pair
+    groups (``_g = ba * NUM_BLOCKS + bb``): such a group emits only
+    pairs whose (min, max) block pair is its own. Groups of equal
+    shape are scored as one batched matmul under ``_BLOCK_BUDGET``; a
+    group too large for it alone is scored in row chunks. ``cap`` skips
+    groups with more left rows than it."""
+    import numpy as np
+
+    roles = pdf["_role"].to_numpy() if "_role" in pdf else None
+    left, right = (pdf, pdf) if roles is None else (pdf[roles == "q"], pdf[roles == "m"])
+    parts = []
+    if len(left) and len(right):
+        lm, rm, scorer = score(left, right)
+        ol, keys, ls, ln = _by_group(left)
+        lm, idl = lm[ol], left["_id"].to_numpy()[ol]
+        if roles is None:
+            rm, idr, rs, rn = lm, idl, ls, ln
+        else:
+            orr, rkeys, rs, rn = _by_group(right)
+            rm, idr = rm[orr], right["_id"].to_numpy()[orr]
+            keys, il, ir = np.intersect1d(keys, rkeys, assume_unique=True, return_indices=True)
+            ls, ln, rs, rn = ls[il], ln[il], rs[ir], rn[ir]
+        blk = pdf["_blk"].to_numpy()[ol] if "_blk" in pdf else None
+        live = ln <= (cap if cap is not None else len(pdf))
+        d = max(lm.shape[1], rm.shape[1])
+        for a, b in np.unique(np.c_[ln, rn][live], axis=0):
+            sel = np.flatnonzero(live & (ln == a) & (rn == b))
+            if a * b <= _BLOCK_BUDGET:
+                step = max(1, _BLOCK_BUDGET // (a * max(b, d)))
+                chunks = [(sel[i : i + step], 0, a) for i in range(0, len(sel), step)]
+            else:
+                rows = max(1, _BLOCK_BUDGET // max(b, d))
+                chunks = [
+                    (sel[i : i + 1], lo, min(lo + rows, a))
+                    for i in range(len(sel))
+                    for lo in range(0, a, rows)
+                ]
+            for grp, lo, hi in chunks:
+                xl = ls[grp][:, None] + np.arange(lo, hi)
+                xr = rs[grp][:, None] + np.arange(b)
+                own = _anyone if blk is None else _owned(blk[xl], blk[xr], keys[grp])
+                w, r, c, v = emit(scorer(lm[xl], rm[xr]), idl[xl], idr[xr], own)
+                parts.append((idl[xl][w, r], idr[xr][w, c], keys[grp][w], v))
+    cols = [np.concatenate(p) for p in zip(*parts)] if parts else [np.zeros(0, "int64")] * 4
+    out = {names[0]: cols[0], names[1]: cols[1], names[2]: cols[3]}
+    if group is not None:
+        out[group] = cols[2]
+    return pd.DataFrame(out)
+
+
+def _block_pairs(corpus: DataFrame, id_col: str, vec_col: str):
+    """Each row replicated, by a narrow explode, to every block-pair
+    group ``_g = min(blk, o) * NUM_BLOCKS + max(blk, o)`` its hash block
+    ``_blk`` joins, grouped by ``_g``."""
+    blk = F.pmod(F.hash(F.col(id_col)), F.lit(NUM_BLOCKS))
+    pairs = F.transform(
+        F.sequence(F.lit(0), F.lit(NUM_BLOCKS - 1)),
+        lambda o: F.least("_blk", o) * NUM_BLOCKS + F.greatest("_blk", o),
+    )
+    rows = corpus.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"), blk.alias("_blk"))
+    return rows.withColumn("_g", F.explode(pairs)).groupBy("_g")
+
+
+def _keyed(corpus: DataFrame, group_col: str, id_col: str, vec_col: str, coarse_mod):
+    """Rows as (_g, _id, _v), grouped by ``_g``, or by ``_g % coarse_mod``
+    when given: coarse keys only change which Spark group a block lands
+    in, the kernel splits them back by ``_g``."""
+    rows = corpus.select(
+        F.col(group_col).alias("_g"), F.col(id_col).alias("_id"), F.col(vec_col).alias("_v")
+    )
+    key = F.col("_g") if coarse_mod is None else F.col("_g") % F.lit(int(coarse_mod))
+    return rows.groupBy(key.alias("_ck"))
+
+
+def _role_union(queries, members, group_col, query_id, id_col, q_payload, m_payload):
+    """Query rows (role 'q') and member rows (role 'm') in one frame,
+    grouped by ``_g``; each side's payload columns are null on the other."""
+
+    def side(df, role, ids, payload):
+        return df.select(
+            F.col(group_col).alias("_g"),
+            F.lit(role).alias("_role"),
+            F.col(ids).alias("_id"),
+            *payload,
+        )
+
+    return (
+        side(queries, "q", query_id, q_payload)
+        .unionByName(side(members, "m", id_col, m_payload), allowMissingColumns=True)
+        .groupBy("_g")
+    )
+
+
 def threshold_pairs_blocked(
     corpus: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     threshold: float = 0.45,
-    round_to: int = 6,
-    num_blocks: int = 4,
 ) -> DataFrame:
-    """All-pairs cosine >= threshold via a distributed block-matrix join.
-
-    Exact (full recall — the oracle is brute-force all-pairs), with NO
-    driver-side collect: rows are assigned to ``num_blocks`` hash blocks,
-    each row is replicated to every block-pair it participates in via a
-    NARROW explode (B copies, no join), and each (ba, bb) group computes
-    its pairs with one numpy matmul inside ``applyInPandas``. A pair is
-    emitted only by the group matching its (min-block, max-block), so
-    nothing double-counts.
-
-    Scale: total FLOPs stay O(n^2 * dim) (all-pairs is exact by
-    contract), but per-task memory is bounded by 2n/B rows — at 100 TB,
-    pick B ~ n/50k so each block fits an executor; the matmul is chunked
-    so the sims matrix never exceeds chunk x (2n/B). Replication traffic
-    is n*B rows, one shuffle. For approximate near-dup at scale, use
-    the LSH-bucket path instead (``lsh_bucket`` + exact verify).
-    """
-    import numpy as np
-
-    e = corpus.select(id_col, vec_col).withColumn(
-        "blk", F.pmod(F.hash(F.col(id_col)), F.lit(num_blocks))
-    )
-    # row in block k participates in group (min(k,o), max(k,o)) for every
-    # block o — emitted as a narrow explode, one entry per group
-    other = F.sequence(F.lit(0), F.lit(num_blocks - 1))
-    rep = e.withColumn(
-        "bp",
-        F.explode(
-            F.transform(
-                other,
-                lambda o: F.struct(
-                    F.least(F.col("blk"), o).alias("ba"),
-                    F.greatest(F.col("blk"), o).alias("bb"),
-                ),
-            )
+    """All pairs (id1 < id2) with round6(cosine) >= ``threshold``: the
+    exact brute-force contract, with no driver-side collect. Rows are
+    hashed into NUM_BLOCKS blocks and replicated to every block-pair
+    group they join (n * B rows, one shuffle); each group is scored in
+    one kernel call and emits only the pairs it owns, so nothing
+    double-counts. Per-task memory is bounded by 2n/B rows; for
+    approximate near-dup at scale, verify LSH buckets instead."""
+    return _block_pairs(corpus, id_col, vec_col).applyInPandas(
+        lambda pdf: _block_kernel(
+            pdf, _cosine(), _threshold(threshold), ("id1", "id2", "cos_sim")
         ),
-    ).select(id_col, vec_col, "blk", F.col("bp.ba").alias("ba"), F.col("bp.bb").alias("bb"))
-
-    def pairs_in_group(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        ba, bb = key
-        ids = pdf[id_col].to_numpy()
-        blks = pdf["blk"].to_numpy()
-        m = np.stack(pdf[vec_col].to_numpy()).astype("float64")
-        # zero-norm guard (here and in every cosine kernel below): a
-        # zero vector normalizes to the zero vector, so its cos_sim is
-        # 0.0 against everything — NEVER NaN. NaN scores order
-        # differently between desc(score) windows (NaN first) and
-        # ascending struct(-score) aggregates (NaN last), so they
-        # would silently change top-k membership depending on the
-        # merge strategy (r13 advice on _merge_local_topk).
-        _n = np.linalg.norm(m, axis=1, keepdims=True)
-        mn = m / np.where(_n == 0.0, 1.0, _n)
-        outs = []
-        chunk = 2048  # bounds the sims matrix at chunk x group_rows
-        for lo in range(0, len(ids), chunk):
-            sims = mn[lo : lo + chunk] @ mn.T
-            # preselect unrounded with a 1e-6 margin (round6 is monotone
-            # and moves a value by <= 0.5e-6), then apply the exact
-            # rounded threshold to only the survivors: np.round over the
-            # full matrix costs more than the matmul itself
-            r, c = np.where(sims >= threshold - 1e-6)
-            keep_exact = sims[r, c].round(round_to) >= threshold
-            r, c = r[keep_exact], c[keep_exact]
-            r_g = r + lo
-            keep = (
-                (ids[r_g] < ids[c])
-                & (np.minimum(blks[r_g], blks[c]) == ba)
-                & (np.maximum(blks[r_g], blks[c]) == bb)
-            )
-            outs.append(
-                pd.DataFrame(
-                    {
-                        "id1": ids[r_g][keep],
-                        "id2": ids[c][keep],
-                        "cos_sim": sims[r, c][keep].round(round_to),
-                    }
-                )
-            )
-        return pd.concat(outs) if outs else pd.DataFrame(columns=["id1", "id2", "cos_sim"])
-
-    return rep.groupBy("ba", "bb").applyInPandas(
-        pairs_in_group, schema="id1 long, id2 long, cos_sim double"
+        schema="id1 long, id2 long, cos_sim double",
     )
 
 
@@ -558,187 +733,31 @@ def grouped_pairs_exact(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     threshold: float = 0.45,
-    round_to: int = 6,
-    group_type: str = "int",
     coarse_mod: int | None = None,
     cap: int | None = None,
     packed: bool = False,
 ) -> DataFrame:
-    """Within-group all-pairs cosine >= threshold — the exact-verify
-    stage of any cluster/bucket blocking scheme (k-means cells, LSH
-    buckets): candidate pairs share ``group_col``, and each group is
-    scored with ONE chunked numpy matmul inside ``applyInPandas``
-    instead of a per-pair expression-tree cosine (the self-join +
-    higher-order-function form spends ~40x longer on the same 250K
-    pairs — HOF lambdas don't fuse into whole-stage codegen).
+    """Within-group pairs (id1 < id2, group, cos_sim) with round6(cosine)
+    >= ``threshold``: the exact-verify stage of any blocking scheme
+    (k-means cells, LSH buckets). Work is the sum of squared group
+    sizes; ``cap`` drops every group larger than ``cap`` rows (the
+    whole-group drop of ``dedup.cap_group_size``, without its
+    count-window shuffle).
 
-    Scale: work is sum-of-group-size^2, exactly the blocking contract;
-    cap the group size upstream (``dedup.cap_group_size``) so one task
-    is bounded by cap rows / cap^2 candidate scores, and the chunked
-    matmul keeps the sims matrix at chunk x group_rows. Emits
-    (id1 < id2, group, cos_sim) with the same preselect-then-round
-    discipline as :func:`threshold_pairs_blocked`.
+    ``coarse_mod=K`` shuffles on ``group_col % K`` (a numeric
+    non-negative key) instead of the group itself: applyInPandas pays
+    a fixed cost per Spark group, so thousands of small LSH buckets
+    cost more in overhead than in FLOPs. Output rows are identical.
 
-    ``coarse_mod``: when the grouping key is FINE (thousands of small
-    LSH buckets, vs a handful of IVF cells), applyInPandas pays a
-    fixed pandas-split + Arrow-batch cost PER GROUP (~0.5 ms each:
-    4096 sf0.1 buckets cost ~2 s of pure overhead, and multiprobe
-    multiplies group count by 1+planes). Setting ``coarse_mod=K``
-    shuffles on ``group_col % K`` instead and iterates the per-group
-    numpy logic over an in-kernel ``pdf.groupby`` (C-speed split), so
-    Spark-level group count is K regardless of bucket count. Output is
-    IDENTICAL row-for-row — the coarse key only changes work
-    placement. Requires a numeric non-negative group key.
-
-    ``cap`` (coarse path only): skip groups larger than ``cap`` rows
-    inside the kernel — the same whole-group drop as
-    ``dedup.cap_group_size``, but WITHOUT that helper's extra
-    count-window shuffle of the vector-carrying rows (a coarse group
-    contains every row of each of its fine groups, so the kernel sees
-    true group sizes). The fine path keeps using the upstream helper.
-
-    ``packed=True``: ``vec_col`` holds float64 little-endian bytes
-    (``ndarray.tobytes()``) instead of array<double>. Arrow ships a
-    binary column as one buffer + per-ROW offsets; a list<double>
-    column pays per-ELEMENT handling in the pandas<->Arrow conversion,
-    which dominates the whole verify stage once signatures are emitted
-    per (table, probe) key. The bytes roundtrip is bit-exact, so
-    cosine parity is untouched.
-    """
-    import numpy as np
-
-    out_schema = f"id1 long, id2 long, {group_col} {group_type}, cos_sim double"
-
-    def pairs_for_block(g, ids, mn) -> list[pd.DataFrame]:
-        outs = []
-        chunk = 2048  # bounds the sims matrix at chunk x group_rows
-        for lo in range(0, len(ids), chunk):
-            sims = mn[lo : lo + chunk] @ mn.T
-            r, c = np.where(sims >= threshold - 1e-6)
-            keep_exact = sims[r, c].round(round_to) >= threshold
-            r, c = r[keep_exact], c[keep_exact]
-            r_g = r + lo
-            keep = ids[r_g] < ids[c]
-            outs.append(
-                pd.DataFrame(
-                    {
-                        "id1": ids[r_g][keep],
-                        "id2": ids[c][keep],
-                        group_col: int(g),
-                        "cos_sim": sims[r, c][keep].round(round_to),
-                    }
-                )
-            )
-        return outs
-
-    def _normed(pdf: pd.DataFrame):
-        if packed:
-            m = np.frombuffer(b"".join(pdf[vec_col]), dtype="<f8").reshape(len(pdf), -1)
-        else:
-            m = np.stack(pdf[vec_col].to_numpy()).astype("float64")
-        _n = np.linalg.norm(m, axis=1, keepdims=True)
-        return m / np.where(_n == 0.0, 1.0, _n)  # zero vec -> cos 0, not NaN
-
-    empty = pd.DataFrame(columns=["id1", "id2", group_col, "cos_sim"])
-
-    if coarse_mod is None:
-        if cap is not None:
-            raise ValueError("cap is only fused on the coarse path; use cap_group_size")
-
-        def pairs_in_group(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-            (g,) = key
-            outs = pairs_for_block(g, pdf[id_col].to_numpy(), _normed(pdf))
-            return pd.concat(outs) if outs else empty
-
-        return corpus.groupBy(group_col).applyInPandas(pairs_in_group, schema=out_schema)
-
-    # r16 (verdict #5): SIZE-CLASS BATCHED coarse path, same rewrite as
-    # grouped_knn_candidates — the per-fine-group pandas split / norm /
-    # DataFrame build cost ~0.2 ms x thousands of occupancy-sized
-    # groups per partition while each matmul was microseconds (guide
-    # §4.2). One sort + one normalize per coarse partition, then every
-    # group of equal size s is one (n_groups, s, s) batched matmul +
-    # vectorized pair filter. Row-identical: the same >= threshold-1e-6
-    # preselect, round-then-compare, and id1 < id2 filter applied along
-    # a batch axis (pair content never depended on within-group row
-    # order).
-    chunk_budget = 2_000_000
-
-    def pairs_in_coarse(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        n = len(pdf)
-        if n == 0:
-            return empty
-        g = pdf[group_col].to_numpy()
-        ids = pdf[id_col].to_numpy()
-        order0 = np.lexsort((ids, g))
-        g = g[order0]
-        ids = ids[order0]
-        m = _normed(pdf.iloc[order0]) if not packed else None
-        if packed:
-            m = np.frombuffer(b"".join(pdf[vec_col]), dtype="<f8").reshape(n, -1)[
-                order0
-            ]
-            _n = np.linalg.norm(m, axis=1, keepdims=True)
-            m = m / np.where(_n == 0.0, 1.0, _n)
-        starts = np.flatnonzero(np.r_[True, g[1:] != g[:-1]])
-        sizes = np.diff(np.r_[starts, n])
-        id1s: list = []
-        id2s: list = []
-        gout: list = []
-        cout: list = []
-        big: list = []  # uncapped oversized groups -> row-chunked path
-        for s in np.unique(sizes):
-            s = int(s)
-            if s < 2 or (cap is not None and s > cap):
-                continue
-            sel = starts[sizes == s]
-            if s * s > chunk_budget:
-                # a group this size alone exceeds the batch budget
-                # (only reachable with cap=None): keep the original
-                # row-chunked per-group matmul so sims stays bounded
-                for st in sel:
-                    big.extend(
-                        pairs_for_block(g[st], ids[st : st + s], m[st : st + s])
-                    )
-                continue
-            step = max(1, chunk_budget // (s * max(s, m.shape[1])))
-            for c0 in range(0, len(sel), step):
-                blk = sel[c0 : c0 + step]
-                idx = blk[:, None] + np.arange(s)
-                b = m[idx]
-                sims = np.matmul(b, b.transpose(0, 2, 1))
-                w, r, c = np.nonzero(sims >= threshold - 1e-6)
-                if not len(w):
-                    continue
-                vals = sims[w, r, c].round(round_to)
-                bids = ids[idx]
-                keep = (vals >= threshold) & (bids[w, r] < bids[w, c])
-                if not keep.any():
-                    continue
-                id1s.append(bids[w, r][keep])
-                id2s.append(bids[w, c][keep])
-                gout.append(g[blk[w]][keep])
-                cout.append(vals[keep])
-        if not id1s and not big:
-            return empty
-        batched = (
-            [
-                pd.DataFrame(
-                    {
-                        "id1": np.concatenate(id1s),
-                        "id2": np.concatenate(id2s),
-                        group_col: np.concatenate(gout),
-                        "cos_sim": np.concatenate(cout),
-                    }
-                )
-            ]
-            if id1s
-            else []
-        )
-        return pd.concat(batched + big) if big else batched[0]
-
-    coarse = corpus.withColumn("_ck", F.col(group_col) % F.lit(int(coarse_mod)))
-    return coarse.groupBy("_ck").applyInPandas(pairs_in_coarse, schema=out_schema)
+    ``packed=True``: ``vec_col`` holds float64 little-endian bytes,
+    which Arrow ships as one buffer instead of per-element lists."""
+    g_type = corpus.schema[group_col].dataType.simpleString()
+    return _keyed(corpus, group_col, id_col, vec_col, coarse_mod).applyInPandas(
+        lambda pdf: _block_kernel(
+            pdf, _cosine(packed), _threshold(threshold), ("id1", "id2", "cos_sim"), group_col, cap
+        ),
+        schema=f"id1 long, id2 long, {group_col} {g_type}, cos_sim double",
+    )
 
 
 def grouped_knn_candidates(
@@ -747,122 +766,24 @@ def grouped_knn_candidates(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 3,
-    round_to: int = 6,
     coarse_mod: int = 256,
     cap: int | None = None,
     packed: bool = False,
 ) -> DataFrame:
-    """Per-group DIRECTED local top-k for kNN-GRAPH building: within
-    every ``group_col`` block (an LSH bucket / probe key), each member
-    emits its ``k`` highest-cosine partners — instead of every
-    verified pair. The union of a node's per-group top-k lists
-    provably contains its global top-k (local and global use the same
-    (-cos, id) total order: if fewer than k candidates precede X
-    globally, fewer precede it in any shared group), so the caller's
-    dedup + global rank window produces IDENTICAL graph rows while
-    the kernel emits <= n x groups-per-node x k rows instead of
-    occupancy x groups-per-node x n: under radius-1 multiprobe the
-    all-pairs emission is occupancy x (1+planes) x tables per node
-    (~3,400 rows/node at the 40K-vector x10 leg — the dedup+window
-    shuffle over those raw pairs, not the verify FLOPs, drove the x10
-    exponent to 0.89), vs <= (1+planes) x tables x k here.
-
-    Same coarse-batched, packed-bytes, fused-cap machinery as
-    :func:`grouped_pairs_exact`'s coarse path; members sort by id
-    inside each block so the chunk-wide stable argsort breaks cosine
-    ties toward the smaller neighbor id, matching the downstream
-    window's ORDER BY cos DESC, neighbor ASC.
-
-    r16 (verdict #5): SIZE-CLASS BATCHED — the r15 form ran one numpy
-    matmul per FINE group, and with radius-1 multiprobe a coarse
-    partition holds thousands of occupancy-sized groups, so ~95k
-    per-group pandas slices / norm passes / DataFrame builds cost ~25 s
-    of task CPU while each matmul was microseconds (guide §4.2: hand
-    whole batches to vectorized code, don't loop in Python). Now each
-    coarse partition sorts once by (group, id), normalizes ONE matrix,
-    and processes every group of equal size s as a single
-    (n_groups, s, d) batched matmul + one batched argsort — the Python
-    loop is over DISTINCT SIZES (<= cap of them), not groups. Row-
-    identical by construction: columns within each block stay id-
-    ascending, cosines round before ranking, the diagonal self-mask
-    and the stable tie-break toward smaller neighbor id are the same
-    operations applied along a batch axis."""
-    import numpy as np
-
-    out_schema = "node_id long, neighbor_id long, cos_sim double"
-    empty = pd.DataFrame(
-        {
-            "node_id": np.array([], dtype="int64"),
-            "neighbor_id": np.array([], dtype="int64"),
-            "cos_sim": np.array([], dtype="float64"),
-        }
+    """Per-group directed local top-k for kNN-graph building: within
+    every ``group_col`` block each member emits (node_id, neighbor_id,
+    cos_sim) for its ``k`` best partners under (-round6(cos), id),
+    instead of every verified pair. Local and global ranking share that
+    total order, so the union of a node's per-group lists contains its
+    global top-k and the caller's dedup + rank window yields the same
+    graph from <= groups-per-node x k rows per node. ``coarse_mod``,
+    ``cap`` and ``packed`` are as in :func:`grouped_pairs_exact`."""
+    return _keyed(corpus, group_col, id_col, vec_col, coarse_mod).applyInPandas(
+        lambda pdf: _block_kernel(
+            pdf, _cosine(packed), _topk(k), ("node_id", "neighbor_id", "cos_sim"), cap=cap
+        ),
+        schema="node_id long, neighbor_id long, cos_sim double",
     )
-
-    #: elements per batched-matmul chunk (~16 MB of float64 sims+B):
-    #: bounds worker memory when one size class holds many groups.
-    chunk_budget = 2_000_000
-
-    def knn_in_coarse(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        n = len(pdf)
-        if n == 0:
-            return empty
-        g = pdf[group_col].to_numpy()
-        ids = pdf[id_col].to_numpy()
-        order0 = np.lexsort((ids, g))  # blocks contiguous, ids ascending
-        g = g[order0]
-        ids = ids[order0]
-        if packed:
-            m = np.frombuffer(b"".join(pdf[vec_col]), dtype="<f8").reshape(n, -1)[
-                order0
-            ]
-        else:
-            m = np.stack(pdf[vec_col].to_numpy()).astype("float64")[order0]
-        _n = np.linalg.norm(m, axis=1, keepdims=True)
-        m = m / np.where(_n == 0.0, 1.0, _n)  # zero vec -> cos 0, not NaN
-        starts = np.flatnonzero(np.r_[True, g[1:] != g[:-1]])
-        sizes = np.diff(np.r_[starts, n])
-        nodes: list = []
-        nbrs: list = []
-        coss: list = []
-        for s in np.unique(sizes):
-            s = int(s)
-            kk = min(k, s - 1)
-            if kk <= 0 or (cap is not None and s > cap):
-                continue
-            sel = starts[sizes == s]
-            step = max(1, chunk_budget // (s * max(s, m.shape[1])))
-            for c0 in range(0, len(sel), step):
-                blk = sel[c0 : c0 + step]
-                idx = blk[:, None] + np.arange(s)  # (g, s) row indices
-                b = m[idx]  # (g, s, d)
-                sims = np.matmul(b, b.transpose(0, 2, 1)).round(round_to)
-                ii = np.arange(s)
-                # self-mask: -2.0 sorts after every legal cosine (>= -1);
-                # a group never holds duplicate ids
-                sims[:, ii, ii] = -2.0
-                ord2 = np.argsort(-sims, axis=2, kind="stable")[:, :, :kk]
-                vals = np.take_along_axis(sims, ord2, axis=2)
-                bids = ids[idx]  # (g, s)
-                nbr = np.take_along_axis(
-                    np.broadcast_to(bids[:, None, :], sims.shape), ord2, axis=2
-                )
-                keep = (vals > -1.5).ravel()
-                if keep.any():
-                    nodes.append(np.repeat(bids.ravel(), kk)[keep])
-                    nbrs.append(nbr.ravel()[keep])
-                    coss.append(vals.ravel()[keep])
-        if not nodes:
-            return empty
-        return pd.DataFrame(
-            {
-                "node_id": np.concatenate(nodes),
-                "neighbor_id": np.concatenate(nbrs),
-                "cos_sim": np.concatenate(coss),
-            }
-        )
-
-    coarse = corpus.withColumn("_ck", F.col(group_col) % F.lit(int(coarse_mod)))
-    return coarse.groupBy("_ck").applyInPandas(knn_in_coarse, schema=out_schema)
 
 
 def grouped_topk_exact(
@@ -874,97 +795,23 @@ def grouped_topk_exact(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 5,
-    round_to: int = 6,
 ) -> DataFrame:
-    """Per-group exact-cosine LOCAL top-k: each query row meets the
+    """Per-group exact-cosine local top-k: each query row meets the
     member rows sharing its ``group_col`` (an IVF probe cell, an LSH
-    bucket), scored with one chunked numpy matmul per group — the
-    probe stage of any blocked ANN search without materializing the
-    per-pair join (which ships both embeddings once per CANDIDATE:
-    at batch x nprobe x cap candidates the Arrow transfer alone dwarfs
-    the FLOPs; here members cross the wire once per group).
-
-    Emits (query_id, neighbor_id, cos_sim rounded to ``round_to``)
-    with per-group top-k ranked by (-cos_sim, neighbor_id) — the same
-    total order the global window uses, so the union of a query's
-    per-group lists provably contains its global top-k; member rows
-    whose id equals the query id are excluded. Cap the member group
-    size upstream (``dedup.cap_group_size`` or a write-time rank) so a
-    task is bounded by chunk x cap scores."""
-    import numpy as np
-
-    qs = queries.select(
-        F.col(group_col).alias("_g"),
-        F.lit("q").alias("_role"),
-        F.col(query_id).alias("_id"),
-        F.col(q_vec).alias("_vec"),
-    )
-    ms = members.select(
-        F.col(group_col).alias("_g"),
-        F.lit("m").alias("_role"),
-        F.col(id_col).alias("_id"),
-        F.col(vec_col).alias("_vec"),
-    )
-
-    def topk_in_group(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {
-                "query_id": np.array([], dtype="int64"),
-                "neighbor_id": np.array([], dtype="int64"),
-                "cos_sim": np.array([], dtype="float64"),
-            }
-        )
-        qm = pdf[pdf["_role"] == "q"]
-        mm = pdf[pdf["_role"] == "m"]
-        if qm.empty or mm.empty:
-            return empty
-        q_ids = qm["_id"].to_numpy()
-        # members pre-sorted by id: a chunk-wide STABLE argsort on
-        # -sims then breaks score ties toward the smaller neighbor id —
-        # the same (-cos, id) total order the old per-query lexsort
-        # produced, but computed once per CHUNK instead of once per
-        # query (the per-query python loop + tiny-frame appends were
-        # ~3 s of a 10K-vector ingest epoch — the actual "fixed cost")
-        morder = np.argsort(mm["_id"].to_numpy(), kind="stable")
-        m_ids = mm["_id"].to_numpy()[morder]
-        qn = np.stack(qm["_vec"].to_numpy()).astype("float64")
-        mn = np.stack(mm["_vec"].to_numpy()).astype("float64")[morder]
-        _nq = np.linalg.norm(qn, axis=1, keepdims=True)
-        qn = qn / np.where(_nq == 0.0, 1.0, _nq)  # zero vec -> cos 0, not NaN
-        _nm = np.linalg.norm(mn, axis=1, keepdims=True)
-        mn = mn / np.where(_nm == 0.0, 1.0, _nm)
-        outs = []
-        chunk = 1024  # bounds the sims matrix at chunk x group members
-        kk = min(k, len(m_ids))
-        for lo in range(0, len(q_ids), chunk):
-            qb = q_ids[lo : lo + chunk]
-            sims = (qn[lo : lo + chunk] @ mn.T).round(round_to)
-            # mask self-matches BEFORE truncation: a duplicate neighbor
-            # id equal to qid (possible when a streaming corpus
-            # re-ingests an id across epochs) must not consume top-k
-            # slots. -2.0 sorts after every legal cosine (>= -1).
-            sims[m_ids[None, :] == qb[:, None]] = -2.0
-            order = np.argsort(-sims, axis=1, kind="stable")[:, :kk]
-            vals = np.take_along_axis(sims, order, axis=1)
-            keep = (vals > -1.5).ravel()
-            if keep.any():
-                outs.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": np.repeat(qb, kk)[keep],
-                            "neighbor_id": m_ids[order].ravel()[keep],
-                            "cos_sim": vals.ravel()[keep],
-                        }
-                    )
-                )
-        return pd.concat(outs) if outs else empty
-
-    return (
-        qs.unionByName(ms)
-        .groupBy("_g")
-        .applyInPandas(
-            topk_in_group, schema="query_id long, neighbor_id long, cos_sim double"
-        )
+    bucket) and emits (query_id, neighbor_id, cos_sim) for its ``k``
+    best members under (-round6(cos), neighbor_id), excluding members
+    whose id equals the query id. Members cross the wire once per group
+    instead of once per candidate pair; the union of a query's
+    per-group lists contains its global top-k. Cap member group size
+    upstream."""
+    return _role_union(
+        queries, members, group_col, query_id, id_col,
+        [F.col(q_vec).alias("_v")], [F.col(vec_col).alias("_v")],
+    ).applyInPandas(
+        lambda pdf: _block_kernel(
+            pdf, _cosine(), _topk(k), ("query_id", "neighbor_id", "cos_sim")
+        ),
+        schema="query_id long, neighbor_id long, cos_sim double",
     )
 
 
@@ -983,149 +830,33 @@ def grouped_adc_topk(
     books: dict[tuple[int, int], list[int]] | None = None,
     dim: int = 64,
 ) -> DataFrame:
-    """Per-group ADC LOCAL top-k — :func:`grouped_topk_exact` for the
-    COMPRESSED domain: each query row (carrying its m*k LUT) meets the
-    member rows (carrying m-byte PQ codes) sharing its ``group_col``,
-    scored with one numpy LUT-gather per group instead of a per-pair
-    join (which ships a 4 KB LUT once per CANDIDATE — measured 2.7x
-    slower end-to-end on the streaming index's ingest). Scores are
-    exact int64 sums of LUT entries, so ranking is bit-deterministic;
-    per-group top-k ranks by (-adc_dot, neighbor_id), the same total
-    order the caller's global window uses, so the union of a query's
-    per-group lists provably contains its global top-k. Self-matches
-    are excluded; cap member group size upstream. ``m``/``k_codes``
-    default to the module PQ geometry (resolved at call time — this
-    function is defined before the PQ section).
+    """Per-group ADC local top-k: :func:`grouped_topk_exact` in the PQ
+    domain. Each query row (carrying its m*k LUT) meets the member rows
+    (carrying m PQ codes) sharing its ``group_col`` and emits
+    (query_id, neighbor_id, adc_dot) for its ``k`` best members under
+    (-adc_dot, neighbor_id), excluding self-matches. Scores are exact
+    int64 sums of LUT entries. ``m``/``k_codes`` default to the module
+    PQ geometry; ``packed=True`` reads the LUT as little-endian int64
+    bytes.
 
     With ``books`` (a pq_train_int codebook dict), ``lut_col`` carries
-    the PACKED QUERY ``xq`` (little-endian int64 bytes, dim elements —
-    pq_encode_table(pack_xq=True)'s ``xqb``, ~512 B) instead of a LUT,
-    and the kernel builds each query's LUT in-task from the
-    closure-shipped codebook (m*k*subdim int64 — ~16 KB, a broadcast-
-    sized constant) with the SAME _fold_dot_np int64 fold pq_lut_table
-    uses, so scores stay bit-identical to the shipped-LUT path (pinned
-    by tests/test_pq_property.py). The point is the wire: the heaviest
-    probe column shrinks 8x (m*k=512 LUT slots -> dim=64 xq words), so
-    replicating query rows across probe cells AND salt sub-blocks is
-    ~free — the reason the streaming ADC index can afford the same
-    IVF_TOPK_SALT sub-blocking as the vector mode."""
-    import numpy as np
-
-    if m is None:
-        m = PQ_M
-    if k_codes is None:
-        k_codes = PQ_K
-    books_np = _pq_books_np(books, m, k_codes) if books is not None else None
-    subdim = dim // m
-
-    lut_null_t = "binary" if (packed or books is not None) else "array<bigint>"
-    qs = queries.select(
-        F.col(group_col).alias("_g"),
-        F.lit("q").alias("_role"),
-        F.col(query_id).alias("_id"),
-        F.col(lut_col).alias("_lut"),
-        F.lit(None).cast("array<int>").alias("_codes"),
-    )
-    ms = members.select(
-        F.col(group_col).alias("_g"),
-        F.lit("m").alias("_role"),
-        F.col(id_col).alias("_id"),
-        F.lit(None).cast(lut_null_t).alias("_lut"),
-        F.col(codes_col).alias("_codes"),
-    )
-
-    def topk_in_group(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {
-                "query_id": np.array([], dtype="int64"),
-                "neighbor_id": np.array([], dtype="int64"),
-                "adc_dot": np.array([], dtype="int64"),
-            }
-        )
-        qm = pdf[pdf["_role"] == "q"]
-        mm = pdf[pdf["_role"] == "m"]
-        if qm.empty or mm.empty:
-            return empty
-        q_ids = qm["_id"].to_numpy()
-        # members pre-sorted by id + chunk-wide stable argsort — the
-        # same vectorized (-score, id) ranking as grouped_topk_exact
-        # (see that kernel for why the per-query loop had to go)
-        morder = np.argsort(mm["_id"].to_numpy(), kind="stable")
-        m_ids = mm["_id"].to_numpy()[morder]
-        if books_np is not None:
-            # in-kernel LUT: decode the packed query xq and rebuild the
-            # table with the identical int64 fold pq_lut_table runs —
-            # O(n * dim * k_codes) adds per task, paid to keep the 8x
-            # heavier LUT column off the wire entirely
-            XQ = np.frombuffer(b"".join(qm["_lut"]), dtype="<i8").reshape(
-                len(qm), dim
-            )
-            lut = np.zeros((len(qm), m * k_codes), dtype=np.int64)
-            for s, (live, M, _csq) in enumerate(books_np):
-                lut[:, s * k_codes + live] = _fold_dot_np(
-                    XQ[:, s * subdim : (s + 1) * subdim], M
-                )
-        elif packed:
-            lut = np.frombuffer(b"".join(qm["_lut"]), dtype="<i8").reshape(len(qm), -1)
-        else:
-            lut = np.stack(qm["_lut"].to_numpy()).astype("int64")
-        codes = np.stack(mm["_codes"].to_numpy()).astype("int64")[morder]
-        # ADC-as-matmul: scores = LUT @ onehot(codes), one dgemm per
-        # chunk instead of m python-level fancy-gather passes (the
-        # gather loop was the compressed ingest's dominant kernel cost
-        # once everything else was wire-optimal). EXACT despite BLAS
-        # running float64: every score is a sum of m integer LUT
-        # entries, and m * max|entry| < 2^53 keeps every partial sum
-        # in float64's exact-integer range (checked below — the
-        # gather loop remains as the unconditional-exactness fallback
-        # for exotic quantizations).
-        fits_f64 = m * (np.abs(lut).max() if lut.size else 0) < 2**53
-        if fits_f64:
-            onehot = np.zeros((m * k_codes, codes.shape[0]), dtype="float64")
-            flat = codes + np.arange(m, dtype="int64")[None, :] * k_codes
-            onehot[flat.T.ravel(), np.tile(np.arange(codes.shape[0]), m)] = 1.0
-            lutf = lut.astype("float64")
-        outs = []
-        chunk = 1024  # bounds the score matrix at chunk x group members
-        kk = min(k, len(m_ids))
-        for lo in range(0, len(q_ids), chunk):
-            qb = q_ids[lo : lo + chunk]
-            block = lut[lo : lo + chunk]
-            if fits_f64:
-                scores = (lutf[lo : lo + chunk] @ onehot).astype("int64")
-            else:
-                scores = np.zeros((block.shape[0], codes.shape[0]), dtype="int64")
-                for s in range(m):
-                    scores += block[:, s * k_codes + codes[:, s]]
-            # self-exclusion before truncation (same duplicate-id
-            # hazard as grouped_topk_exact). Sentinel is -(2^62), NOT
-            # int64 min: the argsort negates scores and -int64.min
-            # overflows back to int64.min, which would sort a masked
-            # row FIRST instead of last. Real |adc_dot| <= m * subdim
-            # * (1e6)^2 ~ 6.4e13, five orders below the sentinel.
-            self_mask = m_ids[None, :] == qb[:, None]
-            scores[self_mask] = -(2**62)
-            order = np.argsort(-scores, axis=1, kind="stable")[:, :kk]
-            vals = np.take_along_axis(scores, order, axis=1)
-            keep = (~np.take_along_axis(self_mask, order, axis=1)).ravel()
-            if keep.any():
-                outs.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": np.repeat(qb, kk)[keep],
-                            "neighbor_id": m_ids[order].ravel()[keep],
-                            "adc_dot": vals.ravel()[keep],
-                        }
-                    )
-                )
-        return pd.concat(outs) if outs else empty
-
-    return (
-        qs.unionByName(ms)
-        .groupBy("_g")
-        .applyInPandas(
-            topk_in_group, schema="query_id long, neighbor_id long, adc_dot long"
-        )
+    the packed int64 query ``xq`` (pq_encode_table(pack_xq=True)'s
+    ``xqb``) and the kernel builds each LUT with the same _fold_dot_np
+    fold pq_lut_table uses, so scores are bit-identical while the probe
+    column shrinks 8x."""
+    m = PQ_M if m is None else m
+    k_codes = PQ_K if k_codes is None else k_codes
+    return _role_union(
+        queries, members, group_col, query_id, id_col,
+        [F.col(lut_col).alias("_v")], [F.col(codes_col).alias("_w")],
+    ).applyInPandas(
+        lambda pdf: _block_kernel(
+            pdf,
+            _adc(m, k_codes, packed, books, dim),
+            _topk(k),
+            ("query_id", "neighbor_id", "adc_dot"),
+        ),
+        schema="query_id long, neighbor_id long, adc_dot long",
     )
 
 
@@ -1134,114 +865,21 @@ def knn_graph_blocked(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 3,
-    round_to: int = 6,
-    num_blocks: int = 4,
 ) -> DataFrame:
-    """Exact corpus-wide kNN graph (each vector's top-k cosine
-    neighbors) via the same block-matrix decomposition as
-    :func:`threshold_pairs_blocked` — no corpus broadcast, no cross
-    product node.
-
-    Each (ba, bb) block-pair group scores its rows with one chunked
-    numpy matmul and emits only each row's LOCAL top-k within the
-    group; a row meets every other row in exactly one group, so the
-    union of local top-k lists contains the true global top-k, and a
-    window partitioned by node (parallel across nodes — never global)
-    ranks them. Candidate volume is n * B * k rows — linear in n for
-    fixed B, k.
-
-    Scale: per-task memory is bounded by 2n/B rows (pick B ~ n/50k);
-    FLOPs are the exact-kNN O(n^2 d) by contract — for approximate
-    graphs at corpus scale, generate candidates with
-    :func:`lsh_candidates_multi` and rank those instead (same window
-    tail)."""
-    import numpy as np
-
+    """Exact corpus-wide kNN graph (node_id, neighbor_id, cos_sim, rk):
+    each vector's top-k cosine neighbors under (-round6(cos),
+    neighbor_id), over the block-pair groups of
+    :func:`threshold_pairs_blocked`. A row pair meets in exactly one
+    group, whose local top-k lists therefore contain the global top-k;
+    a window partitioned by node ranks them. Candidate volume is
+    n * B * k rows; for approximate graphs at corpus scale, rank
+    :func:`lsh_candidates_multi` candidates instead."""
     from pyspark.sql.window import Window
 
-    e = corpus.select(id_col, vec_col).withColumn(
-        "blk", F.pmod(F.hash(F.col(id_col)), F.lit(num_blocks))
+    cand = _block_pairs(corpus, id_col, vec_col).applyInPandas(
+        lambda pdf: _block_kernel(pdf, _cosine(), _topk(k), ("node_id", "neighbor_id", "cos_sim")),
+        schema="node_id long, neighbor_id long, cos_sim double",
     )
-    other = F.sequence(F.lit(0), F.lit(num_blocks - 1))
-    rep = e.withColumn(
-        "bp",
-        F.explode(
-            F.transform(
-                other,
-                lambda o: F.struct(
-                    F.least(F.col("blk"), o).alias("ba"),
-                    F.greatest(F.col("blk"), o).alias("bb"),
-                ),
-            )
-        ),
-    ).select(id_col, vec_col, "blk", F.col("bp.ba").alias("ba"), F.col("bp.bb").alias("bb"))
-
-    def local_topk(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        ba, bb = key
-        ids = pdf[id_col].to_numpy()
-        blks = pdf["blk"].to_numpy()
-        m = np.stack(pdf[vec_col].to_numpy()).astype("float64")
-        _n = np.linalg.norm(m, axis=1, keepdims=True)
-        mn = m / np.where(_n == 0.0, 1.0, _n)  # zero vec -> cos 0, not NaN
-        outs = []
-        chunk = 2048
-        for lo in range(0, len(ids), chunk):
-            # NOT rounded here: np.round over the full matrix costs more
-            # than the matmul; round6 is monotone, so order statistics
-            # commute with it and only the ~k selected values need
-            # rounding (with a 2e-6 margin at the kth boundary, since
-            # |round(v) - v| <= 0.5e-6 can reorder ties)
-            sims = mn[lo : lo + chunk] @ mn.T
-            sub = slice(lo, lo + sims.shape[0])
-            # a (node, neighbor) pair is this group's to emit ONLY when
-            # the pair's block pair IS (ba, bb) — without this mask a
-            # same-block pair would surface from every group its blocks
-            # touch, and the duplicates would consume window ranks
-            elig = (
-                (np.minimum(blks[sub, None], blks[None, :]) == ba)
-                & (np.maximum(blks[sub, None], blks[None, :]) == bb)
-                & (ids[sub, None] != ids[None, :])
-            )
-            # finite sentinel (cosine >= -1): np.partition degrades ~80x
-            # on arrays holding -inf
-            masked = np.where(elig, sims, -2.0)
-            kk = min(k, masked.shape[1])
-            # kth-largest per row bounds the candidate set; the exact
-            # (-rounded_sim, neighbor_id) lexsort then runs over ~k
-            # elements per row instead of the whole row
-            thresh = -np.partition(-masked, kk - 1, axis=1)[:, kk - 1]
-            node_l: list = []
-            nb_l: list = []
-            sim_l: list = []
-            for r in range(masked.shape[0]):
-                cand = np.where(masked[r] >= thresh[r] - 2e-6)[0]
-                cand = cand[masked[r][cand] > -1.5]
-                vals = masked[r][cand].round(round_to)
-                order = np.lexsort((ids[cand], -vals))[:k]
-                node_l.append(np.full(len(order), ids[lo + r]))
-                nb_l.append(ids[cand[order]])
-                sim_l.append(vals[order])
-            if node_l:
-                outs.append(
-                    pd.DataFrame(
-                        {
-                            "node_id": np.concatenate(node_l),
-                            "neighbor_id": np.concatenate(nb_l),
-                            "cos_sim": np.concatenate(sim_l),
-                        }
-                    )
-                )
-        return (
-            pd.concat(outs)
-            if outs
-            else pd.DataFrame(columns=["node_id", "neighbor_id", "cos_sim"])
-        )
-
-    cand = rep.groupBy("ba", "bb").applyInPandas(
-        local_topk, schema="node_id long, neighbor_id long, cos_sim double"
-    )
-    # a row pair can surface from only ONE group (the one matching its
-    # block pair), so candidates are already distinct; rank per node
     w = Window.partitionBy("node_id").orderBy(F.desc("cos_sim"), "neighbor_id")
     return (
         cand.withColumn("rk", F.row_number().over(w))
@@ -1510,7 +1148,6 @@ def lsh_candidates_multi(
         id_col="id",
         vec_col="v",
         threshold=threshold,
-        group_type="long",
         coarse_mod=coarse_mod,
         cap=cap if coarse_mod is not None else None,
         packed=coarse_mod is not None,

@@ -8,6 +8,7 @@ of shipping."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from pipe_s_spark.functions import similarity as S
@@ -390,7 +391,7 @@ def test_coarse_packed_path_matches_fine_path(spark):
     fine = {
         (r["id1"], r["id2"], r["cos_sim"])
         for r in S.grouped_pairs_exact(
-            sig, "gk", id_col="id", vec_col="v", threshold=-1.0, group_type="long"
+            sig, "gk", id_col="id", vec_col="v", threshold=-1.0
         )
         .dropDuplicates(["id1", "id2"])
         .collect()
@@ -568,3 +569,138 @@ def test_brute_force_topk_query_cap(spark):
     )
     with pytest.raises(ValueError, match="query side exceeds"):
         S.brute_force_topk(emb, emb, k=3)
+
+
+def _referee_corpus():
+    """Hand-built kernel corpus: small-integer vectors (so cosine ties
+    are real), exact duplicates, negated copies, zero vectors, one group
+    of 1,500 rows (past the kernel's batch budget, so it is scored in
+    row chunks) and many small groups of repeating sizes; ~3,200 rows,
+    so the block-pair groups of the blocked entries are row-chunked
+    too. ADC payloads: a 4x8 int LUT and 4 codes per row."""
+    import numpy as np
+
+    rng = np.random.default_rng(7)
+    sizes = [1500] + [1, 2, 2, 3, 3, 5, 5, 8, 40, 40, 64, 64] * 7 + [1, 2, 2, 5]
+    n = sum(sizes)
+    vecs = rng.integers(-2, 3, size=(n, 12)).astype("float64")
+    vecs[1::50] = vecs[0::50]
+    vecs[3::60] = -vecs[2::60]
+    vecs[5::97] = 0.0
+    ids = rng.permutation(10 * n)[:n].astype("int64")
+    groups = np.repeat(np.arange(len(sizes)), sizes)
+    luts = rng.integers(-20, 21, size=(n, 32))
+    codes = rng.integers(0, 8, size=(n, 4))
+    return ids, groups, vecs, luts, codes
+
+
+def _referee_cos(a, b):
+    """Cosine of every (a row, b row) pair as dot / (|a| |b|), 0.0 for
+    a zero vector, rounded to 6 decimals."""
+    import numpy as np
+
+    nn = np.outer(np.linalg.norm(a, axis=1), np.linalg.norm(b, axis=1))
+    return np.where(nn == 0, 0.0, (a @ b.T) / np.where(nn == 0, 1.0, nn)).round(6)
+
+
+def _referee_topk(score, ids, qids, same, k):
+    """(qid, nid, score) for each query's first k members by
+    (-score, nid), excluding nid == qid, among members with ``same``."""
+    import numpy as np
+
+    out = set()
+    for i, q in enumerate(qids):
+        cand = np.flatnonzero(same[i] & (ids != q))
+        top = cand[np.lexsort((ids[cand], -score[i, cand]))[:k]]
+        out |= {(int(q), int(ids[j]), score[i, j].item()) for j in top}
+    return out
+
+
+@pytest.mark.parametrize(
+    "entry",
+    [
+        "threshold_pairs_blocked",
+        "grouped_pairs_exact",
+        "grouped_pairs_exact_coarse_cap",
+        "grouped_knn_candidates",
+        "grouped_topk_exact",
+        "grouped_adc_topk",
+        "knn_graph_blocked",
+    ],
+)
+def test_similarity_kernels_match_brute_force_referee(spark, entry):
+    """Every public entry over the shared block kernel returns exactly
+    the rows of a plain-numpy brute force of its documented contract:
+    pairs are id1 < id2 with round6(cos) >= threshold; top-k is the
+    first k by (-round6(cos), neighbor_id) with self excluded; ADC
+    scores are exact int64 LUT sums under the same order. Ties,
+    zero vectors, negative cosines, a query id present on the member
+    side and the row-chunked big-group branch are all in the corpus."""
+    import numpy as np
+
+    ids, groups, vecs, luts, codes = _referee_corpus()
+    same = groups[:, None] == groups[None, :]
+    rows = [
+        (int(i), int(g), v.tolist(), v.tobytes(), lu.tolist(), c.tolist())
+        for i, g, v, lu, c in zip(ids, groups, vecs, luts, codes)
+    ]
+    df = spark.createDataFrame(
+        rows,
+        "vec_id long, g int, embedding array<double>, v binary, "
+        "lut array<bigint>, codes array<int>",
+    )
+    if entry in ("grouped_topk_exact", "grouped_adc_topk"):
+        # query ids equal to member ids (self-excluded) plus two ids
+        # that exist only on the query side
+        extra = [
+            (-1, 0, vecs[0].tolist(), luts[0].tolist()),
+            (-2, 1, [0.0] * 12, luts[1].tolist()),
+        ]
+        queries = spark.createDataFrame(
+            [(r[0], r[1], r[2], r[4]) for r in rows] + extra,
+            "query_id long, g int, q_emb array<double>, lut array<bigint>",
+        )
+        qids = np.r_[ids, -1, -2]
+        qgroups = np.r_[groups, 0, 1]
+        qsame = qgroups[:, None] == groups[None, :]
+        if entry == "grouped_topk_exact":
+            qvecs = np.vstack([vecs, vecs[0], np.zeros(12)])
+            score = _referee_cos(qvecs, vecs)
+            got = S.grouped_topk_exact(queries, df, "g", k=3).collect()
+        else:
+            qluts = np.vstack([luts, luts[0], luts[1]])
+            score = sum(qluts[:, j * 8 + codes[:, j]] for j in range(4))
+            got = S.grouped_adc_topk(queries, df, "g", m=4, k_codes=8, k=3).collect()
+        want = _referee_topk(score, ids, qids, qsame, 3)
+    elif entry == "knn_graph_blocked":
+        full = _referee_topk(_referee_cos(vecs, vecs), ids, ids, np.ones_like(same), 3)
+        rank: dict = {}
+        want = set()
+        for q, nid, s in sorted(full, key=lambda t: (t[0], -t[2], t[1])):
+            rank[q] = rank.get(q, 0) + 1
+            want.add((q, nid, s, rank[q]))
+        got = S.knn_graph_blocked(df, k=3).collect()
+    elif entry == "grouped_knn_candidates":
+        want = _referee_topk(_referee_cos(vecs, vecs), ids, ids, same, 3)
+        got = S.grouped_knn_candidates(
+            df, "g", vec_col="v", k=3, coarse_mod=8, packed=True
+        ).collect()
+    else:
+        cos = _referee_cos(vecs, vecs)
+        thr = 0.7
+        live = same if entry != "threshold_pairs_blocked" else np.ones_like(same)
+        if entry == "grouped_pairs_exact_coarse_cap":
+            live = live & (np.bincount(groups)[groups] <= 64)[:, None]
+        i, j = np.nonzero(live & (ids[:, None] < ids[None, :]) & (cos >= thr))
+        if entry == "threshold_pairs_blocked":
+            want = set(zip(ids[i].tolist(), ids[j].tolist(), cos[i, j].tolist()))
+            got = S.threshold_pairs_blocked(df, threshold=thr).collect()
+        else:
+            want = set(
+                zip(ids[i].tolist(), ids[j].tolist(), groups[i].tolist(), cos[i, j].tolist())
+            )
+            kw = dict(coarse_mod=8, cap=64) if entry.endswith("cap") else {}
+            got = S.grouped_pairs_exact(df, "g", threshold=thr, **kw).collect()
+    got_rows = [tuple(r) for r in got]
+    assert len(got_rows) == len(set(got_rows)), "duplicate output rows"
+    assert set(got_rows) == want and want

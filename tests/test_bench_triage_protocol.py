@@ -16,9 +16,10 @@ untouched code.
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bench import committed_timing, is_regression, probe_ratio, triage_verdict
 

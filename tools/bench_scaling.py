@@ -312,8 +312,8 @@ def main() -> None:
             "> **r14 merge diagnosis (closes the r13 worst-exponent flag):**",
             "> r13 measured merge alpha 0.82 (x10 28.3s, 706K rows/s) — the",
             "> worst CDC exponent. Per-phase attribution (apply_batch's",
-            "> LAST_APPLY_PROFILE telemetry + tools/merge_phase_profile.py's",
-            "> within-session decomposition, interleaved on one cached",
+            "> LAST_APPLY_PROFILE telemetry and a separate phase-timing",
+            "> script's within-session decomposition, interleaved on one cached",
             "> input): the merge COMPUTE (anti-join + union -> noop sink) is",
             "> FLAT at ~0.6s at BOTH x1 and x10; plain-parquet encode ~0.9s",
             "> at both; the growth lived entirely in the dynamic-partition",

@@ -10,9 +10,10 @@ Exit code 1 with --fail-on-violation if any check fails (CI-gate mode).
 from __future__ import annotations
 
 import json
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> int:

@@ -7,9 +7,10 @@ Usage: python tools/explain_query.py <query_name> [sf_dir] [mode]
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> int:

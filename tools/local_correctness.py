@@ -14,10 +14,12 @@ rotating ~50-query sample (the r7 verdict's top ask).
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from pyspark.sql import SparkSession
 
@@ -28,12 +30,10 @@ from tests.oracle_harness import compare, duck_con
 #: per-round artifact; other scales write a suffixed sibling (so an
 #: sf0.1 validation sweep can't clobber the gate-replica artifact).
 #: Override with SPARK_GRAFT_CORRECTNESS_OUT.
-ARTIFACT = "/root/repo/CORRECTNESS_LOCAL.json"
+ARTIFACT = os.path.join(ROOT, "CORRECTNESS_LOCAL.json")
 
 
 def _artifact_path(sf_dir: str) -> str:
-    import os
-
     env = os.environ.get("SPARK_GRAFT_CORRECTNESS_OUT")
     if env:
         return env

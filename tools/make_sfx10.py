@@ -30,7 +30,7 @@ import os
 import shutil
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F

@@ -9,9 +9,11 @@ Usage: python tools/plan_report.py [sf_dir]
 from __future__ import annotations
 
 import re
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
 def main() -> None:
@@ -57,7 +59,7 @@ def main() -> None:
             )
         )
 
-    with open("/root/repo/PLAN_REPORT.md", "w") as f:
+    with open(os.path.join(ROOT, "PLAN_REPORT.md"), "w") as f:
         f.write(
             f"# PLAN REPORT (generated by tools/plan_report.py at {sf_dir})\n\n"
             "Per-query physical-plan summary: shuffle exchanges, broadcast\n"

@@ -11,11 +11,12 @@ Prints one JSON block per query to stdout.
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 import urllib.request
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def rest(base: str, path: str):

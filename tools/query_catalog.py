@@ -9,9 +9,11 @@ Usage: python tools/query_catalog.py
 from __future__ import annotations
 
 import re
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
 CATEGORIES = (
@@ -82,7 +84,7 @@ def main() -> None:
             current = cat
         out.append(f"| `{name}` | {okind} | {desc} |")
     out.append("")
-    with open("/root/repo/QUERIES.md", "w") as f:
+    with open(os.path.join(ROOT, "QUERIES.md"), "w") as f:
         f.write("\n".join(out) + "\n")
     print(f"wrote QUERIES.md ({len(qs)} queries)")
 

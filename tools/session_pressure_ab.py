@@ -27,10 +27,11 @@ from __future__ import annotations
 
 import json
 import statistics
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 TAIL = [
     "window_lag_lead",
