@@ -149,27 +149,3 @@ def write_zorder_clustered(
         .parquet(path)
     )
 
-
-def compact_parquet_dir(
-    spark, path: str, target_file_mb: int = 256, sample_rows: int = 2000
-) -> tuple[int, int]:
-    """Compact a small-file parquet directory in place (the OPTIMIZE /
-    bin-packing maintenance job): read, estimate, rewrite at
-    ~``target_file_mb`` files via :func:`write_sharded`, atomic-ish
-    swap through a staging sibling. Returns (files_before,
-    files_after).
-
-    Streaming sinks and per-epoch writers accrete files; at 100 TB the
-    file count — not the byte count — is what kills scheduler and
-    object-store latency, so compaction is a first-class layout op.
-    """
-    import os
-    import shutil
-
-    before = [f for f in os.listdir(path) if f.endswith(".parquet")]
-    df = spark.read.parquet(path)
-    stage = path.rstrip("/") + ".compact-stage"
-    shards = write_sharded(df, stage, target_file_mb=target_file_mb, sample_rows=sample_rows)
-    shutil.rmtree(path)
-    os.replace(stage, path)
-    return len(before), shards

@@ -1,0 +1,141 @@
+"""The one file-commit primitive behind every streaming sink's state.
+
+Each table directory (``root``) owns three dot-prefixed entries that
+Spark's partition discovery never sees: ``._lock`` (the flock file),
+``._journal`` (an in-flight swap) and ``._trash`` (entries the swap
+parked). ``lock(root)`` serializes threads and processes and runs
+``recover(root)`` on every entry, so every reader and writer sees a
+finished swap.
+
+A swap (``commit``) is journal -> park -> install -> files -> clean:
+
+- the caller writes its new entries into a ``stage`` directory it owns
+  (outside the lock when it can; one stage per attempt), then calls
+  ``commit`` under the lock after its own checks;
+- the journal write is the point of no return: before it the table is
+  untouched (an orphan stage at most), after it ``recover`` finishes
+  the swap by re-running the same existence-checked steps, so a kill
+  at any point leaves the old state or the new one, never a mix.
+
+Scope: safe against a killed process, not against power loss (there is
+no fsync anywhere).
+"""
+
+from __future__ import annotations
+
+import fcntl
+import json
+import os
+import shutil
+import uuid
+from collections.abc import Iterator, Sequence
+from contextlib import contextmanager
+
+#: every name ``fault`` is called with: the swap's own steps, then the
+#: windows between two commits that callers order by hand
+FAULT_POINTS = (
+    "staged",
+    "journaled",
+    "mid-park",
+    "mid-install",
+    "files-written",
+    "cleaned",
+    "fold-committed",
+    "view-state-written",
+)
+
+_JOURNAL = "._journal"
+_TRASH = "._trash"
+
+
+def fault(point: str) -> None:
+    """Test hook called at each ``FAULT_POINTS`` name; tests replace it
+    with one that raises to simulate a kill there."""
+
+
+def write_atomic(path: str, text: str) -> None:
+    """Replace ``path`` with ``text`` in one rename (a unique tmp name,
+    so concurrent writers never share a half-written file)."""
+    tmp = f"{path}.{uuid.uuid4().hex}.tmp"
+    with open(tmp, "w") as f:
+        f.write(text)
+    os.rename(tmp, path)
+
+
+@contextmanager
+def lock(root: str) -> Iterator[None]:
+    """Exclusive lock on ``root`` for threads and processes alike (a
+    fresh open file per acquisition), with ``recover`` run first. Not
+    re-entrant. Closing the file releases the lock."""
+    os.makedirs(root, exist_ok=True)
+    with open(os.path.join(root, "._lock"), "w") as f:
+        fcntl.flock(f, fcntl.LOCK_EX)
+        recover(root)
+        yield
+
+
+def commit(
+    root: str,
+    stage: str,
+    install: Sequence[str] = (),
+    remove: Sequence[str] = (),
+    files: dict[str, str] | None = None,
+) -> None:
+    """Swap ``stage/<name>`` in as ``root/<name>`` for every ``install``
+    name (a missing staged entry installs as an empty directory), drop
+    every ``remove`` name, and write each ``files`` entry (name ->
+    text) into ``root``. Call under ``lock(root)``."""
+    for name in install:
+        os.makedirs(os.path.join(stage, name), exist_ok=True)
+    fault("staged")
+    journal = {
+        "stage": os.path.abspath(stage),
+        "install": list(install),
+        "remove": list(remove),
+        "files": files or {},
+    }
+    write_atomic(os.path.join(root, _JOURNAL), json.dumps(journal))
+    fault("journaled")
+    _roll_forward(root, **journal)
+
+
+def recover(root: str) -> None:
+    """Finish a journaled swap, or purge the trash a finished one left."""
+    try:
+        with open(os.path.join(root, _JOURNAL)) as f:
+            journal = json.load(f)
+    except FileNotFoundError:
+        shutil.rmtree(os.path.join(root, _TRASH), ignore_errors=True)
+        return
+    _roll_forward(root, **journal)
+
+
+def _roll_forward(
+    root: str, stage: str, install: list, remove: list, files: dict
+) -> None:
+    """Every step checks what exists first, so a re-run after a kill at
+    any point converges. An install name whose staged copy is gone is
+    already live and must not be parked again."""
+    trash = os.path.join(root, _TRASH)
+    os.makedirs(trash, exist_ok=True)
+    park = [n for n in remove if n not in install]
+    park += [n for n in install if os.path.isdir(os.path.join(stage, n))]
+    for i, name in enumerate(park):
+        live = os.path.join(root, name)
+        if os.path.isdir(live):
+            os.rename(live, os.path.join(trash, name))
+        if i == 0:
+            fault("mid-park")
+    for i, name in enumerate(install):
+        staged = os.path.join(stage, name)
+        if os.path.isdir(staged):
+            os.rename(staged, os.path.join(root, name))
+        if i == 0:
+            fault("mid-install")
+    for name, text in files.items():
+        write_atomic(os.path.join(root, name), text)
+    fault("files-written")
+    shutil.rmtree(trash, ignore_errors=True)
+    shutil.rmtree(stage, ignore_errors=True)
+    fault("cleaned")
+    os.remove(os.path.join(root, _JOURNAL))

@@ -33,7 +33,6 @@ equi-join is the same bounded-fan-out shape the batch LSH queries cap.
 from __future__ import annotations
 
 import os
-import shutil
 import sys
 
 from pyspark.sql import DataFrame
@@ -45,6 +44,7 @@ from pipe_s_spark.functions.dedup import (
     minhash_signature,
     shingles,
 )
+from pipe_s_spark.streaming import commit
 
 #: DEFAULT-ON compaction cadence for every continuous-index sink
 #: (dedup index, IVF/IVFADC index, quarantine ledger). A long-running
@@ -298,40 +298,17 @@ def check_index_contract(path: str, meta: dict) -> None:
     parameters, recorded going forward."""
     import json as _json
 
-    os.makedirs(path, exist_ok=True)
     p = os.path.join(path, "._contract")
-
-    def _read() -> dict | None:
+    # under the lock: concurrent first-openers serialize and re-read,
+    # so a lost race verifies rather than assumes, and every epoch
+    # start recovers a compaction a kill left half-swapped
+    with commit.lock(path):
         try:
             with open(p) as f:
-                return _json.load(f)
+                disk = _json.load(f)
         except FileNotFoundError:
-            return None
-
-    disk = _read()
-    if disk is None:
-        # first-writer path: serialize concurrent first-openers under
-        # an flock (r13 advice: the fixed tmp name with no lock let two
-        # first-openers interleave writes to the same tmp and rename a
-        # torn/foreign contract into place — unlike the merge target's
-        # layout check, which already runs under its swap lock). The
-        # tmp name is unique per writer, and the contract is re-read
-        # under the lock so a lost race verifies rather than assumes.
-        import fcntl
-        import uuid
-
-        with open(os.path.join(path, "._contract.lock"), "a+") as lf:
-            fcntl.flock(lf, fcntl.LOCK_EX)
-            try:
-                disk = _read()
-                if disk is None:
-                    tmp = f"{p}.{uuid.uuid4().hex}.tmp"
-                    with open(tmp, "w") as f:
-                        _json.dump(meta, f)
-                    os.rename(tmp, p)
-                    disk = meta
-            finally:
-                fcntl.flock(lf, fcntl.LOCK_UN)
+            commit.write_atomic(p, _json.dumps(meta))
+            disk = meta
     if disk != meta:
         raise ValueError(
             f"index at {path} was built under contract {disk}; this caller "
@@ -398,67 +375,6 @@ def _list_batch_ids(path: str) -> list[int]:
     )
 
 
-def _resume_swap(path: str, stage: str, trash: str, intent_bids: list[int], target: int) -> None:
-    """Finish (or re-finish) the swap recorded by the intent file —
-    every step is an atomic rename guarded by an existence check, so
-    executing this any number of times from any crash point converges
-    to the folded layout with no row duplicated or lost."""
-    os.makedirs(trash, exist_ok=True)
-    for b in intent_bids + [target]:
-        live = os.path.join(path, f"batch_id={b}")
-        parked = os.path.join(trash, f"batch_id={b}")
-        staged_t = os.path.join(stage, f"batch_id={target}")
-        if b == target and not os.path.isdir(staged_t):
-            # staged target already renamed in: live IS the folded copy
-            continue
-        if os.path.isdir(live) and not os.path.isdir(parked):
-            os.rename(live, parked)
-    staged_t = os.path.join(stage, f"batch_id={target}")
-    live_t = os.path.join(path, f"batch_id={target}")
-    if os.path.isdir(staged_t) and not os.path.isdir(live_t):
-        os.rename(staged_t, live_t)
-
-
-def _compact_recover(path: str, stage: str, trash: str, intent: str, marker: str) -> None:
-    """Converge a crashed prior compaction before starting a new one.
-
-    - committed marker present: the fold finished — purge leftovers.
-    - intent present (no marker): the stage is complete (the intent is
-      written only after a successful stage write), so RESUME the swap
-      via ``_resume_swap`` (idempotent renames), then mark committed
-      and clean up. No reliance on row dedup — safe for append-ledger
-      tables whose rows legitimately repeat.
-    - stage without intent: nothing was moved yet — drop the stage,
-      restore anything a stray trash dir holds.
-    """
-    if os.path.exists(marker):
-        shutil.rmtree(trash, ignore_errors=True)
-        shutil.rmtree(stage, ignore_errors=True)
-        if os.path.exists(intent):
-            os.remove(intent)
-        os.remove(marker)
-        return
-    if os.path.exists(intent):
-        import json as _json
-
-        with open(intent) as f:
-            meta = _json.load(f)
-        _resume_swap(path, stage, trash, meta["old"], meta["target"])
-        shutil.rmtree(trash, ignore_errors=True)
-        shutil.rmtree(stage, ignore_errors=True)
-        os.remove(intent)
-        return
-    for side in (stage, trash):
-        if not os.path.isdir(side):
-            continue
-        for e in os.listdir(side):
-            if e.startswith("batch_id=") and not os.path.exists(
-                os.path.join(path, e)
-            ):
-                os.rename(os.path.join(side, e), os.path.join(path, e))
-        shutil.rmtree(side, ignore_errors=True)
-
-
 def compact_index_partitions(
     spark, path: str, watermark: int, dedupe: bool = True
 ) -> int:
@@ -483,56 +399,33 @@ def compact_index_partitions(
     it saw pre-compaction, and its own dynamic overwrite touches only
     partition N, which compaction never rewrites.
 
-    Crash-safety is an intent-log protocol (two markers, all moves
-    atomic renames): stage write -> INTENT file (bids + target) ->
-    swap -> COMMITTED file -> cleanup. A crash before the intent
-    leaves the original layout (recovery drops the stage); a crash
-    after it is resumed by idempotent existence-checked renames
-    (``_resume_swap``) — exactly-once folding with no dependence on
-    downstream ``.distinct()``. Returns the number of partitions
-    folded away."""
-    import fcntl
-    import json as _json
-
+    Crash-safety is one journaled ``commit.commit`` under the table's
+    lock: the fold is staged, then the folded batch ids go out and the
+    target partition comes in. A kill before the journal leaves the
+    original layout; after it, recovery finishes the swap — exactly-once
+    folding with no dependence on downstream ``.distinct()``. Returns
+    the number of partitions folded away."""
     stage = f"{path}.compact-stage"
-    trash = f"{path}.compact-trash"
-    intent = f"{path}.compact-intent"
-    marker = f"{path}.compact-committed"
-    os.makedirs(path, exist_ok=True)
-    lock_path = os.path.join(path, ".compact.lock")
-    with open(lock_path, "w") as lk:
-        fcntl.flock(lk, fcntl.LOCK_EX)
-        try:
-            _compact_recover(path, stage, trash, intent, marker)
-            ids = _list_batch_ids(path)
-            old = [b for b in ids if b < watermark - 1]
-            if not old:
-                return 0
-            target = watermark - 1
-            folded = spark.read.parquet(path).filter(
-                F.col("batch_id") < watermark
-            ).drop("batch_id")
-            if dedupe:
-                folded = folded.distinct()
-            folded = folded.withColumn(
-                "batch_id", F.lit(target).cast("long")
-            )
-            shutil.rmtree(stage, ignore_errors=True)
-            folded.write.mode("overwrite").partitionBy("batch_id").parquet(stage)
-            staged = os.path.join(stage, f"batch_id={target}")
-            if not os.path.isdir(staged):
-                os.makedirs(staged)  # all-empty fold: keep an empty partition
-            tmp = intent + ".tmp"
-            with open(tmp, "w") as f:
-                _json.dump({"old": old, "target": target}, f)
-            os.rename(tmp, intent)  # swap is now mandatory-and-resumable
-            _resume_swap(path, stage, trash, old, target)
-            with open(marker, "w") as f:
-                f.write(str(watermark))  # committed
-            shutil.rmtree(trash, ignore_errors=True)
-            shutil.rmtree(stage, ignore_errors=True)
-            os.remove(intent)
-            os.remove(marker)
-            return len(old)
-        finally:
-            fcntl.flock(lk, fcntl.LOCK_UN)
+    with commit.lock(path):
+        ids = _list_batch_ids(path)
+        old = [b for b in ids if b < watermark - 1]
+        if not old:
+            return 0
+        target = watermark - 1
+        folded = spark.read.parquet(path).filter(
+            F.col("batch_id") < watermark
+        ).drop("batch_id")
+        if dedupe:
+            folded = folded.distinct()
+        folded = folded.withColumn(
+            "batch_id", F.lit(target).cast("long")
+        )
+        folded.write.mode("overwrite").partitionBy("batch_id").parquet(stage)
+        # an all-empty fold installs an empty partition
+        commit.commit(
+            path,
+            stage,
+            install=[f"batch_id={target}"],
+            remove=[f"batch_id={b}" for b in old],
+        )
+        return len(old)

@@ -46,6 +46,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pipe_s_spark.operators.compaction import compact_changelog
+from pipe_s_spark.streaming import commit
 from pipe_s_spark.streaming.merge_apply import (
     FLAT_CHANGELOG_SCHEMA,
     MergeApplyTarget,
@@ -89,14 +90,6 @@ class DeltaAppendTarget:
                 return int(f.read().strip())
         except (OSError, ValueError):
             return -1
-
-    def _write_watermark(self, batch_id: int) -> None:
-        import uuid
-
-        tmp = f"{self._watermark_path()}.{uuid.uuid4().hex}.tmp"
-        with open(tmp, "w") as f:
-            f.write(str(batch_id))
-        os.rename(tmp, self._watermark_path())
 
     # -- write path ----------------------------------------------------
     def apply_batch(self, batch: DataFrame, epoch_id: int) -> bool:
@@ -219,12 +212,12 @@ class DeltaAppendTarget:
         (the shape the bucketed target is good at), then advance the
         watermark and (optionally) truncate the folded partitions.
 
-        Crash-safe by ordering, no journal needed: the base's own
-        fence/swap commits the fold atomically; the watermark is
-        written only after that commit, so a crash in between re-folds
-        the same resolved net state on restart — idempotent effects
-        (same upserts, same deletes). Truncation runs last and is pure
-        space reclamation (readers already ignore folded ids).
+        Crash-safe by ordering: the base's journaled commit applies
+        the fold atomically; the watermark is written only after that
+        commit, so a crash in between re-folds the same resolved net
+        state on restart — idempotent effects (same upserts, same
+        deletes). Truncation runs last and is pure space reclamation
+        (readers already ignore folded ids).
         ``epoch_id`` is the BASE's epoch number and must exceed its
         fence, as with any apply."""
         spark = SparkSession.getActiveSession() or SparkSession.builder.getOrCreate()
@@ -239,7 +232,8 @@ class DeltaAppendTarget:
         )
         if not base.apply_batch(resolved, epoch_id):
             return False
-        self._write_watermark(int(hi))
+        commit.fault("fold-committed")
+        commit.write_atomic(self._watermark_path(), str(int(hi)))
         if truncate:
             for e in os.listdir(self.path):
                 if not e.startswith("batch_id="):

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pipe_s_spark.operators.compaction import compact_changelog
+from pipe_s_spark.streaming import commit
 from pipe_s_spark.streaming.merge_apply import MergeApplyTarget
 
 
@@ -70,13 +71,6 @@ class IncrementalAggView:
                 return json.load(f)
         except (OSError, ValueError):
             return {"epoch": -1, "groups": {}}
-
-    def _write_state(self, state: dict) -> None:
-        os.makedirs(self.path, exist_ok=True)
-        tmp = self._state_file() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(state, f)
-        os.rename(tmp, self._state_file())
 
     def _key(self, row) -> str:
         return json.dumps([row[c] for c in self.group_cols])
@@ -137,7 +131,7 @@ class IncrementalAggView:
             # incarnation already folded a later epoch must abort, not
             # regress state.json — the exact protocol the target's own
             # swap uses (merge_apply.MergeApplyTarget.apply_batch).
-            with self.target._lock():
+            with commit.lock(self.target.path):
                 state = self._read_state()  # re-read under the lock
                 if epoch_id <= state["epoch"]:
                     return  # zombie / concurrent replay lost the race
@@ -161,7 +155,9 @@ class IncrementalAggView:
                         "driver-held view; aggregate in the engine instead"
                     )
                 state["epoch"] = epoch_id
-                self._write_state(state)
+                os.makedirs(self.path, exist_ok=True)
+                commit.write_atomic(self._state_file(), json.dumps(state))
+            commit.fault("view-state-written")
             self.target.apply_batch(batch, epoch_id)
         finally:
             compacted.unpersist()

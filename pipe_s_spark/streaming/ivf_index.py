@@ -56,6 +56,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from pipe_s_spark.functions import similarity as S
+from pipe_s_spark.streaming import commit
 from pipe_s_spark.streaming.dedup_index import (
     DEFAULT_COMPACT_EVERY,
     _free_local_checkpoint,
@@ -700,33 +701,29 @@ def _write_counts_epoch(rows, batch_id: int, cells_path: str) -> None:
     ledger being the smallest of the three per-epoch writes); writing
     the already-collected rows directly costs ~ms. Same idempotence
     contract as the Spark dynamic overwrite: the partition directory
-    is replaced whole, so a replayed epoch rewrites identical content
-    (and a crash mid-write is repaired by the replay). Schema matches
-    the previous Spark write (cell int32, n int64; batch_id stays a
-    hive partition key) so compaction and the base-count reader are
-    unchanged."""
-    import shutil
+    is replaced whole (one ``commit.commit``), so a replayed epoch
+    rewrites identical content. Schema matches the previous Spark
+    write (cell int32, n int64; batch_id stays a hive partition key)
+    so compaction and the base-count reader are unchanged."""
+    import uuid
 
     import pyarrow as pa
     import pyarrow.parquet as papq
 
-    part = os.path.join(cells_path, f"batch_id={batch_id}")
-    # leading '_' so Spark partition discovery ignores the staging dir:
-    # a crash between write_table and os.replace leaves it behind, and
-    # a non-hidden "batch_id=N._tmp" would make any ledger read before
-    # the epoch replays fail on the unparseable partition value
-    tmp = os.path.join(cells_path, f"_staging_batch_id={batch_id}")
-    shutil.rmtree(tmp, ignore_errors=True)
-    os.makedirs(tmp)
+    name = f"batch_id={batch_id}"
+    # leading '_': Spark partition discovery ignores the stage a kill
+    # before the commit leaves behind
+    stage = os.path.join(cells_path, f"_staging_{uuid.uuid4().hex}")
+    os.makedirs(os.path.join(stage, name))
     table = pa.table(
         {
             "cell": pa.array([r["cell"] for r in rows], type=pa.int32()),
             "n": pa.array([r["n"] for r in rows], type=pa.int64()),
         }
     )
-    papq.write_table(table, os.path.join(tmp, "part-00000.parquet"))
-    shutil.rmtree(part, ignore_errors=True)
-    os.replace(tmp, part)
+    papq.write_table(table, os.path.join(stage, name, "part-00000.parquet"))
+    with commit.lock(cells_path):
+        commit.commit(cells_path, stage, install=[name])
 
 
 def _overwrite_epoch(

@@ -33,19 +33,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from pipe_s_spark.operators.compaction import compact_changelog
+from pipe_s_spark.streaming import commit
 
 
-def _trace(target_path: str, msg: str) -> None:
-    """Append a debug trace line when PIPE_S_TRACE is set (commit-protocol
-    forensics; no-op in production)."""
-    import threading
-    import time as _t
-
-    if not os.environ.get("PIPE_S_TRACE"):
-        return
-    line = f"{_t.monotonic():.3f} pid={os.getpid()} tid={threading.get_ident()} {msg}\n"
-    with open(os.environ["PIPE_S_TRACE"], "a") as f:
-        f.write(line)
+#: the merge target's epoch fence and layout contract (dot-prefixed:
+#: invisible to Spark's partition discovery)
+_FENCE = "._last_epoch"
+_LAYOUT = "._layout"
 
 #: Flat changelog schema for JSON file streams (model.changelog_from_events
 #: shape). Heterogeneous streams would carry JSON payloads instead.
@@ -130,21 +124,19 @@ class MergeApplyTarget:
 
     Commit protocol (the poor man's transaction log):
 
-    - the expensive merge WRITE goes to a ``.stage-<epoch>`` sibling,
-      outside any lock;
-    - [fence check -> bucket swap -> fence write] runs under a file
-      lock (flock), so a zombie writer — e.g. a foreachBatch callback
-      orphaned by a killed query thread — re-reads the fence atomically
-      with the swap and aborts instead of clobbering state a newer
-      incarnation already advanced past (the role a transactional
-      format's writer-epoch check plays);
-    - replaced bucket dirs move to ``.trash-<epoch>`` and the fence is
-      written only after ALL buckets swapped. ``_recover`` (also under
-      the lock) therefore has one rule: a trash dir with epoch > fence
-      is a half-finished swap — roll every bucket in it back; epoch <=
-      fence means committed — purge it. Replayed epochs (<= fence) are
-      skipped outright: idempotence by fencing, matching the
-      reference's idempotent-SQL story (utils/mysql.go:197-218).
+    - the expensive merge WRITE goes to a ``.stage-<epoch>-<id>``
+      sibling, one per attempt, outside any lock;
+    - [fence check -> layout check -> ``commit.commit``] runs under the
+      target's ``commit.lock``, so a zombie writer — e.g. a
+      foreachBatch callback orphaned by a killed query thread —
+      re-reads the fence atomically with the swap and aborts instead of
+      clobbering state a newer incarnation already advanced past (the
+      role a transactional format's writer-epoch check plays);
+    - the swap installs every touched bucket and writes the fence in
+      one journaled commit, which recovery rolls forward after a kill,
+      so readers see the whole epoch or none of it. Replayed epochs
+      (<= fence) are skipped outright: idempotence by fencing, matching
+      the reference's idempotent-SQL story (utils/mysql.go:197-218).
 
     Known limit without a transactional format: a reader holding a
     lazy plan over files that a concurrent swap trashes can fail and
@@ -204,12 +196,6 @@ class MergeApplyTarget:
 
         return F.pmod(F.hash(*[F.col(c) for c in self.key_cols]), F.lit(self.num_buckets))
 
-    def _bucket_dir(self, k: int) -> str:
-        return os.path.join(self.path, f"bucket={k}")
-
-    def _layout_path(self) -> str:
-        return os.path.join(self.path, "._layout")
-
     def _check_layout_locked(self) -> None:
         """Enforce the target's immutable layout contract (caller holds
         the lock). Bucket routing is ``pmod(hash(key_cols), num_buckets)``
@@ -231,15 +217,12 @@ class MergeApplyTarget:
             "key_cols": self.key_cols,
             "lww": self.lww,
         }
-        p = self._layout_path()
+        p = os.path.join(self.path, _LAYOUT)
         try:
             with open(p) as f:
                 disk = _json.load(f)
         except FileNotFoundError:
-            tmp = p + ".tmp"
-            with open(tmp, "w") as f:
-                _json.dump(meta, f)
-            os.rename(tmp, p)
+            commit.write_atomic(p, _json.dumps(meta))
             return
         if disk != meta:
             raise ValueError(
@@ -251,68 +234,12 @@ class MergeApplyTarget:
                 "its original layout, or write to a new path."
             )
 
-    def _fence_path(self) -> str:
-        return os.path.join(self.path, "._last_epoch")
-
     def _read_fence(self) -> int:
         try:
-            with open(self._fence_path()) as f:
+            with open(os.path.join(self.path, _FENCE)) as f:
                 return int(f.read().strip())
         except (OSError, ValueError):
             return -1
-
-    def _write_fence(self, epoch_id: int) -> None:
-        tmp = self._fence_path() + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(str(epoch_id))
-        os.rename(tmp, self._fence_path())
-
-    def _lock(self):
-        """flock-based mutex serializing swap/recover across threads
-        AND processes sharing the target directory."""
-        import fcntl
-        from contextlib import contextmanager
-
-        @contextmanager
-        def held():
-            os.makedirs(self.path, exist_ok=True)
-            with open(os.path.join(self.path, "._lock"), "w") as f:
-                fcntl.flock(f, fcntl.LOCK_EX)
-                try:
-                    yield
-                finally:
-                    fcntl.flock(f, fcntl.LOCK_UN)
-
-        return held()
-
-    def _recover_locked(self) -> None:
-        """Roll half-finished swaps back (caller holds the lock). The
-        fence is written only after a complete swap, so epoch > fence
-        in a trash dir == crash mid-swap -> restore every bucket from
-        trash; epoch <= fence == committed -> purge leftovers. A
-        half-finished offline rebucket (``rebucket_target``) is
-        resolved first — its journal decides roll-back vs roll-forward
-        — because it can change ``._layout``, which every layout check
-        after this call must see."""
-        if not os.path.isdir(self.path):
-            return
-        _recover_rebucket_locked(self.path)
-        fence = self._read_fence()
-        for entry in os.listdir(self.path):
-            if not entry.startswith(".trash-"):
-                continue
-            trash = os.path.join(self.path, entry)
-            try:
-                epoch = int(entry.split("-", 1)[1])
-            except ValueError:
-                continue
-            if epoch > fence:
-                for b in os.listdir(trash):  # "bucket=K"
-                    live = os.path.join(self.path, b)
-                    if os.path.isdir(live):
-                        shutil.rmtree(live)
-                    os.rename(os.path.join(trash, b), live)
-            shutil.rmtree(trash, ignore_errors=True)
 
     def read_current(
         self,
@@ -325,12 +252,9 @@ class MergeApplyTarget:
         the merge's view; the public view hides both."""
         from pyspark.sql import functions as F
 
-        with self._lock():
-            # recover BEFORE the layout check: a crashed rebucket's
-            # roll-forward rewrites ._layout, and the check must see
-            # the post-recovery truth (an instance configured with the
-            # pre-rebucket bucket count must refuse, not read)
-            self._recover_locked()
+        # the lock runs recovery first, so a crashed rebucket's
+        # roll-forward has rewritten ._layout before the check reads it
+        with commit.lock(self.path):
             self._check_layout_locked()
             fence = self._read_fence()
         cols = self.key_cols + self.payload_cols
@@ -417,15 +341,6 @@ class MergeApplyTarget:
             return merged
         return merged.filter(~F.col(self._TOMB)).drop(self._TOMB)
 
-    #: wall-clock of the most recent apply_batch's phases (seconds) —
-    #: the same attribution telemetry the index epochs carry
-    #: (LAST_EPOCH_PROFILE). Keys: compact (compaction materialize +
-    #: touched-bucket collect), write (merge compute + staged parquet),
-    #: swap (fence/rename commit), wall. Class-level by design: one
-    #: logical stream owns a target, and the scaling harness reads it
-    #: right after each apply.
-    LAST_APPLY_PROFILE: dict = {}
-
     def apply_batch(self, batch: DataFrame, epoch_id: int) -> bool:
         # Epoch fence (zombie-writer protection): the fence records the
         # last fully-applied epoch. A replayed epoch (crash after swap,
@@ -438,16 +353,10 @@ class MergeApplyTarget:
         # when the fence skipped/aborted it — batch callers (runner
         # 'merge' output) surface the skip to the user instead of
         # silently no-opping on re-run with fresh input.
-        with self._lock():
-            self._recover_locked()  # may roll a crashed rebucket forward
+        with commit.lock(self.path):
             self._check_layout_locked()
         if epoch_id <= self._read_fence():
-            _trace(self.path, f"epoch={epoch_id} SKIP fence={self._read_fence()}")
             return False
-        import time as _time
-
-        _prof: dict = {}
-        _t_epoch = _time.perf_counter()
         spark = batch.sparkSession
         for f in batch.schema.fields:
             self._col_types[f.name] = f.dataType
@@ -470,19 +379,8 @@ class MergeApplyTarget:
             touched = sorted(
                 r["b"] for r in compacted.select(self._bucket(compacted).alias("b")).distinct().collect()
             )
-            _prof["compact"] = _time.perf_counter() - _t_epoch
             if not touched:
                 return True
-            if os.environ.get("PIPE_S_TRACE"):
-                rows = batch.count()
-                agg = batch.agg(
-                    {"seq": "min"}
-                ).collect()[0][0] if "seq" in batch.columns else None
-                _trace(
-                    self.path,
-                    f"epoch={epoch_id} START rows={rows} min_seq={agg} touched={touched}",
-                )
-            _t_write = _time.perf_counter()
             # sized from THIS batch's estimated bytes, so streaming
             # micro-batches never engage bulk sizing
             merged = self._merge(
@@ -500,192 +398,77 @@ class MergeApplyTarget:
 
             stage = f"{self.path}.stage-{epoch_id}-{uuid.uuid4().hex[:8]}"
             merged.write.mode("overwrite").partitionBy("bucket").parquet(stage)
-            _prof["write"] = _time.perf_counter() - _t_write
-            _t_swap = _time.perf_counter()
-            with self._lock():
+            with commit.lock(self.path):
                 if epoch_id <= self._read_fence():
                     # a newer incarnation advanced while we computed
                     # (or a concurrent replay of this epoch won): abort
-                    _trace(self.path, f"epoch={epoch_id} ABORT fence={self._read_fence()}")
                     shutil.rmtree(stage, ignore_errors=True)
                     return False
-                self._recover_locked()
                 # a concurrent offline rebucket may have committed while
                 # this epoch computed: its new ._layout makes this
                 # writer's bucket numbering wrong — refuse loudly here,
                 # atomically with the swap, instead of renaming staged
                 # old-numbered buckets into a new-numbered table
                 self._check_layout_locked()
-                trash = os.path.join(self.path, f".trash-{epoch_id}")
-                os.makedirs(trash, exist_ok=True)
-                for k in touched:
-                    staged = os.path.join(stage, f"bucket={k}")
-                    if not os.path.isdir(staged):
-                        os.makedirs(staged)  # bucket fully deleted -> empty
-                    live = self._bucket_dir(k)
-                    if os.path.isdir(live):
-                        os.rename(live, os.path.join(trash, f"bucket={k}"))
-                    os.rename(staged, live)
-                self._write_fence(epoch_id)  # commit point
+                # a fully deleted bucket installs as an empty directory
+                commit.commit(
+                    self.path,
+                    stage,
+                    install=[f"bucket={k}" for k in touched],
+                    files={_FENCE: str(epoch_id)},
+                )
                 self._schema = (epoch_id, schema)
-                _trace(self.path, f"epoch={epoch_id} COMMIT")
-                shutil.rmtree(trash, ignore_errors=True)
-            shutil.rmtree(stage, ignore_errors=True)
-            _prof["swap"] = _time.perf_counter() - _t_swap
-            _prof["wall"] = _time.perf_counter() - _t_epoch
-            _prof["touched_buckets"] = len(touched)
-            self.LAST_APPLY_PROFILE.clear()
-            self.LAST_APPLY_PROFILE.update(_prof)
             return True
         finally:
             compacted.unpersist()
 
 
-def _rebucket_journal_path(path: str) -> str:
-    return os.path.join(path, "._rebucket")
-
-
-def _write_json_atomic(p: str, obj: dict) -> None:
-    import json as _json
-    import uuid as _uuid
-
-    tmp = f"{p}.{_uuid.uuid4().hex}.tmp"
-    with open(tmp, "w") as f:
-        _json.dump(obj, f)
-    os.rename(tmp, p)
-
-
-def _recover_rebucket_locked(path: str) -> None:
-    """Resolve a crashed ``rebucket_target`` (caller holds the target
-    lock). The journal's phase decides the direction, and both
-    directions are idempotent under re-crash:
-
-    - ``moving-old`` — old buckets were being moved to the journal's
-      trash dir; nothing new entered the table yet. ROLL BACK: restore
-      every trashed bucket whose name is not live (a re-crash mid-
-      restore leaves it live, so the skip makes re-runs idempotent),
-      drop the stage, keep the old ``._layout``. The rebucket simply
-      never happened.
-    - ``moving-new`` — every old bucket is in trash (the phase marker
-      is written only after that completes), so any live ``bucket=*``
-      is NEW. ROLL FORWARD from the complete stage: move the staged
-      buckets still in the stage dir in (already-moved ones are live —
-      skip), rewrite ``._layout`` from the journal (idempotent), then
-      clear the journal and both scratch dirs. The stage was fully
-      written and fsync-renamed before the journal ever said
-      moving-old, so roll-forward never fabricates data."""
-    import json as _json
-
-    import glob as _glob
-
-    jp = _rebucket_journal_path(path)
-    try:
-        with open(jp) as f:
-            j = _json.load(f)
-    except FileNotFoundError:
-        # no journal = no rebucket in flight; any rebucket scratch
-        # (in-table trash, sibling stage) is a post-commit/rollback
-        # leftover from a kill inside the cleanup step — purge it
-        for d in _glob.glob(os.path.join(path, ".rebucket-trash-*")) + _glob.glob(
-            f"{path}.rebucket-stage-*"
-        ):
-            shutil.rmtree(d, ignore_errors=True)
-        return
-    stage, trash = j["stage_dir"], j["trash"]
-    if j["phase"] == "moving-old":
-        if os.path.isdir(trash):
-            for b in os.listdir(trash):
-                live = os.path.join(path, b)
-                if not os.path.isdir(live):
-                    os.rename(os.path.join(trash, b), live)
-    else:  # moving-new
-        if os.path.isdir(stage):
-            for b in os.listdir(stage):
-                if not b.startswith("bucket="):
-                    continue
-                live = os.path.join(path, b)
-                if not os.path.isdir(live):
-                    os.rename(os.path.join(stage, b), live)
-        _write_json_atomic(os.path.join(path, "._layout"), j["layout"])
-    shutil.rmtree(trash, ignore_errors=True)
-    shutil.rmtree(stage, ignore_errors=True)
-    os.remove(jp)
-
-
-def rebucket_target(
-    spark: SparkSession,
-    path: str,
-    new_num_buckets: int,
-    _fault_injection=None,
-) -> None:
+def rebucket_target(spark: SparkSession, path: str, new_num_buckets: int) -> None:
     """Offline rebucket/migration for an existing merge target (r13
     verdict #5): ``._layout`` correctly freezes ``num_buckets`` forever
     — bucket routing is ``pmod(hash(key_cols), N)``, so changing N on
     live data silently duplicates/hides rows — but that left a target
     created with too few buckets unable to EVER rebalance. This tool
     rewrites the whole table under ``new_num_buckets`` atomically,
-    under the same flock every writer's swap takes, with a journaled
-    two-phase commit that ``_recover_locked`` resolves after a kill at
-    any point (see ``_recover_rebucket_locked``):
+    under the same lock every writer's swap takes:
 
-    1. read everything (internal LWW columns verbatim), stage the
+    1. read everything (internal LWW columns verbatim) and stage the
        re-bucketed copy to a sibling dir — data-proportionally sized,
-       all before any mutation;
-    2. journal ``moving-old`` -> move old buckets to an in-table trash
-       (kill here rolls BACK: old layout, old data, nothing lost);
-    3. journal ``moving-new`` -> move staged buckets in, rewrite
-       ``._layout`` (kill here rolls FORWARD from the complete stage);
-    4. clear journal + scratch.
+       before any mutation (a kill here leaves only the orphan stage);
+    2. one journaled ``commit.commit``: old buckets out, staged buckets
+       in, the new ``._layout`` written. The stage is complete before
+       the journal, so a kill anywhere after it rolls FORWARD.
 
     Concurrent writers are safe, not coordinated: the tool holds the
     lock for the whole rewrite (offline by design — at 100 TB run it
     in a maintenance window), and a writer that was mid-compute when
     the rebucket committed re-checks ``._layout`` inside its swap lock
     and refuses loudly. The epoch fence is untouched — the stream
-    resumes at the same epoch numbering. ``_fault_injection(point)``
-    is a test hook used by the kill-mid-rebucket integrity tests.
+    resumes at the same epoch numbering.
     """
     import json as _json
     import uuid as _uuid
 
     from pyspark.sql import functions as F
 
-    layout_p = os.path.join(path, "._layout")
-    try:
-        with open(layout_p) as f:
-            disk = _json.load(f)
-    except FileNotFoundError:
+    if not os.path.exists(os.path.join(path, _LAYOUT)):
         raise ValueError(
             f"{path} has no ._layout — not an initialized merge target "
             "(rebucket rewrites an existing table; create new targets "
             "with the right num_buckets instead)"
-        ) from None
+        )
     if int(new_num_buckets) < 1:
         raise ValueError(f"new_num_buckets must be >= 1, got {new_num_buckets}")
-    tgt = MergeApplyTarget(
-        path,
-        key_cols=disk["key_cols"],
-        num_buckets=disk["num_buckets"],
-        lww=disk["lww"],
-    )
-    inject = _fault_injection or (lambda point: None)
-    with tgt._lock():
-        tgt._recover_locked()
-        with open(layout_p) as f:
-            disk = _json.load(f)  # recovery may have rolled a layout forward
+    with commit.lock(path):
+        with open(os.path.join(path, _LAYOUT)) as f:
+            disk = _json.load(f)
         if disk["num_buckets"] == int(new_num_buckets):
             return
-        live_buckets = [
-            e for e in os.listdir(path) if e.startswith("bucket=")
-        ] if os.path.isdir(path) else []
-        suffix = _uuid.uuid4().hex[:8]
-        stage = f"{path}.rebucket-stage-{suffix}"
-        # 1. full rewrite to the stage, before any mutation: the source
-        # files are still the live table, so a kill during this write
-        # leaves only an orphan sibling dir (harmless; re-run cleans a
-        # fresh one). Reduce parallelism is data-proportional — a
-        # 100 TB rebucket must not funnel through core-count reducers.
+        live_buckets = [e for e in os.listdir(path) if e.startswith("bucket=")]
+        stage = f"{path}.rebucket-stage-{_uuid.uuid4().hex[:8]}"
         if live_buckets:
+            # reduce parallelism is data-proportional: a 100 TB
+            # rebucket must not funnel through core-count reducers
             df = (
                 spark.read.option("basePath", path)
                 .parquet(*[os.path.join(path, b) for b in live_buckets])
@@ -700,43 +483,14 @@ def rebucket_target(
             )
             df = _cluster_by_bucket(df, disk["key_cols"], int(new_num_buckets), size_of=df)
             df.drop("__salt").write.mode("overwrite").partitionBy("bucket").parquet(stage)
-        else:
-            os.makedirs(stage, exist_ok=True)
-        trash = os.path.join(path, f".rebucket-trash-{suffix}")
-        os.makedirs(trash, exist_ok=True)
-        new_layout = dict(disk, num_buckets=int(new_num_buckets))
-        journal = {
-            "phase": "moving-old",
-            "stage_dir": stage,
-            "trash": trash,
-            "layout": new_layout,
-        }
-        _write_json_atomic(_rebucket_journal_path(path), journal)
-        inject("journal-moving-old")
-        # 2. old buckets out of the table (kill anywhere here: rollback)
-        for i, b in enumerate(live_buckets):
-            os.rename(os.path.join(path, b), os.path.join(trash, b))
-            if i == 0:
-                inject("mid-moving-old")
-        _write_json_atomic(
-            _rebucket_journal_path(path), dict(journal, phase="moving-new")
+        staged = [e for e in os.listdir(stage) if e.startswith("bucket=")] if live_buckets else []
+        commit.commit(
+            path,
+            stage,
+            install=staged,
+            remove=live_buckets,
+            files={_LAYOUT: _json.dumps(dict(disk, num_buckets=int(new_num_buckets)))},
         )
-        inject("journal-moving-new")
-        # 3. staged buckets in + layout (kill anywhere here: roll forward)
-        moved = 0
-        for b in sorted(os.listdir(stage)):
-            if not b.startswith("bucket="):
-                continue
-            os.rename(os.path.join(stage, b), os.path.join(path, b))
-            moved += 1
-            if moved == 1:
-                inject("mid-moving-new")
-        _write_json_atomic(layout_p, new_layout)
-        inject("after-layout")
-        # 4. commit: journal gone = rebucket fully applied
-        os.remove(_rebucket_journal_path(path))
-        shutil.rmtree(trash, ignore_errors=True)
-        shutil.rmtree(stage, ignore_errors=True)
 
 
 def run_merge_apply_stream(

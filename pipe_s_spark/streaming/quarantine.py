@@ -57,7 +57,7 @@ def run_quarantine_gate(
     partitions of all three sinks into one
     (streaming.dedup_index.compact_index_partitions with
     ``dedupe=False`` — ledger rows may legitimately repeat, and the
-    intent-log protocol gives exactly-once folding without relying on
+    journaled commit gives exactly-once folding without relying on
     dedup) so a long-running gate keeps O(1) partitions instead of
     O(#batches). DEFAULT-ON at streaming.dedup_index.
     DEFAULT_COMPACT_EVERY (None opts out). Safe inside foreachBatch:

@@ -1,0 +1,284 @@
+"""Kill every user of ``streaming.commit`` at every commit point.
+
+A kill is ``commit.fault`` raising at the named point. Nothing on the
+commit path catches the raise or cleans up after it (only the lock is
+released), so the files stay exactly where a killed process leaves
+them. After the kill a fresh handle must see the parent state when the
+kill came before the journal and the committed state at or after it —
+a mix fails. Re-running the same operation with the same epoch must
+then match a plain-Python oracle, and no ``._journal`` or ``._trash``
+may survive the next lock entry.
+"""
+
+from __future__ import annotations
+
+import os
+import shutil
+from decimal import Decimal
+
+import pytest
+
+from pipe_s_spark.streaming import commit
+from pipe_s_spark.streaming.dedup_index import compact_index_partitions
+from pipe_s_spark.streaming.delta_apply import DeltaAppendTarget
+from pipe_s_spark.streaming.incremental_agg import IncrementalAggView
+from pipe_s_spark.streaming.merge_apply import (
+    FLAT_CHANGELOG_SCHEMA,
+    MergeApplyTarget,
+    rebucket_target,
+)
+
+# (seq, table_name, op, pk, k, value) changelog events
+BASE = [(i, "t1", "insert", i, 1, float(i)) for i in range(20)]
+UPSERTS = (
+    [(100 + i, "t1", "update", i, 2, 100.0 + i) for i in range(0, 20, 3)]
+    + [(200, "t1", "delete", 5, 1, 0.0)]
+    + [(300 + i, "t2", "insert", 1000 + i, 3, 0.5 * i) for i in range(40)]
+)
+# the merge case: epoch 0 fills one of 8 buckets, epoch 1 creates the
+# other seven from nothing (a kill mid-swap must not leave them live)
+ONE_ROW = [(0, "t0", "insert", 0, 1, 0.0)]
+LEDGER = [(i % 4, f"v{i % 3}", b) for b in range(4) for i in range(6)]
+
+#: points before the journal of the commit a user's state depends on
+PRE_JOURNAL = {"staged", "view-state-written"}
+PRIMITIVE = ("staged", "journaled", "mid-park", "mid-install", "files-written", "cleaned")
+USERS = ("merge", "rebucket", "compaction", "fold", "view")
+CASES = [(u, p) for u in USERS for p in PRIMITIVE] + [
+    ("fold", "fold-committed"),
+    ("view", "view-state-written"),
+]
+
+
+class Killed(RuntimeError):
+    pass
+
+
+def _mk(spark, events):
+    rows = [
+        {"id": f"e{s}", "seq": s, "db": "d", "table_name": t, "op": op,
+         "pk": pk, "k": k, "value": v, "ts_ms": s}
+        for s, t, op, pk, k, v in events
+    ]
+    return spark.createDataFrame(rows, FLAT_CHANGELOG_SCHEMA)
+
+
+def _lww(events) -> list:
+    """Last-event-wins table: one (table, pk, k, value) row per live key."""
+    last = {}
+    for s, t, op, pk, k, v in sorted(events):
+        last[(t, pk)] = None if op == "delete" else (k, v)
+    return sorted((t, pk, *kv) for (t, pk), kv in last.items() if kv is not None)
+
+
+def _rows(df) -> list:
+    return sorted(tuple(r) for r in df.select("table_name", "pk", "k", "value").collect())
+
+
+def _target_rows(spark, path, num_buckets=4) -> list:
+    return _rows(MergeApplyTarget(path, num_buckets=num_buckets).read_current(spark))
+
+
+def _ledger(spark, path) -> list:
+    return sorted(tuple(r) for r in spark.read.parquet(path).select("k", "v", "batch_id").collect())
+
+
+class Merge:
+    roots = ("t",)
+    parent_state = (_lww(ONE_ROW), 0)
+    committed_state = (_lww(ONE_ROW + BASE + UPSERTS), 1)
+
+    def setup(self, spark, d):
+        MergeApplyTarget(d + "/t", num_buckets=8).apply_batch(_mk(spark, ONE_ROW), 0)
+
+    def run(self, spark, d):
+        MergeApplyTarget(d + "/t", num_buckets=8).apply_batch(_mk(spark, BASE + UPSERTS), 1)
+
+    def state(self, spark, d):
+        t = MergeApplyTarget(d + "/t", num_buckets=8)
+        return _rows(t.read_current(spark)), t._read_fence()
+
+    def check(self, spark, d):
+        assert self.state(spark, d) == self.committed_state
+
+
+class Rebucket:
+    roots = ("t",)
+    parent_state = (4, _lww(BASE + UPSERTS))
+    committed_state = (16, _lww(BASE + UPSERTS))
+
+    def setup(self, spark, d):
+        t = MergeApplyTarget(d + "/t", num_buckets=4)
+        t.apply_batch(_mk(spark, BASE), 0)
+        t.apply_batch(_mk(spark, UPSERTS), 1)
+
+    def run(self, spark, d):
+        rebucket_target(spark, d + "/t", 16)
+
+    def state(self, spark, d):
+        import json
+
+        with commit.lock(d + "/t"):
+            with open(d + "/t/._layout") as f:
+                n = json.load(f)["num_buckets"]
+        return n, _target_rows(spark, d + "/t", n)
+
+    def check(self, spark, d):
+        from pyspark.sql import functions as F
+
+        assert self.state(spark, d) == self.committed_state
+        df = spark.read.option("basePath", d + "/t").parquet(d + "/t")
+        home = F.pmod(F.hash("table_name", "pk"), F.lit(16))
+        assert df.filter(F.col("bucket") != home).count() == 0
+
+
+class Compaction:
+    roots = ("ix",)
+    parent_state = sorted(LEDGER)
+    committed_state = sorted((k, v, 2 if b < 3 else b) for k, v, b in LEDGER)
+
+    def setup(self, spark, d):
+        spark.createDataFrame(LEDGER, "k long, v string, batch_id long").write.partitionBy(
+            "batch_id"
+        ).parquet(d + "/ix")
+
+    def run(self, spark, d):
+        compact_index_partitions(spark, d + "/ix", watermark=3, dedupe=False)
+
+    def state(self, spark, d):
+        with commit.lock(d + "/ix"):
+            pass
+        return _ledger(spark, d + "/ix")
+
+    def check(self, spark, d):
+        assert self.state(spark, d) == self.committed_state
+        assert sorted(e for e in os.listdir(d + "/ix") if e.startswith("batch_id=")) == [
+            "batch_id=2",
+            "batch_id=3",
+        ]
+
+
+class Fold:
+    roots = ("base",)
+    parent_state = []
+    committed_state = _lww(BASE + UPSERTS)
+
+    def setup(self, spark, d):
+        t = DeltaAppendTarget(d + "/delta")
+        t.apply_batch(_mk(spark, BASE), 0)
+        t.apply_batch(_mk(spark, UPSERTS), 1)
+
+    def run(self, spark, d):
+        DeltaAppendTarget(d + "/delta").fold_into(MergeApplyTarget(d + "/base", num_buckets=4), 0)
+
+    def state(self, spark, d):
+        return _target_rows(spark, d + "/base")
+
+    def check(self, spark, d):
+        assert self.state(spark, d) == self.committed_state
+        base = MergeApplyTarget(d + "/base", num_buckets=4)
+        assert _rows(DeltaAppendTarget(d + "/delta").read_merged(spark, base)) == self.committed_state
+
+
+class View:
+    roots = ("t",)
+    parent_state = _lww(BASE)
+    committed_state = _lww(BASE + UPSERTS)
+
+    def _view(self, d):
+        return IncrementalAggView(MergeApplyTarget(d + "/t", num_buckets=4), d + "/v")
+
+    def setup(self, spark, d):
+        self._view(d).apply_batch(_mk(spark, BASE), 0)
+
+    def run(self, spark, d):
+        self._view(d).apply_batch(_mk(spark, UPSERTS), 1)
+
+    def state(self, spark, d):
+        return _target_rows(spark, d + "/t")
+
+    def check(self, spark, d):
+        assert self.state(spark, d) == self.committed_state
+        want = {}
+        for t, _pk, _k, v in self.committed_state:
+            n, s = want.get(t, (0, Decimal(0)))
+            want[t] = (n + 1, s + Decimal(str(v)))
+        view = self._view(d).current(spark).collect()
+        got = {r["table_name"]: (r["n_rows"], r["sum_value"]) for r in view}
+        assert got == {t: (n, float(s)) for t, (n, s) in want.items()}
+
+
+USER = dict(zip(USERS, (Merge(), Rebucket(), Compaction(), Fold(), View())))
+
+
+@pytest.fixture(scope="module")
+def parents(spark, tmp_path_factory):
+    """Each user's pre-operation directory, built once and copied per case."""
+    built = {}
+
+    def get(user):
+        if user not in built:
+            d = str(tmp_path_factory.mktemp(user))
+            USER[user].setup(spark, d)
+            built[user] = d
+        return built[user]
+
+    return get
+
+
+def _no_leftovers(d, roots):
+    for r in roots:
+        with commit.lock(os.path.join(d, r)):
+            pass
+        assert not {"._journal", "._trash"} & set(os.listdir(os.path.join(d, r)))
+
+
+@pytest.mark.parametrize("user,point", CASES, ids=[f"{u}-{p}" for u, p in CASES])
+def test_kill_at_commit_point(spark, tmp_path, monkeypatch, parents, user, point):
+    u = USER[user]
+    d = str(tmp_path / "case")
+    shutil.copytree(parents(user), d)
+
+    def kill(at):
+        if at == point:
+            monkeypatch.setattr(commit, "fault", lambda at: None)
+            raise Killed(at)
+
+    monkeypatch.setattr(commit, "fault", kill)
+    with pytest.raises(Killed):
+        u.run(spark, d)
+    _no_leftovers(d, u.roots)
+    want = u.parent_state if point in PRE_JOURNAL else u.committed_state
+    assert u.state(spark, d) == want
+    u.run(spark, d)  # the replay of the same epoch
+    u.check(spark, d)
+    _no_leftovers(d, u.roots)
+
+
+def test_every_fault_point_has_a_case():
+    """Each case asserts its kill fired, so this proves every point is
+    reached by at least one user."""
+    assert {p for _u, p in CASES} == set(commit.FAULT_POINTS)
+
+
+def test_only_commit_module_renames_or_locks():
+    """``streaming/commit.py`` is the one place that renames files or
+    takes a lock; any other module must go through it."""
+    import ast
+    import pathlib
+
+    banned = {("os", "rename"), ("os", "replace"), ("fcntl", "flock")}
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "pipe_s_spark"
+    hits = []
+    for f in sorted(pkg.rglob("*.py")):
+        if f == pkg / "streaming" / "commit.py":
+            continue
+        for node in ast.walk(ast.parse(f.read_text())):
+            if isinstance(node, ast.Attribute) and isinstance(node.value, ast.Name):
+                names = {(node.value.id, node.attr)}
+            elif isinstance(node, ast.ImportFrom):
+                names = {(node.module, a.name) for a in node.names}
+            else:
+                continue
+            hits += [f"{f.relative_to(pkg)}:{node.lineno} {m}.{n}" for m, n in names & banned]
+    assert not hits

@@ -186,58 +186,6 @@ def test_compaction_ledger_mode_preserves_duplicates(spark, tmp_path):
     assert got == [(1, "x", 1), (1, "x", 1), (1, "x", 1), (2, "y", 2)]
 
 
-def test_compaction_resumes_after_intent_crash(spark, tmp_path):
-    """Crash-after-intent: the recovery path must RESUME the swap
-    (idempotent renames) and converge to the folded layout with no row
-    duplicated or lost — including from a mid-swap crash where some
-    partitions were already parked in trash."""
-    import json
-    import os
-    import shutil
-
-    from pipe_s_spark.streaming.dedup_index import compact_index_partitions
-
-    for pre_park in (False, True):
-        p = str(tmp_path / f"t{int(pre_park)}")
-        rows = [(i, f"v{i}", b) for b in range(3) for i in range(b * 10, b * 10 + 5)]
-        spark.createDataFrame(
-            rows, "k long, v string, batch_id long"
-        ).write.partitionBy("batch_id").parquet(p)
-        want = sorted((r[0], r[1]) for r in rows)
-
-        # craft the exact post-intent crash state: stage holds the fold
-        # of batches < 2 as batch_id=1, intent names old=[0], target=1
-        stage = f"{p}.compact-stage"
-        (
-            spark.read.parquet(p)
-            .filter(F.col("batch_id") < 2)
-            .drop("batch_id")
-            .withColumn("batch_id", F.lit(1).cast("long"))
-            .write.partitionBy("batch_id")
-            .parquet(stage)
-        )
-        with open(f"{p}.compact-intent", "w") as f:
-            json.dump({"old": [0], "target": 1}, f)
-        if pre_park:  # crash landed mid-swap: batch 0 already parked
-            os.makedirs(f"{p}.compact-trash", exist_ok=True)
-            os.rename(
-                os.path.join(p, "batch_id=0"),
-                os.path.join(f"{p}.compact-trash", "batch_id=0"),
-            )
-
-        # recovery runs first inside the next compaction call
-        assert compact_index_partitions(spark, p, watermark=2, dedupe=False) == 0
-        got = sorted(
-            (r["k"], r["v"]) for r in spark.read.parquet(p).collect()
-        )
-        assert got == want
-        parts = sorted(e for e in os.listdir(p) if e.startswith("batch_id="))
-        assert parts == ["batch_id=1", "batch_id=2"]
-        for leftover in (".compact-stage", ".compact-trash", ".compact-intent", ".compact-committed"):
-            assert not os.path.exists(p + leftover)
-        shutil.rmtree(p)
-
-
 def test_quarantine_gate_with_compaction(spark, tmp_path):
     """The gate's three sinks fold during the stream (dedupe=False)
     and every row/metric survives."""

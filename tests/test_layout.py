@@ -121,18 +121,3 @@ def test_zorder_key_interleaves_bits():
         zorder_key_sql("x", "y", bits=0)
     with pytest.raises(ValueError):
         zorder_key_sql("x", "y", dialect="nope")
-
-
-def test_compact_parquet_dir_reduces_files_preserves_rows(spark, tmp_path):
-    from pipe_s_spark.sources.layout import compact_parquet_dir
-
-    ev = load_table(spark, SF, "events")
-    path = str(tmp_path / "fragmented")
-    ev.repartition(37).write.parquet(path)  # simulate accreted small files
-
-    want = ev.count()
-    before, after = compact_parquet_dir(spark, path, target_file_mb=256)
-    assert before == 37 and after < before
-    got = spark.read.parquet(path)
-    assert got.count() == want
-    assert sorted(got.columns) == sorted(ev.columns)

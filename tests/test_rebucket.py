@@ -3,11 +3,10 @@
 ``._layout`` freezes ``num_buckets`` forever — correct, since bucket
 routing is ``pmod(hash(key_cols), N)`` — but that left a target created
 with too few buckets unable to ever rebalance. ``rebucket_target``
-rewrites the table under a new N with a journaled two-phase commit;
-these tests kill it at every journaled point (via the fault-injection
-hook) and prove the recovery path restores a consistent table with NO
-row lost, in both directions (roll-back before the point of no return,
-roll-forward after), plus fence continuity so the stream resumes.
+rewrites the table under a new N in one journaled commit; these tests
+cover the happy path, kills after the journal (roll forward), LWW state
+and refusals, plus fence continuity so the stream resumes. Kills at
+every commit point of every user are in tests/test_commit_faults.py.
 """
 
 from __future__ import annotations
@@ -18,7 +17,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from pipe_s_spark.streaming import MergeApplyTarget
+from pipe_s_spark.streaming import MergeApplyTarget, commit
 from pipe_s_spark.streaming.merge_apply import FLAT_CHANGELOG_SCHEMA, rebucket_target
 
 
@@ -94,43 +93,23 @@ def test_rebucket_roundtrip_preserves_rows_and_updates_layout(spark, tmp_path):
     ]
 
 
-@pytest.mark.parametrize("point", ["journal-moving-old", "mid-moving-old"])
-def test_kill_before_point_of_no_return_rolls_back(spark, tmp_path, point):
-    """A kill while old buckets are moving to trash rolls BACK: the
-    next open restores every row under the ORIGINAL layout — the
-    rebucket simply never happened."""
-    p = str(tmp_path / "t")
-    t = _seed(spark, p)
-    want = _state(spark, t)
-
-    class Killed(RuntimeError):
-        pass
-
-    def inject(at):
-        if at == point:
-            raise Killed(at)
-
-    with pytest.raises(Killed):
-        rebucket_target(spark, p, 16, _fault_injection=inject)
-    # fresh handle with the original config: recovery runs on open
-    t2 = MergeApplyTarget(p, num_buckets=4)
-    assert _state(spark, t2) == want
-    with open(os.path.join(p, "._layout")) as f:
-        assert json.load(f)["num_buckets"] == 4
-    assert not os.path.exists(os.path.join(p, "._rebucket"))
-    assert not [e for e in os.listdir(p) if e.startswith(".rebucket")]
-    # and a clean re-run succeeds afterwards
-    rebucket_target(spark, p, 16)
-    assert _state(spark, MergeApplyTarget(p, num_buckets=16)) == want
-
-
 @pytest.mark.parametrize(
-    "point", ["journal-moving-new", "mid-moving-new", "after-layout"]
+    "point",
+    [
+        # the journal is on disk, nothing has moved yet
+        pytest.param("journaled", id="journal-moving-new"),
+        # old buckets parked, the first new bucket installed
+        pytest.param("mid-install", id="mid-moving-new"),
+        # ._layout rewritten, trash and stage not yet cleaned
+        pytest.param("files-written", id="after-layout"),
+    ],
 )
-def test_kill_after_point_of_no_return_rolls_forward(spark, tmp_path, point):
-    """A kill once every old bucket is in trash rolls FORWARD from the
-    complete stage: the next open finishes the move, rewrites ._layout,
-    and every row is present under the NEW bucket count."""
+def test_kill_after_point_of_no_return_rolls_forward(
+    spark, tmp_path, monkeypatch, point
+):
+    """A kill once the journal is written rolls FORWARD: the next open
+    finishes the swap, ``._layout`` holds the new count, and every row
+    is present under the NEW bucket count."""
     p = str(tmp_path / "t")
     t = _seed(spark, p)
     want = _state(spark, t)
@@ -142,14 +121,16 @@ def test_kill_after_point_of_no_return_rolls_forward(spark, tmp_path, point):
         if at == point:
             raise Killed(at)
 
+    monkeypatch.setattr(commit, "fault", inject)
     with pytest.raises(Killed):
-        rebucket_target(spark, p, 16, _fault_injection=inject)
+        rebucket_target(spark, p, 16)
+    monkeypatch.setattr(commit, "fault", lambda at: None)
     t16 = MergeApplyTarget(p, num_buckets=16)
     assert _state(spark, t16) == want
     with open(os.path.join(p, "._layout")) as f:
         assert json.load(f)["num_buckets"] == 16
-    assert not os.path.exists(os.path.join(p, "._rebucket"))
-    assert not [e for e in os.listdir(p) if e.startswith(".rebucket")]
+    assert not os.path.exists(os.path.join(p, "._journal"))
+    assert not os.path.exists(os.path.join(p, "._trash"))
     df = spark.read.option("basePath", p).parquet(p)
     assert (
         df.filter(

@@ -203,32 +203,6 @@ def test_merge_target_reads_widened_schema(spark, tmp_path):
     assert state(MergeApplyTarget(path, num_buckets=8)) == want
 
 
-def test_merge_target_recovers_dangling_swap(spark, tmp_path):
-    """A crash mid-swap (trash dir with epoch beyond the fence) must
-    roll back to the fenced state, not read as an empty/partial bucket;
-    a committed trash dir (epoch <= fence) is just purged."""
-    t = MergeApplyTarget(str(tmp_path / "t"), num_buckets=2)
-    t.apply_batch(
-        _mk_changes(spark, [(i, "t1", "insert", i, 1, float(i)) for i in range(10)]), 0
-    )
-    n_before = t.read_current(spark).count()
-    # simulate a crash mid-swap of (uncommitted) epoch 7: bucket=0 was
-    # moved to trash and a bogus half-written replacement took its place
-    live = os.path.join(t.path, "bucket=0")
-    trash = os.path.join(t.path, ".trash-7")
-    os.makedirs(trash)
-    os.rename(live, os.path.join(trash, "bucket=0"))
-    os.makedirs(live)  # partial new bucket (empty)
-    assert t.read_current(spark).count() == n_before  # rolled back
-    assert os.path.isdir(live) and not os.path.isdir(trash)
-    # committed leftover (epoch <= fence): purged, state untouched
-    done = os.path.join(t.path, ".trash-0")
-    os.makedirs(done)
-    os.makedirs(os.path.join(done, "bucket=1"))
-    assert t.read_current(spark).count() == n_before
-    assert not os.path.isdir(done)
-
-
 def test_merge_target_lww_out_of_order_epochs(spark, tmp_path):
     """LWW mode converges regardless of epoch arrival order: a late
     batch of OLDER events must not clobber newer state, and a deleted
@@ -542,6 +516,7 @@ def test_incremental_agg_view_replay_idempotent(spark, tmp_path):
     (a) full replay of an applied epoch is a no-op; (b) a crash between
     the view fold and the target apply (view fenced, target not) must
     still apply the target on replay."""
+    from pipe_s_spark.streaming.commit import write_atomic
     from pipe_s_spark.streaming.incremental_agg import IncrementalAggView
 
     target = MergeApplyTarget(str(tmp_path / "t"))
@@ -559,7 +534,7 @@ def test_incremental_agg_view_replay_idempotent(spark, tmp_path):
     st = view._read_state()
     st["epoch"] = 1
     st["groups"][view._key({"table_name": "t1"})] = [5, "139.00"]  # 50 - 10 + 99
-    view._write_state(st)
+    write_atomic(view._state_file(), json.dumps(st))
     view.apply_batch(b1, 1)  # replay: view skips, target must apply
     got = view.current(spark).collect()[0]
     assert (got["n_rows"], got["sum_value"]) == (5, 139.0)

@@ -8,9 +8,9 @@ maintenance window to migrate it:
 
     python tools/rebucket.py <target_path> <new_num_buckets>
 
-The rewrite holds the target's writer lock for its whole duration, is
-journaled (a kill at any point rolls back before the point of no
-return and rolls forward after — see
+The rewrite holds the target's writer lock for its whole duration,
+commits in one journaled swap (a kill before the journal leaves the old
+table, a kill after it rolls forward — see
 pipe_s_spark.streaming.merge_apply.rebucket_target), sizes its own
 reduce parallelism from the table's bytes, and leaves the epoch fence
 untouched so the owning stream resumes where it left off. Concurrent
