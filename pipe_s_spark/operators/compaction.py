@@ -23,23 +23,25 @@ reference (batchmessage.go:49-52); here it resolves to update (the row
 is assumed live in the target), which is strictly more tolerant and
 keeps the operator total.
 
-Scale: one hash-shuffle on the key — exactly the partitioning a
-distributed upsert needs anyway, so the shuffle is reused by the sink.
-Partial aggregation (min_by/max_by) combines map-side, so skewed keys
-cost O(distinct keys) post-shuffle, not O(events). Reduce-side
-parallelism is DATA-PROPORTIONAL (pipe_s_spark.sizing): inputs whose
-estimated bytes exceed the session's shuffle-partition count x 64 MB
-embed a keyed repartition so the aggregate runs at ceil(bytes/64MB)
-reducers instead of the core-count ceiling — the r12 scaling harness
-measured the fixed ceiling 36-75% over linear at 10x data (per-task
-hash-agg spill), flat when per-task state was held constant.
+The rule is defined once (``net_effect_aggs`` + ``net_op``). It runs
+here, behind one hash-shuffle on the key, and inside the streaming
+merge's one per-key aggregate (``streaming.merge_apply``), where the
+merge's bucket clustering is the only shuffle. Partial aggregation
+(min_by/max_by) combines map-side, so skewed keys cost O(distinct keys)
+post-shuffle, not O(events). Reduce-side parallelism is
+DATA-PROPORTIONAL (pipe_s_spark.sizing): inputs whose estimated bytes
+exceed the session's shuffle-partition count x 64 MB embed a keyed
+repartition so the aggregate runs at ceil(bytes/64MB) reducers instead
+of the core-count ceiling — the r12 scaling harness measured the fixed
+ceiling 36-75% over linear at 10x data (per-task hash-agg spill), flat
+when per-task state was held constant.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from pipe_s_spark.sizing import bulk_partitions, session_shuffle_partitions
@@ -62,14 +64,11 @@ def compact_changelog(
 
     ``auto_scale`` (default ON) sizes reduce parallelism from the
     input's estimated bytes when that exceeds the session ceiling: a
-    ``repartition(n, keys)`` is embedded IN THE PLAN (no session-conf
-    mutation — safe under concurrent queries and lazy consumers), the
-    aggregation's required distribution is satisfied by it, so Spark
-    still plans exactly ONE exchange, now ``n``-wide. Small inputs
-    (micro-batches, oracle-scale queries) never trigger it. Tradeoff:
-    the embedded exchange moves raw rows where the default plan moves
-    map-side-combined rows — on a heavily-duplicated changelog window
-    that is more shuffle bytes, but bounded per-task reducer state is
+    ``repartition(n, keys)`` embedded IN THE PLAN (no session-conf
+    mutation) satisfies the aggregate's distribution, so Spark still
+    plans ONE exchange, now ``n``-wide. Micro-batches and oracle-scale
+    queries never trigger it. Tradeoff: that exchange moves raw rows,
+    not map-side-combined ones, but bounded per-task reducer state is
     what survives a 100x scale-up (spill grows superlinearly; shuffle
     bytes grow linearly and never exceed the raw input).
     """
@@ -81,41 +80,46 @@ def compact_changelog(
         if n is not None and n > session_shuffle_partitions(df.sparkSession):
             df = df.repartition(n, *[F.col(k) for k in keys])
 
-    # The net-op rules only ever ask two questions of the op column:
-    # "was the FIRST event an insert?" and "was the LAST event a
-    # delete?". Aggregating the op STRING to answer them
-    # (min_by/max_by(op, seq)) puts a string in the aggregation buffer,
-    # and one non-mutable buffer type forces the WHOLE aggregate down
-    # to SortAggregate — two extra full sorts of the changelog (partial
-    # + final) at any scale, profiled as the dominant CPU of the
-    # cdc_compact/merge_apply result stages. Aggregating the BOOLEAN
-    # answers instead keeps every buffer a fixed-size primitive, so the
-    # compaction plans as HashAggregate with map-side combine (string
-    # payload columns, if a caller compacts any, independently fall
-    # back to SortAggregate exactly as before). Semantics are
-    # identical: min_by/max_by still pick the value at the extremum
-    # seq; only the value carried is the predicate instead of the raw
-    # string.
-    aggs = [
-        F.min_by(F.col(op_col) == "insert", F.col(seq_col)).alias("__first_ins"),
-        F.max_by(F.col(op_col) == "delete", F.col(seq_col)).alias("__last_del"),
-        F.max(F.col(seq_col)).alias("last_seq"),
-        *[F.max_by(F.col(c), F.col(seq_col)).alias(c) for c in payload_cols],
-    ]
-    g = df.groupBy(*[F.col(k) for k in keys]).agg(*aggs)
+    g = df.groupBy(*keys).agg(*net_effect_aggs(F.col(op_col), F.col(seq_col), payload_cols))
+    return (
+        g.withColumn("net_op", net_op())
+        .filter(F.col("net_op").isNotNull())
+        .select(*keys, "net_op", "last_seq", *payload_cols)
+    )
 
-    first_ins = F.col("__first_ins")
-    last_del = F.col("__last_del")
-    net_op = (
-        F.when(first_ins & last_del, F.lit(None).cast("string"))  # annihilate
+
+def net_effect_aggs(op: Column, seq: Column, payload_cols: Sequence[str]) -> list[Column]:
+    """Per-key aggregates of the net-effect rule: ``__first_ins``,
+    ``__last_del``, ``last_seq`` and each payload column at the last
+    seq. Rows whose ``seq`` is NULL are ignored, so a caller can mix in
+    rows that are not events.
+
+    The rule only ever asks two questions of the op column: "was the
+    FIRST event an insert?" and "was the LAST event a delete?".
+    Aggregating the op STRING to answer them (min_by/max_by(op, seq))
+    puts a string in the aggregation buffer, and one non-mutable buffer
+    type forces the WHOLE aggregate down to SortAggregate, two extra
+    full sorts of the changelog. Aggregating the BOOLEAN answers keeps
+    every buffer a fixed-size primitive, so the aggregate plans as
+    HashAggregate (string payload columns, if a caller carries any,
+    still fall back to SortAggregate)."""
+    return [
+        F.min_by(op == "insert", seq).alias("__first_ins"),
+        F.max_by(op == "delete", seq).alias("__last_del"),
+        F.max(seq).alias("last_seq"),
+        *[F.max_by(F.col(c), seq).alias(c) for c in payload_cols],
+    ]
+
+
+def net_op() -> Column:
+    """insert|update|delete over ``net_effect_aggs``' columns, NULL for
+    an annihilated key (first event insert, last event delete)."""
+    first_ins, last_del = F.col("__first_ins"), F.col("__last_del")
+    return (
+        F.when(first_ins & last_del, F.lit(None).cast("string"))
         .when(first_ins, F.lit("insert"))
         .when(last_del, F.lit("delete"))
         .otherwise(F.lit("update"))
-    )
-    return (
-        g.withColumn("net_op", net_op)
-        .filter(F.col("net_op").isNotNull())
-        .select(*keys, "net_op", "last_seq", *payload_cols)
     )
 
 

@@ -94,13 +94,10 @@ class IncrementalAggView:
         ).cache()
         try:
             keys = compacted.select(*self.target.key_cols).distinct()
-            touched = sorted(
-                r["b"]
-                for r in compacted.select(self.target._bucket(compacted).alias("b"))
-                .distinct()
-                .collect()
-            )
-            # pre-image contributions of the epoch's keys (bucket-pruned)
+            # pre-image contributions of the epoch's keys, bucket-pruned
+            # to the raw batch's buckets (a superset of the compacted
+            # keys' buckets; the semi-join drops the rest)
+            touched = self.target.touched_buckets(batch)
             old = self.target.read_current(spark, buckets=touched).join(
                 keys, on=self.target.key_cols, how="left_semi"
             )

@@ -12,8 +12,9 @@ pkg/output/mysql/batch/*):
 - per-PK hash routing for ordered  -> compaction collapses order inside
   apply (batchoutput.go:164-190)      the batch; cross-batch order from
                                       sequential epochs
-- changelog compaction + multi-row -> operators.compaction.compact_changelog
-  upsert (batchmessage.go)            + MergeApplyTarget inside foreachBatch
+- changelog compaction + multi-row -> MergeApplyTarget inside foreachBatch:
+  upsert (batchmessage.go)            the operators.compaction rule runs in
+                                      the merge's one per-key aggregate
 - at-least-once + idempotent SQL   -> exactly-once *effects*: epoch
   (utils/mysql.go:197-218)            replays re-run the merge, which is
                                       idempotent (upsert semantics)
@@ -25,14 +26,21 @@ targets Delta MERGE or JDBC upsert unchanged.
 
 from __future__ import annotations
 
+import glob
+import json
 import os
 import shutil
+import uuid
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from pipe_s_spark.operators.compaction import compact_changelog
+# compact_changelog stays importable here: the benchmark's tracer
+# wraps merge_apply.compact_changelog by name
+from pipe_s_spark.operators.compaction import compact_changelog  # noqa: F401
+from pipe_s_spark.operators.compaction import net_effect_aggs, net_op
 from pipe_s_spark.streaming import commit
 
 
@@ -89,8 +97,6 @@ def _cluster_by_bucket(
     (``hash(keys) % s`` is a function of ``hash(keys) % N`` whenever s
     divides N). All rows of a key share a slice, so per-key work after
     this exchange needs no second shuffle."""
-    from pyspark.sql import functions as F
-
     from pipe_s_spark.sizing import bulk_partitions, session_shuffle_partitions
 
     par = session_shuffle_partitions(df.sparkSession)
@@ -112,11 +118,15 @@ class MergeApplyTarget:
     Per epoch only buckets containing touched keys are read, merged and
     swapped — untouched bucket directories are not rewritten (at 100 TB
     a micro-batch touches a small key set, so the rewrite is
-    O(touched-buckets), not O(table)). Every epoch writes one file per
-    touched bucket (per salt when bulk, ``_cluster_by_bucket``), and
-    reads reuse the schema this instance last committed instead of
-    inferring it from a parquet footer each epoch. On a cluster the
-    same foreachBatch body targets Delta MERGE or JDBC upsert unchanged.
+    O(touched-buckets), not O(table)). An epoch is 3 Spark jobs: one
+    shuffle-free pass over the raw batch finds the touched buckets
+    (``touched_buckets``), then one clustered write merges the raw
+    events into those buckets' stored rows, compaction included
+    (``_merge``). Every epoch writes one file per touched bucket (per
+    salt when bulk, ``_cluster_by_bucket``), and reads reuse the schema
+    this instance last committed instead of inferring it from a parquet
+    footer each epoch. On a cluster the same foreachBatch body targets
+    Delta MERGE or JDBC upsert unchanged.
 
     One logical stream (checkpoint) owns a target: epoch ids must be
     monotonic across restarts, which Structured Streaming guarantees
@@ -191,9 +201,7 @@ class MergeApplyTarget:
         #: epoch: another writer's commit may have widened the types.
         self._schema: tuple[int, T.StructType] | None = None
 
-    def _bucket(self, df: DataFrame):
-        from pyspark.sql import functions as F
-
+    def _bucket(self):
         return F.pmod(F.hash(*[F.col(c) for c in self.key_cols]), F.lit(self.num_buckets))
 
     def _check_layout_locked(self) -> None:
@@ -210,8 +218,6 @@ class MergeApplyTarget:
         verifies it and refuses a mismatch loudly. Pre-r13 targets
         without the file adopt the opening instance's layout (the
         status quo behavior, now recorded going forward)."""
-        import json as _json
-
         meta = {
             "num_buckets": self.num_buckets,
             "key_cols": self.key_cols,
@@ -220,9 +226,9 @@ class MergeApplyTarget:
         p = os.path.join(self.path, _LAYOUT)
         try:
             with open(p) as f:
-                disk = _json.load(f)
+                disk = json.load(f)
         except FileNotFoundError:
-            commit.write_atomic(p, _json.dumps(meta))
+            commit.write_atomic(p, json.dumps(meta))
             return
         if disk != meta:
             raise ValueError(
@@ -250,8 +256,6 @@ class MergeApplyTarget:
         """Current target state. ``internal=True`` (LWW mode only)
         exposes the stored seq/tombstone columns and tombstone rows —
         the merge's view; the public view hides both."""
-        from pyspark.sql import functions as F
-
         # the lock runs recovery first, so a crashed rebucket's
         # roll-forward has rewritten ._layout before the check reads it
         with commit.lock(self.path):
@@ -260,9 +264,7 @@ class MergeApplyTarget:
         cols = self.key_cols + self.payload_cols
         if self.lww and internal:
             cols = cols + [self._SEQ, self._TOMB]
-        import glob as _glob
-
-        files = _glob.glob(os.path.join(self.path, "bucket=*", "*.parquet"))
+        files = glob.glob(os.path.join(self.path, "bucket=*", "*.parquet"))
         if not files:
             # the LWW-internal seq/tomb columns are target-managed, not
             # batch columns — they get fixed types below, never lookup
@@ -299,47 +301,55 @@ class MergeApplyTarget:
             df = df.filter(~F.col(self._TOMB))
         return df.select(*cols)
 
-    def _merge(
-        self, base: DataFrame, compacted: DataFrame, size_of: DataFrame
-    ) -> DataFrame:
-        """Stored rows of the touched buckets unioned with the batch's
-        net effects, clustered by bucket, one row kept per key inside
-        each write task (the clustering is the merge's only shuffle).
-        Blind: the incoming row wins, deletes remove the key. LWW: the
-        larger seq wins (ties -> incoming, so an exact replay is
-        idempotent) and deletes stay as tombstones."""
-        from pyspark.sql import functions as F
-        from pyspark.sql.window import Window
+    def touched_buckets(self, batch: DataFrame) -> list[int]:
+        """The buckets ``batch``'s keys route to, from one shuffle-free
+        job: a ``noop`` write observing ``collect_set(bucket)``, bounded
+        driver-side metadata (<= num_buckets)."""
+        obs = Observation()
+        batch.select(self._bucket().alias("b")).observe(
+            obs, F.collect_set("b").alias("b")
+        ).write.format("noop").mode("overwrite").save()
+        return sorted(obs.get["b"])
 
-        keys = self.key_cols
-        pays = self.payload_cols
-        tomb = (F.col("net_op") == "delete").alias(self._TOMB)
-        if self.lww:
-            inc = compacted.select(*keys, *pays, F.col("last_seq").alias(self._SEQ), tomb)
-            cur = base.select(*keys, *pays, self._SEQ, self._TOMB)
-            order = [F.desc(self._SEQ), F.desc("__pri")]
-        else:
-            inc = compacted.select(*keys, *pays, tomb)
-            cur = base.select(*keys, *pays, F.lit(False).alias(self._TOMB))
-            order = [F.desc("__pri")]
-        union = cur.withColumn("__pri", F.lit(0)).unionByName(
-            inc.withColumn("__pri", F.lit(1))
+    def _merge(self, base: DataFrame, events: DataFrame, size_of: DataFrame) -> DataFrame:
+        """Stored rows of the touched buckets unioned with the batch's
+        raw events, clustered by bucket, then ONE aggregate per key
+        inside each write task: the clustering is the epoch's only
+        shuffle, and the compaction rule (``net_effect_aggs``) runs in
+        that aggregate next to the stored row. A key with no events, or
+        whose events annihilate, keeps its stored row. Otherwise blind
+        mode applies the net effect (a delete removes the key); LWW
+        keeps the larger seq (ties -> incoming, so an exact replay is
+        idempotent) and stores a delete as a tombstone."""
+        keys, pays, op, seq = self.key_cols, self.payload_cols, self.op_col, self.seq_col
+        stored = pays + ([self._SEQ, self._TOMB] if self.lww else [])
+        # stored rows carry __cur = 1 and NULL op/seq; events the reverse,
+        # so each side's aggregates skip the other side's rows
+        union = base.select(*keys, *stored, F.lit(1).alias("__cur")).unionByName(
+            events.select(*keys, *pays, op, seq), allowMissingColumns=True
         )
         clustered = _cluster_by_bucket(
-            union.withColumn("bucket", self._bucket(union)),
-            keys,
-            self.num_buckets,
-            size_of,
+            union.withColumn("bucket", self._bucket()), keys, self.num_buckets, size_of
         )
-        w = Window.partitionBy("bucket", "__salt", *keys).orderBy(*order)
-        merged = (
-            clustered.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn", "__pri", "__salt")
+        g = clustered.groupBy("bucket", "__salt", *keys).agg(
+            *net_effect_aggs(F.col(op), F.col(seq), pays),
+            *[F.max_by(c, "__cur").alias(f"__cur{c}") for c in stored],
+            (F.count(F.lit(1)) > F.count("__cur")).alias("__has_ev"),
+            (F.count("__cur") > 0).alias("__has_cur"),
         )
+        net = net_op()
+        inc = F.col("__has_ev") & net.isNotNull()
         if self.lww:
-            return merged
-        return merged.filter(~F.col(self._TOMB)).drop(self._TOMB)
+            cur_seq = F.col(f"__cur{self._SEQ}")
+            inc = inc & F.coalesce(F.col("last_seq") >= cur_seq, cur_seq.isNull())
+        out = {c: F.col(c) for c in pays}
+        out.update({self._SEQ: F.col("last_seq"), self._TOMB: net == "delete"})
+        keep = F.when(inc, F.lit(self.lww) | (net != "delete")).otherwise(F.col("__has_cur"))
+        return g.filter(keep).select(
+            *keys,
+            *[F.when(inc, out[c]).otherwise(F.col(f"__cur{c}")).alias(c) for c in stored],
+            "bucket",
+        )
 
     def apply_batch(self, batch: DataFrame, epoch_id: int) -> bool:
         # Epoch fence (zombie-writer protection): the fence records the
@@ -362,65 +372,47 @@ class MergeApplyTarget:
             self._col_types[f.name] = f.dataType
         if "net_op" in batch.columns and self.op_col not in batch.columns:
             # already compacted upstream (a pipeline 'compact' stage or
-            # a caller reusing one compaction across sinks): net-effect
-            # of a net effect is itself, so apply as-is instead of
-            # failing on the missing raw op/seq columns
-            compacted = batch.cache()
-        else:
-            compacted = compact_changelog(
-                batch,
-                key_cols=self.key_cols,
-                seq_col=self.seq_col,
-                op_col=self.op_col,
-                payload_cols=self.payload_cols,
-            ).cache()
-        try:
-            # touched buckets: bounded driver-side metadata (<= num_buckets)
-            touched = sorted(
-                r["b"] for r in compacted.select(self._bucket(compacted).alias("b")).distinct().collect()
-            )
-            if not touched:
-                return True
-            # sized from THIS batch's estimated bytes, so streaming
-            # micro-batches never engage bulk sizing
-            merged = self._merge(
-                self.read_current(spark, buckets=touched, internal=True),
-                compacted,
-                size_of=batch,
-            )
-            schema = merged.drop("bucket").schema
-            # stage dir is unique PER ATTEMPT, not per epoch: a zombie
-            # writer and a live replay of the same epoch would otherwise
-            # overwrite one stage dir concurrently and the lock winner
-            # could swap in the mixed/partial result (observed as lost
-            # rows in the kill-restart integrity test)
-            import uuid
-
-            stage = f"{self.path}.stage-{epoch_id}-{uuid.uuid4().hex[:8]}"
-            merged.write.mode("overwrite").partitionBy("bucket").parquet(stage)
-            with commit.lock(self.path):
-                if epoch_id <= self._read_fence():
-                    # a newer incarnation advanced while we computed
-                    # (or a concurrent replay of this epoch won): abort
-                    shutil.rmtree(stage, ignore_errors=True)
-                    return False
-                # a concurrent offline rebucket may have committed while
-                # this epoch computed: its new ._layout makes this
-                # writer's bucket numbering wrong — refuse loudly here,
-                # atomically with the swap, instead of renaming staged
-                # old-numbered buckets into a new-numbered table
-                self._check_layout_locked()
-                # a fully deleted bucket installs as an empty directory
-                commit.commit(
-                    self.path,
-                    stage,
-                    install=[f"bucket={k}" for k in touched],
-                    files={_FENCE: str(epoch_id)},
-                )
-                self._schema = (epoch_id, schema)
+            # a caller reusing one compaction across sinks): each net
+            # effect is one event, whose net effect is itself
+            net = [F.col("net_op").alias(self.op_col), F.col("last_seq").alias(self.seq_col)]
+            batch = batch.select(*self.key_cols, *self.payload_cols, *net)
+        touched = self.touched_buckets(batch)
+        if not touched:
             return True
-        finally:
-            compacted.unpersist()
+        # sized from THIS batch's estimated bytes, so streaming
+        # micro-batches never engage bulk sizing
+        merged = self._merge(
+            self.read_current(spark, buckets=touched, internal=True), batch, size_of=batch
+        )
+        schema = merged.drop("bucket").schema
+        # stage dir is unique PER ATTEMPT, not per epoch: a zombie
+        # writer and a live replay of the same epoch would otherwise
+        # overwrite one stage dir concurrently and the lock winner
+        # could swap in the mixed/partial result (observed as lost
+        # rows in the kill-restart integrity test)
+        stage = f"{self.path}.stage-{epoch_id}-{uuid.uuid4().hex[:8]}"
+        merged.write.mode("overwrite").partitionBy("bucket").parquet(stage)
+        with commit.lock(self.path):
+            if epoch_id <= self._read_fence():
+                # a newer incarnation advanced while we computed
+                # (or a concurrent replay of this epoch won): abort
+                shutil.rmtree(stage, ignore_errors=True)
+                return False
+            # a concurrent offline rebucket may have committed while
+            # this epoch computed: its new ._layout makes this
+            # writer's bucket numbering wrong — refuse loudly here,
+            # atomically with the swap, instead of renaming staged
+            # old-numbered buckets into a new-numbered table
+            self._check_layout_locked()
+            # a fully deleted bucket installs as an empty directory
+            commit.commit(
+                self.path,
+                stage,
+                install=[f"bucket={k}" for k in touched],
+                files={_FENCE: str(epoch_id)},
+            )
+            self._schema = (epoch_id, schema)
+        return True
 
 
 def rebucket_target(spark: SparkSession, path: str, new_num_buckets: int) -> None:
@@ -446,11 +438,6 @@ def rebucket_target(spark: SparkSession, path: str, new_num_buckets: int) -> Non
     and refuses loudly. The epoch fence is untouched — the stream
     resumes at the same epoch numbering.
     """
-    import json as _json
-    import uuid as _uuid
-
-    from pyspark.sql import functions as F
-
     if not os.path.exists(os.path.join(path, _LAYOUT)):
         raise ValueError(
             f"{path} has no ._layout — not an initialized merge target "
@@ -461,11 +448,11 @@ def rebucket_target(spark: SparkSession, path: str, new_num_buckets: int) -> Non
         raise ValueError(f"new_num_buckets must be >= 1, got {new_num_buckets}")
     with commit.lock(path):
         with open(os.path.join(path, _LAYOUT)) as f:
-            disk = _json.load(f)
+            disk = json.load(f)
         if disk["num_buckets"] == int(new_num_buckets):
             return
         live_buckets = [e for e in os.listdir(path) if e.startswith("bucket=")]
-        stage = f"{path}.rebucket-stage-{_uuid.uuid4().hex[:8]}"
+        stage = f"{path}.rebucket-stage-{uuid.uuid4().hex[:8]}"
         if live_buckets:
             # reduce parallelism is data-proportional: a 100 TB
             # rebucket must not funnel through core-count reducers
@@ -489,7 +476,7 @@ def rebucket_target(spark: SparkSession, path: str, new_num_buckets: int) -> Non
             stage,
             install=staged,
             remove=live_buckets,
-            files={_LAYOUT: _json.dumps(dict(disk, num_buckets=int(new_num_buckets)))},
+            files={_LAYOUT: json.dumps(dict(disk, num_buckets=int(new_num_buckets)))},
         )
 
 

@@ -1,31 +1,95 @@
-"""plans.compat: every one of the reference engine's shipped config
-samples (`examples/configsamples/*.json`) must translate and RUN
-through the runner — with each endpoint substitution explicitly noted,
-never silent."""
+"""plans.compat: reference-engine Task JSON configs must translate and
+RUN through the runner, with each endpoint substitution explicitly
+noted, never silent.
+
+Two config sets feed the translate-and-run test: the hand-written
+fixtures in ``tests/fixtures/compat/`` (in the reference Task JSON
+format, together covering every component type ``plans/compat.py``
+translates), and, when a reference checkout is present, its own
+shipped samples (`examples/configsamples/*.json` plus the
+integration-test configs)."""
 
 from __future__ import annotations
 
+import ast
 import glob
+import inspect
 import json
 import os
 
 import pytest
 
-from pipe_s_spark.plans import run_pipeline
+from pipe_s_spark.plans import compat, run_pipeline
 from pipe_s_spark.plans.compat import CompatError, translate_reference_config
 
 REF_SAMPLES = sorted(
     glob.glob("/root/reference/examples/configsamples/*.json")
     + glob.glob("/root/reference/integration_test/*/*.json")
 )
+FIXTURES = sorted(
+    glob.glob(os.path.join(os.path.dirname(__file__), "fixtures", "compat", "*.json"))
+)
 
 
+@pytest.mark.skipif(
+    not REF_SAMPLES,
+    reason="no reference checkout: its samples are not shipped with this repo; "
+    "tests/fixtures/compat covers every translation branch instead",
+)
 def test_all_reference_samples_present():
     # 8 shipped examples + 5 integration-test configs
     assert len(REF_SAMPLES) == 13
 
 
-@pytest.mark.parametrize("path", REF_SAMPLES, ids=[p.rsplit("/", 2)[-2] + "/" + os.path.basename(p) for p in REF_SAMPLES])
+def _branch_types() -> set[str]:
+    """Every component ``Type`` that plans/compat.py has a branch for:
+    the string constants its input/processor/output dispatch and its
+    pipeline-type check compare against."""
+    found = set()
+    for node in ast.walk(ast.parse(inspect.getsource(compat))):
+        if not isinstance(node, ast.Compare):
+            continue
+        left = node.left
+        dispatch = isinstance(left, ast.Name) and left.id in ("in_type", "t", "out_type")
+        get_type = (
+            isinstance(left, ast.Call)
+            and isinstance(left.func, ast.Attribute)
+            and left.func.attr == "get"
+            and [getattr(a, "value", None) for a in left.args] == ["Type"]
+        )
+        if not (dispatch or get_type):
+            continue
+        for c in node.comparators:
+            for k in c.elts if isinstance(c, ast.Tuple) else [c]:
+                if isinstance(k, ast.Constant) and isinstance(k.value, str):
+                    found.add(k.value)
+    return found
+
+
+def _config_types(node) -> set[str]:
+    if isinstance(node, list):
+        return set().union(*map(_config_types, node))
+    if not isinstance(node, dict):
+        return set()
+    own = {node["Type"]} if isinstance(node.get("Type"), str) else set()
+    return own.union(*map(_config_types, node.values()))
+
+
+def test_every_translation_branch_has_a_fixture():
+    branches = _branch_types()
+    # the parse must see the dispatch at all: 4 inputs, 10 processors,
+    # 8 outputs and the pipeline type at the time of writing
+    assert len(branches) >= 23, sorted(branches)
+    covered = set().union(*(_config_types(json.load(open(p))) for p in FIXTURES))
+    missing = sorted(branches - covered)
+    assert not missing, f"compat branches with no config in tests/fixtures/compat: {missing}"
+
+
+@pytest.mark.parametrize(
+    "path",
+    FIXTURES + REF_SAMPLES,
+    ids=[p.rsplit("/", 2)[-2] + "/" + os.path.basename(p) for p in FIXTURES + REF_SAMPLES],
+)
 def test_reference_config_translates_and_runs(spark, path, tmp_path):
     ref = json.load(open(path))
     spec, notes = translate_reference_config(ref, out_dir=str(tmp_path))

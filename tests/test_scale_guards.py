@@ -677,16 +677,18 @@ def test_merge_epoch_writes_one_file_per_bucket(spark, tmp_path):
     exactly one parquet file per touched bucket. Unclustered, each
     write task emitted one file per bucket it saw (3-6 files per bucket
     in this test), and the next epoch scanned and rewrote all of them.
-    The merge's per-key pick runs after that clustering exchange (its
-    only shuffle, no broadcast of the batch keys), and reads reuse the
-    schema the target last committed, so a steady-state epoch runs no
-    footer-inference job. Pin both: after epochs that each touch every
-    bucket, every ``bucket=K`` directory holds one file, and a
-    steady-state epoch launches no more Spark jobs than measured: 6 on
-    Spark 4.1.2 with AQE on (4 for the compaction and the touched-bucket
-    collect, 2 for the clustered write), where the unclustered write
-    with per-epoch inference took 7. The count is read through the
-    public statusTracker job-group API, as in
+    The merge reads the batch's raw events and folds the compaction
+    into its one per-key aggregate behind that clustering exchange, so
+    the exchange is the steady-state merge plan's only one, and reads
+    reuse the schema the target last committed, so no epoch runs a
+    footer-inference job. Pin all three: after epochs that each touch
+    every bucket, every ``bucket=K`` directory holds one file; the
+    merge plan has exactly one ``Exchange``; and a steady-state epoch
+    launches at most 3 Spark jobs on Spark 4.1.2 with AQE on: 1 for the
+    touched-bucket pass (a noop write observing the batch's buckets)
+    and 2 for the clustered write. A separate compaction with a
+    touched-bucket ``distinct().collect()`` took 6. The count is read
+    through the public statusTracker job-group API, as in
     ``test_ivf_epoch_job_count_pinned``."""
     import glob
     import os
@@ -724,9 +726,19 @@ def test_merge_epoch_writes_one_file_per_bucket(spark, tmp_path):
         f"parquet files per bucket after 4 epochs: {per_bucket} — the staged "
         "write lost its bucket clustering and fans out per-task writers"
     )
-    assert jobs <= 6, (
-        f"steady-state merge epoch launched {jobs} Spark jobs (pinned <= 6): "
+    assert jobs <= 3, (
+        f"steady-state merge epoch launched {jobs} Spark jobs (pinned <= 3): "
         "a per-epoch job crept back in (schema inference? a second merge "
         "shuffle or broadcast? extra action?)"
+    )
+    batch = epoch_log(4)
+    merged = tgt._merge(
+        tgt.read_current(spark, buckets=tgt.touched_buckets(batch), internal=True),
+        batch,
+        size_of=batch,
+    )
+    plan = merged._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange") == 1, (
+        f"steady-state merge plan must shuffle once (the bucket clustering):\n{plan}"
     )
     assert tgt.read_current(spark).count() == 2000 + 3 * 1000

@@ -156,6 +156,25 @@ def test_merge_target_rewrites_only_touched_buckets(spark, tmp_path):
     assert got[0] == 99.0 and got[5] == 5.0 and len(got) == 20
 
 
+def test_merge_target_all_annihilated_epoch_commits(spark, tmp_path):
+    """An epoch whose every key annihilates (insert then delete inside
+    the batch) still touches the buckets its raw events route to: it
+    commits them unchanged and advances the fence, so a replay of it is
+    a fence no-op."""
+    t = MergeApplyTarget(str(tmp_path / "t"), num_buckets=4)
+    assert t.apply_batch(
+        _mk_changes(spark, [(i, "t1", "insert", i, 1, float(i)) for i in range(8)]), 0
+    )
+    before = t.read_current(spark).collect()
+    gone = [(10 + i, "t1", "insert", 100 + i // 2, 1, 0.0) if i % 2 == 0
+            else (10 + i, "t1", "delete", 100 + i // 2, 1, 0.0) for i in range(8)]
+    assert t.apply_batch(_mk_changes(spark, gone), 1)
+    with open(os.path.join(t.path, "._last_epoch")) as f:
+        assert f.read().strip() == "1"
+    assert sorted(t.read_current(spark).collect()) == sorted(before)
+    assert not t.apply_batch(_mk_changes(spark, gone), 1)
+
+
 def test_merge_target_reads_widened_schema(spark, tmp_path):
     """Epoch 1 stores ``k`` as int; epoch 2 widens it to bigint in some
     buckets only, leaving int files in the others. The writing instance
