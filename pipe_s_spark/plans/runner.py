@@ -624,10 +624,8 @@ def _write_stream_output(df: DataFrame, typ: str, cfg: Mapping[str, Any]) -> Non
         # idempotent, band-capped by default, optionally self-
         # compacting every N epochs)
         from pipe_s_spark.functions.dedup import LSH_BAND_CAP
-        from pipe_s_spark.streaming.dedup_index import (
-            DEFAULT_COMPACT_EVERY,
-            run_dedup_index_stream,
-        )
+        from pipe_s_spark.streaming.dedup_index import run_dedup_index_stream
+        from pipe_s_spark.streaming.epoch_log import DEFAULT_COMPACT_EVERY
 
         q = run_dedup_index_stream(
             df,
@@ -653,7 +651,7 @@ def _write_stream_output(df: DataFrame, typ: str, cfg: Mapping[str, Any]) -> Non
         # idempotent, cell-capped by default, optionally self-
         # compacting every N epochs). Centroids are trained offline
         # from `trainPath` (or given inline as `centroids`).
-        from pipe_s_spark.streaming.dedup_index import DEFAULT_COMPACT_EVERY
+        from pipe_s_spark.streaming.epoch_log import DEFAULT_COMPACT_EVERY
         from pipe_s_spark.streaming.ivf_index import IVF_CELL_CAP, run_ivf_index_stream
 
         q = run_ivf_index_stream(

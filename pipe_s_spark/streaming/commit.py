@@ -1,11 +1,12 @@
 """The one file-commit primitive behind every streaming sink's state.
 
-Each table directory (``root``) owns three dot-prefixed entries that
+Each table directory (``root``) owns four dot-prefixed entries that
 Spark's partition discovery never sees: ``._lock`` (the flock file),
-``._journal`` (an in-flight swap) and ``._trash`` (entries the swap
-parked). ``lock(root)`` serializes threads and processes and runs
-``recover(root)`` on every entry, so every reader and writer sees a
-finished swap.
+``._journal`` (an in-flight swap), ``._trash`` (entries the swap
+parked) and ``._stage`` (the ``locked_stage`` of a caller that stages
+under the lock). ``lock(root)`` serializes threads and processes and
+runs ``recover(root)`` on every entry, so every reader and writer sees
+a finished swap.
 
 A swap (``commit``) is journal -> park -> install -> files -> clean:
 
@@ -46,6 +47,7 @@ FAULT_POINTS = (
 
 _JOURNAL = "._journal"
 _TRASH = "._trash"
+_STAGE = "._stage"
 
 
 def fault(point: str) -> None:
@@ -60,6 +62,12 @@ def write_atomic(path: str, text: str) -> None:
     with open(tmp, "w") as f:
         f.write(text)
     os.rename(tmp, path)
+
+
+def locked_stage(root: str) -> str:
+    """The stage in ``root`` of a caller that stages under the lock:
+    ``recover`` drops it when no journal names it (a pre-journal kill)."""
+    return os.path.join(root, _STAGE)
 
 
 @contextmanager
@@ -100,12 +108,13 @@ def commit(
 
 
 def recover(root: str) -> None:
-    """Finish a journaled swap, or purge the trash a finished one left."""
+    """Finish a journaled swap, or purge the trash and locked stage."""
     try:
         with open(os.path.join(root, _JOURNAL)) as f:
             journal = json.load(f)
     except FileNotFoundError:
-        shutil.rmtree(os.path.join(root, _TRASH), ignore_errors=True)
+        for name in (_TRASH, _STAGE):
+            shutil.rmtree(os.path.join(root, name), ignore_errors=True)
         return
     _roll_forward(root, **journal)
 
@@ -120,18 +129,8 @@ def _roll_forward(
     os.makedirs(trash, exist_ok=True)
     park = [n for n in remove if n not in install]
     park += [n for n in install if os.path.isdir(os.path.join(stage, n))]
-    for i, name in enumerate(park):
-        live = os.path.join(root, name)
-        if os.path.isdir(live):
-            os.rename(live, os.path.join(trash, name))
-        if i == 0:
-            fault("mid-park")
-    for i, name in enumerate(install):
-        staged = os.path.join(stage, name)
-        if os.path.isdir(staged):
-            os.rename(staged, os.path.join(root, name))
-        if i == 0:
-            fault("mid-install")
+    _move(park, root, trash, "mid-park")
+    _move(install, stage, root, "mid-install")
     for name, text in files.items():
         write_atomic(os.path.join(root, name), text)
     fault("files-written")
@@ -139,3 +138,16 @@ def _roll_forward(
     shutil.rmtree(stage, ignore_errors=True)
     fault("cleaned")
     os.remove(os.path.join(root, _JOURNAL))
+
+
+def _move(names: list, src: str, dst: str, point: str) -> None:
+    """Move each ``src/<name>`` that exists to ``dst/<name>``. ``point``
+    fires after the first name, or at once when there is none, so every
+    swap passes every kill point."""
+    if not names:
+        fault(point)
+    for i, name in enumerate(names):
+        if os.path.isdir(os.path.join(src, name)):
+            os.rename(os.path.join(src, name), os.path.join(dst, name))
+        if i == 0:
+            fault(point)

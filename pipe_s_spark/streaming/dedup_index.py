@@ -15,14 +15,14 @@ Per micro-batch, inside one ``foreachBatch``:
 3. append the batch bands to the index.
 
 Exactly-once on replay: both the index and the pairs table are
-partitioned by ``batch_id`` and written with dynamic partition
-OVERWRITE, and the index side of the join admits STRICTLY EARLIER
-epochs only (batch ids are monotone) — a replayed epoch therefore
-sees exactly the index it saw the first time and rewrites its own
-partitions to identical content, even if later epochs already landed
-(the layout-level idempotence the merge_apply sink gets from its
-epoch fence; proven by tests/test_dedup_index_stream.py's
-out-of-order replay test).
+epoch logs (streaming.epoch_log: one ``batch_id`` partition per epoch,
+written with dynamic partition OVERWRITE), and the index side of the
+join admits STRICTLY EARLIER epochs only (batch ids are monotone) — a
+replayed epoch therefore sees exactly the index it saw the first time
+and rewrites its own partitions to identical content, even if later
+epochs already landed (the layout-level idempotence the merge_apply
+sink gets from its epoch fence; proven by
+tests/test_dedup_index_stream.py's out-of-order replay test).
 
 At 100 TB: per-ingest cost is O(batch x matching bands), never
 O(corpus); the index is the persisted narrow band table (doc_id,
@@ -40,36 +40,13 @@ from pyspark.sql import functions as F
 
 from pipe_s_spark.functions.dedup import (
     LSH_BAND_CAP,
+    cap_group_size,
     lsh_bands,
     minhash_signature,
     shingles,
 )
-from pipe_s_spark.streaming import commit
-
-#: DEFAULT-ON compaction cadence for every continuous-index sink
-#: (dedup index, IVF/IVFADC index, quarantine ledger). A long-running
-#: stream otherwise accumulates one parquet partition per micro-batch:
-#: O(#batches) directory listing on every strictly-earlier join plus
-#: the classic small-files problem — the same class of silent
-#: operational decay as an uncapped LSH band, so the guard must not
-#: depend on the caller remembering it (the band_cap precedent). 64 =
-#: folds cost amortize to <2% of epochs while partition count stays
-#: bounded at ~2x the cadence; pass ``compact_every=None`` to opt OUT
-#: (e.g. for forensic per-epoch retention), any int to retune.
-DEFAULT_COMPACT_EVERY = 64
-
-
-def _has_batch_partitions(path: str) -> bool:
-    """True when ``path`` holds at least one ``batch_id=`` partition —
-    the ONLY condition under which 'no existing index' is a valid read
-    outcome. Any other read failure (transient FS error, corrupt file)
-    must propagate so the micro-batch retries instead of silently
-    emitting a pairs partition missing all cross-epoch pairs."""
-    try:
-        entries = os.listdir(path)
-    except FileNotFoundError:
-        return False
-    return any(e.startswith("batch_id=") for e in entries)
+from pipe_s_spark.streaming import commit, epoch_log
+from pipe_s_spark.streaming.epoch_log import DEFAULT_COMPACT_EVERY
 
 
 def run_dedup_index_stream(
@@ -91,12 +68,10 @@ def run_dedup_index_stream(
     batch_id); pairs hold (d1, d2, batch_id) with d1 < d2.
 
     ``compact_every``: fold committed per-batch partitions of BOTH
-    tables every N epochs (compact_index_partitions) so a long-running
-    stream keeps O(1) partitions instead of O(#batches). DEFAULT-ON at
-    DEFAULT_COMPACT_EVERY (None opts out). Safe inside
-    foreachBatch: when epoch N is executing, every epoch < N is
-    committed (epochs are sequential), so watermark = N satisfies the
-    compactor's contract and epoch N's own partition is never touched.
+    tables every N epochs (epoch_log.compact_index_partitions, on the
+    epoch_log.due cadence) so a long-running stream keeps O(1)
+    partitions instead of O(#batches). DEFAULT-ON at
+    DEFAULT_COMPACT_EVERY (None opts out).
 
     ``band_cap`` bounds the per-(band_id, band_sig) group size of the
     ARRIVING batch before the join (functions.dedup.cap_group_size —
@@ -125,14 +100,11 @@ def run_dedup_index_stream(
             bands=bands,
             band_cap=band_cap,
         )
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            # watermark = this epoch id: epochs run sequentially, so
-            # every epoch < batch_id is checkpoint-committed and can
-            # never replay again; this epoch's own partition is > the
-            # fold target and stays untouched
-            spark = batch_df.sparkSession
-            compact_index_partitions(spark, index_path, watermark=batch_id)
-            compact_index_partitions(spark, pairs_path, watermark=batch_id)
+        if epoch_log.due(batch_id, compact_every):
+            for p in (index_path, pairs_path):
+                epoch_log.compact_index_partitions(
+                    batch_df.sparkSession, p, watermark=batch_id
+                )
 
     q = (
         doc_stream.writeStream.foreachBatch(_process)
@@ -189,8 +161,6 @@ def apply_index_batch(
     sig = minhash_signature(sh, id_col, num_hashes=num_hashes)
     new_bands = lsh_bands(sig, id_col, num_hashes=num_hashes, bands=bands)
     if band_cap is not None:
-        from pipe_s_spark.functions.dedup import cap_group_size
-
         new_bands = cap_group_size(new_bands, ["band_id", "band_sig"], band_cap)
     # eager local checkpoint, not persist(): the two concurrent fenced
     # writes below otherwise race block-level cache locks while
@@ -201,19 +171,14 @@ def apply_index_batch(
     # explicitly in the finally (_free_local_checkpoint).
     new_bands = new_bands.localCheckpoint(eager=True)
     try:
-        if _has_batch_partitions(index_path):
-            # STRICTLY EARLIER epochs only: batch ids are monotone, so
-            # a replayed epoch must see exactly the index it saw the
-            # first time — filtering only its own id would let a zombie
-            # replay of epoch N join against epoch N+1's bands and
-            # write pairs epoch N+1's partition already owns. Read
-            # errors here propagate (the epoch retries) — only a
-            # genuinely absent index means "no earlier epochs".
-            existing = spark.read.parquet(index_path).filter(
-                F.col("batch_id") < batch_id
-            )
-        else:
-            existing = None
+        # STRICTLY EARLIER epochs only: batch ids are monotone, so a
+        # replayed epoch must see exactly the index it saw the first
+        # time — filtering only its own id would let a zombie replay of
+        # epoch N join against epoch N+1's bands and write pairs epoch
+        # N+1's partition already owns. Read errors propagate (the
+        # epoch retries) — only a genuinely absent index means "no
+        # earlier epochs".
+        existing = epoch_log.read(spark, index_path, before=batch_id)
         a = new_bands.alias("a")
         sides = [new_bands.alias("b")]
         if existing is not None:
@@ -245,21 +210,12 @@ def apply_index_batch(
         # job-group/description local properties propagate.
         from pyspark import InheritableThread
 
-        def _fenced(df: DataFrame, path: str) -> None:
-            (
-                df.withColumn("batch_id", F.lit(batch_id).cast("long"))
-                .write.mode("overwrite")
-                .partitionBy("batch_id")
-                .option("partitionOverwriteMode", "dynamic")
-                .parquet(path)
-            )
-
         errs: list[BaseException] = []
 
         def _write(df: DataFrame, path: str) -> None:
             _t = _time.perf_counter()
             try:
-                _fenced(df, path)
+                epoch_log.append(path, df, batch_id)
             except BaseException as e:  # noqa: BLE001 — re-raised below
                 errs.append(e)
             finally:
@@ -363,69 +319,3 @@ def _raise_all(errs: list[BaseException]) -> None:
         )
     ]
     raise first
-
-
-def _list_batch_ids(path: str) -> list[int]:
-    try:
-        entries = os.listdir(path)
-    except FileNotFoundError:
-        return []
-    return sorted(
-        int(e.split("=", 1)[1]) for e in entries if e.startswith("batch_id=")
-    )
-
-
-def compact_index_partitions(
-    spark, path: str, watermark: int, dedupe: bool = True
-) -> int:
-    """Fold every ``batch_id < watermark`` partition of a
-    batch_id-partitioned table into the single partition ``batch_id =
-    watermark - 1`` — the small-files / O(#batches)-partition-listing
-    fix for long-running streams. Works for the LSH index and pairs
-    tables AND (with ``dedupe=False``) for append-ledger sinks whose
-    rows may legitimately repeat (the quarantine gate's good/bad/
-    metrics tables): set ``dedupe`` only when rows are unique by
-    content within the folded range, which also lets the fold shrink
-    crash-leftover duplicates.
-
-    Why this cannot break the strictly-earlier replay property:
-    Structured Streaming only ever replays the LAST uncommitted epoch,
-    so every epoch the stream can still replay has ``batch_id >=
-    watermark`` when ``watermark`` <= the committed epoch watermark
-    (caller's contract — from inside foreachBatch, the current epoch
-    id qualifies). A replay of epoch N >= watermark filters
-    ``batch_id < N``; the folded rows carry ``batch_id = watermark - 1
-    < watermark <= N``, so the replayed epoch sees EXACTLY the row set
-    it saw pre-compaction, and its own dynamic overwrite touches only
-    partition N, which compaction never rewrites.
-
-    Crash-safety is one journaled ``commit.commit`` under the table's
-    lock: the fold is staged, then the folded batch ids go out and the
-    target partition comes in. A kill before the journal leaves the
-    original layout; after it, recovery finishes the swap — exactly-once
-    folding with no dependence on downstream ``.distinct()``. Returns
-    the number of partitions folded away."""
-    stage = f"{path}.compact-stage"
-    with commit.lock(path):
-        ids = _list_batch_ids(path)
-        old = [b for b in ids if b < watermark - 1]
-        if not old:
-            return 0
-        target = watermark - 1
-        folded = spark.read.parquet(path).filter(
-            F.col("batch_id") < watermark
-        ).drop("batch_id")
-        if dedupe:
-            folded = folded.distinct()
-        folded = folded.withColumn(
-            "batch_id", F.lit(target).cast("long")
-        )
-        folded.write.mode("overwrite").partitionBy("batch_id").parquet(stage)
-        # an all-empty fold installs an empty partition
-        commit.commit(
-            path,
-            stage,
-            install=[f"batch_id={target}"],
-            remove=[f"batch_id={b}" for b in old],
-        )
-        return len(old)

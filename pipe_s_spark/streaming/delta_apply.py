@@ -13,20 +13,21 @@ The standard storage answer is a log-structured split, which is also
 exactly what Delta/Iceberg/Hudi MOR tables do:
 
 - ``apply_batch`` appends each micro-batch's NET EFFECTS as its own
-  ``batch_id=N`` partition — cost O(batch), no read of existing state,
-  idempotent under Structured Streaming replay because a replayed
-  epoch dynamic-overwrites its own partition with identical content
-  (same idempotence story as the streaming index sinks,
-  ``streaming/ivf_index.py::_overwrite_epoch``);
+  ``batch_id=N`` partition of an epoch log (``streaming/epoch_log.py``,
+  the layout under every streaming append sink) — cost O(batch), no
+  read of existing state, idempotent under Structured Streaming replay
+  because a replayed epoch dynamic-overwrites its own partition with
+  identical content;
 - reads resolve last-writer-wins per key by ``(last_seq, batch_id)``
   with tombstones (``net_op = delete``) — order-independent, so late
   or out-of-order epochs can never clobber newer state;
 - ``fold_into`` periodically compacts all unfolded deltas into a
   ``MergeApplyTarget`` base (ONE bulk apply — the shape the bucketed
   target is good at), advances a ``._folded_through`` watermark, and
-  truncates the folded partitions. The watermark, not the truncation,
-  is the correctness boundary: a zombie/replayed append of an
-  already-folded epoch recreates a partition every reader ignores.
+  truncates the folded partitions in one journaled commit. The
+  watermark, not the truncation, is the correctness boundary: a
+  zombie/replayed append of an already-folded epoch recreates a
+  partition every reader ignores.
 
 Read amplification is the price (a full view unions base + unfolded
 deltas through one LWW shuffle), bounded by fold frequency — the same
@@ -39,14 +40,13 @@ match the rest of the sink family (``._layout`` / fence / contracts).
 from __future__ import annotations
 
 import os
-import shutil
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pipe_s_spark.operators.compaction import compact_changelog
-from pipe_s_spark.streaming import commit
+from pipe_s_spark.streaming import commit, epoch_log
 from pipe_s_spark.streaming.merge_apply import (
     FLAT_CHANGELOG_SCHEMA,
     MergeApplyTarget,
@@ -114,28 +114,20 @@ class DeltaAppendTarget:
                 op_col=self.op_col,
                 payload_cols=self.payload_cols,
             )
-        (
-            compacted.select(
-                *self.key_cols, *self.payload_cols, "net_op", "last_seq"
-            )
-            .withColumn("batch_id", F.lit(epoch_id).cast("long"))
-            .write.mode("overwrite")
-            .partitionBy("batch_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(self.path)
+        epoch_log.append(
+            self.path,
+            compacted.select(*self.key_cols, *self.payload_cols, "net_op", "last_seq"),
+            epoch_id,
         )
         return True
 
     # -- read path -----------------------------------------------------
     def _delta_frame(self, spark: SparkSession) -> DataFrame | None:
-        """All unfolded delta rows, or None when no partition exists."""
-        try:
-            entries = os.listdir(self.path)
-        except FileNotFoundError:
+        """All unfolded delta rows, or None when no partition exists (the
+        schema spans folded partitions too, so it keeps stored types)."""
+        df = epoch_log.read(spark, self.path)
+        if df is None:
             return None
-        if not any(e.startswith("batch_id=") for e in entries):
-            return None
-        df = spark.read.option("basePath", self.path).parquet(self.path)
         return df.filter(F.col("batch_id") > F.lit(self.folded_through()))
 
     def _resolve(self, union: DataFrame) -> DataFrame:
@@ -216,8 +208,8 @@ class DeltaAppendTarget:
         the fold atomically; the watermark is written only after that
         commit, so a crash in between re-folds the same resolved net
         state on restart — idempotent effects (same upserts, same
-        deletes). Truncation runs last and is pure space reclamation
-        (readers already ignore folded ids).
+        deletes). Truncation runs last, as one journaled commit, and is
+        pure space reclamation (readers already ignore folded ids).
         ``epoch_id`` is the BASE's epoch number and must exceed its
         fence, as with any apply."""
         spark = SparkSession.getActiveSession() or SparkSession.builder.getOrCreate()
@@ -235,13 +227,5 @@ class DeltaAppendTarget:
         commit.fault("fold-committed")
         commit.write_atomic(self._watermark_path(), str(int(hi)))
         if truncate:
-            for e in os.listdir(self.path):
-                if not e.startswith("batch_id="):
-                    continue
-                try:
-                    bid = int(e.split("=", 1)[1])
-                except ValueError:
-                    continue
-                if bid <= hi:
-                    shutil.rmtree(os.path.join(self.path, e), ignore_errors=True)
+            epoch_log.truncate(self.path, hi)
         return True

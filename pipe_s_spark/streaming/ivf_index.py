@@ -24,9 +24,10 @@ Per micro-batch, inside one ``foreachBatch``:
 4. append the batch's assigned vectors to ``index_path`` and its
    per-cell counts to the ledger.
 
-Exactly-once on replay: every table (index, ledger, topk) is
-partitioned by ``batch_id`` and written with dynamic partition
-OVERWRITE, and both the index join and the ledger base counts admit
+Exactly-once on replay: every table (index, ledger, topk) is an epoch
+log (streaming.epoch_log: one ``batch_id`` partition per epoch, written
+with dynamic partition OVERWRITE, the ledger by a driver-side staged
+install), and both the index join and the ledger base counts admit
 STRICTLY EARLIER epochs only — a replayed epoch sees exactly the
 index, ranks, and candidates it saw the first time and rewrites its
 own partitions to identical content, even if later epochs already
@@ -56,12 +57,13 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from pipe_s_spark.functions import similarity as S
-from pipe_s_spark.streaming import commit
+from pipe_s_spark.streaming import epoch_log
 from pipe_s_spark.streaming.dedup_index import (
-    DEFAULT_COMPACT_EVERY,
     _free_local_checkpoint,
+    _raise_all,
     check_index_contract,
 )
+from pipe_s_spark.streaming.epoch_log import DEFAULT_COMPACT_EVERY
 
 
 def _fingerprint(mapping: dict) -> str:
@@ -124,18 +126,6 @@ IVF_TOPK_SALT = 8
 IVF_TOPK_SALT_ADC = 3
 
 
-def _has_batch_partitions(path: str) -> bool:
-    """True when ``path`` holds at least one ``batch_id=`` partition —
-    the ONLY condition under which 'no existing table' is a valid read
-    outcome; any other failure propagates so the micro-batch retries
-    (same contract as streaming.dedup_index)."""
-    try:
-        entries = os.listdir(path)
-    except FileNotFoundError:
-        return False
-    return any(e.startswith("batch_id=") for e in entries)
-
-
 #: below this many trained cells, skip the probed-cells broadcast
 #: semi-join on the member side: a batch of any size probes essentially
 #: every cell, so the filter passes everything while costing a full
@@ -159,39 +149,24 @@ PROBE_SKIP_MAX_MEMBERS = 250_000
 
 def _read_base_counts(cells_path: str, batch_id: int) -> dict[int, int] | None:
     """Driver-side pyarrow fold of the strictly-earlier ledger
-    partitions into {cell: count} — the read half of
-    _write_counts_epoch's driver-side write. The ledger is O(#cells x
-    epochs) rows of bounded metadata (and compaction keeps the
-    partition count itself bounded), so reading it through a Spark job
-    + broadcast exchange cost ~0.5 s of pure per-epoch fixed overhead
-    for a table that fits in a dict. Strictly-earlier filtering is on
-    the partition directory name, identical to the Spark read's
-    ``batch_id < batch_id`` filter; compacted partitions (folded to
-    ``batch_id = watermark - 1`` with multiplicity preserved) sum the
-    same. Returns None when no earlier partition exists (epoch 0 /
-    fresh index)."""
+    partitions (epoch_log.partitions) into {cell: count} — the read
+    half of the epoch's driver-side ledger install. The ledger is
+    O(#cells x epochs) rows of bounded metadata (and compaction keeps
+    the partition count itself bounded), so reading it through a Spark
+    job + broadcast exchange cost ~0.5 s of pure per-epoch fixed
+    overhead for a table that fits in a dict. Compacted partitions
+    (folded to ``batch_id = watermark - 1`` with multiplicity
+    preserved) sum the same. Returns None when no earlier partition
+    exists (epoch 0 / fresh index)."""
     import pyarrow.parquet as papq
 
-    try:
-        entries = os.listdir(cells_path)
-    except FileNotFoundError:
-        return None
+    parts = epoch_log.partitions(cells_path, before=batch_id)
     base: dict[int, int] = {}
-    seen = False
-    for e in entries:
-        if not e.startswith("batch_id="):
-            continue
-        try:
-            bid = int(e.split("=", 1)[1])
-        except ValueError:
-            continue
-        if bid >= batch_id:
-            continue
-        seen = True
-        t = papq.read_table(os.path.join(cells_path, e), columns=["cell", "n"])
+    for part in parts:
+        t = papq.read_table(part, columns=["cell", "n"])
         for c, n in zip(t["cell"].to_pylist(), t["n"].to_pylist()):
             base[c] = base.get(c, 0) + n
-    return base if seen else None
+    return base if parts else None
 
 
 def run_ivf_index_stream(
@@ -221,10 +196,10 @@ def run_ivf_index_stream(
     ``cell_cap`` is DEFAULT-ON at IVF_CELL_CAP (pass None to opt out
     and keep every member searchable); ``compact_every`` folds
     committed per-batch partitions of all three tables every N epochs
-    (streaming.dedup_index.compact_index_partitions — the ledger folds
+    (streaming.epoch_log.compact_index_partitions — the ledger folds
     with ``dedupe=False`` because its (cell, n) rows legitimately
     repeat across epochs). DEFAULT-ON at
-    streaming.dedup_index.DEFAULT_COMPACT_EVERY (None opts out).
+    streaming.epoch_log.DEFAULT_COMPACT_EVERY (None opts out).
 
     With ``pq_books`` (a trained functions.similarity.pq_train_int
     codebook) the index runs in COMPRESSED mode — the FAISS IVFADC
@@ -259,15 +234,12 @@ def run_ivf_index_stream(
             pq_k=pq_k,
             topk_salt=topk_salt,
         )
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            from pipe_s_spark.streaming.dedup_index import compact_index_partitions
-
-            spark = batch_df.sparkSession
-            compact_index_partitions(spark, index_path, watermark=batch_id)
-            compact_index_partitions(
-                spark, _cells_path(index_path), watermark=batch_id, dedupe=False
-            )
-            compact_index_partitions(spark, topk_path, watermark=batch_id)
+        if epoch_log.due(batch_id, compact_every):
+            cells = _cells_path(index_path)
+            for p in (index_path, cells, topk_path):
+                epoch_log.compact_index_partitions(
+                    batch_df.sparkSession, p, watermark=batch_id, dedupe=p != cells
+                )
 
     q = (
         vec_stream.writeStream.foreachBatch(_process)
@@ -526,13 +498,11 @@ def apply_ivf_batch(
         member_payload = "codes" if pq_books is not None else vec_col
         member_cols = [id_col, member_payload, "cell"]
         corpus = ranked.filter(F.col("searchable")).select(*member_cols)
-        if _has_batch_partitions(index_path):
-            earlier = (
-                spark.read.parquet(index_path)
-                .filter((F.col("batch_id") < batch_id) & F.col("searchable"))
-                .select(*member_cols)
+        earlier = epoch_log.read(spark, index_path, before=batch_id)
+        if earlier is not None:
+            corpus = corpus.unionByName(
+                earlier.filter(F.col("searchable")).select(*member_cols)
             )
-            corpus = corpus.unionByName(earlier)
         # restrict the member side to cells THIS batch actually probes
         # (broadcast semi-join on the distinct probe-cell set — at most
         # batch x nprobe values): without it every searchable member of
@@ -652,7 +622,7 @@ def apply_ivf_batch(
         def _write(df: DataFrame, path: str) -> None:
             _t = _time.perf_counter()
             try:
-                _overwrite_epoch(df, batch_id, path)
+                epoch_log.append(path, df, batch_id)
             except BaseException as e:  # noqa: BLE001 — re-raised below
                 errs.append(e)
             finally:
@@ -661,6 +631,8 @@ def apply_ivf_batch(
                 )
 
         def _counts_and_ledger() -> None:
+            import pyarrow as pa
+
             _t = _time.perf_counter()
             try:
                 counts = (
@@ -668,7 +640,17 @@ def apply_ivf_batch(
                     .agg(F.count(F.lit(1)).alias("n"))
                     .collect()
                 )
-                _write_counts_epoch(counts, batch_id, cells_path)
+                # driver-side ledger write: a Spark write of ~#cells
+                # rows cost a job and a commit (~0.5 s per epoch); the
+                # cell int32 / n int64 schema is what _read_base_counts
+                # and compaction read
+                ledger = pa.table(
+                    {
+                        "cell": pa.array([r["cell"] for r in counts], type=pa.int32()),
+                        "n": pa.array([r["n"] for r in counts], type=pa.int64()),
+                    }
+                )
+                epoch_log.install(cells_path, batch_id, ledger)
             except BaseException as e:  # noqa: BLE001 — re-raised below
                 errs.append(e)
             finally:
@@ -684,66 +666,9 @@ def apply_ivf_batch(
         for t in threads:
             t.join()
         if errs:
-            from pipe_s_spark.streaming.dedup_index import _raise_all
-
             _raise_all(errs)
     finally:
         _free_local_checkpoint(ranked)
         _prof["wall"] = _time.perf_counter() - _t_epoch
         LAST_EPOCH_PROFILE.clear()
         LAST_EPOCH_PROFILE.update(_prof)
-
-
-def _write_counts_epoch(rows, batch_id: int, cells_path: str) -> None:
-    """Driver-side pyarrow write of the O(#cells) ledger partition —
-    a Spark parquet write of ~#cells rows costs a full job + dynamic-
-    partition commit (~0.5 s of pure fixed overhead per epoch, the
-    ledger being the smallest of the three per-epoch writes); writing
-    the already-collected rows directly costs ~ms. Same idempotence
-    contract as the Spark dynamic overwrite: the partition directory
-    is replaced whole (one ``commit.commit``), so a replayed epoch
-    rewrites identical content. Schema matches the previous Spark
-    write (cell int32, n int64; batch_id stays a hive partition key)
-    so compaction and the base-count reader are unchanged."""
-    import uuid
-
-    import pyarrow as pa
-    import pyarrow.parquet as papq
-
-    name = f"batch_id={batch_id}"
-    # leading '_': Spark partition discovery ignores the stage a kill
-    # before the commit leaves behind
-    stage = os.path.join(cells_path, f"_staging_{uuid.uuid4().hex}")
-    os.makedirs(os.path.join(stage, name))
-    table = pa.table(
-        {
-            "cell": pa.array([r["cell"] for r in rows], type=pa.int32()),
-            "n": pa.array([r["n"] for r in rows], type=pa.int64()),
-        }
-    )
-    papq.write_table(table, os.path.join(stage, name, "part-00000.parquet"))
-    with commit.lock(cells_path):
-        commit.commit(cells_path, stage, install=[name])
-
-
-def _overwrite_epoch(
-    df: DataFrame, batch_id: int, path: str, files: int | None = None
-) -> None:
-    """Dynamic-partition overwrite of one epoch. ``files`` optionally
-    bounds the epoch's file count via a repartition (not coalesce —
-    coalesce would collapse the upstream window/kernel stages into
-    ``files`` tasks). Default OFF: an A/B at the 10K-vector epoch
-    scale measured the extra shuffle costing MORE than the many-file
-    commit saves (files=4: 13.6 s / 4 epochs vs unbounded: 10.6 s);
-    small-file growth in the strictly-earlier reads is already handled
-    by compaction (DEFAULT_COMPACT_EVERY). Revisit on a real cluster
-    where the commit is object-store-backed and listing dominates."""
-    if files is not None:
-        df = df.repartition(files)
-    (
-        df.withColumn("batch_id", F.lit(batch_id).cast("long"))
-        .write.mode("overwrite")
-        .partitionBy("batch_id")
-        .option("partitionOverwriteMode", "dynamic")
-        .parquet(path)
-    )

@@ -26,7 +26,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pipe_s_spark.operators.expectations import ExpectationSuite
-from pipe_s_spark.streaming.dedup_index import DEFAULT_COMPACT_EVERY
+from pipe_s_spark.streaming import epoch_log
+from pipe_s_spark.streaming.epoch_log import DEFAULT_COMPACT_EVERY
 
 
 def run_quarantine_gate(
@@ -46,52 +47,40 @@ def run_quarantine_gate(
     ``_violated`` rendered as a sorted comma-joined string (stable for
     downstream grouping); ``metrics_path`` accrues one row per
     (batch_id, check) with that batch's violation count and row total.
-    All three sinks are PARTITIONED BY batch_id and written with
-    dynamic partition overwrite, so a replayed epoch (restart after a
-    crash between sink write and stream commit) rewrites its own
-    partitions to identical content instead of duplicating rows — the
+    All three sinks are epoch logs (streaming.epoch_log: PARTITIONED BY
+    batch_id, written with dynamic partition overwrite), so a replayed
+    epoch (restart after a crash between sink write and stream commit)
+    rewrites its own partitions to identical content instead of duplicating rows — the
     same layout-level idempotence the dedup-index maintainer and the
     merge sink's epoch fence provide.
 
     ``compact_every``: every N epochs, fold committed per-batch
     partitions of all three sinks into one
-    (streaming.dedup_index.compact_index_partitions with
+    (streaming.epoch_log.compact_index_partitions with
     ``dedupe=False`` — ledger rows may legitimately repeat, and the
     journaled commit gives exactly-once folding without relying on
     dedup) so a long-running gate keeps O(1) partitions instead of
-    O(#batches). DEFAULT-ON at streaming.dedup_index.
-    DEFAULT_COMPACT_EVERY (None opts out). Safe inside foreachBatch:
-    epochs are sequential, so watermark = the current epoch id only
-    touches committed epochs.
+    O(#batches). DEFAULT-ON at streaming.epoch_log.
+    DEFAULT_COMPACT_EVERY (None opts out).
     """
     for p in (good_path, quarantine_path, metrics_path):
         os.makedirs(p, exist_ok=True)
-
-    def _write(df: DataFrame, path: str) -> None:
-        (
-            df.write.mode("overwrite")
-            .partitionBy("batch_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(path)
-        )
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         tagged = suite.tag(batch_df).persist()
         try:
             n_total = tagged.count()
-            bid = F.lit(batch_id).cast("long").alias("batch_id")
             good = tagged.filter(F.size("_violated") == 0).drop("_violated")
             bad = tagged.filter(F.size("_violated") > 0).withColumn(
                 "_violated", F.array_join(F.array_sort("_violated"), ",")
             )
-            _write(good.withColumn("batch_id", bid), good_path)
-            _write(bad.withColumn("batch_id", bid), quarantine_path)
+            epoch_log.append(good_path, good, batch_id)
+            epoch_log.append(quarantine_path, bad, batch_id)
             metrics = (
                 tagged.select(F.explode("_violated").alias("check"))
                 .groupBy("check")
                 .agg(F.count(F.lit(1)).alias("violations"))
                 .select(
-                    bid,
                     # epoch duplicates batch_id as a DATA column: the
                     # partition column is layout (rewritten when old
                     # partitions are folded by compaction), but per-
@@ -103,16 +92,11 @@ def run_quarantine_gate(
                     F.lit(n_total).cast("long").alias("batch_rows"),
                 )
             )
-            _write(metrics, metrics_path)
-            if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-                from pipe_s_spark.streaming.dedup_index import (
-                    compact_index_partitions,
-                )
-
-                spark = batch_df.sparkSession
+            epoch_log.append(metrics_path, metrics, batch_id)
+            if epoch_log.due(batch_id, compact_every):
                 for p in (good_path, quarantine_path, metrics_path):
-                    compact_index_partitions(
-                        spark, p, watermark=batch_id, dedupe=False
+                    epoch_log.compact_index_partitions(
+                        batch_df.sparkSession, p, watermark=batch_id, dedupe=False
                     )
         finally:
             tagged.unpersist()

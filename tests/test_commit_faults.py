@@ -6,8 +6,8 @@ released), so the files stay exactly where a killed process leaves
 them. After the kill a fresh handle must see the parent state when the
 kill came before the journal and the committed state at or after it —
 a mix fails. Re-running the same operation with the same epoch must
-then match a plain-Python oracle, and no ``._journal`` or ``._trash``
-may survive the next lock entry.
+then match a plain-Python oracle, and no ``._journal``, ``._trash``
+or stage inside a root may survive the next lock entry.
 """
 
 from __future__ import annotations
@@ -18,8 +18,8 @@ from decimal import Decimal
 
 import pytest
 
-from pipe_s_spark.streaming import commit
-from pipe_s_spark.streaming.dedup_index import compact_index_partitions
+from pipe_s_spark.streaming import commit, epoch_log
+from pipe_s_spark.streaming.epoch_log import compact_index_partitions
 from pipe_s_spark.streaming.delta_apply import DeltaAppendTarget
 from pipe_s_spark.streaming.incremental_agg import IncrementalAggView
 from pipe_s_spark.streaming.merge_apply import (
@@ -43,7 +43,7 @@ LEDGER = [(i % 4, f"v{i % 3}", b) for b in range(4) for i in range(6)]
 #: points before the journal of the commit a user's state depends on
 PRE_JOURNAL = {"staged", "view-state-written"}
 PRIMITIVE = ("staged", "journaled", "mid-park", "mid-install", "files-written", "cleaned")
-USERS = ("merge", "rebucket", "compaction", "fold", "view")
+USERS = ("merge", "rebucket", "compaction", "fold", "view", "append", "truncate")
 CASES = [(u, p) for u in USERS for p in PRIMITIVE] + [
     ("fold", "fold-committed"),
     ("view", "view-state-written"),
@@ -208,7 +208,65 @@ class View:
         assert got == {t: (n, float(s)) for t, (n, s) in want.items()}
 
 
-USER = dict(zip(USERS, (Merge(), Rebucket(), Compaction(), Fold(), View())))
+class Append:
+    """The driver-side staged append (the IVF cell ledger's write)."""
+
+    roots = ("ix",)
+    parent_state = sorted(r for r in LEDGER if r[2] < 3)
+    committed_state = sorted(LEDGER)
+
+    def _install(self, d, b):
+        import pyarrow as pa
+
+        rows = [(k, v) for k, v, e in LEDGER if e == b]
+        table = pa.table({"k": [k for k, _ in rows], "v": [v for _, v in rows]})
+        epoch_log.install(d + "/ix", b, table)
+
+    def setup(self, spark, d):
+        for b in range(3):
+            self._install(d, b)
+
+    def run(self, spark, d):
+        self._install(d, 3)
+
+    def state(self, spark, d):
+        with commit.lock(d + "/ix"):
+            pass
+        return _ledger(spark, d + "/ix")
+
+    def check(self, spark, d):
+        assert self.state(spark, d) == self.committed_state
+
+
+class Truncate:
+    """``fold_into``'s truncation of the folded delta epochs."""
+
+    roots = ("delta",)
+    parent_state = ([0, 1], _lww(BASE + UPSERTS))
+    committed_state = ([], _lww(BASE + UPSERTS))
+
+    def setup(self, spark, d):
+        Fold().setup(spark, d)
+        t = DeltaAppendTarget(d + "/delta")
+        t.fold_into(MergeApplyTarget(d + "/base", num_buckets=4), 0, truncate=False)
+
+    def run(self, spark, d):
+        epoch_log.truncate(d + "/delta", DeltaAppendTarget(d + "/delta").folded_through())
+
+    def state(self, spark, d):
+        with commit.lock(d + "/delta"):
+            pass
+        base = MergeApplyTarget(d + "/base", num_buckets=4)
+        merged = DeltaAppendTarget(d + "/delta").read_merged(spark, base)
+        return epoch_log.epochs(d + "/delta"), _rows(merged)
+
+    def check(self, spark, d):
+        assert self.state(spark, d) == self.committed_state
+
+
+USER = dict(
+    zip(USERS, (Merge(), Rebucket(), Compaction(), Fold(), View(), Append(), Truncate()))
+)
 
 
 @pytest.fixture(scope="module")
@@ -230,7 +288,9 @@ def _no_leftovers(d, roots):
     for r in roots:
         with commit.lock(os.path.join(d, r)):
             pass
-        assert not {"._journal", "._trash"} & set(os.listdir(os.path.join(d, r)))
+        left = set(os.listdir(os.path.join(d, r)))
+        assert not {"._journal", "._trash", "._stage"} & left
+        assert not [n for n in left if n.startswith("_staging")]
 
 
 @pytest.mark.parametrize("user,point", CASES, ids=[f"{u}-{p}" for u, p in CASES])
@@ -281,4 +341,37 @@ def test_only_commit_module_renames_or_locks():
             else:
                 continue
             hits += [f"{f.relative_to(pkg)}:{node.lineno} {m}.{n}" for m, n in names & banned]
+    assert not hits
+
+
+def test_only_epoch_log_module_knows_the_partition_layout():
+    """``streaming/epoch_log.py`` is the one place that spells the
+    ``batch_id=`` partition names or sets ``partitionOverwriteMode``;
+    every append sink goes through it. Docstrings may describe the
+    layout."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "pipe_s_spark"
+    hits = []
+    for f in sorted(pkg.rglob("*.py")):
+        if f == pkg / "streaming" / "epoch_log.py":
+            continue
+        tree = ast.parse(f.read_text())
+        docs = {
+            id(n.body[0].value)
+            for n in ast.walk(tree)
+            if isinstance(n, (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef))
+            and n.body
+            and isinstance(n.body[0], ast.Expr)
+            and isinstance(n.body[0].value, ast.Constant)
+        }
+        hits += [
+            f"{f.relative_to(pkg)}:{node.lineno} {node.value!r}"
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Constant)
+            and isinstance(node.value, str)
+            and id(node) not in docs
+            and ("batch_id=" in node.value or "partitionOverwriteMode" in node.value)
+        ]
     assert not hits

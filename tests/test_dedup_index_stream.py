@@ -126,10 +126,8 @@ def test_compaction_preserves_pairs_and_replay(spark, tmp_path):
     into one; the candidate-pair set is unchanged, a replay of the
     newest (still-replayable) epoch stays idempotent, and the fold
     itself is idempotent."""
-    from pipe_s_spark.streaming.dedup_index import (
-        apply_index_batch,
-        compact_index_partitions,
-    )
+    from pipe_s_spark.streaming.dedup_index import apply_index_batch
+    from pipe_s_spark.streaming.epoch_log import compact_index_partitions
 
     docs = spark.read.parquet(f"{SF}/documents.parquet").select("doc_id", "text")
     parts = [docs.filter(F.col("doc_id") % 3 == i) for i in range(3)]
@@ -171,7 +169,7 @@ def test_compaction_preserves_pairs_and_replay(spark, tmp_path):
 def test_compaction_ledger_mode_preserves_duplicates(spark, tmp_path):
     """dedupe=False (append-ledger sinks): rows that legitimately
     repeat across or within batches must survive the fold verbatim."""
-    from pipe_s_spark.streaming.dedup_index import compact_index_partitions
+    from pipe_s_spark.streaming.epoch_log import compact_index_partitions
 
     p = str(tmp_path / "ledger")
     rows = [(1, "x", 0), (1, "x", 0), (1, "x", 1), (2, "y", 2)]
@@ -239,7 +237,7 @@ def test_compaction_is_default_on_across_continuous_sinks():
     test_ivf_index_stream.py; this pins the default wiring."""
     import inspect
 
-    from pipe_s_spark.streaming.dedup_index import DEFAULT_COMPACT_EVERY
+    from pipe_s_spark.streaming.epoch_log import DEFAULT_COMPACT_EVERY
     from pipe_s_spark.streaming.ivf_index import run_ivf_index_stream
     from pipe_s_spark.streaming.quarantine import run_quarantine_gate
 

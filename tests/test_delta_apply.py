@@ -209,3 +209,67 @@ def test_runner_delta_output_with_fold(spark, tmp_path):
     # replayed spec: watermark no-op, state unchanged
     run_pipeline(spark, spec)
     assert _state(base.read_current(spark)) == want
+
+
+def test_widened_column_reads_and_folds_from_a_fresh_handle(spark, tmp_path):
+    """Epoch 0 writes ``k`` as int and epoch 1 as bigint (a value past
+    2**31). Every read resolves one schema with the widest type per
+    column, so a fresh handle reads both rows and the fold succeeds."""
+    from pyspark.sql import types as T
+
+    wide = T.StructType(
+        [
+            T.StructField(f.name, T.LongType() if f.name == "k" else f.dataType)
+            for f in FLAT_CHANGELOG_SCHEMA.fields
+        ]
+    )
+    row = {"id": "e1", "seq": 1, "db": "d", "table_name": "t1", "op": "insert",
+           "pk": 2, "k": 2**40, "value": 2.0, "ts_ms": 1}
+    DeltaAppendTarget(str(tmp_path / "d")).apply_batch(
+        _mk(spark, [(0, "t1", "insert", 1, 7, 1.0)]), 0
+    )
+    DeltaAppendTarget(str(tmp_path / "d")).apply_batch(
+        spark.createDataFrame([row], wide), 1
+    )
+    want = {("t1", 1): (7, 1.0), ("t1", 2): (2**40, 2.0)}
+    t = DeltaAppendTarget(str(tmp_path / "d"))
+    assert _state(t.read_current(spark)) == want
+    base = MergeApplyTarget(str(tmp_path / "b"), num_buckets=4)
+    assert t.fold_into(base, epoch_id=0)
+    assert _state(base.read_current(spark)) == want
+
+
+def test_incompatible_column_change_is_refused(spark, tmp_path):
+    """A type change no reader can widen to (int -> string) fails
+    loudly instead of reading one epoch's values as the other's."""
+    import pytest
+    from pyspark.sql import types as T
+
+    strk = T.StructType(
+        [
+            T.StructField(f.name, T.StringType() if f.name == "k" else f.dataType)
+            for f in FLAT_CHANGELOG_SCHEMA.fields
+        ]
+    )
+    row = {"id": "e1", "seq": 1, "db": "d", "table_name": "t1", "op": "insert",
+           "pk": 2, "k": "x", "value": 2.0, "ts_ms": 1}
+    t = DeltaAppendTarget(str(tmp_path / "d"))
+    t.apply_batch(_mk(spark, [(0, "t1", "insert", 1, 7, 1.0)]), 0)
+    t.apply_batch(spark.createDataFrame([row], strk), 1)
+    with pytest.raises(ValueError, match="column 'k'"):
+        DeltaAppendTarget(str(tmp_path / "d")).read_current(spark)
+
+
+def test_fully_folded_log_reads_stored_types_from_a_fresh_handle(spark, tmp_path):
+    """After a fold that keeps its partitions (``truncate=False``, or a
+    kill before the truncation), a fresh handle still reads an empty
+    frame of the stored types, custom payload columns included."""
+    cols = ("k", "note")
+    batch = _mk(spark, EPOCH0).withColumn("note", F.lit("x"))
+    d = str(tmp_path / "d")
+    DeltaAppendTarget(d, payload_cols=cols).apply_batch(batch, 0)
+    base = MergeApplyTarget(str(tmp_path / "b"), payload_cols=cols, num_buckets=4)
+    assert DeltaAppendTarget(d, payload_cols=cols).fold_into(base, 0, truncate=False)
+    cur = DeltaAppendTarget(d, payload_cols=cols).read_current(spark)
+    assert cur.count() == 0
+    assert dict(cur.dtypes) == {"table_name": "string", "pk": "bigint", "k": "int", "note": "string"}

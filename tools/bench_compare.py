@@ -1,6 +1,7 @@
-"""Compare two bench JSON artifacts (BENCH_LOCAL.json or a driver
-BENCH_r{N}.json with a `parsed` wrapper): per-query deltas over the
-common set, plus totals — the round-over-round view the small-SF
+"""Compare two bench JSON artifacts (BENCH_LOCAL.json, or an older
+driver capture with a `parsed` wrapper, e.g. one restored from git
+history with `git show <rev>:BENCH_r16.json`): per-query deltas over
+the common set, plus totals — the round-over-round view the small-SF
 variance makes easy to misread from totals alone.
 
 Usage: python tools/bench_compare.py OLD.json NEW.json [min_ratio]
