@@ -35,7 +35,8 @@ from collections.abc import Callable, Hashable
 
 from pyspark.sql import DataFrame, SparkSession
 
-#: Max live entries; each is a narrow checkpointed table (a few MB at
+#: Max live entries of each memo (the scalar memo below uses the same
+#: bound); each is a narrow checkpointed table (a few MB at
 #: bench scale). FIFO eviction drops the memo entry but does NOT
 #: unpersist: localCheckpoint truncates lineage, so a caller (or a
 #: derived lazy plan) still holding an evicted handle would fail with
@@ -61,10 +62,6 @@ _evicted: list[DataFrame] = []
 #: warm table, and without the build seconds beside it a cache shift
 #: reads as a speedup.
 _build_log: list[tuple] = []
-#: Callbacks invoked by clear() — lets sibling driver-side memos
-#: (e.g. the centroid literal-matrix cache) share this module's
-#: teardown hook instead of growing unbounded across sessions.
-_clear_hooks: list[Callable[[], None]] = []
 
 
 def materialized(
@@ -101,13 +98,13 @@ def materialized(
     return df
 
 
-#: Driver-side scalar memo (corpus counts, trained parameter tuples) —
-#: same keying/lifetime discipline as the DataFrame memo, for values
-#: that are a single Spark JOB to compute (e.g. COUNT(*) sizing an LSH
-#: signature): rerunning that job per query invocation is a full extra
-#: pass over the corpus at real scale and 4x per bench entry (r9
-#: advice, queries_sim).
-_scalars: dict[tuple, object] = {}
+#: Driver-side scalar memo (corpus counts, trained centroids and
+#: codebooks) — same keying/lifetime discipline and MAX_ENTRIES FIFO
+#: bound as the DataFrame memo, for values that are a Spark job or a
+#: training run to compute (e.g. COUNT(*) sizing an LSH signature):
+#: rerunning that per query invocation is a full extra pass over the
+#: corpus at real scale and 4x per bench entry (r9 advice, queries_sim).
+_scalars: OrderedDict[tuple, object] = OrderedDict()
 
 
 def scalar(
@@ -115,15 +112,19 @@ def scalar(
 ) -> object:
     """Return the memoized scalar for ``key``, computing it once per
     Spark application. Builds are appended to the build log so the
-    bench attributes the one-off job like any other cache build."""
+    bench attributes the one-off job like any other cache build; past
+    MAX_ENTRIES the oldest value is dropped (nothing to unpersist)."""
     full_key = (spark.sparkContext.applicationId, *key)
-    if full_key not in _scalars:
-        import time
+    if full_key in _scalars:
+        return _scalars[full_key]
+    import time
 
-        t0 = time.perf_counter()
-        _scalars[full_key] = builder()
-        _build_log.append((full_key, round(time.perf_counter() - t0, 4)))
-    return _scalars[full_key]
+    t0 = time.perf_counter()
+    value = _scalars[full_key] = builder()
+    _build_log.append((full_key, round(time.perf_counter() - t0, 4)))
+    while len(_scalars) > MAX_ENTRIES:
+        _scalars.popitem(last=False)
+    return value
 
 
 def live_keys() -> set[tuple]:
@@ -146,15 +147,9 @@ def drain_build_log() -> list[tuple]:
     return out
 
 
-def on_clear(hook: Callable[[], None]) -> None:
-    """Register a teardown callback run by :func:`clear` (idempotent)."""
-    if hook not in _clear_hooks:
-        _clear_hooks.append(hook)
-
-
 def clear() -> None:
-    """Drop every memo entry, reclaim evicted checkpoints, and run
-    registered sibling-cache hooks (tests; session teardown)."""
+    """Drop every memo entry (DataFrames and scalars) and reclaim
+    evicted checkpoints (tests; session teardown)."""
     while _memo:
         _, old = _memo.popitem(last=False)
         _evicted.append(old)
@@ -166,5 +161,3 @@ def clear() -> None:
             old.unpersist()
         except Exception:  # session may already be stopped
             pass
-    for hook in _clear_hooks:
-        hook()

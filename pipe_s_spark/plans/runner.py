@@ -20,6 +20,14 @@ Spec shape (mirrors examples/configsamples/*.json):
 }
 
 Unknown types raise — same behavior as componentbuilder_test.go:10-50.
+
+Outputs come from three tables, which ``--list`` prints: the batch
+formats, the stream formats, and the epoch sinks (merge, delta,
+dedup-index, ivf-index). An epoch sink parses its Config once for
+either input kind: a batch input applies one epoch, a stream input
+hands the same parsed sink to the one streaming epoch loop
+(streaming.epoch_log.run_stream). A Config key the stream path cannot
+honour raises instead of being dropped.
 """
 
 from __future__ import annotations
@@ -29,7 +37,6 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from pipe_s_spark.model import changelog_from_events
 from pipe_s_spark.operators import (
@@ -56,15 +63,18 @@ class PipelineSpecError(ValueError):
 _PROCESSORS: dict[str, Factory] = {}
 
 
-def register_processor(name: str) -> Callable[[Factory], Factory]:
-    """Decorator-registry — parity with RegisterComponent
-    (componentbuilder.go:42-44); user code can add custom processors."""
-
-    def deco(f: Factory) -> Factory:
-        _PROCESSORS[name] = f
+def _register(table: dict[str, Any], name: str) -> Callable[[Any], Any]:
+    def deco(f):
+        table[name] = f
         return f
 
     return deco
+
+
+def register_processor(name: str) -> Callable[[Factory], Factory]:
+    """Decorator-registry — parity with RegisterComponent
+    (componentbuilder.go:42-44); user code can add custom processors."""
+    return _register(_PROCESSORS, name)
 
 
 @register_processor("dml-filter")
@@ -353,340 +363,371 @@ def _ivf_pq_books(
     )
 
 
+#: the batch outputs that write the whole frame in one go
+_FORMATS: dict[str, Callable[[DataFrame, Mapping[str, Any]], None]] = {}
+#: the format sinks a stream input may end in: DataStreamWriter builders
+_STREAM_FORMATS: dict[str, Callable[[DataFrame, Mapping[str, Any]], Any]] = {
+    "parquet": lambda df, cfg: df.writeStream.format("parquet").option("path", cfg["path"]),
+    "console": lambda df, cfg: df.writeStream.format("console"),
+    "noop": lambda df, cfg: df.writeStream.format("noop"),
+}
+#: the epoch sinks, fed by either input kind: parse(df, cfg) reads the
+#: Config once and returns (apply, start). A batch input calls
+#: ``apply()`` once, at ``epochId``; a stream input calls
+#: ``start(checkpoint, available_now, await_seconds)``, which hands the
+#: same parsed sink to the streaming driver (streaming.epoch_log.
+#: run_stream, directly or through a sink's run_*_stream).
+_EPOCH_SINKS: dict[str, Callable[[DataFrame, Mapping[str, Any]], tuple]] = {}
+#: a Config key an epoch sink cannot honour on a stream input, and what
+#: to do instead: a stream spec that sets it is refused, not ignored
+_STREAM_REFUSES = {
+    "delta": ("foldInto", "fold with a batch 'delta' spec"),
+    "dedup-index": ("continuous", "the index sinks drain availableNow"),
+    "ivf-index": ("continuous", "the index sinks drain availableNow"),
+}
+
+
+@_register(_FORMATS, "parquet")
+def _o_parquet(df: DataFrame, cfg: Mapping[str, Any]) -> None:
+    zorder = cfg.get("zorderBy")
+    if not zorder:
+        df.write.mode(cfg.get("mode", "overwrite")).parquet(cfg["path"])
+        return
+    # clustered layout: ["xExpr", "yExpr"] -> z-order sorted files with
+    # disjoint key ranges (sources.layout)
+    from pipe_s_spark.sources.layout import write_zorder_clustered
+
+    if len(zorder) != 2:
+        raise PipelineSpecError("zorderBy takes exactly two column exprs")
+    write_zorder_clustered(
+        df,
+        cfg["path"],
+        zorder[0],
+        zorder[1],
+        num_files=int(cfg.get("numFiles", 16)),
+        mode=cfg.get("mode", "overwrite"),
+    )
+
+
+@_register(_FORMATS, "check")
+def _o_check(df: DataFrame, cfg: Mapping[str, Any]) -> None:
+    # parity: MysqlCheckOutput (checkoutput.go:293-445) — diff the piped
+    # source against a parquet target by key; the report (key cols +
+    # diff_type) lands at resultPath (the reference's ResultFilePath).
+    # An empty report == consistent.
+    from pipe_s_spark.operators.checker import check_consistency
+
+    tgt = df.sparkSession.read.parquet(cfg["targetPath"])
+    report = check_consistency(
+        df, tgt, key_cols=cfg["keys"], compare_cols=cfg.get("compareCols")
+    )
+    report.coalesce(1).write.mode(cfg.get("mode", "overwrite")).parquet(
+        cfg["resultPath"]
+    )
+
+
+def _coalesced(df: DataFrame, cfg: Mapping[str, Any]) -> DataFrame:
+    n = cfg.get("numFiles")
+    return df.coalesce(int(n)) if n else df
+
+
+@_register(_FORMATS, "orc")
+def _o_orc(df: DataFrame, cfg: Mapping[str, Any]) -> None:
+    df.write.mode(cfg.get("mode", "overwrite")).orc(cfg["path"])
+
+
+@_register(_FORMATS, "csv")
+def _o_csv(df: DataFrame, cfg: Mapping[str, Any]) -> None:
+    _coalesced(df, cfg).write.mode(cfg.get("mode", "overwrite")).option(
+        "header", cfg.get("header", True)
+    ).csv(cfg["path"])
+
+
+@_register(_FORMATS, "jsonl")
+def _o_jsonl(df: DataFrame, cfg: Mapping[str, Any]) -> None:
+    # training-data export: newline-delimited JSON, the interchange
+    # format most dataset tooling ingests; one file per partition
+    # (numFiles coalesces to a bounded file count)
+    _coalesced(df, cfg).write.mode(cfg.get("mode", "overwrite")).json(cfg["path"])
+
+
+@_register(_FORMATS, "noop")
+def _o_noop(df: DataFrame, cfg: Mapping[str, Any]) -> None:
+    df.write.format("noop").mode("overwrite").save()  # parity: DummyOutput
+
+
+@_register(_FORMATS, "console")
+def _o_console(df: DataFrame, cfg: Mapping[str, Any]) -> None:
+    df.show(int(cfg.get("numRows", 20)), truncate=False)  # parity: LogOutput
+
+
+@_register(_FORMATS, "debug")
+def _o_debug(df: DataFrame, cfg: Mapping[str, Any]) -> None:
+    # parity: DebugOutput (debug/output.go:18-25) — print only the rows
+    # matching a predicate (the reference hardcodes one id; a filter
+    # expression is the declarative generalization)
+    df.filter(cfg.get("where", "true")).show(
+        int(cfg.get("numRows", 20)), truncate=False
+    )
+
+
+def _keys(cfg: Mapping[str, Any]) -> dict[str, Any]:
+    """The key/payload parse shared by merge, delta and delta's
+    ``foldInto`` base."""
+    return {
+        "key_cols": cfg.get("keyCols", ("table_name", "pk")),
+        "payload_cols": cfg.get("payloadCols", ("k", "value")),
+    }
+
+
+def _merge_target(cfg: Mapping[str, Any], keys: dict[str, Any]):
+    from pipe_s_spark.streaming.merge_apply import MergeApplyTarget
+
+    return MergeApplyTarget(
+        cfg["path"],
+        num_buckets=int(cfg.get("numBuckets", 16)),
+        lww=cfg.get("lww", False),
+        **keys,
+    )
+
+
+def _target_sink(df: DataFrame, cfg: Mapping[str, Any], tgt, skipped: str):
+    """(apply, start) of a CDC target whose epoch is one ``apply_batch``
+    call. ``skipped`` (formatted with ``epoch`` and ``path``) is printed
+    when a batch epoch returns False: a re-run of the same spec with NEW
+    input must never leave a silently stale target. ``tgt.apply_batch``
+    is looked up when the stream starts."""
+    from pipe_s_spark.streaming.epoch_log import run_stream
+
+    def apply() -> int:
+        epoch = int(cfg.get("epochId", 1))
+        if not tgt.apply_batch(df, epoch_id=epoch):
+            print(skipped.format(epoch=epoch, path=cfg["path"]), flush=True)
+        return epoch
+
+    def start(checkpoint: str, available_now: bool, wait: int) -> None:
+        run_stream(df, tgt.apply_batch, checkpoint, available_now=available_now,
+                   await_seconds=wait)
+
+    return apply, start
+
+
+@_register(_EPOCH_SINKS, "merge")
+def _s_merge(df: DataFrame, cfg: Mapping[str, Any]) -> tuple:
+    # parity: MysqlStreamOutput/MysqlBatchOutput upsert-apply — the piped
+    # changelog is compacted to net effect and MERGED into a fenced
+    # bucketed parquet target (streaming.merge_apply): every micro-batch
+    # of a stream (the db_stream_sync.json semantics, binlog -> filter ->
+    # convert -> upsert), or a batch input once as epoch `epochId`
+    # (default 1), so re-running the same spec is a fence no-op.
+    return _target_sink(
+        df,
+        cfg,
+        _merge_target(cfg, _keys(cfg)),
+        "[merge] epoch {epoch} already applied at {path} — skipping (fence). "
+        "Pass a higher 'epochId' in the spec to apply fresh input.",
+    )
+
+
+@_register(_EPOCH_SINKS, "delta")
+def _s_delta(df: DataFrame, cfg: Mapping[str, Any]) -> tuple:
+    # LSM-shaped variant of 'merge' (streaming.delta_apply): the epoch's
+    # net effects APPEND as their own batch partition — O(batch)
+    # steady-state writes instead of touched-bucket rewrites — and reads
+    # resolve last-writer-wins. A batch spec's optional 'foldInto'
+    # compacts all unfolded deltas into a bucketed merge target
+    # afterwards (one bulk apply, watermark advanced, folded partitions
+    # truncated).
+    from pipe_s_spark.streaming.delta_apply import DeltaAppendTarget
+
+    keys = _keys(cfg)
+    dt = DeltaAppendTarget(cfg["path"], **keys)
+    apply, start = _target_sink(
+        df,
+        cfg,
+        dt,
+        "[delta] epoch {epoch} at or below the fold watermark at {path} — "
+        "skipping (its effects live in the base). Pass a higher 'epochId' "
+        "to apply fresh input.",
+    )
+    fold = cfg.get("foldInto")
+    if not fold:
+        return apply, start
+
+    def apply_and_fold() -> None:
+        epoch = apply()
+        dt.fold_into(_merge_target(fold, keys), epoch_id=int(fold.get("epochId", epoch)))
+
+    return apply_and_fold, start
+
+
+@_register(_EPOCH_SINKS, "dedup-index")
+def _s_dedup_index(df: DataFrame, cfg: Mapping[str, Any]) -> tuple:
+    # continuous MinHash-LSH index maintenance (streaming.dedup_index —
+    # replay-idempotent, band-capped by default, self-compacting on the
+    # default cadence): a batch input bootstraps the index as epoch
+    # `epochId` (default 0); a stream started afterwards on the same
+    # paths continues from later epochs against it.
+    from pipe_s_spark.functions.dedup import LSH_BAND_CAP
+    from pipe_s_spark.streaming import dedup_index
+    from pipe_s_spark.streaming.epoch_log import DEFAULT_COMPACT_EVERY
+
+    kw = dict(
+        index_path=cfg["indexPath"],
+        pairs_path=cfg["pairsPath"],
+        id_col=cfg.get("idCol", "doc_id"),
+        text_col=cfg.get("textCol", "text"),
+        k=int(cfg.get("shingleK", 3)),
+        num_hashes=int(cfg.get("numHashes", 16)),
+        bands=int(cfg.get("bands", 4)),
+        band_cap=cfg.get("bandCap", LSH_BAND_CAP),
+    )
+
+    def apply() -> None:
+        dedup_index.apply_index_batch(df, int(cfg.get("epochId", 0)), **kw)
+
+    def start(checkpoint: str, available_now: bool, wait: int) -> None:
+        dedup_index.run_dedup_index_stream(
+            df,
+            checkpoint=checkpoint,
+            # absent key -> the sink's default-on cadence; an explicit
+            # JSON null remains the opt-out
+            compact_every=cfg.get("compactEvery", DEFAULT_COMPACT_EVERY),
+            await_seconds=wait,
+            **kw,
+        )
+
+    return apply, start
+
+
+@_register(_EPOCH_SINKS, "ivf-index")
+def _s_ivf_index(df: DataFrame, cfg: Mapping[str, Any]) -> tuple:
+    # continuous ANN/IVF index maintenance (streaming.ivf_index —
+    # replay-idempotent, cell-capped by default, self-compacting on the
+    # default cadence): a batch input bootstraps the index as epoch
+    # `epochId` (default 0); a stream continues from later epochs.
+    # Centroids are given inline, trained offline from `trainPath`, or
+    # (batch only) trained on the bootstrap corpus.
+    from pipe_s_spark.streaming import ivf_index
+    from pipe_s_spark.streaming.epoch_log import DEFAULT_COMPACT_EVERY
+
+    spark = df.sparkSession
+    centroids = _ivf_centroids(spark, cfg, df)
+    kw = dict(
+        index_path=cfg["indexPath"],
+        topk_path=cfg["topkPath"],
+        id_col=cfg.get("idCol", "vec_id"),
+        vec_col=cfg.get("vecCol", "embedding"),
+        nprobe=int(cfg.get("nprobe", 2)),
+        k=int(cfg.get("k", 5)),
+        cell_cap=cfg.get("cellCap", ivf_index.IVF_CELL_CAP),
+        pq_books=_ivf_pq_books(spark, cfg, df),
+        pq_m=int(cfg["pqM"]) if "pqM" in cfg else None,
+        pq_k=int(cfg["pqK"]) if "pqK" in cfg else None,
+    )
+
+    def apply() -> None:
+        ivf_index.apply_ivf_batch(df, int(cfg.get("epochId", 0)), centroids, **kw)
+
+    def start(checkpoint: str, available_now: bool, wait: int) -> None:
+        ivf_index.run_ivf_index_stream(
+            df,
+            centroids,
+            checkpoint=checkpoint,
+            # absent key -> default-on cadence; JSON null opts out
+            compact_every=cfg.get("compactEvery", DEFAULT_COMPACT_EVERY),
+            await_seconds=wait,
+            **kw,
+        )
+
+    return apply, start
+
+
+def _write_epoch_sink(df: DataFrame, typ: str, cfg: Mapping[str, Any]) -> None:
+    """One epoch sink, from either input kind: a batch input applies
+    once; a stream input (the reference's continuous-sync mode) needs
+    ``checkpoint`` and runs the streaming driver (see _stream_options)."""
+    if not df.isStreaming:
+        _EPOCH_SINKS[typ](df, cfg)[0]()
+        return
+    opts = _stream_options(typ, cfg)
+    key, instead = _STREAM_REFUSES.get(typ, (None, None))
+    if key and cfg.get(key):
+        raise PipelineSpecError(
+            f"a streaming {typ!r} output cannot honour {key!r} ({instead}); "
+            "remove it from the spec"
+        )
+    _EPOCH_SINKS[typ](df, cfg)[1](*opts)
+
+
+def _stream_options(typ: str, cfg: Mapping[str, Any]) -> tuple[str, bool, int]:
+    """(checkpoint, available_now, await_seconds) of a streaming output:
+    ``checkpoint`` is required; the trigger is availableNow
+    (drain-and-stop) unless ``continuous`` is true; ``awaitSeconds``
+    (default 300) bounds the wait."""
+    ckpt = cfg.get("checkpoint")
+    if not ckpt:
+        raise PipelineSpecError(f"streaming {typ!r} output needs 'checkpoint'")
+    return ckpt, not cfg.get("continuous", False), int(cfg.get("awaitSeconds", 300))
+
+
 def _write_output(df: DataFrame, out: Mapping[str, Any]) -> DataFrame | None:
     typ = out.get("Type")
     cfg = out.get("Config", {})
     if typ == "return":
         return df
-    if df.isStreaming and typ != "fork":
-        # fork falls through: each branch's terminal output re-enters
-        # here and takes this streaming path with its own checkpoint
-        return _write_stream_output(df, typ, cfg)
-    if typ == "parquet":
-        zorder = cfg.get("zorderBy")
-        if zorder:
-            # clustered layout: ["xExpr", "yExpr"] -> z-order sorted
-            # files with disjoint key ranges (sources.layout)
-            from pipe_s_spark.sources.layout import write_zorder_clustered
-
-            if len(zorder) != 2:
-                raise PipelineSpecError("zorderBy takes exactly two column exprs")
-            write_zorder_clustered(
-                df,
-                cfg["path"],
-                zorder[0],
-                zorder[1],
-                num_files=int(cfg.get("numFiles", 16)),
-                mode=cfg.get("mode", "overwrite"),
-            )
-            return None
-        df.write.mode(cfg.get("mode", "overwrite")).parquet(cfg["path"])
-        return None
-    if typ == "merge":
-        # parity: MysqlStreamOutput/MysqlBatchOutput upsert-apply — the
-        # piped changelog is compacted to net effect and MERGED into a
-        # fenced bucketed parquet target (streaming.merge_apply; same
-        # code path foreachBatch uses, run once as epoch 1 for batch
-        # pipelines). Idempotent: re-running the same spec replays the
-        # same epoch and is a fence no-op.
-        from pipe_s_spark.streaming.merge_apply import MergeApplyTarget
-
-        tgt = MergeApplyTarget(
-            cfg["path"],
-            key_cols=cfg.get("keyCols", ("table_name", "pk")),
-            payload_cols=cfg.get("payloadCols", ("k", "value")),
-            num_buckets=int(cfg.get("numBuckets", 16)),
-            lww=cfg.get("lww", False),
-        )
-        epoch = int(cfg.get("epochId", 1))
-        applied = tgt.apply_batch(df, epoch_id=epoch)
-        if not applied:
-            # default epochId=1 means a re-run of the same spec with NEW
-            # input data hits the fence — never let that be silent: the
-            # user sees a stale target otherwise and has no signal why
-            print(
-                f"[merge] epoch {epoch} already applied at {cfg['path']} — "
-                "skipping (fence). Pass a higher 'epochId' in the spec to "
-                "apply fresh input.",
-                flush=True,
-            )
-        return None
-    if typ == "delta":
-        # LSM-shaped variant of 'merge' (streaming.delta_apply): the
-        # epoch's net effects APPEND as their own batch partition —
-        # O(batch) steady-state writes instead of touched-bucket
-        # rewrites — and reads resolve last-writer-wins. Optional
-        # 'foldInto' compacts all unfolded deltas into a bucketed
-        # merge target afterwards (one bulk apply, watermark advanced,
-        # folded partitions truncated).
-        from pipe_s_spark.streaming.delta_apply import DeltaAppendTarget
-        from pipe_s_spark.streaming.merge_apply import MergeApplyTarget
-
-        dt = DeltaAppendTarget(
-            cfg["path"],
-            key_cols=cfg.get("keyCols", ("table_name", "pk")),
-            payload_cols=cfg.get("payloadCols", ("k", "value")),
-        )
-        epoch = int(cfg.get("epochId", 1))
-        if not dt.apply_batch(df, epoch_id=epoch):
-            print(
-                f"[delta] epoch {epoch} at or below the fold watermark at "
-                f"{cfg['path']} — skipping (its effects live in the base). "
-                "Pass a higher 'epochId' to apply fresh input.",
-                flush=True,
-            )
-        fold = cfg.get("foldInto")
-        if fold:
-            base = MergeApplyTarget(
-                fold["path"],
-                key_cols=cfg.get("keyCols", ("table_name", "pk")),
-                payload_cols=cfg.get("payloadCols", ("k", "value")),
-                num_buckets=int(fold.get("numBuckets", 16)),
-                lww=fold.get("lww", False),
-            )
-            dt.fold_into(base, epoch_id=int(fold.get("epochId", epoch)))
-        return None
-    if typ == "check":
-        # parity: MysqlCheckOutput (checkoutput.go:293-445) — diff the
-        # piped source against a parquet target by key; the report
-        # (key cols + diff_type) lands at resultPath (the reference's
-        # ResultFilePath). An empty report == consistent.
-        from pipe_s_spark.operators.checker import check_consistency
-
-        tgt = df.sparkSession.read.parquet(cfg["targetPath"])
-        report = check_consistency(
-            df,
-            tgt,
-            key_cols=cfg["keys"],
-            compare_cols=cfg.get("compareCols"),
-        )
-        report.coalesce(1).write.mode(cfg.get("mode", "overwrite")).parquet(
-            cfg["resultPath"]
-        )
-        return None
-    if typ == "dedup-index":
-        # BATCH index build — the bootstrap step before the streaming
-        # 'dedup-index' sink takes over: index an existing corpus as
-        # epoch `epochId` (default 0); a stream started afterwards on
-        # the same paths continues from later epochs and its batches
-        # join against this bootstrap index like any earlier epoch.
-        from pipe_s_spark.functions.dedup import LSH_BAND_CAP
-        from pipe_s_spark.streaming.dedup_index import apply_index_batch
-
-        apply_index_batch(
-            df,
-            int(cfg.get("epochId", 0)),
-            cfg["indexPath"],
-            cfg["pairsPath"],
-            id_col=cfg.get("idCol", "doc_id"),
-            text_col=cfg.get("textCol", "text"),
-            k=int(cfg.get("shingleK", 3)),
-            num_hashes=int(cfg.get("numHashes", 16)),
-            bands=int(cfg.get("bands", 4)),
-            band_cap=cfg.get("bandCap", LSH_BAND_CAP),
-        )
-        return None
-    if typ == "ivf-index":
-        # BATCH ANN-index bootstrap — index an existing embedding
-        # corpus as epoch `epochId` (default 0); a stream started
-        # afterwards on the same paths (streaming 'ivf-index' output)
-        # continues from later epochs against this bootstrap index.
-        from pipe_s_spark.streaming.ivf_index import IVF_CELL_CAP, apply_ivf_batch
-
-        apply_ivf_batch(
-            df,
-            int(cfg.get("epochId", 0)),
-            _ivf_centroids(df.sparkSession, cfg, df),
-            cfg["indexPath"],
-            cfg["topkPath"],
-            id_col=cfg.get("idCol", "vec_id"),
-            vec_col=cfg.get("vecCol", "embedding"),
-            nprobe=int(cfg.get("nprobe", 2)),
-            k=int(cfg.get("k", 5)),
-            cell_cap=cfg.get("cellCap", IVF_CELL_CAP),
-            pq_books=_ivf_pq_books(df.sparkSession, cfg, df),
-            pq_m=int(cfg["pqM"]) if "pqM" in cfg else None,
-            pq_k=int(cfg["pqK"]) if "pqK" in cfg else None,
-        )
-        return None
-    if typ == "orc":
-        df.write.mode(cfg.get("mode", "overwrite")).orc(cfg["path"])
-        return None
-    if typ == "csv":
-        w = df
-        n = cfg.get("numFiles")
-        if n:
-            w = w.coalesce(int(n))
-        w.write.mode(cfg.get("mode", "overwrite")).option(
-            "header", cfg.get("header", True)
-        ).csv(cfg["path"])
-        return None
-    if typ == "jsonl":
-        # training-data export: newline-delimited JSON, the interchange
-        # format most dataset tooling ingests; one file per partition
-        # (coalesce for a bounded file count)
-        w = df
-        n = cfg.get("numFiles")
-        if n:
-            w = w.coalesce(int(n))
-        w.write.mode(cfg.get("mode", "overwrite")).json(cfg["path"])
-        return None
-    if typ == "noop":  # parity: DummyOutput (throughput measurement)
-        df.write.format("noop").mode("overwrite").save()
-        return None
-    if typ == "console":  # parity: LogOutput
-        df.show(int(cfg.get("numRows", 20)), truncate=False)
-        return None
-    if typ == "debug":
-        # parity: DebugOutput (debug/output.go:18-25) — print only the
-        # rows matching a predicate (the reference hardcodes one id;
-        # a filter expression is the declarative generalization)
-        df.filter(cfg.get("where", "true")).show(
-            int(cfg.get("numRows", 20)), truncate=False
-        )
-        return None
     if typ == "fork":
-        # parity: ForkPipeline (examples/configsamples/fork_pipeline.json)
-        # — one source fanned into N nested sub-pipelines, each with its
-        # own Processors chain and Output. The shared prefix is cached
-        # so each branch reads the source once, not N times (the
-        # reference hands the same message to every fork branch;
-        # persisting the prefix is the DataFrame equivalent).
-        branches = out.get("Outputs", [])
-        if not branches:
-            raise PipelineSpecError("fork output needs a non-empty 'Outputs' list")
-        cache = len(branches) > 1 and not df.isStreaming
-        if cache:
-            df.persist()
-        try:
-            results = [
-                _write_output(
-                    _apply_processors(df, b.get("Processors")),
-                    b.get("Output", {"Type": "return"}),
-                )
-                for b in branches
-            ]
-        finally:
-            if cache:
-                df.unpersist()
-        returned = [r for r in results if r is not None]
-        if len(returned) > 1:
-            # silently handing back just one branch's frame would make
-            # the others vanish without a trace — make the spec fix it
-            # (write N-1 branches to sinks, or run two pipelines)
-            raise PipelineSpecError(
-                f"fork has {len(returned)} 'return' branches; at most one "
-                "branch may return a DataFrame"
-            )
-        return returned[0] if returned else None
-    raise PipelineSpecError(f"unknown output type: {typ!r}")
-
-
-def _write_stream_output(df: DataFrame, typ: str, cfg: Mapping[str, Any]) -> None:
-    """Streaming sinks for stream-input pipelines (the reference's
-    continuous-sync mode). ``checkpoint`` is required; the trigger is
-    availableNow (drain-and-stop) unless ``continuous`` is true, and
-    ``awaitSeconds`` bounds the wait. ``merge`` runs the fenced
-    bucketed upsert per epoch — the exact db_stream_sync.json
-    semantics (binlog -> filter -> convert -> upsert) end-to-end."""
-    ckpt = cfg.get("checkpoint")
-    if not ckpt:
-        raise PipelineSpecError(f"streaming {typ!r} output needs 'checkpoint'")
-    wait = int(cfg.get("awaitSeconds", 300))
-
-    if typ == "merge":
-        from pipe_s_spark.streaming.merge_apply import MergeApplyTarget
-
-        tgt = MergeApplyTarget(
-            cfg["path"],
-            key_cols=cfg.get("keyCols", ("table_name", "pk")),
-            payload_cols=cfg.get("payloadCols", ("k", "value")),
-            num_buckets=int(cfg.get("numBuckets", 16)),
-            lww=cfg.get("lww", False),
-        )
-        writer = df.writeStream.foreachBatch(tgt.apply_batch)
-    elif typ == "delta":
-        # append-only epochs + LWW reads (streaming.delta_apply) — the
-        # steady-state-friendly sink; fold into a bucketed base offline
-        # or via a batch 'delta' spec with 'foldInto'
-        from pipe_s_spark.streaming.delta_apply import DeltaAppendTarget
-
-        dt = DeltaAppendTarget(
-            cfg["path"],
-            key_cols=cfg.get("keyCols", ("table_name", "pk")),
-            payload_cols=cfg.get("payloadCols", ("k", "value")),
-        )
-        writer = df.writeStream.foreachBatch(dt.apply_batch)
-    elif typ == "dedup-index":
-        # continuous MinHash-LSH index maintenance from a config:
-        # the document stream keeps indexPath current and appends
-        # candidate pairs per epoch (streaming.dedup_index — replay-
-        # idempotent, band-capped by default, optionally self-
-        # compacting every N epochs)
-        from pipe_s_spark.functions.dedup import LSH_BAND_CAP
-        from pipe_s_spark.streaming.dedup_index import run_dedup_index_stream
-        from pipe_s_spark.streaming.epoch_log import DEFAULT_COMPACT_EVERY
-
-        q = run_dedup_index_stream(
-            df,
-            index_path=cfg["indexPath"],
-            pairs_path=cfg["pairsPath"],
-            checkpoint=ckpt,
-            id_col=cfg.get("idCol", "doc_id"),
-            text_col=cfg.get("textCol", "text"),
-            k=int(cfg.get("shingleK", 3)),
-            num_hashes=int(cfg.get("numHashes", 16)),
-            bands=int(cfg.get("bands", 4)),
-            band_cap=cfg.get("bandCap", LSH_BAND_CAP),
-            # absent key -> the sink's default-on cadence; an explicit
-            # JSON null remains the opt-out
-            compact_every=cfg.get("compactEvery", DEFAULT_COMPACT_EVERY),
-        )
-        q.awaitTermination(wait)
-        return None
-    elif typ == "ivf-index":
-        # continuous ANN/IVF index maintenance from a config: the
-        # embedding stream keeps indexPath current and appends each
-        # arrival's top-k per epoch (streaming.ivf_index — replay-
-        # idempotent, cell-capped by default, optionally self-
-        # compacting every N epochs). Centroids are trained offline
-        # from `trainPath` (or given inline as `centroids`).
-        from pipe_s_spark.streaming.epoch_log import DEFAULT_COMPACT_EVERY
-        from pipe_s_spark.streaming.ivf_index import IVF_CELL_CAP, run_ivf_index_stream
-
-        q = run_ivf_index_stream(
-            df,
-            _ivf_centroids(df.sparkSession, cfg),
-            index_path=cfg["indexPath"],
-            topk_path=cfg["topkPath"],
-            checkpoint=ckpt,
-            id_col=cfg.get("idCol", "vec_id"),
-            vec_col=cfg.get("vecCol", "embedding"),
-            nprobe=int(cfg.get("nprobe", 2)),
-            k=int(cfg.get("k", 5)),
-            cell_cap=cfg.get("cellCap", IVF_CELL_CAP),
-            # absent key -> default-on cadence; JSON null opts out
-            compact_every=cfg.get("compactEvery", DEFAULT_COMPACT_EVERY),
-            pq_books=_ivf_pq_books(df.sparkSession, cfg),
-            pq_m=int(cfg["pqM"]) if "pqM" in cfg else None,
-            pq_k=int(cfg["pqK"]) if "pqK" in cfg else None,
-        )
-        q.awaitTermination(wait)
-        return None
-    elif typ == "parquet":
-        writer = df.writeStream.format("parquet").option("path", cfg["path"])
-    elif typ == "console":
-        writer = df.writeStream.format("console")
-    elif typ == "noop":
-        writer = df.writeStream.format("noop")
-    else:
+        return _fork(df, out.get("Outputs", []))
+    if typ in _EPOCH_SINKS:
+        return _write_epoch_sink(df, typ, cfg)
+    if not df.isStreaming:
+        if typ not in _FORMATS:
+            raise PipelineSpecError(f"unknown output type: {typ!r}")
+        return _FORMATS[typ](df, cfg)
+    if typ not in _STREAM_FORMATS:
         raise PipelineSpecError(f"streaming output type not supported: {typ!r}")
-    writer = writer.option("checkpointLocation", ckpt)
-    if not cfg.get("continuous", False):
+    ckpt, available_now, wait = _stream_options(typ, cfg)
+    writer = _STREAM_FORMATS[typ](df, cfg).option("checkpointLocation", ckpt)
+    if available_now:
         writer = writer.trigger(availableNow=True)
-    q = writer.start()
-    q.awaitTermination(wait)
+    writer.start().awaitTermination(wait)
     return None
+
+
+def _fork(df: DataFrame, branches) -> DataFrame | None:
+    """parity: ForkPipeline (examples/configsamples/fork_pipeline.json)
+    — one source fanned into N nested sub-pipelines, each with its own
+    Processors chain and Output. A batch prefix is cached so each branch
+    reads the source once, not N times (the reference hands the same
+    message to every fork branch; persisting the prefix is the DataFrame
+    equivalent); each streaming branch's output runs with its own
+    checkpoint."""
+    if not branches:
+        raise PipelineSpecError("fork output needs a non-empty 'Outputs' list")
+    cache = len(branches) > 1 and not df.isStreaming
+    if cache:
+        df.persist()
+    try:
+        results = [
+            _write_output(
+                _apply_processors(df, b.get("Processors")),
+                b.get("Output", {"Type": "return"}),
+            )
+            for b in branches
+        ]
+    finally:
+        if cache:
+            df.unpersist()
+    returned = [r for r in results if r is not None]
+    if len(returned) > 1:
+        # silently handing back just one branch's frame would make the
+        # others vanish without a trace — make the spec fix it (write
+        # N-1 branches to sinks, or run two pipelines)
+        raise PipelineSpecError(
+            f"fork has {len(returned)} 'return' branches; at most one "
+            "branch may return a DataFrame"
+        )
+    return returned[0] if returned else None
 
 
 def run_pipeline(spark: SparkSession, spec: Mapping[str, Any]) -> DataFrame | None:
@@ -715,14 +756,11 @@ def main(argv: list[str] | None = None) -> int:
     args = p.parse_args(argv)
     if args.list:
         print("processors:", ", ".join(sorted(_PROCESSORS)))
+        print("inputs: parquet, json, csv, orc, json-stream, sql, query")
+        print("outputs:", ", ".join(sorted({"return", "fork", *_FORMATS, *_EPOCH_SINKS})))
         print(
-            "inputs: parquet, json, csv, orc, json-stream, sql, query"
-        )
-        print(
-            "outputs: return, parquet (zorderBy), jsonl, csv, orc, merge, "
-            "delta (foldInto), check, dedup-index (batch bootstrap), noop, "
-            "console, debug, fork; streaming: merge, delta, dedup-index, "
-            "parquet, console, noop, fork"
+            "streaming outputs:",
+            ", ".join(sorted({"fork", *_STREAM_FORMATS, *_EPOCH_SINKS})),
         )
         return 0
     if not args.configs:

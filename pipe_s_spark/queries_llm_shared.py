@@ -2,8 +2,6 @@
 
 from __future__ import annotations
 
-from collections import OrderedDict
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -619,15 +617,6 @@ ENSEMBLE_MIN_TOKENS = 10
 LPA_ITERS = 3
 
 
-#: Bounded per-(session, sf_dir) centroid cache: FIFO-capped so a
-#: long-lived driver process cycling many sessions/sf_dirs cannot
-#: accumulate stale entries, and wired into SH.clear() so session
-#: teardown reclaims it alongside the DataFrame memo.
-_CENTROID_MEMO_MAX = 8
-_centroid_memo: "OrderedDict[tuple, dict[int, list[float]]]" = OrderedDict()
-SH.on_clear(_centroid_memo.clear)
-
-
 def _label_centroids_cached(spark: SparkSession, sf_dir: str) -> dict[int, list[float]]:
     """Per-label mean centroid vectors, computed once per (session,
     sf_dir) — the "trained model" of the nearest-centroid classifier.
@@ -635,26 +624,23 @@ def _label_centroids_cached(spark: SparkSession, sf_dir: str) -> dict[int, list[
     under any partitioning; the O(labels x dim) result is a bounded
     metadata collect (the same driver-side literal-matrix pattern as
     IVF's centroids)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _centroid_memo:
-        return _centroid_memo[key]
-    emb = load_table(spark, sf_dir, "embeddings")
-    ex = emb.select(
-        "label", F.posexplode(S.as_double_array("embedding")).alias("pos", "x")
-    )
-    cen_rows = (
-        ex.groupBy("label", "pos")
-        .agg(F.sum(F.col("x").cast("decimal(30,12)")).alias("s"), F.count(F.lit(1)).alias("n"))
-        .collect()
-    )
-    by_label: dict[int, dict[int, float]] = {}
-    for r in cen_rows:
-        by_label.setdefault(r["label"], {})[r["pos"]] = float(r["s"]) / r["n"]
-    cents = {
-        lab: [by_label[lab][p] for p in range(len(by_label[lab]))]
-        for lab in sorted(by_label)
-    }
-    _centroid_memo[key] = cents
-    while len(_centroid_memo) > _CENTROID_MEMO_MAX:
-        _centroid_memo.popitem(last=False)
-    return cents
+
+    def build() -> dict[int, list[float]]:
+        emb = load_table(spark, sf_dir, "embeddings")
+        ex = emb.select(
+            "label", F.posexplode(S.as_double_array("embedding")).alias("pos", "x")
+        )
+        cen_rows = (
+            ex.groupBy("label", "pos")
+            .agg(F.sum(F.col("x").cast("decimal(30,12)")).alias("s"), F.count(F.lit(1)).alias("n"))
+            .collect()
+        )
+        by_label: dict[int, dict[int, float]] = {}
+        for r in cen_rows:
+            by_label.setdefault(r["label"], {})[r["pos"]] = float(r["s"]) / r["n"]
+        return {
+            lab: [by_label[lab][p] for p in range(len(by_label[lab]))]
+            for lab in sorted(by_label)
+        }
+
+    return SH.scalar(spark, ("label_centroids", sf_dir), build)

@@ -9,8 +9,6 @@ modules under the 2,000-line bar."""
 
 from __future__ import annotations
 
-from collections import OrderedDict
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -19,17 +17,10 @@ from pipe_s_spark.functions import shared as SH
 from pipe_s_spark.functions import similarity as S
 from pipe_s_spark.sources import load_table
 
-from pipe_s_spark.queries_sim import (
-    KMEANS_ITERS,
-    _KMEANS_MEMO_MAX,
-    _kmeans_index_cached,
-)
+from pipe_s_spark.queries_sim import KMEANS_ITERS, _kmeans_index_cached
 
 # --- Product Quantization: PQ-flat ADC and IVF-ADC (the FAISS IVFADC
 # --- pipeline, Jegou et al. TPAMI 2011) ------------------------------------
-
-_pq_memo: "OrderedDict[tuple, dict[tuple[int, int], list[int]]]" = OrderedDict()
-SH.on_clear(_pq_memo.clear)
 
 #: ADC shortlist size for the IVF-ADC re-rank stage: the compressed-
 #: domain scan keeps this many candidates per query before the exact
@@ -42,15 +33,11 @@ def _pq_books_cached(spark: SparkSession, sf_dir: str) -> dict[tuple[int, int], 
     (session, sf_dir) by functions.similarity.pq_train_int — the
     in-session stand-in for the persisted codebook table a production
     PQ build ships to every scorer."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _pq_memo:
-        return _pq_memo[key]
-    emb = load_table(spark, sf_dir, "embeddings")
-    books = S.pq_train_int(emb)
-    _pq_memo[key] = books
-    while len(_pq_memo) > _KMEANS_MEMO_MAX:
-        _pq_memo.popitem(last=False)
-    return books
+    return SH.scalar(
+        spark,
+        ("pq_books", sf_dir),
+        lambda: S.pq_train_int(load_table(spark, sf_dir, "embeddings")),
+    )
 
 
 def _pq_index_cached(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -2,8 +2,6 @@
 
 from __future__ import annotations
 
-from collections import OrderedDict
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -1750,12 +1748,6 @@ FROM (
 """
 
 
-#: Bounded per-(session, sf_dir) k-means centroid cache — the same
-#: FIFO + SH.on_clear discipline as the label-centroid cache.
-_KMEANS_MEMO_MAX = 8
-_kmeans_memo: "OrderedDict[tuple, dict[int, list[int]]]" = OrderedDict()
-SH.on_clear(_kmeans_memo.clear)
-
 #: Lloyd iterations for the oracle-checked k-means IVF. Fixed (not
 #: convergence-tested) so the unrolled-CTE oracle replays the exact
 #: same computation; 2 rounds already moves every centroid from the
@@ -1769,15 +1761,13 @@ def _kmeans_cents_cached(spark: SparkSession, sf_dir: str) -> dict[int, list[int
     kmeans_train_int does the distributed work; this memo is the
     in-session stand-in for the persisted centroid table a production
     IVF build writes."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _kmeans_memo:
-        return _kmeans_memo[key]
-    emb = load_table(spark, sf_dir, "embeddings")
-    cents = S.kmeans_train_int(emb, iters=KMEANS_ITERS)
-    _kmeans_memo[key] = cents
-    while len(_kmeans_memo) > _KMEANS_MEMO_MAX:
-        _kmeans_memo.popitem(last=False)
-    return cents
+    return SH.scalar(
+        spark,
+        ("kmeans_centroids", sf_dir),
+        lambda: S.kmeans_train_int(
+            load_table(spark, sf_dir, "embeddings"), iters=KMEANS_ITERS
+        ),
+    )
 
 
 def _kmeans_index_cached(spark: SparkSession, sf_dir: str) -> DataFrame:

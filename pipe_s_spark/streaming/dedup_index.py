@@ -4,7 +4,9 @@ for every arriving batch against everything indexed before it — the
 operational form of `queries_dedup.q_dedup_incremental` (there the
 "arriving batch" is simulated; here it actually arrives).
 
-Per micro-batch, inside one ``foreachBatch``:
+Per micro-batch, as the body of the library's one streaming epoch loop
+(``streaming.epoch_log.run_stream``, which also folds both tables on
+the ``compact_every`` cadence):
 
 1. shingle -> MinHash signature -> band rows for the batch documents
    (functions.dedup — identical family constants to the batch queries,
@@ -32,6 +34,7 @@ equi-join is the same bounded-fan-out shape the batch LSH queries cap.
 
 from __future__ import annotations
 
+import functools
 import os
 import sys
 
@@ -68,7 +71,7 @@ def run_dedup_index_stream(
     batch_id); pairs hold (d1, d2, batch_id) with d1 < d2.
 
     ``compact_every``: fold committed per-batch partitions of BOTH
-    tables every N epochs (epoch_log.compact_index_partitions, on the
+    tables every N epochs (the epoch loop epoch_log.run_stream, on the
     epoch_log.due cadence) so a long-running stream keeps O(1)
     partitions instead of O(#batches). DEFAULT-ON at
     DEFAULT_COMPACT_EVERY (None opts out).
@@ -84,37 +87,25 @@ def run_dedup_index_stream(
     batch side only keeps the incremental result a superset-per-batch
     of what a capped batch recompute yields; pass None to opt OUT and
     match an uncapped recompute exactly."""
-    os.makedirs(index_path, exist_ok=True)
-    os.makedirs(pairs_path, exist_ok=True)
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        apply_index_batch(
-            batch_df,
-            batch_id,
-            index_path,
-            pairs_path,
-            id_col=id_col,
-            text_col=text_col,
-            k=k,
-            num_hashes=num_hashes,
-            bands=bands,
-            band_cap=band_cap,
-        )
-        if epoch_log.due(batch_id, compact_every):
-            for p in (index_path, pairs_path):
-                epoch_log.compact_index_partitions(
-                    batch_df.sparkSession, p, watermark=batch_id
-                )
-
-    q = (
-        doc_stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    body = functools.partial(
+        apply_index_batch,
+        index_path=index_path,
+        pairs_path=pairs_path,
+        id_col=id_col,
+        text_col=text_col,
+        k=k,
+        num_hashes=num_hashes,
+        bands=bands,
+        band_cap=band_cap,
     )
-    if await_seconds is not None:
-        q.awaitTermination(await_seconds)
-    return q
+    return epoch_log.run_stream(
+        doc_stream,
+        body,
+        checkpoint,
+        logs=[(index_path, True), (pairs_path, True)],
+        compact_every=compact_every,
+        await_seconds=await_seconds,
+    )
 
 
 #: wall-clock of the most recent epoch's phases (seconds) — parity

@@ -9,13 +9,16 @@ driver-side twin for a pyarrow table. ``read`` takes the widest type
 per column from one footer per partition, so an epoch that widened a
 column never makes the log unreadable. ``compact_index_partitions``
 and ``truncate`` are each one journaled ``commit.commit`` under the
-log's lock.
+log's lock. ``run_stream`` is the library's one ``foreachBatch``
+epoch loop: every streaming sink starts through it, with its logs
+folded on the ``due`` cadence.
 """
 
 from __future__ import annotations
 
 import json
 import os
+from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -201,3 +204,45 @@ def truncate(path: str, through: int) -> None:
         gone = [f"{_PREFIX}{e}" for e in epochs(path) if e <= through]
         if gone:
             commit.commit(path, f"{path}.compact-stage", remove=gone)
+
+
+def run_stream(
+    stream: DataFrame,
+    body: Callable[[DataFrame, int], object],
+    checkpoint: str,
+    logs: Sequence[tuple[str, bool]] = (),
+    compact_every: int | None = None,
+    available_now: bool = True,
+    await_seconds: int | None = None,
+):
+    """Start ``stream`` as an epoch loop and return its query. The
+    directory of each ``(path, dedupe)`` in ``logs`` exists once it
+    starts. Each micro-batch runs ``body(batch, epoch)``, then, when
+    ``due(epoch, compact_every)``, folds each log below the epoch
+    (``compact_index_partitions``). ``available_now`` drains
+    the backlog and stops, else the query runs until stopped;
+    ``await_seconds`` bounds an optional wait. The output mode is
+    update, which Spark runs as append for these non-aggregating
+    streams."""
+    for path, _dedupe in logs:
+        os.makedirs(path, exist_ok=True)
+
+    def epoch(batch: DataFrame, epoch_id: int) -> None:
+        body(batch, epoch_id)
+        if due(epoch_id, compact_every):
+            for path, dedupe in logs:
+                compact_index_partitions(
+                    batch.sparkSession, path, watermark=epoch_id, dedupe=dedupe
+                )
+
+    writer = (
+        stream.writeStream.foreachBatch(epoch)
+        .option("checkpointLocation", checkpoint)
+        .outputMode("update")
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    q = writer.start()
+    if await_seconds is not None:
+        q.awaitTermination(await_seconds)
+    return q

@@ -8,7 +8,9 @@ kmeans_train_int on a bootstrap corpus — the standard IVF pattern:
 train once on a sample, ingest forever) and passed in as the same
 literal centroid matrix the batch queries pin.
 
-Per micro-batch, inside one ``foreachBatch``:
+Per micro-batch, as the body of the library's one streaming epoch loop
+(``streaming.epoch_log.run_stream``, which also folds the three tables
+on the ``compact_every`` cadence):
 
 1. assign each arriving vector to its argmax cell and top-``nprobe``
    probe cells with the NARROW literal-matrix integer expressions
@@ -50,7 +52,7 @@ out against millions.
 
 from __future__ import annotations
 
-import os
+import functools
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -94,6 +96,12 @@ IVF_CELL_CAP = 1000
 #: locally and globally), which the per-query window already
 #: finishes. Output-identical — the salt only changes work placement.
 #:
+#: Every rate quoted here and at IVF_TOPK_SALT_ADC is a
+#: tools/stream_bench.py IVF leg on the x10 corpus (tools/make_sfx10.py:
+#: 40K vectors, 10K-vector epochs). Without it the legs run sf0.1's
+#: 500-vector epochs, ~98% fixed per-epoch cost, and cannot show these
+#: differences.
+#:
 #: BOTH modes salt by default. The ADC mode used to opt out: when its
 #: query rows carried their m*k LUT (~4 KB each), salting multiplied
 #: the heaviest column 4x (~320 MB of Arrow per 10K-vector epoch) —
@@ -117,7 +125,7 @@ IVF_TOPK_SALT = 8
 
 #: The ADC mode salts LESS: its kernel rebuilds each query row's m*k
 #: LUT from the codebook IN EVERY sub-block the row lands in, so LUT
-#: work scales linearly with the salt (r12: salt 8 sank ivfpq ingest
+#: work scales linearly with the salt (r12, x10 corpus: salt 8 sank ivfpq ingest
 #: 2,558 -> 1,355 v/s while the same salt LIFTED the vector mode).
 #: Under the concurrent-actions epoch (counts + index write overlap
 #: the probe kernel) 8 cells x salt 3 = 24 kernel tasks also leave
@@ -196,7 +204,7 @@ def run_ivf_index_stream(
     ``cell_cap`` is DEFAULT-ON at IVF_CELL_CAP (pass None to opt out
     and keep every member searchable); ``compact_every`` folds
     committed per-batch partitions of all three tables every N epochs
-    (streaming.epoch_log.compact_index_partitions — the ledger folds
+    (the epoch loop streaming.epoch_log.run_stream — the ledger folds
     with ``dedupe=False`` because its (cell, n) rows legitimately
     repeat across epochs). DEFAULT-ON at
     streaming.epoch_log.DEFAULT_COMPACT_EVERY (None opts out).
@@ -214,42 +222,30 @@ def run_ivf_index_stream(
     holds (query_id, neighbor_id, adc_dot, rk, batch_id). Same strictly-earlier reads, same ledger, same
     replay/compaction contract — everything is exact int64, so a
     replayed epoch rewrites byte-identical partitions."""
-    os.makedirs(index_path, exist_ok=True)
-    os.makedirs(topk_path, exist_ok=True)
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        apply_ivf_batch(
-            batch_df,
-            batch_id,
-            centroids,
-            index_path,
-            topk_path,
-            id_col=id_col,
-            vec_col=vec_col,
-            nprobe=nprobe,
-            k=k,
-            cell_cap=cell_cap,
-            pq_books=pq_books,
-            pq_m=pq_m,
-            pq_k=pq_k,
-            topk_salt=topk_salt,
-        )
-        if epoch_log.due(batch_id, compact_every):
-            cells = _cells_path(index_path)
-            for p in (index_path, cells, topk_path):
-                epoch_log.compact_index_partitions(
-                    batch_df.sparkSession, p, watermark=batch_id, dedupe=p != cells
-                )
-
-    q = (
-        vec_stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    body = functools.partial(
+        apply_ivf_batch,
+        centroids=centroids,
+        index_path=index_path,
+        topk_path=topk_path,
+        id_col=id_col,
+        vec_col=vec_col,
+        nprobe=nprobe,
+        k=k,
+        cell_cap=cell_cap,
+        pq_books=pq_books,
+        pq_m=pq_m,
+        pq_k=pq_k,
+        topk_salt=topk_salt,
     )
-    if await_seconds is not None:
-        q.awaitTermination(await_seconds)
-    return q
+    return epoch_log.run_stream(
+        vec_stream,
+        body,
+        checkpoint,
+        # the ledger's (cell, n) rows legitimately repeat across epochs
+        logs=[(index_path, True), (_cells_path(index_path), False), (topk_path, True)],
+        compact_every=compact_every,
+        await_seconds=await_seconds,
+    )
 
 
 def _cells_path(index_path: str) -> str:

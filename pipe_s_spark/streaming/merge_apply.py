@@ -19,6 +19,10 @@ pkg/output/mysql/batch/*):
   (utils/mysql.go:197-218)            replays re-run the merge, which is
                                       idempotent (upsert semantics)
 
+``run_merge_apply_stream`` starts the apply through the library's one
+streaming epoch loop (``streaming.epoch_log.run_stream``), the same
+loop the runner's streaming ``merge`` and ``delta`` outputs use.
+
 The target here is a parquet directory swapped atomically per epoch
 (no Delta in this environment); on a cluster the same foreachBatch body
 targets Delta MERGE or JDBC upsert unchanged.
@@ -41,7 +45,7 @@ from pyspark.sql import types as T
 # wraps merge_apply.compact_changelog by name
 from pipe_s_spark.operators.compaction import compact_changelog  # noqa: F401
 from pipe_s_spark.operators.compaction import net_effect_aggs, net_op
-from pipe_s_spark.streaming import commit
+from pipe_s_spark.streaming import commit, epoch_log
 
 
 #: the merge target's epoch fence and layout contract (dot-prefixed:
@@ -486,14 +490,11 @@ def run_merge_apply_stream(
     checkpoint_dir: str,
     available_now: bool = True,
 ):
-    """Start the apply query. With ``available_now`` the query drains
-    the backlog and stops (bounded job, like the reference's scan mode,
-    scaninput.go done-flag); otherwise it runs continuously."""
-    writer = (
-        changes.writeStream.foreachBatch(target.apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
+    """Start the apply query (the epoch loop streaming.epoch_log.
+    run_stream, one ``target.apply_batch`` per epoch). With
+    ``available_now`` the query drains the backlog and stops (bounded
+    job, like the reference's scan mode, scaninput.go done-flag);
+    otherwise it runs continuously."""
+    return epoch_log.run_stream(
+        changes, target.apply_batch, checkpoint_dir, available_now=available_now
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -11,6 +11,10 @@ Reference parity: the streaming sibling of
 verifies landed rows after the fact, the gate verifies them in-flight
 and refuses to land the bad ones.
 
+The gate is one body of the library's streaming epoch loop
+(``streaming.epoch_log.run_stream``), which starts, triggers and
+compacts it like every other streaming sink.
+
 At-scale notes: the tag pass is narrow (conditional expressions plus
 broadcast stream-static joins for FK checks); each batch is persisted
 once so the good/bad split and the metrics rollup read one
@@ -19,8 +23,6 @@ row per (batch, check) — vocabulary-sized, never row-sized.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -55,17 +57,14 @@ def run_quarantine_gate(
     merge sink's epoch fence provide.
 
     ``compact_every``: every N epochs, fold committed per-batch
-    partitions of all three sinks into one
-    (streaming.epoch_log.compact_index_partitions with
-    ``dedupe=False`` — ledger rows may legitimately repeat, and the
-    journaled commit gives exactly-once folding without relying on
-    dedup) so a long-running gate keeps O(1) partitions instead of
-    O(#batches). DEFAULT-ON at streaming.epoch_log.
-    DEFAULT_COMPACT_EVERY (None opts out).
+    partitions of all three sinks into one (the epoch loop
+    ``streaming.epoch_log.run_stream`` folds them with ``dedupe=False``
+    — ledger rows may legitimately repeat, and the journaled commit
+    gives exactly-once folding without relying on dedup) so a
+    long-running gate keeps O(1) partitions instead of O(#batches).
+    DEFAULT-ON at streaming.epoch_log.DEFAULT_COMPACT_EVERY (None opts
+    out).
     """
-    for p in (good_path, quarantine_path, metrics_path):
-        os.makedirs(p, exist_ok=True)
-
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         tagged = suite.tag(batch_df).persist()
         try:
@@ -93,20 +92,14 @@ def run_quarantine_gate(
                 )
             )
             epoch_log.append(metrics_path, metrics, batch_id)
-            if epoch_log.due(batch_id, compact_every):
-                for p in (good_path, quarantine_path, metrics_path):
-                    epoch_log.compact_index_partitions(
-                        batch_df.sparkSession, p, watermark=batch_id, dedupe=False
-                    )
         finally:
             tagged.unpersist()
 
-    q = (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return epoch_log.run_stream(
+        stream,
+        _process,
+        checkpoint,
+        logs=[(p, False) for p in (good_path, quarantine_path, metrics_path)],
+        compact_every=compact_every,
+        await_seconds=await_seconds,
     )
-    if await_seconds is not None:
-        q.awaitTermination(await_seconds)
-    return q

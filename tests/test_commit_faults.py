@@ -375,3 +375,22 @@ def test_only_epoch_log_module_knows_the_partition_layout():
             and ("batch_id=" in node.value or "partitionOverwriteMode" in node.value)
         ]
     assert not hits
+
+
+def test_only_epoch_log_module_starts_foreach_batch_streams():
+    """``streaming/epoch_log.run_stream`` is the library's one epoch
+    loop: exactly one module calls ``.foreachBatch(``, so every sink's
+    stream starts, triggers and compacts the same way."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "pipe_s_spark"
+    sites = {
+        f"{f.relative_to(pkg)}:{node.lineno}"
+        for f in sorted(pkg.rglob("*.py"))
+        for node in ast.walk(ast.parse(f.read_text()))
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "foreachBatch"
+    }
+    assert {s.split(":")[0] for s in sites} == {"streaming/epoch_log.py"}, sorted(sites)

@@ -272,15 +272,16 @@ def test_runner_spec_inherits_default_compaction(spark, tmp_path, monkeypatch):
         return _Q()
 
     monkeypatch.setattr(DI, "run_dedup_index_stream", fake_run)
-    docs = spark.read.parquet(f"{SF}/documents.parquet").select("doc_id", "text")
+    (tmp_path / "src").mkdir()
+    docs = spark.readStream.schema("doc_id long, text string").parquet(str(tmp_path / "src"))
     cfg = {
         "indexPath": str(tmp_path / "i"),
         "pairsPath": str(tmp_path / "p"),
         "checkpoint": str(tmp_path / "ck"),
     }
-    R._write_stream_output(docs, "dedup-index", cfg)
+    R._write_epoch_sink(docs, "dedup-index", cfg)
     assert captured["compact_every"] == DI.DEFAULT_COMPACT_EVERY
-    R._write_stream_output(docs, "dedup-index", {**cfg, "compactEvery": None})
+    R._write_epoch_sink(docs, "dedup-index", {**cfg, "compactEvery": None})
     assert captured["compact_every"] is None
 
 

@@ -632,6 +632,7 @@ def test_runner_cli_list(capsys):
     assert main(["--list"]) == 0
     out = capsys.readouterr().out
     assert "expect" in out and "apply-schema" in out and "merge" in out
+    assert "ivf-index" in out
 
 
 def test_runner_merge_output_rerun_is_fence_noop(spark, tmp_path):
@@ -655,3 +656,40 @@ def test_runner_merge_output_rerun_is_fence_noop(spark, tmp_path):
         tuple(r) for r in MergeApplyTarget(tgt_p).read_current(spark).collect()
     }
     assert second == first and len(first) > 0
+
+
+def _stream_spec(tmp_path, schema: str, out_type: str, cfg: dict) -> dict:
+    src = tmp_path / "src"
+    src.mkdir(exist_ok=True)
+    return {
+        "Input": {"Type": "json-stream", "Config": {"path": str(src), "schema": schema}},
+        "Output": {"Type": out_type, "Config": {
+            "checkpoint": str(tmp_path / "ck"), "awaitSeconds": 60, **cfg}},
+    }
+
+
+def test_runner_streaming_delta_refuses_fold_into(spark, tmp_path):
+    """A stream input cannot fold a delta target into its base; the
+    spec is refused by key name instead of dropping the fold."""
+    spec = _stream_spec(tmp_path, "id string, seq long, db string, table_name string, "
+                        "op string, pk long, k long, value string", "delta", {
+                            "path": str(tmp_path / "delta"),
+                            "foldInto": {"path": str(tmp_path / "base")}})
+    with pytest.raises(PipelineSpecError, match="foldInto"):
+        run_pipeline(spark, spec)
+    assert not (tmp_path / "delta").exists() and not (tmp_path / "ck").exists()
+
+
+def test_runner_streaming_index_sinks_refuse_continuous(spark, tmp_path):
+    """The index sinks drain availableNow; a stream spec asking for a
+    continuous trigger is refused by key name instead of ignored."""
+    dedup = _stream_spec(tmp_path, "doc_id long, text string", "dedup-index", {
+        "indexPath": str(tmp_path / "idx"), "pairsPath": str(tmp_path / "prs"),
+        "continuous": True})
+    ivf = _stream_spec(tmp_path, "vec_id long, embedding array<double>", "ivf-index", {
+        "indexPath": str(tmp_path / "idx"), "topkPath": str(tmp_path / "topk"),
+        "centroids": {"0": [1, 0], "1": [0, 1]}, "continuous": True})
+    for spec in (dedup, ivf):
+        with pytest.raises(PipelineSpecError, match="continuous"):
+            run_pipeline(spark, spec)
+    assert not (tmp_path / "idx").exists() and not (tmp_path / "ck").exists()

@@ -69,17 +69,25 @@ def test_evicted_handles_stay_usable(spark):
         assert not SH._evicted
 
 
-def test_on_clear_hook_runs_and_is_idempotent(spark):
-    side = {"n": 0}
-
-    def hook():
-        side["n"] += 1
-
-    SH.on_clear(hook)
-    SH.on_clear(hook)  # duplicate registration is a no-op
+def test_scalar_memo_is_fifo_bounded(spark):
+    """The scalar memo (corpus counts, trained centroids and codebooks)
+    shares MAX_ENTRIES: past it the oldest value is dropped and rebuilt
+    on its next use; every build lands in the build log."""
     SH.clear()
-    assert side["n"] == 1
-    SH._clear_hooks.remove(hook)
+    old_max = SH.MAX_ENTRIES
+    SH.MAX_ENTRIES = 2
+    try:
+        for i in range(3):
+            assert SH.scalar(spark, ("bound", i), lambda i=i: i * 10) == i * 10
+        assert len(SH._scalars) == 2
+        assert SH.scalar(spark, ("bound", 2), lambda: -1) == 20  # still memoized
+        assert SH.scalar(spark, ("bound", 0), lambda: -1) == -1  # evicted, rebuilt
+        assert [k[1:] for k, _s in SH.drain_build_log()] == [
+            ("bound", 0), ("bound", 1), ("bound", 2), ("bound", 0)
+        ]
+    finally:
+        SH.MAX_ENTRIES = old_max
+        SH.clear()
 
 
 def test_result_is_checkpointed(spark):

@@ -14,6 +14,18 @@ replicated with distinct seq/pk so compaction has real work):
                  target. Analog of "stream sync" (idempotent upsert
                  apply).
 
+Then three ANN-index ingest legs (``ivf_ingest``: 4 epochs;
+``ivf_ingest_2ep``: the same vectors in 2 epochs, whose difference
+estimates the fixed per-epoch cost; ``ivfpq_ingest``: 4 compressed
+epochs). They ingest the embeddings of $SPARK_GRAFT_X10_DIR (default
+/tmp/pipe_s_sfx10, written by tools/make_sfx10.py: 40,000 vectors, so
+10K-vector epochs) when that directory exists, else those of
+$SPARK_GRAFT_SF_DIR (sf0.1: 2,000 vectors, 500-vector epochs). At
+sf0.1 the fixed per-epoch cost is ~98% of the leg
+(``fixed_share_4ep_est``), so its vectors/s measures per-epoch job
+overhead, not ingest. Each leg records its ``source`` directory and
+``vectors_per_epoch``, so a reading names the scale it was taken at.
+
 Bytes/s uses the JSON-envelope byte size of the resolved rows (closest
 analog of binlog MB; the reference also measures wire bytes).
 Prints ONE JSON line. Env: SPARK_GRAFT_STREAMBENCH_ROWS (default 2M).
@@ -242,6 +254,8 @@ def main() -> None:
             "vectors": n_vec,
             "vectors_per_sec": int(n_vec / dt),
             "epochs": 4,
+            "source": emb_src,
+            "vectors_per_epoch": round(n_vec / 4),
         }
 
         # fixed-cost vs per-vector split: the SAME corpus in HALF the
@@ -268,6 +282,8 @@ def main() -> None:
             "vectors": n_vec,
             "vectors_per_sec": int(n_vec / dt2),
             "epochs": 2,
+            "source": emb_src,
+            "vectors_per_epoch": round(n_vec / 2),
             "per_epoch_fixed_sec_est": round(fixed_est, 2),
             "fixed_share_4ep_est": round(min(1.0, fixed_est * 4 / dt), 2),
         }
@@ -319,6 +335,9 @@ def main() -> None:
             "sec": round(dt, 2),
             "vectors": n_vec,
             "vectors_per_sec": int(n_vec / dt),
+            "epochs": 4,
+            "source": emb_src,
+            "vectors_per_epoch": round(n_vec / 4),
             "index_mb": _dir_mb(f"{tmp}/ivfpq_index"),
             "vector_index_mb": _dir_mb(f"{tmp}/ivf_index"),
         }
