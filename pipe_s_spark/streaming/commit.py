@@ -1,4 +1,5 @@
-"""The one file-commit primitive behind every streaming sink's state.
+"""The one file-commit primitive behind every streaming sink's state,
+and the one reader and writer of the sinks' metadata files.
 
 Each table directory (``root``) owns four dot-prefixed entries that
 Spark's partition discovery never sees: ``._lock`` (the flock file),
@@ -7,6 +8,14 @@ parked) and ``._stage`` (the ``locked_stage`` of a caller that stages
 under the lock). ``lock(root)`` serializes threads and processes and
 runs ``recover(root)`` on every entry, so every reader and writer sees
 a finished swap.
+
+A sink's own metadata is a small JSON file beside its data: a fence or
+watermark (a bare integer, written as a ``commit`` file or by
+``write_atomic``), a view's state, or a layout or contract that
+``pin`` records once and verifies on every later open. ``read_json``
+reads them all with one error policy: a missing file is the caller's
+default, any other error propagates, so a damaged fence never reads
+as "nothing applied yet".
 
 A swap (``commit``) is journal -> park -> install -> files -> clean:
 
@@ -64,6 +73,34 @@ def write_atomic(path: str, text: str) -> None:
     os.rename(tmp, path)
 
 
+def read_json(path: str, default=None):
+    """The JSON value stored at ``path``, or ``default`` when the file
+    is missing. Any other error propagates (the policy of
+    ``epoch_log.epochs``)."""
+    try:
+        with open(path) as f:
+            return json.load(f)
+    except FileNotFoundError:
+        return default
+
+
+def pin(root: str, name: str, meta) -> None:
+    """Pin ``root/name`` to ``meta``: the first caller records it, every
+    later one must supply an equal value or get a ValueError naming
+    both. Call under ``lock(root)``, so concurrent first callers
+    serialize and a lost race verifies instead of overwriting."""
+    path = os.path.join(root, name)
+    disk = read_json(path)
+    if disk is None:
+        write_atomic(path, json.dumps(meta))
+    elif disk != meta:
+        raise ValueError(
+            f"{path} pins {disk}; this caller supplied {meta}. Data written "
+            "under one of them is read wrongly under the other: reopen with "
+            "the pinned values or use a new path."
+        )
+
+
 def locked_stage(root: str) -> str:
     """The stage in ``root`` of a caller that stages under the lock:
     ``recover`` drops it when no journal names it (a pre-journal kill)."""
@@ -109,10 +146,8 @@ def commit(
 
 def recover(root: str) -> None:
     """Finish a journaled swap, or purge the trash and locked stage."""
-    try:
-        with open(os.path.join(root, _JOURNAL)) as f:
-            journal = json.load(f)
-    except FileNotFoundError:
+    journal = read_json(os.path.join(root, _JOURNAL))
+    if journal is None:
         for name in (_TRASH, _STAGE):
             shutil.rmtree(os.path.join(root, name), ignore_errors=True)
         return

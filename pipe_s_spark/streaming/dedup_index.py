@@ -16,6 +16,11 @@ the ``compact_every`` cadence):
    ``pairs_path``;
 3. append the batch bands to the index.
 
+Steps 2 and 3 read one materialized band frame and write both tables
+at once (``epoch_log.checkpointed`` and ``epoch_log.concurrently``).
+Every epoch first pins the index's MinHash parameters in
+``._contract`` (``check_index_contract``, one ``commit.pin``).
+
 Exactly-once on replay: both the index and the pairs table are
 epoch logs (streaming.epoch_log: one ``batch_id`` partition per epoch,
 written with dynamic partition OVERWRITE), and the index side of the
@@ -35,8 +40,6 @@ equi-join is the same bounded-fan-out shape the batch LSH queries cap.
 from __future__ import annotations
 
 import functools
-import os
-import sys
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -108,17 +111,6 @@ def run_dedup_index_stream(
     )
 
 
-#: wall-clock of the most recent epoch's phases (seconds) — parity
-#: with streaming.ivf_index.LAST_EPOCH_PROFILE (r12 verdict #7): the
-#: next fixed-cost attack on this sink should be measured, not
-#: guessed. pairs/index = each fenced write's own duration (they
-#: overlap; pairs also pays the band build + join through the shared
-#: persisted batch), wall = whole epoch. Single-threaded test/bench
-#: telemetry — concurrent apply_index_batch callers would interleave
-#: writes to it, like CC_TELEMETRY.
-LAST_EPOCH_PROFILE: dict = {}
-
-
 def apply_index_batch(
     batch_df: DataFrame,
     batch_id: int,
@@ -136,10 +128,6 @@ def apply_index_batch(
     with the same (batch, batch_id) rewrites the same partitions to
     identical content (exactly what a post-crash Structured Streaming
     replay does)."""
-    import time as _time
-
-    _prof: dict = {}
-    _t_epoch = _time.perf_counter()
     # band_sig compatibility contract: k/num_hashes/bands determine
     # whether two epochs' band rows are comparable at all; band_cap is
     # deliberately OUTSIDE the contract (it bounds which rows enter,
@@ -153,15 +141,8 @@ def apply_index_batch(
     new_bands = lsh_bands(sig, id_col, num_hashes=num_hashes, bands=bands)
     if band_cap is not None:
         new_bands = cap_group_size(new_bands, ["band_id", "band_sig"], band_cap)
-    # eager local checkpoint, not persist(): the two concurrent fenced
-    # writes below otherwise race block-level cache locks while
-    # materializing the bands AND re-plan the full shingle->minhash->
-    # band lineage per job; a truncated LogicalRDD plan measured
-    # ~10-15% whole-epoch on the IVF index's identical pattern (see
-    # streaming.ivf_index apply_ivf_batch r13 note). Blocks are freed
-    # explicitly in the finally (_free_local_checkpoint).
-    new_bands = new_bands.localCheckpoint(eager=True)
-    try:
+    # both writes read the bands: materialize them once
+    with epoch_log.checkpointed(new_bands) as new_bands:
         # STRICTLY EARLIER epochs only: batch ids are monotone, so a
         # replayed epoch must see exactly the index it saw the first
         # time — filtering only its own id would let a zombie replay of
@@ -190,45 +171,12 @@ def apply_index_batch(
         pairs = pair_parts[0]
         for p in pair_parts[1:]:
             pairs = pairs.unionByName(p)
-
-        # the two fenced writes run CONCURRENTLY (the ivf_index r12
-        # pattern): the bands write only scans the persisted batch and
-        # hides its job+commit fixed cost under the pair join; Spark's
-        # block-level cache locking materializes each persisted
-        # partition exactly once across the racing jobs, and replay is
-        # order-free (a crashed epoch re-runs whole and every write
-        # replaces its own batch_id partition). InheritableThread so
-        # job-group/description local properties propagate.
-        from pyspark import InheritableThread
-
-        errs: list[BaseException] = []
-
-        def _write(df: DataFrame, path: str) -> None:
-            _t = _time.perf_counter()
-            try:
-                epoch_log.append(path, df, batch_id)
-            except BaseException as e:  # noqa: BLE001 — re-raised below
-                errs.append(e)
-            finally:
-                _prof["pairs" if path == pairs_path else "index"] = (
-                    _time.perf_counter() - _t
-                )
-
-        threads = [
-            InheritableThread(target=_write, args=(pairs.distinct(), pairs_path)),
-            InheritableThread(target=_write, args=(new_bands, index_path)),
-        ]
-        for t in threads:
-            t.start()
-        for t in threads:
-            t.join()
-        if errs:
-            _raise_all(errs)
-    finally:
-        _free_local_checkpoint(new_bands)
-        _prof["wall"] = _time.perf_counter() - _t_epoch
-        LAST_EPOCH_PROFILE.clear()
-        LAST_EPOCH_PROFILE.update(_prof)
+        # the bands write only scans the checkpoint, so its job and
+        # commit hide under the pair join
+        epoch_log.concurrently(
+            functools.partial(epoch_log.append, pairs_path, pairs.distinct(), batch_id),
+            functools.partial(epoch_log.append, index_path, new_bands, batch_id),
+        )
 
 
 def check_index_contract(path: str, meta: dict) -> None:
@@ -238,75 +186,10 @@ def check_index_contract(path: str, meta: dict) -> None:
     different MinHash banding (or an IVF index reopened with different
     centroids) joins incompatible signatures and silently emits wrong
     pairs, the same corruption class the merge target's ._layout file
-    guards. First writer records ``meta`` in ``<path>/._contract``
-    (dot-prefixed: invisible to partition discovery), atomically;
-    every later open verifies and refuses a mismatch loudly.
+    guards. ``commit.pin`` records ``meta`` in ``<path>/._contract`` on
+    the first write and refuses a mismatch on every later one.
     Pre-existing indexes without the file adopt the opening caller's
-    parameters, recorded going forward."""
-    import json as _json
-
-    p = os.path.join(path, "._contract")
-    # under the lock: concurrent first-openers serialize and re-read,
-    # so a lost race verifies rather than assumes, and every epoch
-    # start recovers a compaction a kill left half-swapped
+    parameters, recorded going forward. The lock also makes every epoch
+    start recover a compaction a kill left half-swapped."""
     with commit.lock(path):
-        try:
-            with open(p) as f:
-                disk = _json.load(f)
-        except FileNotFoundError:
-            commit.write_atomic(p, _json.dumps(meta))
-            disk = meta
-    if disk != meta:
-        raise ValueError(
-            f"index at {path} was built under contract {disk}; this caller "
-            f"supplied {meta}. Epochs written under different parameters "
-            "join incompatible signatures/cells and silently corrupt "
-            "results — reopen with the original parameters or build a "
-            "new index path."
-        )
-
-
-def _free_local_checkpoint(df: DataFrame) -> None:
-    """Release a local checkpoint's storage blocks NOW instead of at
-    the next driver GC. ``Dataset.unpersist`` only uncaches
-    cache-manager entries, and a local checkpoint's blocks ARE its
-    data (truncated lineage) — left to the ContextCleaner, a
-    long-running stream would carry a few epochs of dead batches in
-    the block manager between GC cycles. Best-effort by design: on
-    any reflection mismatch the cleaner still reclaims the blocks
-    once the DataFrame is garbage-collected."""
-    try:
-        plan = df._jdf.queryExecution().analyzed()
-        plan.rdd().unpersist(False)
-    except Exception:  # noqa: BLE001 — GC/ContextCleaner fallback
-        pass
-
-
-def _raise_all(errs: list[BaseException]) -> None:
-    """Re-raise concurrent epoch-action failures without dropping any
-    (r12 advice: raising errs[0] alone silently discarded the other
-    thread's exception, complicating partially-failed-epoch diagnosis).
-    One failure re-raises as itself; several raise an ExceptionGroup
-    carrying every traceback. On Python 3.10 (supported floor:
-    pyproject requires-python >=3.10) the BaseExceptionGroup builtin
-    does not exist, so the first failure is raised with the others'
-    full tracebacks attached as ``__notes__`` — degraded formatting,
-    but no exception is silently dropped (r13 advice: the bare builtin
-    reference raised NameError on 3.10, masking the real failures)."""
-    if len(errs) == 1:
-        raise errs[0]
-    if sys.version_info >= (3, 11):
-        raise BaseExceptionGroup(
-            f"{len(errs)} concurrent epoch actions failed", errs
-        )
-    import traceback
-
-    first = errs[0]
-    first.__notes__ = getattr(first, "__notes__", []) + [
-        f"+{len(errs) - 1} other concurrent epoch failure(s):\n"
-        + "\n".join(
-            "".join(traceback.format_exception(type(e), e, e.__traceback__))
-            for e in errs[1:]
-        )
-    ]
-    raise first
+        commit.pin(path, "._contract", meta)

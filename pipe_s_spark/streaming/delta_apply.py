@@ -34,7 +34,9 @@ deltas through one LWW shuffle), bounded by fold frequency — the same
 dial every merge-on-read table format exposes.
 
 Single-writer-per-target contract and driver-local metadata files
-match the rest of the sink family (``._layout`` / fence / contracts).
+match the rest of the sink family: the watermark is a bare JSON integer
+read through ``commit.read_json`` (missing = nothing folded yet) and
+written by ``commit.write_atomic``, like the merge target's fence.
 """
 
 from __future__ import annotations
@@ -50,6 +52,7 @@ from pipe_s_spark.streaming import commit, epoch_log
 from pipe_s_spark.streaming.merge_apply import (
     FLAT_CHANGELOG_SCHEMA,
     MergeApplyTarget,
+    typed_empty_frame,
 )
 
 
@@ -85,11 +88,7 @@ class DeltaAppendTarget:
         Every reader ignores delta partitions at or below this — THE
         barrier that makes truncation pure space reclamation and a
         replayed pre-fold epoch harmless."""
-        try:
-            with open(self._watermark_path()) as f:
-                return int(f.read().strip())
-        except (OSError, ValueError):
-            return -1
+        return commit.read_json(self._watermark_path(), -1)
 
     # -- write path ----------------------------------------------------
     def apply_batch(self, batch: DataFrame, epoch_id: int) -> bool:
@@ -151,19 +150,7 @@ class DeltaAppendTarget:
         folded; after a fold, use ``read_merged`` with the base."""
         deltas = self._delta_frame(spark)
         if deltas is None:
-            from pyspark.sql import types as T
-
-            cols = self.key_cols + self.payload_cols
-            missing = [c for c in cols if c not in self._col_types]
-            if missing:
-                raise ValueError(
-                    f"no type known for column(s) {missing}: pass the first "
-                    "batch through apply_batch (which records its schema) or "
-                    "use columns from the canonical changelog schema"
-                )
-            return spark.createDataFrame(
-                [], T.StructType([T.StructField(c, self._col_types[c]) for c in cols])
-            )
+            return typed_empty_frame(spark, self.key_cols + self.payload_cols, self._col_types)
         return (
             self._resolve(deltas)
             .filter(F.col("net_op") != "delete")

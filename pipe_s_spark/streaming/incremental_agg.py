@@ -14,9 +14,11 @@ O(epoch keys), not O(table), which is the entire point of maintaining
 the view incrementally (the same algebra Materialize/DBSP use for
 SUM/COUNT).
 
-The view state is O(groups) — tiny by definition — so it is rewritten
-atomically per epoch and fenced exactly like the merge target (replays
-and zombie writers skip).
+The view state is O(groups) — tiny by definition — so it is one JSON
+file (``state.json``), rewritten atomically per epoch and fenced
+exactly like the merge target (replays and zombie writers skip). It is
+read through ``commit.read_json``: a missing file is a fresh view, a
+damaged one raises instead of restarting the view from nothing.
 """
 
 from __future__ import annotations
@@ -66,11 +68,7 @@ class IncrementalAggView:
         return os.path.join(self.path, "state.json")
 
     def _read_state(self) -> dict:
-        try:
-            with open(self._state_file()) as f:
-                return json.load(f)
-        except (OSError, ValueError):
-            return {"epoch": -1, "groups": {}}
+        return commit.read_json(self._state_file(), {"epoch": -1, "groups": {}})
 
     def _key(self, row) -> str:
         return json.dumps([row[c] for c in self.group_cols])

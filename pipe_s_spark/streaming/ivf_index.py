@@ -26,6 +26,11 @@ on the ``compact_every`` cadence):
 4. append the batch's assigned vectors to ``index_path`` and its
    per-cell counts to the ledger.
 
+Steps 3 and 4 read one materialized batch and run as three concurrent
+actions (``epoch_log.checkpointed`` and ``epoch_log.concurrently``).
+Every epoch first pins the centroid, cap and codebook fingerprints in
+``._contract`` (``dedup_index.check_index_contract``).
+
 Exactly-once on replay: every table (index, ledger, topk) is an epoch
 log (streaming.epoch_log: one ``batch_id`` partition per epoch, written
 with dynamic partition OVERWRITE, the ledger by a driver-side staged
@@ -60,11 +65,7 @@ from pyspark.sql.window import Window
 
 from pipe_s_spark.functions import similarity as S
 from pipe_s_spark.streaming import epoch_log
-from pipe_s_spark.streaming.dedup_index import (
-    _free_local_checkpoint,
-    _raise_all,
-    check_index_contract,
-)
+from pipe_s_spark.streaming.dedup_index import check_index_contract
 from pipe_s_spark.streaming.epoch_log import DEFAULT_COMPACT_EVERY
 
 
@@ -286,10 +287,20 @@ def _merge_local_topk(local: DataFrame, score_col: str, k: int) -> DataFrame:
     )
 
 
-#: wall-clock of the most recent epoch's phases (seconds) — telemetry
-#: for the fixed-cost work: counts = materialize + ledger, topk/index =
-#: each fenced write's own duration (they overlap), wall = whole epoch.
-LAST_EPOCH_PROFILE: dict = {}
+def _ledger(ranked: DataFrame):
+    """This epoch's per-cell counts as the ledger's pyarrow table (cell
+    int32, n int64: what ``_read_base_counts`` and compaction read).
+    Collected to the driver: a Spark write of ~#cells rows cost a job
+    and a commit, ~0.5 s per epoch."""
+    import pyarrow as pa
+
+    counts = ranked.groupBy("cell").agg(F.count(F.lit(1)).alias("n")).collect()
+    return pa.table(
+        {
+            "cell": pa.array([r["cell"] for r in counts], type=pa.int32()),
+            "n": pa.array([r["n"] for r in counts], type=pa.int64()),
+        }
+    )
 
 
 def apply_ivf_batch(
@@ -314,10 +325,6 @@ def apply_ivf_batch(
     identical content (exactly what a post-crash Structured Streaming
     replay does). See run_ivf_index_stream for the compressed
     (``pq_books``) mode."""
-    import time as _time
-
-    _prof: dict = {}
-    _t_epoch = _time.perf_counter()
     # index compatibility contract (see dedup_index.check_index_contract):
     # the strictly-earlier probe joins cells across epochs, so the
     # centroid matrix (cell numbering AND geometry), the searchable
@@ -466,28 +473,11 @@ def apply_ivf_batch(
     searchable = (
         F.col("cell_rank") <= F.lit(cell_cap) if cell_cap is not None else F.lit(True)
     )
-    # EAGER LOCAL CHECKPOINT, not persist() (r13): the epoch's three
-    # concurrent consumers used to race block-level cache locks while
-    # materializing a lazily-persisted `ranked`, and each re-planned
-    # the full assign+window lineage per job. Materializing ONCE up
-    # front and handing consumers a truncated LogicalRDD plan measured
-    # ~10-15% whole-epoch (interleaved A/B: 4.6-5.2K v/s vs 4.3-4.5K
-    # baseline; an eager persist()+count() variant recovered none of
-    # it, so the win is the lineage truncation, not the eagerness).
-    # Replay-unaffected: this changes WHERE the batch materializes,
-    # not what any write contains. Cleanup: Dataset.unpersist does not
-    # free local-checkpoint blocks (they live outside the cache
-    # manager), so _free_local_checkpoint reaches the LogicalRDD's
-    # storage directly, with GC/ContextCleaner as the documented
-    # fallback.
-    _t_mat = _time.perf_counter()
-    ranked = (
-        ranked.withColumn("searchable", searchable)
-        .drop("batch_rank")
-        .localCheckpoint(eager=True)
-    )
-    _prof["mat"] = _time.perf_counter() - _t_mat
-    try:
+    # the epoch's three actions all read `ranked`: materialize it once
+    # (replay-unaffected: this changes WHERE the batch materializes,
+    # not what any write contains)
+    ranked = ranked.withColumn("searchable", searchable).drop("batch_rank")
+    with epoch_log.checkpointed(ranked) as ranked:
         # candidate corpus: searchable members of strictly-earlier
         # epochs plus this batch itself (a vector may match a
         # same-batch arrival — mirrors the dedup index's self-join leg)
@@ -591,80 +581,19 @@ def apply_ivf_batch(
                 queries, corpus, "gc", id_col=id_col, vec_col=vec_col, k=k
             )
             topk = _merge_local_topk(local, "cos_sim", k)
-        # the epoch's three remaining actions run CONCURRENTLY (r12):
-        # the top-k probe job is the long pole (~1.5 s at the 10K
-        # grain); the index write (~0.35 s of job+commit fixed cost)
-        # and the ledger counts aggregate (~0.5 s, which also pays
-        # `ranked`'s cache materialization) hide entirely under it.
-        # All three consume the SAME persisted `ranked` — Spark's
-        # block-level cache locking computes each partition once and
-        # blocks the other readers, so no work duplicates. Order
-        # within an epoch is replay-free: a crashed epoch re-runs
-        # whole and every write replaces its batch_id partition.
-        # InheritableThread, not bare Thread, so JVM local properties
-        # (job group/description — the job-count pin test counts by
-        # group) propagate to every submission. Canonical column order
-        # on the index write: the ledger join moves its key to the
-        # front, so an epoch replayed against an existing ledger would
-        # otherwise write its partition with a different column order
-        # than it did the first time.
-        from pyspark import InheritableThread
-
+        # the epoch's three actions run CONCURRENTLY: the top-k probe
+        # job is the long pole (~1.5 s at the 10K grain); the index
+        # write (~0.35 s of job+commit fixed cost) and the ledger counts
+        # (~0.5 s) hide entirely under it. Canonical column order on the
+        # index write: the ledger join moves its key to the front, so an
+        # epoch replayed against an existing ledger would otherwise
+        # write its partition with a different column order than it did
+        # the first time.
         index_df = ranked.select(
             id_col, member_payload, "cell", "cell_rank", "searchable"
         )
-        errs: list[BaseException] = []
-
-        def _write(df: DataFrame, path: str) -> None:
-            _t = _time.perf_counter()
-            try:
-                epoch_log.append(path, df, batch_id)
-            except BaseException as e:  # noqa: BLE001 — re-raised below
-                errs.append(e)
-            finally:
-                _prof["topk" if path == topk_path else "index"] = (
-                    _time.perf_counter() - _t
-                )
-
-        def _counts_and_ledger() -> None:
-            import pyarrow as pa
-
-            _t = _time.perf_counter()
-            try:
-                counts = (
-                    ranked.groupBy("cell")
-                    .agg(F.count(F.lit(1)).alias("n"))
-                    .collect()
-                )
-                # driver-side ledger write: a Spark write of ~#cells
-                # rows cost a job and a commit (~0.5 s per epoch); the
-                # cell int32 / n int64 schema is what _read_base_counts
-                # and compaction read
-                ledger = pa.table(
-                    {
-                        "cell": pa.array([r["cell"] for r in counts], type=pa.int32()),
-                        "n": pa.array([r["n"] for r in counts], type=pa.int64()),
-                    }
-                )
-                epoch_log.install(cells_path, batch_id, ledger)
-            except BaseException as e:  # noqa: BLE001 — re-raised below
-                errs.append(e)
-            finally:
-                _prof["counts"] = _time.perf_counter() - _t
-
-        threads = [
-            InheritableThread(target=_write, args=(topk, topk_path)),
-            InheritableThread(target=_write, args=(index_df, index_path)),
-            InheritableThread(target=_counts_and_ledger),
-        ]
-        for t in threads:
-            t.start()
-        for t in threads:
-            t.join()
-        if errs:
-            _raise_all(errs)
-    finally:
-        _free_local_checkpoint(ranked)
-        _prof["wall"] = _time.perf_counter() - _t_epoch
-        LAST_EPOCH_PROFILE.clear()
-        LAST_EPOCH_PROFILE.update(_prof)
+        epoch_log.concurrently(
+            functools.partial(epoch_log.append, topk_path, topk, batch_id),
+            functools.partial(epoch_log.append, index_path, index_df, batch_id),
+            lambda: epoch_log.install(cells_path, batch_id, _ledger(ranked)),
+        )

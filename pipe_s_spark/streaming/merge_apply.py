@@ -85,6 +85,24 @@ def stream_changelog_json(
     )
 
 
+def typed_empty_frame(
+    spark: SparkSession, cols: Sequence[str], col_types: dict[str, T.DataType]
+) -> DataFrame:
+    """An empty frame of ``cols`` typed from ``col_types``: the read of a
+    CDC target no epoch has written yet. Refuses a column of unknown
+    type rather than dropping it."""
+    missing = [c for c in cols if c not in col_types]
+    if missing:
+        raise ValueError(
+            f"no type known for column(s) {missing}: pass the first "
+            "batch through apply_batch (which records its schema) or "
+            "use columns from the canonical changelog schema"
+        )
+    return spark.createDataFrame(
+        [], T.StructType([T.StructField(c, col_types[c]) for c in cols])
+    )
+
+
 def _cluster_by_bucket(
     df: DataFrame, key_cols: Sequence[str], num_buckets: int, size_of: DataFrame
 ) -> DataFrame:
@@ -171,9 +189,10 @@ class MergeApplyTarget:
     way Kafka compacted topics / Cassandra do).
     """
 
-    #: internal LWW columns stored alongside payloads
+    #: internal LWW columns stored alongside payloads, and their types
     _SEQ = "__seq"
     _TOMB = "__tomb"
+    _INTERNAL = {_SEQ: T.LongType(), _TOMB: T.BooleanType()}
 
     def __init__(
         self,
@@ -218,38 +237,18 @@ class MergeApplyTarget:
         survives untouched in 3 — silent duplicates, the exact failure
         class the epoch fence exists to kill. The first writer records
         the layout in ``._layout`` (dot-prefixed: invisible to Spark's
-        partition discovery, like the fence); every later open
-        verifies it and refuses a mismatch loudly. Pre-r13 targets
-        without the file adopt the opening instance's layout (the
-        status quo behavior, now recorded going forward)."""
-        meta = {
-            "num_buckets": self.num_buckets,
-            "key_cols": self.key_cols,
-            "lww": self.lww,
-        }
-        p = os.path.join(self.path, _LAYOUT)
-        try:
-            with open(p) as f:
-                disk = json.load(f)
-        except FileNotFoundError:
-            commit.write_atomic(p, json.dumps(meta))
-            return
-        if disk != meta:
-            raise ValueError(
-                f"merge target {self.path} was created with layout {disk}; "
-                f"this instance was configured with {meta}. Bucket routing "
-                "is derived from (key_cols, num_buckets) and stored rows "
-                "from lww — changing any of them on an existing target "
-                "silently duplicates or hides rows. Open the target with "
-                "its original layout, or write to a new path."
-            )
+        partition discovery, like the fence) through ``commit.pin``;
+        every later open verifies it and refuses a mismatch loudly.
+        Pre-r13 targets without the file adopt the opening instance's
+        layout (the status quo behavior, now recorded going forward)."""
+        commit.pin(
+            self.path,
+            _LAYOUT,
+            {"num_buckets": self.num_buckets, "key_cols": self.key_cols, "lww": self.lww},
+        )
 
     def _read_fence(self) -> int:
-        try:
-            with open(os.path.join(self.path, _FENCE)) as f:
-                return int(f.read().strip())
-        except (OSError, ValueError):
-            return -1
+        return commit.read_json(os.path.join(self.path, _FENCE), -1)
 
     def read_current(
         self,
@@ -271,22 +270,8 @@ class MergeApplyTarget:
         files = glob.glob(os.path.join(self.path, "bucket=*", "*.parquet"))
         if not files:
             # the LWW-internal seq/tomb columns are target-managed, not
-            # batch columns — they get fixed types below, never lookup
-            user_cols = [c for c in cols if c not in (self._SEQ, self._TOMB)]
-            missing = [c for c in user_cols if c not in self._col_types]
-            if missing:
-                raise ValueError(
-                    f"no type known for column(s) {missing}: pass the first "
-                    "batch through apply_batch (which records its schema) or "
-                    "use columns from the canonical changelog schema"
-                )
-            fields = [T.StructField(c, self._col_types[c]) for c in user_cols]
-            if self.lww and internal:
-                fields += [
-                    T.StructField(self._SEQ, T.LongType()),
-                    T.StructField(self._TOMB, T.BooleanType()),
-                ]
-            return spark.createDataFrame([], T.StructType(fields))
+            # batch columns: their fixed types win over any batch's
+            return typed_empty_frame(spark, cols, {**self._col_types, **self._INTERNAL})
         if self._schema is None or self._schema[0] != fence:
             # infer once, from the newest file: each merge unions stored
             # rows with the batch, so it carries the widest types (Spark
@@ -442,7 +427,8 @@ def rebucket_target(spark: SparkSession, path: str, new_num_buckets: int) -> Non
     and refuses loudly. The epoch fence is untouched — the stream
     resumes at the same epoch numbering.
     """
-    if not os.path.exists(os.path.join(path, _LAYOUT)):
+    layout = os.path.join(path, _LAYOUT)
+    if not os.path.exists(layout):
         raise ValueError(
             f"{path} has no ._layout — not an initialized merge target "
             "(rebucket rewrites an existing table; create new targets "
@@ -451,8 +437,7 @@ def rebucket_target(spark: SparkSession, path: str, new_num_buckets: int) -> Non
     if int(new_num_buckets) < 1:
         raise ValueError(f"new_num_buckets must be >= 1, got {new_num_buckets}")
     with commit.lock(path):
-        with open(os.path.join(path, _LAYOUT)) as f:
-            disk = json.load(f)
+        disk = commit.read_json(layout)
         if disk["num_buckets"] == int(new_num_buckets):
             return
         live_buckets = [e for e in os.listdir(path) if e.startswith("bucket=")]

@@ -184,6 +184,38 @@ def apply_streaming_hll(
     )
 
 
+def _merge_topk(
+    cur: tuple | None,
+    pdfs: Iterator[pd.DataFrame],
+    key: Any,
+    key_col: str,
+    id_col: str,
+    value_col: str,
+    k: int,
+) -> tuple[tuple[list[int], list[float]], pd.DataFrame]:
+    """Merge one key's stored top-k ``cur`` (parallel ``(ids, vals)``
+    arrays, or None) with its new rows, ordered by value desc then id
+    asc. Returns the new state and the key's refreshed ranked rows; both
+    top-k operators run it."""
+    ids = list(cur[0]) if cur else []
+    vals = list(cur[1]) if cur else []
+    for pdf in pdfs:
+        ids.extend(int(i) for i in pdf[id_col])
+        vals.extend(float(v) for v in pdf[value_col])
+    pairs = sorted(zip(vals, ids), key=lambda t: (-t[0], t[1]))[:k]
+    ids = [p[1] for p in pairs]
+    vals = [p[0] for p in pairs]
+    out = pd.DataFrame(
+        {
+            key_col: [key] * len(ids),
+            "rk": list(range(1, len(ids) + 1)),
+            id_col: ids,
+            value_col: vals,
+        }
+    )
+    return (ids, vals), out
+
+
 class _TopKProcessor:
     """StatefulProcessor for :func:`apply_streaming_topk` — defined at
     module scope so it pickles cleanly to executors. Keeps the running
@@ -204,23 +236,11 @@ class _TopKProcessor:
 
     def handleInputRows(self, key, rows, timerValues):
         cur = self._state.get() if self._state.exists() else None
-        ids = list(cur[0]) if cur else []
-        vals = list(cur[1]) if cur else []
-        for pdf in rows:
-            ids.extend(int(i) for i in pdf[self._id_col])
-            vals.extend(float(v) for v in pdf[self._value_col])
-        pairs = sorted(zip(vals, ids), key=lambda t: (-t[0], t[1]))[: self._k]
-        ids = [p[1] for p in pairs]
-        vals = [p[0] for p in pairs]
-        self._state.update((ids, vals))
-        yield pd.DataFrame(
-            {
-                self._key_col: [key[0]] * len(ids),
-                "rk": list(range(1, len(ids) + 1)),
-                self._id_col: ids,
-                self._value_col: vals,
-            }
+        top, out = _merge_topk(
+            cur, rows, key[0], self._key_col, self._id_col, self._value_col, self._k
         )
+        self._state.update(top)
+        yield out
 
     def handleInitialState(self, key, initialState, timerValues) -> None:
         pass
@@ -276,25 +296,10 @@ def apply_streaming_topk_legacy(
     transformWithState version is gated on."""
 
     def fn(key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        if state.exists:
-            ids, vals = list(state.get[0]), list(state.get[1])
-        else:
-            ids, vals = [], []
-        for pdf in pdfs:
-            ids.extend(int(i) for i in pdf[id_col])
-            vals.extend(float(v) for v in pdf[value_col])
-        pairs = sorted(zip(vals, ids), key=lambda t: (-t[0], t[1]))[:k]
-        ids = [p[1] for p in pairs]
-        vals = [p[0] for p in pairs]
-        state.update((ids, vals))
-        yield pd.DataFrame(
-            {
-                key_col: [key[0]] * len(ids),
-                "rk": list(range(1, len(ids) + 1)),
-                id_col: ids,
-                value_col: vals,
-            }
-        )
+        cur = state.get if state.exists else None
+        top, out = _merge_topk(cur, pdfs, key[0], key_col, id_col, value_col, k)
+        state.update(top)
+        yield out
 
     return stream.groupBy(key_col).applyInPandasWithState(
         fn,

@@ -394,3 +394,89 @@ def test_only_epoch_log_module_starts_foreach_batch_streams():
         and node.func.attr == "foreachBatch"
     }
     assert {s.split(":")[0] for s in sites} == {"streaming/epoch_log.py"}, sorted(sites)
+
+
+def _streaming_sites(match) -> set[str]:
+    """``file:line`` of every AST node in ``pipe_s_spark/streaming/*.py``
+    that ``match`` accepts."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "pipe_s_spark" / "streaming"
+    return {
+        f"{f.name}:{node.lineno}"
+        for f in sorted(pkg.glob("*.py"))
+        for node in ast.walk(ast.parse(f.read_text()))
+        if match(node)
+    }
+
+
+def test_only_commit_module_opens_sink_files():
+    """``streaming/commit.py`` is the one streaming module that calls the
+    builtin ``open``: every fence, watermark, layout, contract and view
+    state goes through ``commit.read_json``, ``commit.pin`` or
+    ``commit.write_atomic``."""
+    import ast
+
+    sites = _streaming_sites(
+        lambda n: isinstance(n, ast.Call)
+        and isinstance(n.func, ast.Name)
+        and n.func.id == "open"
+    )
+    assert {s.split(":")[0] for s in sites} == {"commit.py"}, sorted(sites)
+
+
+def test_only_epoch_log_module_fans_out_epoch_writes():
+    """``streaming/epoch_log.py`` is the one streaming module that names
+    ``InheritableThread`` or calls ``.localCheckpoint(``: every sink
+    that writes several logs per epoch goes through
+    ``epoch_log.checkpointed`` and ``epoch_log.concurrently``."""
+    import ast
+
+    def fans_out(n) -> bool:
+        if isinstance(n, ast.Name):
+            return n.id == "InheritableThread"
+        if isinstance(n, ast.Attribute):
+            return n.attr == "InheritableThread"
+        if isinstance(n, ast.alias):
+            return n.name == "InheritableThread"
+        return (
+            isinstance(n, ast.Call)
+            and isinstance(n.func, ast.Attribute)
+            and n.func.attr == "localCheckpoint"
+        )
+
+    sites = _streaming_sites(fans_out)
+    assert {s.split(":")[0] for s in sites} == {"epoch_log.py"}, sorted(sites)
+
+
+def test_read_json_defaults_only_a_missing_file(tmp_path):
+    """A missing metadata file reads as the caller's default; a damaged
+    one raises instead of reading as "nothing applied yet"."""
+    p = str(tmp_path / "._last_epoch")
+    assert commit.read_json(p, -1) == -1
+    commit.write_atomic(p, "7")
+    assert commit.read_json(p, -1) == 7
+    commit.write_atomic(p, "7x")
+    with pytest.raises(ValueError):
+        commit.read_json(p, -1)
+
+
+def test_pin_records_once_then_verifies(tmp_path):
+    """The first ``pin`` writes the meta as JSON; an equal one passes; a
+    different one raises naming the file and both metas and leaves the
+    file as it was."""
+    root = str(tmp_path / "t")
+    meta = {"num_buckets": 16, "key_cols": ["table_name", "pk"], "lww": False}
+    with commit.lock(root):
+        commit.pin(root, "._layout", meta)
+        commit.pin(root, "._layout", dict(meta))
+    path = os.path.join(root, "._layout")
+    with open(path) as f:
+        stored = f.read()
+    assert stored == '{"num_buckets": 16, "key_cols": ["table_name", "pk"], "lww": false}'
+    with commit.lock(root), pytest.raises(ValueError) as ei:
+        commit.pin(root, "._layout", dict(meta, num_buckets=32))
+    assert path in str(ei.value) and "16" in str(ei.value) and "32" in str(ei.value)
+    with open(path) as f:
+        assert f.read() == stored

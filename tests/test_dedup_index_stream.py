@@ -385,27 +385,6 @@ def test_runner_dedup_index_sink(spark, tmp_path):
     assert got == _batch_pairs(spark)
 
 
-def test_epoch_profile_telemetry_populated(spark, tmp_path):
-    """r12 verdict #7: the dedup-index epoch ships the same per-phase
-    timing telemetry the IVF epoch has (LAST_EPOCH_PROFILE), so the
-    next fixed-cost attack is measured, not guessed. Zero plan change:
-    only perf_counter reads around the existing writes."""
-    import pipe_s_spark.streaming.dedup_index as DI
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet").select(
-        "doc_id", "text"
-    ).limit(200)
-    DI.LAST_EPOCH_PROFILE.clear()
-    DI.apply_index_batch(
-        docs, 0, str(tmp_path / "ix"), str(tmp_path / "pr")
-    )
-    prof = dict(DI.LAST_EPOCH_PROFILE)
-    assert set(prof) == {"pairs", "index", "wall"}
-    assert all(v > 0 for v in prof.values())
-    # the phases overlap, so each is bounded by the epoch wall
-    assert prof["pairs"] <= prof["wall"] and prof["index"] <= prof["wall"]
-
-
 def test_index_contract_refuses_incompatible_reopen(spark, tmp_path):
     """r13: the strictly-earlier join is only meaningful if every
     epoch wrote under the same family parameters. A restart with

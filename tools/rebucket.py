@@ -20,6 +20,7 @@ corrupting the new layout.
 
 from __future__ import annotations
 
+import json
 import os
 import sys
 
@@ -33,15 +34,14 @@ def main() -> None:
     path, new_n = sys.argv[1], int(sys.argv[2])
 
     from pipe_s_spark.session import get_spark
+    from pipe_s_spark.streaming import commit
     from pipe_s_spark.streaming.merge_apply import rebucket_target
 
     spark = get_spark(app_name="rebucket")
     spark.sparkContext.setLogLevel("ERROR")
     rebucket_target(spark, path, new_n)
-    import json
-
-    with open(os.path.join(path, "._layout")) as f:
-        print(json.dumps({"rebucketed": path, "layout": json.load(f)}))
+    layout = commit.read_json(os.path.join(path, "._layout"))
+    print(json.dumps({"rebucketed": path, "layout": layout}))
 
 
 if __name__ == "__main__":
