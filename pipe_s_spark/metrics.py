@@ -3,13 +3,11 @@
 (rows/sec) and ``task_delay`` (now - source event time).
 
 In Spark the numbers come for free from StreamingQueryProgress; the
-listener below surfaces them in the reference's vocabulary. For batch
-jobs, ``BatchMetrics`` wraps an action with wall-clock + row counts.
+listener below surfaces them in the reference's vocabulary.
 """
 
 from __future__ import annotations
 
-import time
 from dataclasses import dataclass, field
 
 from pyspark.sql import SparkSession
@@ -69,21 +67,3 @@ def attach_metrics(spark: SparkSession) -> TaskMetricsListener:
     listener = TaskMetricsListener()
     spark.streams.addListener(listener)
     return listener
-
-
-class BatchMetrics:
-    """Wall-clock + throughput for batch pipeline runs."""
-
-    def __init__(self) -> None:
-        self.rows = 0
-        self.seconds = 0.0
-
-    @property
-    def qps(self) -> float:
-        return self.rows / self.seconds if self.seconds > 0 else 0.0
-
-    def measure_count(self, df) -> int:
-        t0 = time.perf_counter()
-        self.rows = df.count()
-        self.seconds = time.perf_counter() - t0
-        return self.rows

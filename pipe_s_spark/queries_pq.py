@@ -343,9 +343,10 @@ def q_sim_ivfpq_rerank_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     # whole point of the rerank knob is that exact cosine touches only
     # k x rerank_factor rows per query), while the planner, blind to
     # the window's output size, was broadcasting the CORPUS embedding
-    # scan instead (fact-sized broadcast; plans/r15 node 49). The
-    # corpus now streams unshuffled past a 400-row hash table — the
-    # correct 100 TB shape — and locally two AQE join stages collapse.
+    # scan instead (a fact-sized BroadcastExchange over the embedding
+    # scan). The corpus now streams unshuffled past a 400-row hash
+    # table — the correct 100 TB shape — and locally two AQE join
+    # stages collapse.
     rescored = (
         F.broadcast(short.join(F.broadcast(q_embs), "query_id"))
         .join(n_embs, "neighbor_id")
@@ -381,8 +382,8 @@ def q_sim_ivfpq_rerank_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             # r16: `got` is bounded (<= |L| x nq x 5 = 200 rows at any
             # scale), but it sits behind windows whose output size the
             # planner cannot estimate, so this tiny left join planned
-            # as a SortMergeJoin with TWO exchanges + sorts (plans/r15
-            # nodes 5/60/62). Broadcasting the bounded side makes it a
+            # as a SortMergeJoin with an Exchange and a Sort on each
+            # side. Broadcasting the bounded side makes it a
             # BroadcastHashJoin: zero exchanges, two fewer AQE stages.
             F.broadcast(got.withColumn("hit", F.lit(1))),
             ["shortlist", "query_id", "neighbor_id"],

@@ -194,7 +194,6 @@ def run_ivf_index_stream(
     pq_books: dict[tuple[int, int], list[int]] | None = None,
     pq_m: int | None = None,
     pq_k: int | None = None,
-    topk_salt: int | None = None,
 ):
     """Start (and optionally await) the index maintainer on
     ``vec_stream``. The index holds (vec_id, embedding, cell,
@@ -236,7 +235,6 @@ def run_ivf_index_stream(
         pq_books=pq_books,
         pq_m=pq_m,
         pq_k=pq_k,
-        topk_salt=topk_salt,
     )
     return epoch_log.run_stream(
         vec_stream,
@@ -317,7 +315,6 @@ def apply_ivf_batch(
     pq_books: dict[tuple[int, int], list[int]] | None = None,
     pq_m: int | None = None,
     pq_k: int | None = None,
-    topk_salt: int | None = None,
 ) -> None:
     """One epoch of index maintenance — the foreachBatch body, exposed
     so replay/recovery paths are directly testable: calling this twice
@@ -524,9 +521,7 @@ def apply_ivf_batch(
         # 32-core local run, and one straggler cell per epoch at scale.
         # Both modes salt now that the ADC probe payload is the packed
         # 512-byte xq instead of a 4 KB LUT (see IVF_TOPK_SALT note)
-        if topk_salt is None:
-            topk_salt = IVF_TOPK_SALT_ADC if pq_books is not None else IVF_TOPK_SALT
-        salt_n = max(1, int(topk_salt))
+        salt_n = IVF_TOPK_SALT_ADC if pq_books is not None else IVF_TOPK_SALT
         corpus = corpus.withColumn(
             "gc", F.col("cell") * salt_n + F.pmod(F.col(id_col), F.lit(salt_n))
         )

@@ -154,21 +154,27 @@ class MergeApplyTarget:
     monotonic across restarts, which Structured Streaming guarantees
     per checkpoint — the epoch fence relies on it.
 
-    Commit protocol (the poor man's transaction log):
+    Commit protocol (the poor man's transaction log). An epoch locks
+    the target twice:
 
-    - the expensive merge WRITE goes to a ``.stage-<epoch>-<id>``
-      sibling, one per attempt, outside any lock;
-    - [fence check -> layout check -> ``commit.commit``] runs under the
-      target's ``commit.lock``, so a zombie writer — e.g. a
-      foreachBatch callback orphaned by a killed query thread —
-      re-reads the fence atomically with the swap and aborts instead of
-      clobbering state a newer incarnation already advanced past (the
-      role a transactional format's writer-epoch check plays);
-    - the swap installs every touched bucket and writes the fence in
-      one journaled commit, which recovery rolls forward after a kill,
-      so readers see the whole epoch or none of it. Replayed epochs
-      (<= fence) are skipped outright: idempotence by fencing, matching
-      the reference's idempotent-SQL story (utils/mysql.go:197-218).
+    - the open (``_open``), at entry: the lock's ``recover`` rolls a
+      crashed swap forward, the open pins ``._layout`` and reads the
+      fence. Replayed epochs (<= fence) are skipped outright:
+      idempotence by fencing, matching the reference's idempotent-SQL
+      story (utils/mysql.go:197-218). Otherwise the merge lists and
+      reads the touched buckets unlocked, at that fence, and WRITES to
+      a ``.stage-<epoch>-<id>`` sibling, one per attempt;
+    - the swap: [fence check -> layout check -> ``commit.commit``]
+      under the lock, so a zombie writer — e.g. a foreachBatch
+      callback orphaned by a killed query thread — re-reads the fence
+      atomically with the swap and aborts instead of clobbering state
+      a newer incarnation already advanced past (the role a
+      transactional format's writer-epoch check plays), and a writer
+      that an offline rebucket overtook refuses loudly. The swap
+      installs every touched bucket and writes the fence in one
+      journaled commit, which recovery rolls forward after a kill, so
+      readers see the whole epoch or none of it. An attempt that does
+      not reach the journal deletes its stage.
 
     Known limit without a transactional format: a reader holding a
     lazy plan over files that a concurrent swap trashes can fail and
@@ -211,6 +217,8 @@ class MergeApplyTarget:
         self.op_col = op_col
         self.num_buckets = num_buckets
         self.lww = lww
+        #: the ``._layout`` every open and swap pins (see ``_open``)
+        self._layout = {"num_buckets": num_buckets, "key_cols": self.key_cols, "lww": lww}
         #: column-name -> DataType for the empty-target schema; seeded
         #: from FLAT_CHANGELOG_SCHEMA and widened with the incoming
         #: batch's actual types on every apply, so CUSTOM / COMPOSITE
@@ -227,25 +235,20 @@ class MergeApplyTarget:
     def _bucket(self):
         return F.pmod(F.hash(*[F.col(c) for c in self.key_cols]), F.lit(self.num_buckets))
 
-    def _check_layout_locked(self) -> None:
-        """Enforce the target's immutable layout contract (caller holds
-        the lock). Bucket routing is ``pmod(hash(key_cols), num_buckets)``
-        — if a later incarnation opens the same directory with a
-        different bucket count, key order, or LWW mode, every merge
-        reads the WRONG subset of buckets: a key that hashed to bucket
-        3 under N=16 lands in bucket 7 under N=32 while its old row
-        survives untouched in 3 — silent duplicates, the exact failure
-        class the epoch fence exists to kill. The first writer records
-        the layout in ``._layout`` (dot-prefixed: invisible to Spark's
-        partition discovery, like the fence) through ``commit.pin``;
-        every later open verifies it and refuses a mismatch loudly.
-        Pre-r13 targets without the file adopt the opening instance's
-        layout (the status quo behavior, now recorded going forward)."""
-        commit.pin(
-            self.path,
-            _LAYOUT,
-            {"num_buckets": self.num_buckets, "key_cols": self.key_cols, "lww": self.lww},
-        )
+    def _open(self) -> int:
+        """Lock the target once and return its fence. The lock runs
+        ``recover``, so a crashed swap or rebucket is rolled forward
+        before the caller lists bucket files or the pin reads
+        ``._layout``. Bucket routing is ``pmod(hash(key_cols),
+        num_buckets)``: an instance opening the directory with another
+        bucket count, key order or LWW mode would merge the wrong subset
+        of buckets (a key's old row survives in its old bucket — silent
+        duplicates), so ``commit.pin`` records the first writer's layout
+        and refuses any other. Targets without the file adopt the
+        opening instance's layout."""
+        with commit.lock(self.path):
+            commit.pin(self.path, _LAYOUT, self._layout)
+            return self._read_fence()
 
     def _read_fence(self) -> int:
         return commit.read_json(os.path.join(self.path, _FENCE), -1)
@@ -259,11 +262,14 @@ class MergeApplyTarget:
         """Current target state. ``internal=True`` (LWW mode only)
         exposes the stored seq/tombstone columns and tombstone rows —
         the merge's view; the public view hides both."""
-        # the lock runs recovery first, so a crashed rebucket's
-        # roll-forward has rewritten ._layout before the check reads it
-        with commit.lock(self.path):
-            self._check_layout_locked()
-            fence = self._read_fence()
+        return self._scan(spark, self._open(), buckets, internal)
+
+    def _scan(
+        self, spark: SparkSession, fence: int, buckets: Sequence[int] | None, internal: bool
+    ) -> DataFrame:
+        """``read_current`` without the lock, for a caller that opened
+        the target at ``fence``: the listing and the scan run unlocked
+        either way, and ``fence`` keys the stored-schema cache."""
         cols = self.key_cols + self.payload_cols
         if self.lww and internal:
             cols = cols + [self._SEQ, self._TOMB]
@@ -278,11 +284,7 @@ class MergeApplyTarget:
             # infers from the first file by path, maybe an older, narrower one)
             newest = max(files, key=os.path.getmtime)
             self._schema = (fence, spark.read.parquet(newest).schema)
-        df = (
-            spark.read.schema(self._schema[1])
-            .option("basePath", self.path)
-            .parquet(self.path)
-        )
+        df = spark.read.schema(self._schema[1]).option("basePath", self.path).parquet(self.path)
         if buckets is not None:
             # partition pruning: only the touched bucket dirs are scanned
             df = df.filter(F.col("bucket").isin(list(buckets)))
@@ -352,11 +354,9 @@ class MergeApplyTarget:
         # when the fence skipped/aborted it — batch callers (runner
         # 'merge' output) surface the skip to the user instead of
         # silently no-opping on re-run with fresh input.
-        with commit.lock(self.path):
-            self._check_layout_locked()
-        if epoch_id <= self._read_fence():
+        fence = self._open()
+        if epoch_id <= fence:
             return False
-        spark = batch.sparkSession
         for f in batch.schema.fields:
             self._col_types[f.name] = f.dataType
         if "net_op" in batch.columns and self.op_col not in batch.columns:
@@ -370,9 +370,8 @@ class MergeApplyTarget:
             return True
         # sized from THIS batch's estimated bytes, so streaming
         # micro-batches never engage bulk sizing
-        merged = self._merge(
-            self.read_current(spark, buckets=touched, internal=True), batch, size_of=batch
-        )
+        base = self._scan(batch.sparkSession, fence, touched, internal=True)
+        merged = self._merge(base, batch, size_of=batch)
         schema = merged.drop("bucket").schema
         # stage dir is unique PER ATTEMPT, not per epoch: a zombie
         # writer and a live replay of the same epoch would otherwise
@@ -380,28 +379,31 @@ class MergeApplyTarget:
         # could swap in the mixed/partial result (observed as lost
         # rows in the kill-restart integrity test)
         stage = f"{self.path}.stage-{epoch_id}-{uuid.uuid4().hex[:8]}"
-        merged.write.mode("overwrite").partitionBy("bucket").parquet(stage)
-        with commit.lock(self.path):
-            if epoch_id <= self._read_fence():
-                # a newer incarnation advanced while we computed
-                # (or a concurrent replay of this epoch won): abort
+        owned = True
+        try:
+            merged.write.mode("overwrite").partitionBy("bucket").parquet(stage)
+            with commit.lock(self.path):
+                # a newer incarnation (or a concurrent replay of this
+                # epoch) may have advanced the fence, or an offline
+                # rebucket renumbered the buckets, while this epoch
+                # computed: abort or refuse atomically with the swap
+                if epoch_id <= self._read_fence():
+                    return False
+                commit.pin(self.path, _LAYOUT, self._layout)
+                # from the journal on, recovery owns the stage
+                owned = False
+                # a fully deleted bucket installs as an empty directory
+                commit.commit(
+                    self.path,
+                    stage,
+                    install=[f"bucket={k}" for k in touched],
+                    files={_FENCE: str(epoch_id)},
+                )
+                self._schema = (epoch_id, schema)
+            return True
+        finally:
+            if owned:
                 shutil.rmtree(stage, ignore_errors=True)
-                return False
-            # a concurrent offline rebucket may have committed while
-            # this epoch computed: its new ._layout makes this
-            # writer's bucket numbering wrong — refuse loudly here,
-            # atomically with the swap, instead of renaming staged
-            # old-numbered buckets into a new-numbered table
-            self._check_layout_locked()
-            # a fully deleted bucket installs as an empty directory
-            commit.commit(
-                self.path,
-                stage,
-                install=[f"bucket={k}" for k in touched],
-                files={_FENCE: str(epoch_id)},
-            )
-            self._schema = (epoch_id, schema)
-        return True
 
 
 def rebucket_target(spark: SparkSession, path: str, new_num_buckets: int) -> None:

@@ -12,6 +12,7 @@ or stage inside a root may survive the next lock entry.
 
 from __future__ import annotations
 
+import glob
 import os
 import shutil
 from decimal import Decimal
@@ -480,3 +481,105 @@ def test_pin_records_once_then_verifies(tmp_path):
     assert path in str(ei.value) and "16" in str(ei.value) and "32" in str(ei.value)
     with open(path) as f:
         assert f.read() == stored
+
+
+def _counting(monkeypatch) -> dict:
+    """Count the calls to the commit functions an epoch coordinates
+    through. ``lock`` reaches ``recover`` and ``pin`` reaches
+    ``read_json`` through the module, so nested calls count too."""
+    counts = dict.fromkeys(("lock", "recover", "pin", "read_json"), 0)
+    for name in counts:
+
+        def counted(*args, _name=name, _real=getattr(commit, name), **kwargs):
+            counts[_name] += 1
+            return _real(*args, **kwargs)
+
+        monkeypatch.setattr(commit, name, counted)
+    return counts
+
+
+def test_merge_epoch_opens_and_swaps_its_target_once(spark, tmp_path, monkeypatch):
+    """A merge epoch locks its target twice: the open at entry (which
+    recovers, pins ``._layout`` and reads the fence) and the swap (which
+    recovers, re-reads the fence and re-pins). A fence-replayed epoch
+    stops after the open. A view epoch adds its own pre-image open and
+    its locked fold."""
+    d = str(tmp_path)
+    target = MergeApplyTarget(d + "/t", num_buckets=4)
+    target.apply_batch(_mk(spark, BASE), 0)
+    view = IncrementalAggView(MergeApplyTarget(d + "/vt", num_buckets=4), d + "/v")
+    view.apply_batch(_mk(spark, BASE), 0)
+    upserts = _mk(spark, UPSERTS)
+    counts = _counting(monkeypatch)
+
+    def run(epoch) -> tuple:
+        counts.update(dict.fromkeys(counts, 0))
+        epoch()
+        return tuple(counts.values())
+
+    assert run(lambda: target.apply_batch(upserts, 1)) == (2, 2, 2, 6)
+    assert run(lambda: target.apply_batch(upserts, 1)) == (1, 1, 1, 3)
+    assert run(lambda: view.apply_batch(upserts, 1)) == (4, 4, 3, 12)
+    assert _rows(target.read_current(spark)) == _lww(BASE + UPSERTS)
+
+
+def _mid_epoch(monkeypatch, target, second_party, when):
+    """Make ``second_party`` commit to ``target``'s path while
+    ``target``'s epoch computes: after its open (``"open"``: inside
+    ``touched_buckets``) or after its stage write, at the lock that
+    would swap the stage in (``"staged"``)."""
+    if when == "open":
+        real = target.touched_buckets
+
+        def touched(batch):
+            second_party()
+            return real(batch)
+
+        monkeypatch.setattr(target, "touched_buckets", touched)
+        return
+    real_lock, fired = commit.lock, []
+
+    def lock(root):
+        if root == target.path and not fired and glob.glob(f"{root}.stage-*"):
+            fired.append(root)
+            second_party()
+        return real_lock(root)
+
+    monkeypatch.setattr(commit, "lock", lock)
+
+
+def _stages(tmp_path) -> list:
+    return [e for e in os.listdir(tmp_path) if ".stage-" in e]
+
+
+@pytest.mark.parametrize("when", ["open", "staged"])
+def test_swap_aborts_when_a_newer_epoch_commits_first(spark, tmp_path, monkeypatch, when):
+    """A second writer applies epoch N+1 while the first computes epoch
+    N: the first writer's swap re-reads the fence, returns False without
+    touching the rows and deletes its stage."""
+    path = str(tmp_path / "t")
+    first = MergeApplyTarget(path, num_buckets=4)
+    first.apply_batch(_mk(spark, BASE), 0)
+    newer = [(400, "t3", "insert", 2000, 4, 9.0)]
+    second = MergeApplyTarget(path, num_buckets=4)
+    _mid_epoch(monkeypatch, first, lambda: second.apply_batch(_mk(spark, newer), 2), when)
+    assert first.apply_batch(_mk(spark, UPSERTS), 1) is False
+    assert _target_rows(spark, path) == _lww(BASE + newer)
+    assert first._read_fence() == 2
+    assert _stages(tmp_path) == []
+
+
+@pytest.mark.parametrize("when", ["open", "staged"])
+def test_swap_refuses_a_layout_changed_by_rebucket(spark, tmp_path, monkeypatch, when):
+    """An offline rebucket commits while a writer computes: the writer's
+    swap re-pins ``._layout`` and raises instead of installing buckets
+    numbered under the old count, and deletes its stage."""
+    path = str(tmp_path / "t")
+    first = MergeApplyTarget(path, num_buckets=4)
+    first.apply_batch(_mk(spark, BASE), 0)
+    _mid_epoch(monkeypatch, first, lambda: rebucket_target(spark, path, 8), when)
+    with pytest.raises(ValueError, match=r"\._layout"):
+        first.apply_batch(_mk(spark, UPSERTS), 1)
+    assert _target_rows(spark, path, num_buckets=8) == _lww(BASE)
+    assert MergeApplyTarget(path, num_buckets=8)._read_fence() == 0
+    assert _stages(tmp_path) == []
