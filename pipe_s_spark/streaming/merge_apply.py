@@ -140,15 +140,20 @@ class MergeApplyTarget:
     Per epoch only buckets containing touched keys are read, merged and
     swapped — untouched bucket directories are not rewritten (at 100 TB
     a micro-batch touches a small key set, so the rewrite is
-    O(touched-buckets), not O(table)). An epoch is 3 Spark jobs: one
-    shuffle-free pass over the raw batch finds the touched buckets
-    (``touched_buckets``), then one clustered write merges the raw
-    events into those buckets' stored rows, compaction included
-    (``_merge``). Every epoch writes one file per touched bucket (per
-    salt when bulk, ``_cluster_by_bucket``), and reads reuse the schema
-    this instance last committed instead of inferring it from a parquet
-    footer each epoch. On a cluster the same foreachBatch body targets
-    Delta MERGE or JDBC upsert unchanged.
+    O(touched-buckets), not O(table)). Up to 32 buckets an epoch is 3
+    Spark jobs: one shuffle-free pass over the raw batch finds the
+    touched buckets (``touched_buckets``), then one clustered write
+    merges the raw events into those buckets' stored rows, compaction
+    included (``_merge``). Once the target holds more than 32
+    ``bucket=K`` directories it is 4: ``_scan``'s parquet read then
+    lists them with a Spark job of its own (parallel partition
+    discovery, above the session's
+    ``spark.sql.sources.parallelPartitionDiscovery.threshold``, 32).
+    Every epoch writes one file per touched bucket (per salt when bulk,
+    ``_cluster_by_bucket``), and reads reuse the schema this instance
+    last committed instead of inferring it from a parquet footer each
+    epoch. On a cluster the same foreachBatch body targets Delta MERGE
+    or JDBC upsert unchanged.
 
     One logical stream (checkpoint) owns a target: epoch ids must be
     monotonic across restarts, which Structured Streaming guarantees

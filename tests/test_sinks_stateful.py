@@ -97,6 +97,11 @@ def _stream_changelog(spark, tmp_path):
         with open(d / f"p{i}.json", "w") as f:
             for r in rows[i * per : (i + 1) * per]:
                 f.write(json.dumps(r) + "\n")
+        # the file source takes files in modification-time order; files
+        # written in the same millisecond tie, and the directory listing
+        # then decides. One second apart, p0..p3 is the batch order.
+        t = 1_700_000_000 + i
+        os.utime(d / f"p{i}.json", (t, t))
     return spark.readStream.schema(FLAT_CHANGELOG_SCHEMA).option(
         "maxFilesPerTrigger", 1
     ).json(str(d))
