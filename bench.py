@@ -20,17 +20,17 @@ of this protocol then false-flagged whole-host drift as reproduced
 regressions): after the main per-query medians, any query >30% slower
 (and >0.15s absolute) than the last COMMITTED artifact (`git show
 HEAD:BENCH_LOCAL.json`) — with the threshold PROBE-NORMALIZED, see
-below — is RE-MEASURED in a fresh subprocess session
-(tools/bench_triage.py — own JVM, parent session stopped first,
+below — is RE-MEASURED in a fresh interpreter (``remeasure`` in a
+spawn-context process — own JVM, parent session stopped first,
 identical 1-warmup + median-of-3 protocol). A real regression (plan
 change, new shuffle) reproduces there; session-state noise (heap
 shape, GC pressure accumulated over a 215-query run — demonstrated to
 swing untouched queries up to 2x on this host) does not.
 
 PROBE NORMALIZATION (r12 verdict #1, extended r14 per r13 verdict #2):
-TWO machine-state probes (a pure-JVM compute workload and a
-shuffle-flavored one — fixed synthetic workloads, measured by this
-run, by the triage subprocess, and recorded in every committed
+TWO machine-state probes (``host_probes``: a pure-JVM compute workload
+and a shuffle-flavored one — fixed synthetic workloads, measured by
+this run, by the triage process, and recorded in every committed
 artifact) calibrate whole-host drift. BENCH_r12 demonstrated the
 compute-side failure mode: a 35% slower host (probe 0.146 -> 0.197)
 pushed 20 untouched queries over the raw 30% threshold and the
@@ -58,8 +58,14 @@ cdc_compact — measured on a host the protocol itself had just declared
 drifted — over a 1.22s main-session reading). On indeterminate or
 not-reproduced verdicts the MAIN-session value stands: it is the one
 measured under the probes the artifact's top level records. Both
-values always stay in the "triage" block. Disable with
-SPARK_GRAFT_BENCH_TRIAGE=0 (e.g. for quick iteration runs).
+values always stay in the "triage" block. Triage only compares
+against a committed artifact taken at the same sf AND core count
+(``comparable_prior``). Disable with SPARK_GRAFT_BENCH_TRIAGE=0 (e.g.
+for quick iteration runs).
+
+The measurement steps every tool shares live here, once: ``warm_up``
+(table footers and Python workers), ``host_probes`` and ``time_query``
+(the per-query median).
 """
 
 from __future__ import annotations
@@ -67,15 +73,105 @@ from __future__ import annotations
 import json
 import os
 import re
+import statistics
 import sys
 import time
 
 
-def _prior_committed_artifact() -> tuple[dict[str, float], float | None, float | None]:
+def _noop(df) -> None:
+    df.write.format("noop").mode("overwrite").save()
+
+
+def warm_up(spark, *sf_dirs: str) -> None:
+    """Warm the JVM, codegen and parquet footers (every table of each
+    of ``sf_dirs``) and the Python UDF workers (one per core), so the
+    first timed query measures the query, not session startup or worker
+    fork+import."""
+    from pipe_s_spark.sources import TABLES, load_table
+
+    for sf_dir in sf_dirs:
+        for t in TABLES:
+            _noop(load_table(spark, sf_dir, t))
+    _noop(
+        spark.range(256)
+        .repartition(int(spark.sparkContext.defaultParallelism))
+        .mapInPandas(lambda it: it, schema="id long")
+    )
+
+
+def host_probes(spark) -> dict[str, float]:
+    """The two machine-state calibration probes, each one warm-up run
+    then the min of 3: fixed synthetic workloads whose cost is
+    independent of the query surface. Two same-code bench runs an hour
+    apart have shown a SYSTEMATIC ~14% whole-run drift (thermal / cache
+    / background state) that per-query repeats cannot remove; recording
+    the probes lets a reader separate "the machine was slower" from "a
+    query regressed". ``probe_sec`` is pure JVM arithmetic;
+    ``probe_shuffle_sec`` (r13) is a fixed groupBy over a synthetic key
+    (exchange write/read + hash agg), because the compute probe missed
+    host bursts that hit shuffle/Arrow-heavy queries 2-3x while it moved
+    <5% (three spurious `reproduced` flags, disproved by A-B-A)."""
+
+    def best(build) -> float:
+        def once() -> float:
+            t0 = time.perf_counter()
+            _noop(build())
+            return time.perf_counter() - t0
+
+        once()  # warm
+        return round(min(once() for _ in range(3)), 4)
+
+    return {
+        "probe_sec": best(
+            lambda: spark.range(50_000_000).selectExpr("sum(id * 3 + 1) as s")
+        ),
+        "probe_shuffle_sec": best(
+            lambda: spark.range(8_000_000)
+            .selectExpr("id % 1000000 as k", "id as v")
+            .groupBy("k")
+            .agg({"v": "sum"})
+        ),
+    }
+
+
+def time_query(spark, query, sf_dir: str, after_warmup=None) -> float:
+    """MEDIAN seconds of post-warmup repeats of one registered query
+    (r7 verdict: min-of-3 totals still swung ±20% run-to-run, leaving
+    real <1.4x regressions unattributable). The first execution pays
+    one-off codegen/GC spikes unrelated to the plan (a 5-run r4
+    re-measure of window_range_frame: [1.76, 0.64, 0.54, 0.43, 0.38] —
+    even run 2 can be 1.7x steady state), so it is DISCARDED as warmup
+    and ``after_warmup()`` runs right after it. The median of the rest
+    is robust to a single residual spike in either direction, unlike
+    min (which understates queries whose typical run is slow) or mean
+    (which a single GC pause drags). SPARK_GRAFT_BENCH_RUNS counts
+    TOTAL executions (default 4 = 1 warmup + median of 3)."""
+    runs = max(2, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "4")))
+    samples: list[float] = []
+    for i in range(runs):
+        t0 = time.perf_counter()
+        _noop(query(spark, sf_dir))
+        samples.append(time.perf_counter() - t0)
+        if i == 0 and after_warmup is not None:
+            after_warmup()
+    return round(statistics.median(samples[1:]), 4)
+
+
+def comparable_prior(prior: dict, sf: float, cores: int) -> bool:
+    """Whether triage may compare this run against ``prior``: only an
+    artifact taken at the same scale and the same core count. A prior
+    that does not record ``cores`` (every artifact before the key
+    existed was taken at 32 cores) is not comparable."""
+    return prior.get("sf") == sf and prior.get("cores") == cores
+
+
+def _prior_committed_artifact(
+    sf: float, cores: int
+) -> tuple[dict[str, float], float | None, float | None]:
     """(per-query seconds, probe_sec, probe_shuffle_sec) from the last
     COMMITTED artifact (HEAD) — the reference the triage threshold
-    compares against. Missing file / no git / new query -> empty
-    (triage silently skips)."""
+    compares against. Missing file / no git / other sf or core count
+    -> empty (triage silently skips)."""
     import subprocess
 
     try:
@@ -89,10 +185,7 @@ def _prior_committed_artifact() -> tuple[dict[str, float], float | None, float |
         if res.returncode != 0:
             return {}, None, None
         prior = json.loads(res.stdout)
-        # only compare artifacts at the same scale
-        here = float(re.search(r"sf([0-9.]+)", os.environ.get(
-            "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")).group(1))
-        if prior.get("sf") != here:
+        if not comparable_prior(prior, sf, cores):
             return {}, None, None
         return (
             dict(prior.get("queries", {})),
@@ -180,8 +273,6 @@ def control_drift(
     ]
     if len(ratios) < 2:
         return None
-    import statistics
-
     return statistics.median(ratios)
 
 
@@ -245,32 +336,55 @@ def committed_timing(main_sec: float, iso_sec: float, reproduced: bool | None) -
     return iso_sec if reproduced is True else main_sec
 
 
-def _run_triage(
-    sf_dir: str, names: list[str], controls: list[str] | None = None
-) -> dict[str, float]:
-    """Fresh-subprocess re-measure (tools/bench_triage.py); returns
-    {name: isolated_median_sec} plus the isolated session's own
-    machine probe under the reserved key "_probe_sec" (and, when
-    ``controls`` were requested, their medians under "_controls");
-    empty on any failure."""
-    import subprocess
+def _session(app_name: str):
+    from pipe_s_spark.session import get_spark
 
-    root = os.path.dirname(os.path.abspath(__file__))
+    # progress bars write \r-framed noise to stdout and have twice cost
+    # a captured artifact its JSON head (BENCH_r02/r03)
+    spark = get_spark(
+        app_name=app_name, extra_conf={"spark.ui.showConsoleProgress": "false"}
+    )
+    spark.sparkContext.setLogLevel("ERROR")
+    return spark
+
+
+def remeasure(sf_dir: str, names: list[str], controls: list[str]) -> dict:
+    """The isolated half of the triage: a new session re-times ``names``
+    with the main run's warm-up and per-query protocol, and measures its
+    own host probes, so the caller can probe-normalize the isolated
+    medians against the committed artifact — and refuse a verdict when
+    this session's host state differs too much from the one the prior
+    was measured on (r12 verdict #1: the un-normalized protocol marked
+    20 host-drift entries `reproduced: true`). Returns {name: sec} plus
+    the probes under "_probe_sec"/"_probe_shuffle_sec" and the
+    ``controls`` (r16 verdict #2: UNTOUCHED queries co-measured the same
+    way, a real-query drift signal the synthetic probes are blind to)
+    under "_controls"."""
+    spark = _session("bench_triage")
+    import __spark_entry__ as entrymod
+
+    qs = entrymod.queries()
+    warm_up(spark, sf_dir)
+    out: dict = {f"_{k}": v for k, v in host_probes(spark).items()}
+    for name in names:
+        out[name] = time_query(spark, qs[name], sf_dir)
+    if controls:
+        out["_controls"] = {c: time_query(spark, qs[c], sf_dir) for c in controls if c in qs}
+    spark.stop()
+    return out
+
+
+def _run_triage(sf_dir: str, names: list[str], controls: list[str]) -> dict:
+    """``remeasure`` in a fresh interpreter: a spawn-context process
+    starts its own JVM, so session state accumulated over the main run
+    (heap shape, GC pressure, codegen cache) cannot reach it. Empty on
+    any failure."""
+    import multiprocessing
+
     try:
-        res = subprocess.run(
-            [sys.executable, os.path.join(root, "tools", "bench_triage.py"), sf_dir]
-            + names
-            + (["--controls"] + controls if controls else []),
-            capture_output=True,
-            text=True,
-            cwd=root,
-            timeout=1200,
-        )
-        if res.returncode != 0:
-            print(f"triage subprocess failed: {res.stderr[-500:]}", file=sys.stderr)
-            return {}
-        return json.loads(res.stdout.strip().splitlines()[-1])
-    except Exception as e:  # noqa: BLE001
+        with multiprocessing.get_context("spawn").Pool(1) as pool:
+            return pool.apply_async(remeasure, (sf_dir, names, controls)).get(timeout=1200)
+    except Exception as e:  # noqa: BLE001 — triage is best-effort, never fatal
         print(f"triage skipped: {e}", file=sys.stderr)
         return {}
 
@@ -279,89 +393,17 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else -1.0
+    cores = len(os.sched_getaffinity(0))
 
-    from pipe_s_spark.session import get_spark
-
-    # progress bars write \r-framed noise to stdout and have twice cost
-    # the driver-captured artifact its JSON head (BENCH_r02/r03)
-    spark = get_spark(
-        app_name="pipe_s_spark_bench",
-        extra_conf={"spark.ui.showConsoleProgress": "false"},
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
+    spark = _session("pipe_s_spark_bench")
     import __spark_entry__ as entrymod
 
     qs = entrymod.queries()
-
-    # warm the JVM, codegen, and parquet footers so per-query timings
-    # measure the queries, not session startup
-    from pipe_s_spark.sources import TABLES, load_table
-
-    for t in TABLES:
-        load_table(spark, sf_dir, t).write.format("noop").mode("overwrite").save()
-
-    # warm the Python UDF workers too (one per core) so the first
-    # mapInPandas query measures the operator, not worker fork+import
-    spark.range(256).repartition(int(spark.sparkContext.defaultParallelism)).mapInPandas(
-        lambda it: it, schema="id long"
-    ).write.format("noop").mode("overwrite").save()
-
-    # machine-state calibration probe: a fixed synthetic workload whose
-    # cost is independent of the query surface. Two same-code bench
-    # runs an hour apart have shown a SYSTEMATIC ~14% whole-run drift
-    # (thermal / cache / background state) that per-query repeats
-    # cannot remove; recording the probe time lets a reader separate
-    # "the machine was slower" from "a query regressed" when comparing
-    # artifacts across rounds.
-    def _probe() -> float:
-        t0 = time.perf_counter()
-        spark.range(50_000_000).selectExpr("sum(id * 3 + 1) as s").write.format(
-            "noop"
-        ).mode("overwrite").save()
-        return time.perf_counter() - t0
-
-    # second, SHUFFLE-flavored probe (r13): the compute probe is pure
-    # JVM arithmetic and missed host bursts that hit shuffle/Arrow-
-    # heavy queries 2-3x while it moved <5% (three spurious
-    # `reproduced` flags, disproved by A-B-A). A fixed groupBy over a
-    # synthetic key exercises exchange write/read + hash agg; recorded
-    # in the artifact so the NEXT round's triage can normalize against
-    # whichever probe co-moves with the flagged query's shape (priors
-    # need one round of history before verdict logic can use it).
-    def _probe_shuffle() -> float:
-        t0 = time.perf_counter()
-        spark.range(8_000_000).selectExpr(
-            "id % 1000000 as k", "id as v"
-        ).groupBy("k").agg({"v": "sum"}).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        return time.perf_counter() - t0
-
-    _probe()  # warm
-    probe_sec = round(min(_probe() for _ in range(3)), 4)
-    _probe_shuffle()  # warm
-    probe_shuffle_sec = round(min(_probe_shuffle() for _ in range(3)), 4)
-
-    # MEDIAN of post-warmup repeats per query (r7 verdict: min-of-3
-    # totals still swung ±20% run-to-run, leaving real <1.4x
-    # regressions unattributable). The first execution pays one-off
-    # codegen/GC spikes unrelated to the plan (a 5-run r4 re-measure of
-    # window_range_frame: [1.76, 0.64, 0.54, 0.43, 0.38] — even run 2
-    # can be 1.7x steady state), so it is DISCARDED as warmup and the
-    # reported figure is the median of the remaining runs — robust to
-    # a single residual spike in either direction, unlike min (which
-    # understates queries whose typical run is slow) or mean (which a
-    # single GC pause drags). SPARK_GRAFT_BENCH_RUNS counts TOTAL
-    # executions (default 4 = 1 warmup + median of 3).
-    runs = max(2, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "4")))
-    import statistics
+    warm_up(spark, sf_dir)
+    probes = host_probes(spark)
+    probe_sec, probe_shuffle_sec = probes["probe_sec"], probes["probe_shuffle_sec"]
 
     from pipe_s_spark.functions import shared as SH
-
-    def _cache_key_names(events) -> list[str]:
-        # drop the applicationId head; keep a compact human label
-        return sorted("/".join(str(p) for p in k[1:]) for k, _sec in events)
 
     timings: dict[str, float] = {}
     # per-query shared-cache attribution (r8 verdict: a ×1.54 swing on
@@ -386,36 +428,33 @@ def main() -> None:
     # the end-to-end cold cost of each family.
     cache_build_sec: dict[str, float] = {}
 
-    def _note_builds(events) -> list[str]:
-        for k, sec in events:
+    def _note_builds() -> list[str]:
+        labels = []
+        for k, sec in SH.drain_build_log():
+            # drop the applicationId head; keep a compact human label
             label = "/".join(str(p) for p in k[1:])
             cache_build_sec[label] = round(cache_build_sec.get(label, 0.0) + sec, 4)
-        return _cache_key_names(events)
+            labels.append(label)
+        return sorted(labels)
 
     SH.drain_build_log()  # discard table-warmup builds
     for name in sorted(qs):
-        samples: list[float] = []
         built_warmup: list[str] = []
-        for i in range(runs):
-            t0 = time.perf_counter()
-            df = qs[name](spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            samples.append(time.perf_counter() - t0)
-            if i == 0:
-                built_warmup = _note_builds(SH.drain_build_log())
-        built_timed = _note_builds(SH.drain_build_log())
+        timings[name] = time_query(
+            spark, qs[name], sf_dir, after_warmup=lambda: built_warmup.extend(_note_builds())
+        )
+        built_timed = _note_builds()
         if built_warmup or built_timed:
             cache_attr[name] = {
                 "built_warmup": built_warmup,
                 "built_timed": built_timed,
             }
-        timings[name] = round(statistics.median(samples[1:]), 4)
 
     # --- triage pass: fresh-session re-measure of >30% regressions vs
     # --- the last committed artifact (see module docstring) ----------
     triage: dict[str, dict] = {}
     if os.environ.get("SPARK_GRAFT_BENCH_TRIAGE", "1") != "0":
-        prior, prior_probe, prior_probe_shuffle = _prior_committed_artifact()
+        prior, prior_probe, prior_probe_shuffle = _prior_committed_artifact(sf, cores)
         # probe-normalized flagging: a query is only suspect if it is
         # >30% slower than the prior SCALED BY the whole-host speed
         # ratio this run's probes measured (r12: raw thresholds flagged
@@ -502,6 +541,7 @@ def main() -> None:
         "cache_build_total_sec": round(sum(cache_build_sec.values()), 4),
         "triage": triage,
         "sf": sf,
+        "cores": cores,
     }
     # durable full-detail copy: the driver keeps only the last 2000
     # chars of stdout, and 81 query timings don't fit — BENCH_r02/r03

@@ -53,7 +53,6 @@ def compact_changelog(
     seq_col: str = "seq",
     op_col: str = "op",
     payload_cols: Sequence[str] | None = None,
-    auto_scale: bool = True,
 ) -> DataFrame:
     """Collapse a changelog to net effect per key.
 
@@ -62,23 +61,22 @@ def compact_changelog(
     (the high-watermark offset for resumability). Annihilated keys
     (insert..delete within the window) are dropped.
 
-    ``auto_scale`` (default ON) sizes reduce parallelism from the
-    input's estimated bytes when that exceeds the session ceiling: a
-    ``repartition(n, keys)`` embedded IN THE PLAN (no session-conf
-    mutation) satisfies the aggregate's distribution, so Spark still
-    plans ONE exchange, now ``n``-wide. Micro-batches and oracle-scale
-    queries never trigger it. Tradeoff: that exchange moves raw rows,
-    not map-side-combined ones, but bounded per-task reducer state is
-    what survives a 100x scale-up (spill grows superlinearly; shuffle
-    bytes grow linearly and never exceed the raw input).
+    Reduce parallelism is sized from the input's estimated bytes when
+    that exceeds the session ceiling: a ``repartition(n, keys)``
+    embedded IN THE PLAN (no session-conf mutation) satisfies the
+    aggregate's distribution, so Spark still plans ONE exchange, now
+    ``n``-wide. Micro-batches and oracle-scale queries never trigger it.
+    Tradeoff: that exchange moves raw rows, not map-side-combined ones,
+    but bounded per-task reducer state is what survives a 100x scale-up
+    (spill grows superlinearly; shuffle bytes grow linearly and never
+    exceed the raw input).
     """
     keys = list(key_cols)
     if payload_cols is None:
         payload_cols = [c for c in df.columns if c not in keys and c not in (seq_col, op_col)]
-    if auto_scale:
-        n = bulk_partitions(df)
-        if n is not None and n > session_shuffle_partitions(df.sparkSession):
-            df = df.repartition(n, *[F.col(k) for k in keys])
+    n = bulk_partitions(df)
+    if n is not None and n > session_shuffle_partitions(df.sparkSession):
+        df = df.repartition(n, *[F.col(k) for k in keys])
 
     g = df.groupBy(*keys).agg(*net_effect_aggs(F.col(op_col), F.col(seq_col), payload_cols))
     return (

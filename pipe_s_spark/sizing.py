@@ -41,7 +41,6 @@ per-operator, not in session.get_spark).
 from __future__ import annotations
 
 import math
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -49,9 +48,7 @@ from pyspark.sql import functions as F
 #: bytes of (estimated, uncompressed) input per reduce task for bulk
 #: shuffles — the grain the r12 controlled experiment measured linear
 #: (per-row cost flat at 2.18-2.21 us/row when per-task state matched).
-BULK_TARGET_PARTITION_BYTES = int(
-    os.environ.get("PIPE_S_BULK_PARTITION_BYTES", 64 * 1024 * 1024)
-)
+BULK_TARGET_PARTITION_BYTES = 64 * 1024 * 1024
 
 #: runaway guard: plan-statistics products (joins) can overestimate by
 #: orders of magnitude; no bulk shuffle starts wider than this (AQE

@@ -30,6 +30,7 @@ targets Delta MERGE or JDBC upsert unchanged.
 
 from __future__ import annotations
 
+import functools
 import glob
 import json
 import os
@@ -140,15 +141,13 @@ class MergeApplyTarget:
     Per epoch only buckets containing touched keys are read, merged and
     swapped — untouched bucket directories are not rewritten (at 100 TB
     a micro-batch touches a small key set, so the rewrite is
-    O(touched-buckets), not O(table)). Up to 32 buckets an epoch is 3
-    Spark jobs: one shuffle-free pass over the raw batch finds the
+    O(touched-buckets), not O(table)). An epoch is 3 Spark jobs at any
+    bucket count: one shuffle-free pass over the raw batch finds the
     touched buckets (``touched_buckets``), then one clustered write
     merges the raw events into those buckets' stored rows, compaction
-    included (``_merge``). Once the target holds more than 32
-    ``bucket=K`` directories it is 4: ``_scan``'s parquet read then
-    lists them with a Spark job of its own (parallel partition
-    discovery, above the session's
-    ``spark.sql.sources.parallelPartitionDiscovery.threshold``, 32).
+    included (``_merge``). ``_scan`` reads only the touched bucket
+    directories, in chunks small enough that Spark lists them without
+    a partition-discovery job of their own.
     Every epoch writes one file per touched bucket (per salt when bulk,
     ``_cluster_by_bucket``), and reads reuse the schema this instance
     last committed instead of inferring it from a parquet footer each
@@ -274,7 +273,14 @@ class MergeApplyTarget:
     ) -> DataFrame:
         """``read_current`` without the lock, for a caller that opened
         the target at ``fence``: the listing and the scan run unlocked
-        either way, and ``fence`` keys the stored-schema cache."""
+        either way, and ``fence`` keys the stored-schema cache.
+
+        Only bucket directories that hold data (of ``buckets``, when
+        given) are read; with none of them, an empty frame of the stored
+        schema. Spark lists more root paths than
+        ``spark.sql.sources.parallelPartitionDiscovery.threshold`` with
+        a Spark job of its own, so the directories are read in chunks of
+        at most that many, which it lists in-process, and unioned."""
         cols = self.key_cols + self.payload_cols
         if self.lww and internal:
             cols = cols + [self._SEQ, self._TOMB]
@@ -289,10 +295,22 @@ class MergeApplyTarget:
             # infers from the first file by path, maybe an older, narrower one)
             newest = max(files, key=os.path.getmtime)
             self._schema = (fence, spark.read.parquet(newest).schema)
-        df = spark.read.schema(self._schema[1]).option("basePath", self.path).parquet(self.path)
+        dirs = sorted({os.path.dirname(f) for f in files})
         if buckets is not None:
-            # partition pruning: only the touched bucket dirs are scanned
-            df = df.filter(F.col("bucket").isin(list(buckets)))
+            wanted = {f"bucket={b}" for b in buckets}
+            dirs = [d for d in dirs if os.path.basename(d) in wanted]
+        if dirs:
+            reader = spark.read.schema(self._schema[1]).option("basePath", self.path)
+            step = int(spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold"))
+            df = functools.reduce(
+                DataFrame.union,
+                [reader.parquet(*dirs[i : i + step]) for i in range(0, len(dirs), step)],
+            )
+        else:
+            # no touched bucket holds data yet: still the stored schema,
+            # so the merge's union widens a narrower batch to it instead
+            # of writing files narrower than the target's others
+            df = spark.createDataFrame([], self._schema[1])
         if self.lww and not internal:
             df = df.filter(~F.col(self._TOMB))
         return df.select(*cols)

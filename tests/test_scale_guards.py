@@ -671,7 +671,8 @@ def test_bulk_staged_write_is_partition_aligned(spark, monkeypatch, tmp_path):
     assert got == want and len(got) == 50_000
 
 
-def test_merge_epoch_writes_one_file_per_bucket(spark, tmp_path):
+@pytest.mark.parametrize("num_buckets", [16, 64])
+def test_merge_epoch_writes_one_file_per_bucket(spark, tmp_path, num_buckets):
     """Every staged write clusters its rows by bucket before the
     ``partitionBy("bucket")`` writer, so a streaming-sized epoch writes
     exactly one parquet file per touched bucket. Unclustered, each
@@ -687,8 +688,11 @@ def test_merge_epoch_writes_one_file_per_bucket(spark, tmp_path):
     launches at most 3 Spark jobs on Spark 4.1.2 with AQE on: 1 for the
     touched-bucket pass (a noop write observing the batch's buckets)
     and 2 for the clustered write. A separate compaction with a
-    touched-bucket ``distinct().collect()`` took 6. The count is read
-    through the public statusTracker job-group API, as in
+    touched-bucket ``distinct().collect()`` took 6. The count holds
+    above the 32 root paths past which Spark lists a read's
+    directories with a job of its own (64 buckets, all touched): the
+    merge's read of the whole target took a 4th job there. The count
+    is read through the public statusTracker job-group API, as in
     ``test_ivf_epoch_job_count_pinned``."""
     import glob
     import os
@@ -707,22 +711,23 @@ def test_merge_epoch_writes_one_file_per_bucket(spark, tmp_path):
             (F.col("id") * 0.5).alias("value"),
         )
 
-    tgt = MergeApplyTarget(str(tmp_path / "t"), num_buckets=16)
+    tgt = MergeApplyTarget(str(tmp_path / "t"), num_buckets=num_buckets)
     for e in range(3):
         assert tgt.apply_batch(epoch_log(e), epoch_id=e)
     sc = spark.sparkContext
-    sc.setJobGroup("merge_epoch_pin", "steady-state merge epoch job-count pin")
+    group = f"merge_epoch_pin_{num_buckets}"  # the tracker keeps finished groups
+    sc.setJobGroup(group, "steady-state merge epoch job-count pin")
     try:
         assert tgt.apply_batch(epoch_log(3), epoch_id=3)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    jobs = len(sc.statusTracker().getJobIdsForGroup("merge_epoch_pin"))
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
     per_bucket = {
         b: len(glob.glob(os.path.join(tgt.path, b, "*.parquet")))
         for b in os.listdir(tgt.path)
         if b.startswith("bucket=")
     }
-    assert len(per_bucket) == 16 and set(per_bucket.values()) == {1}, (
+    assert len(per_bucket) == num_buckets and set(per_bucket.values()) == {1}, (
         f"parquet files per bucket after 4 epochs: {per_bucket} — the staged "
         "write lost its bucket clustering and fans out per-task writers"
     )

@@ -7,6 +7,7 @@ batch answer. Golden result: empty diff."""
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 
@@ -219,6 +220,56 @@ def test_merge_target_reads_widened_schema(spark, tmp_path):
     )
     want.update({pk: (pk, 7.0) for pk in zero})
     assert state(fresh) == want
+    assert state(MergeApplyTarget(path, num_buckets=8)) == want
+
+
+def test_merge_target_keeps_stored_types_in_empty_buckets(spark, tmp_path):
+    """Epoch 1 stores ``k`` as bigint and leaves bucket 3 without data.
+    Epoch 2 sends ``k`` as int to bucket 3 only; epoch 4 does the same
+    to bucket 5 after epoch 3 deleted every key it held (an empty
+    directory). The touched buckets hold no files, yet the new files
+    must keep the stored bigint type: the writer and a fresh instance
+    both read every row back."""
+
+    def log(rows, ktype):
+        return spark.createDataFrame(
+            rows, f"seq long, table_name string, pk long, op string, k {ktype}, value double"
+        )
+
+    bucket = {
+        r["pk"]: r["b"]
+        for r in spark.range(200)
+        .select(F.col("id").alias("pk"), F.pmod(F.hash(F.lit("t"), "id"), F.lit(8)).alias("b"))
+        .collect()
+    }
+    path = str(tmp_path / "t")
+    writer = MergeApplyTarget(path, num_buckets=8)
+    first = [pk for pk in range(100) if bucket[pk] != 3]
+    assert writer.apply_batch(
+        log([(pk, "t", pk, "insert", (1 << 40) + pk, 1.0) for pk in first], "bigint"), 1
+    )
+    want = {pk: ((1 << 40) + pk, 1.0) for pk in first}
+    three = [pk for pk in range(100) if bucket[pk] == 3]
+    assert three
+    assert writer.apply_batch(log([(1000 + pk, "t", pk, "insert", pk, 2.0) for pk in three], "int"), 2)
+    want.update({pk: (pk, 2.0) for pk in three})
+
+    def state(t):
+        return {r["pk"]: (r["k"], r["value"]) for r in t.read_current(spark).collect()}
+
+    assert state(writer) == want
+    assert state(MergeApplyTarget(path, num_buckets=8)) == want
+    five = [pk for pk in first if bucket[pk] == 5]
+    assert writer.apply_batch(
+        log([(2000 + pk, "t", pk, "delete", None, None) for pk in five], "bigint"), 3
+    )
+    for pk in five:
+        del want[pk]
+    assert not glob.glob(os.path.join(path, "bucket=5", "*.parquet"))
+    late = [pk for pk in range(100, 200) if bucket[pk] == 5]
+    assert writer.apply_batch(log([(3000 + pk, "t", pk, "insert", pk, 3.0) for pk in late], "int"), 4)
+    want.update({pk: (pk, 3.0) for pk in late})
+    assert state(writer) == want
     assert state(MergeApplyTarget(path, num_buckets=8)) == want
 
 

@@ -18,6 +18,8 @@ import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import warm_up
+
 
 def rest(base: str, path: str):
     with urllib.request.urlopen(base + path, timeout=10) as r:
@@ -45,13 +47,7 @@ def main() -> int:
     import __spark_entry__ as entrymod
 
     qs = entrymod.queries()
-    from pipe_s_spark.sources import TABLES, load_table
-
-    for t in TABLES:
-        load_table(spark, sf_dir, t).write.format("noop").mode("overwrite").save()
-    spark.range(256).repartition(int(sc.defaultParallelism)).mapInPandas(
-        lambda it: it, schema="id long"
-    ).write.format("noop").mode("overwrite").save()
+    warm_up(spark, sf_dir)
 
     for name in names:
         if name not in qs:
