@@ -82,7 +82,7 @@ def shingles(
 
     id_type = df.schema[id_col].dataType.simpleString()
     # `n` (the doc's distinct-shingle count) rides along on every row:
-    # it is free here and lets jaccard_pairs skip a whole sizes
+    # it is free here and lets pair_counts skip a whole sizes
     # aggregation + two joins downstream.
     # r15: fan_out before the kernel — on a low-parallelism scan
     # (single-row-group file) the whole corpus was tokenized by ONE
@@ -165,7 +165,7 @@ def cap_group_size(df: DataFrame, cols: Sequence[str], cap: int) -> DataFrame:
     boilerplate docs in one band = 5*10^11 candidate pairs on a single
     reducer. Capping group size bounds any key's fan-out at C(cap, 2)
     and drops only groups that are already unusable as discriminating
-    candidates (same argument as jaccard_pairs' df_cap on
+    candidates (same argument as pair_counts' df_cap on
     stop-shingles). The count window shuffles on exactly the key the
     downstream join shuffles on, so the partitioning is reused."""
     w = Window.partitionBy(*[F.col(c) for c in cols])
@@ -176,11 +176,30 @@ def cap_group_size(df: DataFrame, cols: Sequence[str], cap: int) -> DataFrame:
     )
 
 
-def _posting_pair_counts(sh: DataFrame, id_col: str, df_cap: int) -> DataFrame:
-    """Shared core of set-overlap dedup: (d1, n1, d2, n2, c) with c =
-    common shingles counted via df-capped inverted posting lists —
-    pairs generated narrowly from array ops, exactly two shuffles, no
-    self-join. See :func:`jaccard_pairs` for the full scale argument."""
+def pair_counts(sh: DataFrame, id_col: str = "doc_id", df_cap: int = 100) -> DataFrame:
+    """Set-overlap core of near-dup detection: (d1, n1, d2, n2, c) with
+    c = common shingles of docs d1 < d2, from a (id, shingle, n)
+    relation (``shingles`` output) — the narrow persisted intermediate
+    both :func:`jaccard_from_counts` and
+    :func:`containment_from_counts` consume. Materialize this once per
+    corpus and derive every overlap measure from it.
+
+    The shuffle-minimal formulation, via a df-capped inverted list:
+
+    1. one groupBy(shingle) builds the posting list of (doc, size)
+       structs per shingle (map-side combine), dropping stop-shingles
+       with more than ``df_cap`` distinct docs — this bounds downstream
+       fan-out at C(df_cap, 2) pairs per shingle, so no skewed join key
+       can go quadratic at 100 TB;
+    2. candidate pairs are generated NARROWLY from each posting list
+       with array ops (no self-join of the shingle relation), carrying
+       both docs' TRUE set sizes along — no sizes relation, no joins;
+    3. one groupBy(pair) counts common (capped-index) shingles.
+
+    Exactly two shuffles end-to-end vs the classic self-join's shuffle
+    + skew-prone join + count + two size joins. The sizes are true
+    (uncapped) set sizes, so dropping stop-shingles can only
+    underestimate an overlap measure — candidates never inflate."""
     inv = (
         sh.groupBy("shingle")
         .agg(F.array_sort(F.collect_set(F.struct(F.col(id_col).alias("d"), F.col("n")))).alias("docs"))
@@ -206,15 +225,6 @@ def _posting_pair_counts(sh: DataFrame, id_col: str, df_cap: int) -> DataFrame:
     )
 
 
-def pair_counts(sh: DataFrame, id_col: str = "doc_id", df_cap: int = 100) -> DataFrame:
-    """Public form of the posting-list pair-count core: (d1, n1, d2,
-    n2, c) — the narrow persisted intermediate both Jaccard and
-    containment dedup consume (see :func:`jaccard_pairs` for the scale
-    argument). Materialize this once per corpus and derive every
-    overlap measure from it."""
-    return _posting_pair_counts(sh, id_col, df_cap)
-
-
 def jaccard_from_counts(counts: DataFrame, threshold: float = 0.15) -> DataFrame:
     """Jaccard pairs from a :func:`pair_counts` relation: c / (n1 + n2
     - c), thresholded. Narrow — no shuffle beyond what built the
@@ -233,7 +243,9 @@ def jaccard_from_counts(counts: DataFrame, threshold: float = 0.15) -> DataFrame
 
 def containment_from_counts(counts: DataFrame, threshold: float = 0.5) -> DataFrame:
     """Directional containment pairs from a :func:`pair_counts`
-    relation — |A∩B|/|A| and |A∩B|/|B|, kept when either clears
+    relation — |A∩B|/|A| and |A∩B|/|B| (Broder 1997's asymmetric
+    resemblance: high when one doc is an EXCERPT of the other even
+    though their Jaccard is low), kept when either clears
     ``threshold``. Narrow."""
     in2 = F.round(F.col("c").cast("double") / F.col("n1"), 6)
     in1 = F.round(F.col("c").cast("double") / F.col("n2"), 6)
@@ -251,53 +263,6 @@ def containment_from_counts(counts: DataFrame, threshold: float = 0.5) -> DataFr
     )
 
 
-def jaccard_pairs(
-    sh: DataFrame,
-    id_col: str = "doc_id",
-    df_cap: int = 100,
-    threshold: float = 0.15,
-) -> DataFrame:
-    """N-gram Jaccard near-dup pairs from a (id, shingle, n) relation
-    (``shingles`` output) via a df-capped inverted list — the
-    shuffle-minimal formulation:
-
-    1. one groupBy(shingle) builds the posting list of (doc, size)
-       structs per shingle (map-side combine), dropping stop-shingles
-       with more than ``df_cap`` distinct docs — this bounds downstream
-       fan-out at C(df_cap, 2) pairs per shingle, so no skewed join key
-       can go quadratic at 100 TB;
-    2. candidate pairs are generated NARROWLY from each posting list
-       with array ops (no self-join of the shingle relation), carrying
-       both docs' TRUE set sizes along — no sizes relation, no joins;
-    3. one groupBy(pair) counts common (capped-index) shingles and the
-       jaccard is c / (n1 + n2 - c).
-
-    Exactly two shuffles end-to-end vs the classic self-join's shuffle
-    + skew-prone join + count + two size joins. Note the denominator
-    uses true (uncapped) set sizes, so dropping stop-shingles can only
-    underestimate jaccard — candidates never inflate."""
-    return jaccard_from_counts(_posting_pair_counts(sh, id_col, df_cap), threshold)
-
-
-def containment_pairs(
-    sh: DataFrame,
-    id_col: str = "doc_id",
-    df_cap: int = 100,
-    threshold: float = 0.5,
-) -> DataFrame:
-    """Asymmetric set containment (Broder 1997's second resemblance
-    measure): |A∩B| / |A| — high when doc A is an EXCERPT of doc B even
-    though their Jaccard is low (the small-doc-inside-big-doc case
-    symmetric dedup misses). Emits pairs where either direction clears
-    ``threshold``, with both directions' scores.
-
-    Same two-shuffle df-capped posting-list core as
-    :func:`jaccard_pairs`; the denominators are each doc's true
-    (uncapped) shingle count, so stop-shingle dropping only ever
-    underestimates."""
-    return containment_from_counts(_posting_pair_counts(sh, id_col, df_cap), threshold)
-
-
 def simhash(df: DataFrame, id_col: str, text_col: str, bits: int = 64) -> DataFrame:
     """``bits``-wide SimHash per document (Charikar'02): each distinct
     token votes ±1 on each bit of the first ``bits`` bits of
@@ -310,8 +275,9 @@ def simhash(df: DataFrame, id_col: str, text_col: str, bits: int = 64) -> DataFr
     be a multiple of 4 (hex-nibble granularity) and at most 64; a
     64-bit signature with the top bit set is stored as its
     two's-complement (negative) int64 — Hamming distance via
-    bit_count(xor) is unaffected, and :func:`simhash_bands` extracts
-    bands with an UNSIGNED shift so banding is correct either way.
+    bit_count(xor) is unaffected, and a caller that bands the
+    signature must extract bands with an UNSIGNED shift
+    (``shiftrightunsigned``).
 
     Computed in an Arrow-batched mapInPandas kernel — a narrow map with
     ZERO shuffle (the expression formulation needed an explode +
@@ -363,38 +329,10 @@ def simhash(df: DataFrame, id_col: str, text_col: str, bits: int = 64) -> DataFr
 def simhash16(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Test-scale 16-bit SimHash — the width the oracle-checked queries
     pin so both engines hash the same literal plan. Production near-dup
-    jobs should use :func:`simhash` (64-bit default) with
-    :func:`simhash_bands`."""
+    jobs should use :func:`simhash` (64-bit default): 4 bands of 16
+    bits find every pair within Hamming distance 3 (pigeonhole —
+    Manku et al., WWW'07)."""
     return simhash(df, id_col, text_col, bits=16)
-
-
-def simhash_bands(sig: DataFrame, id_col: str, bits: int = 64, bands: int = 4) -> DataFrame:
-    """Band a SimHash signature for candidate generation: docs agreeing
-    on any ``bits/bands``-bit band are candidates (then verify with a
-    Hamming-distance check on the full signature). 64-bit / 4 bands
-    finds all pairs within Hamming distance 3 (pigeonhole — Manku et
-    al., WWW'07); the equi-join on (band_id, band_val) is the
-    shuffle-friendly formulation, and callers should cap degenerate
-    band groups with :func:`cap_group_size` before self-joining."""
-    rows = bits // bands
-    mask = (1 << rows) - 1
-    parts = [
-        F.struct(
-            F.lit(b).alias("band_id"),
-            # unsigned shift: a 64-bit signature with the top bit set is
-            # a negative int64, and an arithmetic shift would sign-extend
-            F.shiftrightunsigned(F.col("simhash"), rows * b)
-            .bitwiseAND(F.lit(mask))
-            .alias("band_val"),
-        )
-        for b in range(bands)
-    ]
-    return sig.select(id_col, "simhash", F.explode(F.array(*parts)).alias("band")).select(
-        id_col,
-        "simhash",
-        F.col("band.band_id").alias("band_id"),
-        F.col("band.band_val").alias("band_val"),
-    )
 
 
 #: contracted graphs at or below this many edges fold DRIVER-SIDE

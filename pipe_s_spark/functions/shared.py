@@ -52,11 +52,11 @@ _memo: OrderedDict[tuple, DataFrame] = OrderedDict()
 _evicted: list[DataFrame] = []
 #: Append-only log of BUILD events — ``(full_key, build_seconds)``
 #: pairs for every builder that actually ran — drained by the bench.
-#: Key-snapshot diffs (live_keys before/after) miss churn: a key
-#: built, FIFO-evicted, then REBUILT inside a timed run is net-absent
-#: from the snapshot diff, so the rebuild cost inside the reported
-#: median went unattributed (r9 advice). An event log counts builds,
-#: not net key presence. r16 (verdict #3): each event carries the
+#: A diff of the memo's keys before and after a run would miss churn:
+#: a key built, FIFO-evicted, then REBUILT inside a timed run is
+#: net-absent from the diff, so the rebuild cost inside the reported
+#: median would go unattributed (r9 advice). An event log counts
+#: builds, not net key presence. r16 (verdict #3): each event carries the
 #: BUILD WALL SECONDS so the artifact can publish the cold cost of
 #: every memoized family — a memo-consuming query's median measures a
 #: warm table, and without the build seconds beside it a cache shift
@@ -127,21 +127,11 @@ def scalar(
     return value
 
 
-def live_keys() -> set[tuple]:
-    """Snapshot of the memo's live keys (applicationId included) —
-    read-only introspection so the bench can attribute, per query,
-    which shared tables were BUILT during its runs vs already
-    memoized (a cache build hiding inside one query's timing is
-    otherwise indistinguishable from a plan regression)."""
-    return set(_memo.keys())
-
-
 def drain_build_log() -> list[tuple]:
     """Return and clear the accumulated build events —
     ``(full_key, build_seconds)`` in build order, duplicates preserved.
-    Unlike :func:`live_keys` snapshot diffs this attributes REBUILDS
-    after FIFO eviction, so the bench's built_timed field is
-    churn-proof."""
+    Unlike a diff of key snapshots this attributes REBUILDS after FIFO
+    eviction, so the bench's built_timed field is churn-proof."""
     global _build_log
     out, _build_log = _build_log, []
     return out

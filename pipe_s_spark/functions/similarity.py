@@ -159,22 +159,6 @@ def brute_force_topk(
 LSH_PLANES = 8
 
 
-def recommended_planes(n_rows: int, target_bucket_rows: int = 1024) -> int:
-    """The planes-grow-with-log2(n) rule above, executable: the number
-    of hyperplanes that keeps expected bucket size near
-    ``target_bucket_rows`` for an ``n_rows`` corpus (never below the
-    test-scale LSH_PLANES, capped at 30 so the bucket id stays a safe
-    int32). A production job sizes its signature with
-    ``lsh_bucket(vec, planes=recommended_planes(corpus_count))``; the
-    oracle-checked queries pin planes=LSH_PLANES so both engines hash
-    the same literal plan."""
-    import math
-
-    if n_rows <= target_bucket_rows:
-        return LSH_PLANES
-    return min(30, max(LSH_PLANES, math.ceil(math.log2(n_rows / target_bucket_rows))))
-
-
 def plane_weight_value(plane: int, dim_idx: int) -> float:
     """Deterministic pseudo-random weight in [-0.5, 0.5): first 4 hex
     chars of md5('p{plane}d{dim}') scaled. Computed once driver-side --
@@ -246,8 +230,8 @@ def auto_planes(
 ) -> int:
     """Corpus-sized plane count in EXACT integer arithmetic: the
     smallest p in [LSH_PLANES, max_planes] with target * 2^p >= n
-    (i.e. ceil(log2(n / target)) clamped — :func:`recommended_planes`
-    without the float log2, so an SQL oracle computing the same
+    (i.e. ceil(log2(n / target)) clamped — the ``LSH_PLANES`` rule of
+    thumb without the float log2, so an SQL oracle computing the same
     comparison chain from COUNT(*) matches bit-for-bit at every
     boundary)."""
     for p in range(LSH_PLANES, max_planes + 1):
@@ -873,7 +857,8 @@ def knn_graph_blocked(
     group, whose local top-k lists therefore contain the global top-k;
     a window partitioned by node ranks them. Candidate volume is
     n * B * k rows; for approximate graphs at corpus scale, rank
-    :func:`lsh_candidates_multi` candidates instead."""
+    :func:`grouped_knn_candidates` over
+    :func:`multi_table_signatures` instead."""
     from pyspark.sql.window import Window
 
     cand = _block_pairs(corpus, id_col, vec_col).applyInPandas(

@@ -96,59 +96,3 @@ def snapshot_asof(
     )
 
 
-def scd2_apply(
-    history: DataFrame | None,
-    batch: DataFrame,
-    key_cols: Sequence[str] = ("table_name", "pk"),
-    payload_cols: Sequence[str] = ("k", "value"),
-    seq_col: str = "seq",
-    ts_col: str = "ts_ms",
-    op_col: str = "op",
-) -> DataFrame:
-    """Incrementally fold one changelog chunk into an SCD2 history.
-
-    The streaming form of :func:`scd2_history`: applying a changelog in
-    ANY per-key-ordered chunking yields bit-identical history to one
-    full-log rebuild (property-tested over random chunkings), because
-    the fold preserves the invariants version-count = prior non-delete
-    events and valid_to = next event's time:
-
-    - untouched keys pass through;
-    - a touched key's OPEN version closes at the chunk's first event
-      time for that key (any op — an update supersedes, a delete
-      closes);
-    - the chunk's own versions (batch-local :func:`scd2_history`) are
-      appended with their version numbers offset by the key's stored
-      version count.
-
-    Ordering contract: chunks must be per-key ordered (binlog segments
-    / key-partitioned Kafka — the same assumption the reference's
-    batch sink makes, batchoutput.go:164-190). Scale: two hash joins
-    on the key + the batch-local window; the history table is only
-    read, never re-windowed — per epoch the work is O(batch + touched
-    history), not O(history).
-    """
-    keys = list(key_cols)
-    batch_hist = scd2_history(batch, keys, payload_cols, seq_col, ts_col, op_col)
-    if history is None:
-        return batch_hist
-    firsts = batch.groupBy(*keys).agg(F.min(ts_col).alias("__first_ts"))
-    base_ver = history.groupBy(*keys).agg(F.max("version").alias("__base_ver"))
-
-    untouched = history.join(firsts.select(*keys), keys, "left_anti")
-    touched = history.join(firsts, keys)
-    closed = touched.filter(F.col("valid_to").isNotNull()).drop("__first_ts")
-    newly_closed = (
-        touched.filter(F.col("valid_to").isNull())
-        .withColumn("valid_to", F.col("__first_ts"))
-        .withColumn("is_current", F.lit(False))
-        .drop("__first_ts")
-    )
-    appended = (
-        batch_hist.join(base_ver, keys, "left")
-        .withColumn(
-            "version", F.col("version") + F.coalesce("__base_ver", F.lit(0))
-        )
-        .drop("__base_ver")
-    )
-    return untouched.unionByName(closed).unionByName(newly_closed).unionByName(appended)

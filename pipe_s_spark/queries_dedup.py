@@ -129,7 +129,7 @@ WHERE ROUND(CAST(dot AS DOUBLE)
 
 def q_dedup_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """N-gram Jaccard near-dup pairs via a df-capped inverted posting
-    list (see functions.dedup.jaccard_pairs — no self-join, bounded
+    list (see functions.dedup.pair_counts — no self-join, bounded
     per-shingle fan-out). Pair counts come from the shared materialized
     posting-counts table (functions.shared)."""
     return D.jaccard_from_counts(_posting_counts_cached(spark, sf_dir), threshold=0.15)
@@ -160,7 +160,7 @@ def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Asymmetric containment pairs (Broder 1997): |A∩B|/|A| catches a
     short doc embedded verbatim in a long one — the excerpt/quote case
     where Jaccard stays low. Same two-shuffle posting-list core as
-    dedup_jaccard_pairs (functions.dedup.containment_pairs), read from
+    dedup_jaccard_pairs (functions.dedup.pair_counts), read from
     the same shared materialized posting-counts table."""
     return D.containment_from_counts(_posting_counts_cached(spark, sf_dir), threshold=0.5)
 

@@ -216,7 +216,7 @@ FROM (
 
 
 #: Multi-table LSH geometry for the approximate kNN graph (OR over
-#: KNN_LSH_TABLES independent plane sets — see lsh_candidates_multi).
+#: KNN_LSH_TABLES independent plane sets — see multi_table_signatures).
 #: 8 tables WITH radius-1 multiprobe: measured edge recall vs the
 #: exact graph 0.605 at sf0.01 / 0.695 at sf0.1 — vs 0.26/0.31 for the
 #: r9 geometry (16 tables, no probing) at comparable candidate cost
@@ -238,9 +238,10 @@ def q_sim_knn_graph_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     of sim_knn_graph (which is exact all-pairs BY CONTRACT and measured
     alpha_x10 ~ 1.6 in the x10 scaling study): candidates come from
     multi-table hyperplane LSH with RADIUS-1 MULTIPROBE
-    (functions.similarity.lsh_candidates_multi — KNN_LSH_TABLES OR-ed
-    hash tables, each vector additionally keyed under every
-    one-bit-masked bucket so Hamming<=1 pairs meet in an equi-join;
+    (functions.similarity.multi_table_signatures plus
+    grouped_knn_candidates — KNN_LSH_TABLES OR-ed hash tables, each
+    vector additionally keyed under every one-bit-masked bucket so
+    Hamming<=1 pairs meet in an equi-join;
     one Arrow signature pass + one coarse-batched grouped verify
     kernel with the group cap fused in), then the same per-node
     rank-window tail emits each node's top-3 verified-cosine

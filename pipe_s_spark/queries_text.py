@@ -430,7 +430,7 @@ def q_corpus_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     At 100 TB: each side reduces to (key, 16-byte digest, lang) before
     the join — the shuffle moves digests, never documents; with both
-    snapshots bucketed by doc_id (sources.layout.write_bucketed) the
+    snapshots bucketed by doc_id (``bucketBy(n, "doc_id")``) the
     full-outer join runs zero-shuffle. One join + one vocabulary-sized
     rollup, nothing else."""
     docs = load_table(spark, sf_dir, "documents")

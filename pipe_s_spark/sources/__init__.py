@@ -1,4 +1,4 @@
-from pipe_s_spark.sources.readers import TABLES, load_table, load_tables, scan_tables
+from pipe_s_spark.sources.readers import TABLES, load_table, load_tables
 from pipe_s_spark.sources.kafka import decode_changelog_frame, read_kafka_changelog
 from pipe_s_spark.sources.failover import (
     EndpointChangeTracker,
@@ -12,7 +12,6 @@ __all__ = [
     "TABLES",
     "load_table",
     "load_tables",
-    "scan_tables",
     "decode_changelog_frame",
     "read_kafka_changelog",
     "EndpointChangeTracker",

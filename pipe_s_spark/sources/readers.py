@@ -7,11 +7,10 @@ pagination scanners. In Spark the same capability is declarative:
 - parquet/file scans are split into partitions by the data source
   (``spark.sql.files.maxPartitionBytes``), with column pruning and
   predicate pushdown planned by Catalyst — the scanner loop disappears;
-- JDBC scans get the partitioned-parallel-read behavior via
-  ``partitionColumn/lowerBound/upperBound/numPartitions`` (keyset
-  pagination is strictly subsumed);
-- regex table discovery (scaninput.go:150-170) maps to
-  ``scan_tables(spark, dir, regex)``.
+- JDBC scans get the partitioned-parallel-read behavior from
+  ``spark.read.jdbc(url, table, column=..., lowerBound=...,
+  upperBound=..., numPartitions=...)`` directly (keyset pagination is
+  strictly subsumed).
 
 Timestamp normalization: the driver testdata stores ``events.ts`` as
 INT64 TIMESTAMP(NANOS); Spark has no nanosecond timestamp so the session
@@ -23,7 +22,6 @@ applies, keeping the oracle comparable.
 from __future__ import annotations
 
 import os
-import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -116,42 +114,3 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {t: load_table(spark, sf_dir, t) for t in TABLES}
 
 
-def scan_tables(spark: SparkSession, sf_dir: str, table_regex: str) -> dict[str, DataFrame]:
-    """Regex table discovery — parity with MysqlScanInput's
-    INFORMATION_SCHEMA listing (scaninput.go:150-170)."""
-    pat = re.compile(table_regex)
-    out: dict[str, DataFrame] = {}
-    for fn in sorted(os.listdir(sf_dir)):
-        if fn.endswith(".parquet"):
-            name = fn[: -len(".parquet")]
-            if pat.fullmatch(name) or pat.match(name):
-                out[name] = load_table(spark, sf_dir, name)
-    return out
-
-
-def jdbc_scan(
-    spark: SparkSession,
-    url: str,
-    table: str,
-    partition_column: str,
-    lower: int,
-    upper: int,
-    num_partitions: int = 8,
-    **options: str,
-) -> DataFrame:
-    """Partitioned-parallel JDBC scan — the declarative equivalent of the
-    reference's concurrent keyset-pagination scanners
-    (scaninput.go:413-436). Untested in this environment (no DB); the
-    call shape is the production path for MySQL snapshot reads.
-    """
-    return (
-        spark.read.format("jdbc")
-        .option("url", url)
-        .option("dbtable", table)
-        .option("partitionColumn", partition_column)
-        .option("lowerBound", str(lower))
-        .option("upperBound", str(upper))
-        .option("numPartitions", str(num_partitions))
-        .options(**options)
-        .load()
-    )

@@ -1,8 +1,4 @@
 from pipe_s_spark.streaming.delta_apply import DeltaAppendTarget
-from pipe_s_spark.streaming.joins import (
-    dedup_within_watermark,
-    stream_stream_interval_join,
-)
 from pipe_s_spark.streaming.merge_apply import (
     MergeApplyTarget,
     run_merge_apply_stream,
@@ -12,8 +8,6 @@ from pipe_s_spark.streaming.merge_apply import (
 __all__ = [
     "DeltaAppendTarget",
     "MergeApplyTarget",
-    "dedup_within_watermark",
     "run_merge_apply_stream",
     "stream_changelog_json",
-    "stream_stream_interval_join",
 ]

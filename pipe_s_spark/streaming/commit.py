@@ -11,11 +11,11 @@ a finished swap.
 
 A sink's own metadata is a small JSON file beside its data: a fence or
 watermark (a bare integer, written as a ``commit`` file or by
-``write_atomic``), a view's state, or a layout or contract that
-``pin`` records once and verifies on every later open. ``read_json``
-reads them all with one error policy: a missing file is the caller's
-default, any other error propagates, so a damaged fence never reads
-as "nothing applied yet".
+``write_atomic``), or a layout or contract that ``pin`` records once
+and verifies on every later open. ``read_json`` reads them all with
+one error policy: a missing file is the caller's default, any other
+error propagates, so a damaged fence never reads as "nothing applied
+yet".
 
 A swap (``commit``) is journal -> park -> install -> files -> clean:
 
@@ -51,7 +51,6 @@ FAULT_POINTS = (
     "files-written",
     "cleaned",
     "fold-committed",
-    "view-state-written",
 )
 
 _JOURNAL = "._journal"

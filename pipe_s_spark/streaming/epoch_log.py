@@ -1,7 +1,7 @@
 """The one epoch-partition log under every append sink (the dedup and
-IVF indexes and their side tables, the quarantine gate, the delta CDC
-target): a directory of ``batch_id=N`` hive partitions, one per
-micro-batch epoch. Only this module knows that layout.
+IVF indexes and their side tables, the delta CDC target): a directory
+of ``batch_id=N`` hive partitions, one per micro-batch epoch. Only
+this module knows that layout.
 
 ``append`` writes one epoch by dynamic partition overwrite, so a
 replay rewrites its own partition and no other; ``install`` is its

@@ -15,14 +15,12 @@ from __future__ import annotations
 import glob
 import os
 import shutil
-from decimal import Decimal
 
 import pytest
 
 from pipe_s_spark.streaming import commit, epoch_log
 from pipe_s_spark.streaming.epoch_log import compact_index_partitions
 from pipe_s_spark.streaming.delta_apply import DeltaAppendTarget
-from pipe_s_spark.streaming.incremental_agg import IncrementalAggView
 from pipe_s_spark.streaming.merge_apply import (
     FLAT_CHANGELOG_SCHEMA,
     MergeApplyTarget,
@@ -42,13 +40,10 @@ ONE_ROW = [(0, "t0", "insert", 0, 1, 0.0)]
 LEDGER = [(i % 4, f"v{i % 3}", b) for b in range(4) for i in range(6)]
 
 #: points before the journal of the commit a user's state depends on
-PRE_JOURNAL = {"staged", "view-state-written"}
+PRE_JOURNAL = {"staged"}
 PRIMITIVE = ("staged", "journaled", "mid-park", "mid-install", "files-written", "cleaned")
-USERS = ("merge", "rebucket", "compaction", "fold", "view", "append", "truncate")
-CASES = [(u, p) for u in USERS for p in PRIMITIVE] + [
-    ("fold", "fold-committed"),
-    ("view", "view-state-written"),
-]
+USERS = ("merge", "rebucket", "compaction", "fold", "append", "truncate")
+CASES = [(u, p) for u in USERS for p in PRIMITIVE] + [("fold", "fold-committed")]
 
 
 class Killed(RuntimeError):
@@ -181,34 +176,6 @@ class Fold:
         assert _rows(DeltaAppendTarget(d + "/delta").read_merged(spark, base)) == self.committed_state
 
 
-class View:
-    roots = ("t",)
-    parent_state = _lww(BASE)
-    committed_state = _lww(BASE + UPSERTS)
-
-    def _view(self, d):
-        return IncrementalAggView(MergeApplyTarget(d + "/t", num_buckets=4), d + "/v")
-
-    def setup(self, spark, d):
-        self._view(d).apply_batch(_mk(spark, BASE), 0)
-
-    def run(self, spark, d):
-        self._view(d).apply_batch(_mk(spark, UPSERTS), 1)
-
-    def state(self, spark, d):
-        return _target_rows(spark, d + "/t")
-
-    def check(self, spark, d):
-        assert self.state(spark, d) == self.committed_state
-        want = {}
-        for t, _pk, _k, v in self.committed_state:
-            n, s = want.get(t, (0, Decimal(0)))
-            want[t] = (n + 1, s + Decimal(str(v)))
-        view = self._view(d).current(spark).collect()
-        got = {r["table_name"]: (r["n_rows"], r["sum_value"]) for r in view}
-        assert got == {t: (n, float(s)) for t, (n, s) in want.items()}
-
-
 class Append:
     """The driver-side staged append (the IVF cell ledger's write)."""
 
@@ -266,7 +233,7 @@ class Truncate:
 
 
 USER = dict(
-    zip(USERS, (Merge(), Rebucket(), Compaction(), Fold(), View(), Append(), Truncate()))
+    zip(USERS, (Merge(), Rebucket(), Compaction(), Fold(), Append(), Truncate()))
 )
 
 
@@ -414,8 +381,8 @@ def _streaming_sites(match) -> set[str]:
 
 def test_only_commit_module_opens_sink_files():
     """``streaming/commit.py`` is the one streaming module that calls the
-    builtin ``open``: every fence, watermark, layout, contract and view
-    state goes through ``commit.read_json``, ``commit.pin`` or
+    builtin ``open``: every fence, watermark, layout and contract goes
+    through ``commit.read_json``, ``commit.pin`` or
     ``commit.write_atomic``."""
     import ast
 
@@ -502,13 +469,10 @@ def test_merge_epoch_opens_and_swaps_its_target_once(spark, tmp_path, monkeypatc
     """A merge epoch locks its target twice: the open at entry (which
     recovers, pins ``._layout`` and reads the fence) and the swap (which
     recovers, re-reads the fence and re-pins). A fence-replayed epoch
-    stops after the open. A view epoch adds its own pre-image open and
-    its locked fold."""
+    stops after the open."""
     d = str(tmp_path)
     target = MergeApplyTarget(d + "/t", num_buckets=4)
     target.apply_batch(_mk(spark, BASE), 0)
-    view = IncrementalAggView(MergeApplyTarget(d + "/vt", num_buckets=4), d + "/v")
-    view.apply_batch(_mk(spark, BASE), 0)
     upserts = _mk(spark, UPSERTS)
     counts = _counting(monkeypatch)
 
@@ -519,7 +483,6 @@ def test_merge_epoch_opens_and_swaps_its_target_once(spark, tmp_path, monkeypatc
 
     assert run(lambda: target.apply_batch(upserts, 1)) == (2, 2, 2, 6)
     assert run(lambda: target.apply_batch(upserts, 1)) == (1, 1, 1, 3)
-    assert run(lambda: view.apply_batch(upserts, 1)) == (4, 4, 3, 12)
     assert _rows(target.read_current(spark)) == _lww(BASE + UPSERTS)
 
 

@@ -184,49 +184,6 @@ def test_compaction_ledger_mode_preserves_duplicates(spark, tmp_path):
     assert got == [(1, "x", 1), (1, "x", 1), (1, "x", 1), (2, "y", 2)]
 
 
-def test_quarantine_gate_with_compaction(spark, tmp_path):
-    """The gate's three sinks fold during the stream (dedupe=False)
-    and every row/metric survives."""
-    from pipe_s_spark.operators.expectations import ExpectationSuite
-    from pipe_s_spark.streaming.quarantine import run_quarantine_gate
-
-    src = tmp_path / "src"
-    rows = [(i, float(i % 5) - 1.0) for i in range(60)]  # value -1 violates
-    df = spark.createDataFrame(rows, "id long, value double")
-    for w in range(3):
-        df.filter(F.col("id") % 3 == w).coalesce(1).write.parquet(str(src / f"w{w}"))
-    stream = (
-        spark.readStream.schema("id long, value double")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src / "*"))
-    )
-    suite = ExpectationSuite("t").in_range("value", lo=0.0)
-    good, bad, met, ck = (str(tmp_path / d) for d in ("good", "bad", "met", "ck"))
-    run_quarantine_gate(
-        stream, suite, good, bad, met, ck, compact_every=2, await_seconds=240
-    )
-    n_bad = sum(1 for _, v in rows if v < 0)
-    assert spark.read.parquet(good).count() == len(rows) - n_bad
-    assert spark.read.parquet(bad).count() == n_bad
-    m = spark.read.parquet(met)
-    assert m.agg(F.sum("violations")).collect()[0][0] == n_bad
-    # per-batch ATTRIBUTION survives the fold: 'epoch' is a data
-    # column, so folding partitions cannot smear batches together
-    epochs = sorted(r["epoch"] for r in m.select("epoch").distinct().collect())
-    assert epochs == [0, 1, 2]
-    per_epoch = {
-        r["epoch"]: r["violations"]
-        for r in m.groupBy("epoch").agg(F.sum("violations").alias("violations")).collect()
-    }
-    assert sum(per_epoch.values()) == n_bad and all(v > 0 for v in per_epoch.values())
-    import os
-
-    parts = sorted(
-        e for e in os.listdir(good) if e.startswith("batch_id=")
-    )
-    assert parts == ["batch_id=1", "batch_id=2"]
-
-
 def test_compaction_is_default_on_across_continuous_sinks():
     """Compaction must not depend on the caller remembering to opt in
     (the band_cap precedent): every continuous-index sink's
@@ -239,10 +196,9 @@ def test_compaction_is_default_on_across_continuous_sinks():
 
     from pipe_s_spark.streaming.epoch_log import DEFAULT_COMPACT_EVERY
     from pipe_s_spark.streaming.ivf_index import run_ivf_index_stream
-    from pipe_s_spark.streaming.quarantine import run_quarantine_gate
 
     assert isinstance(DEFAULT_COMPACT_EVERY, int) and DEFAULT_COMPACT_EVERY > 0
-    for fn in (run_dedup_index_stream, run_ivf_index_stream, run_quarantine_gate):
+    for fn in (run_dedup_index_stream, run_ivf_index_stream):
         default = inspect.signature(fn).parameters["compact_every"].default
         assert default == DEFAULT_COMPACT_EVERY, (
             f"{fn.__name__}: compact_every defaults to {default!r}, "

@@ -191,3 +191,34 @@ def test_unique_ignores_null_keys(spark):
     )
     rep2 = ExpectationSuite("t").unique("id").run(nulls).collect()[0]
     assert rep2["violations"] == 0 and bool(rep2["passed"])
+
+
+def test_unique_rejected_for_row_tagging(spark):
+    import pytest
+
+    df = spark.range(3)
+    with pytest.raises(ValueError):
+        ExpectationSuite("t").unique("id").tag(df)
+
+
+def test_tag_fk_on_stream_static_join(spark, tmp_path):
+    """``tag`` runs on an unbounded stream: the FK check becomes a
+    stream-static broadcast join. A null FK is not a violation; 99
+    misses the dim."""
+    src = str(tmp_path / "src")
+    spark.createDataFrame(
+        [(1, 10), (2, 99), (3, None)], "id long, fk long"
+    ).coalesce(1).write.parquet(src)
+    dim = spark.createDataFrame([(10,), (20,)], "pk long")
+    stream = spark.readStream.schema("id long, fk long").parquet(src)
+    tagged = ExpectationSuite("t").foreign_key("fk", dim, "pk").tag(stream)
+    q = (
+        tagged.writeStream.format("memory")
+        .queryName("fk_tag_out")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    tags = {r["id"]: list(r["_violated"]) for r in spark.sql("SELECT * FROM fk_tag_out").collect()}
+    assert tags == {1: [], 2: ["foreign_key:fk"], 3: []}

@@ -1,5 +1,5 @@
-"""Storage-layout contracts: partition pruning and shuffle-free
-bucketed joins, asserted on the physical plans."""
+"""Storage-layout contracts: z-order clustered writes give disjoint
+key ranges per file, and the key interleaves bits in both dialects."""
 
 from __future__ import annotations
 
@@ -7,69 +7,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from pipe_s_spark.sources import load_table
-from pipe_s_spark.sources.layout import write_bucketed, write_time_partitioned
 
 SF = "/root/testdata/sf0.001"
-
-
-def test_time_partitioned_write_prunes(spark, tmp_path):
-    ev = load_table(spark, SF, "events")
-    path = str(tmp_path / "events_by_day")
-    write_time_partitioned(ev, path, ts_col="ts")
-
-    df = spark.read.parquet(path)
-    one_day = df.select("p_date").distinct().orderBy("p_date").first()["p_date"]
-    q = df.filter(F.col("p_date") == one_day).select("event_id")
-    plan = q._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan
-    # pruned scan reads strictly fewer rows than the table holds
-    assert 0 < q.count() < ev.count()
-
-
-def test_bucketed_tables_join_without_shuffle(spark, tmp_path):
-    spark.conf.set("spark.sql.sources.bucketing.enabled", "true")
-    orders = load_table(spark, SF, "orders")
-    li = load_table(spark, SF, "lineitem")
-    write_bucketed(orders, "t_orders_b", ["o_orderkey"], num_buckets=4)
-    write_bucketed(
-        li.withColumnRenamed("l_orderkey", "o_orderkey"),
-        "t_lineitem_b",
-        ["o_orderkey"],
-        num_buckets=4,
-    )
-    try:
-        a = spark.table("t_orders_b")
-        b = spark.table("t_lineitem_b")
-        # disable broadcast so the co-located (bucketed) path is what
-        # avoids the shuffle, not a broadcast
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        j = a.join(b, "o_orderkey").groupBy("o_orderstatus").count()
-        plan = j._jdf.queryExecution().executedPlan().toString()
-        join_section = plan.split("SortMergeJoin")[-1] if "SortMergeJoin" in plan else plan
-        # neither join input re-shuffles: no hashpartitioning exchange
-        # between the join and the bucketed scans
-        assert "SortMergeJoin" in plan
-        assert "Exchange hashpartitioning(o_orderkey" not in plan
-        assert j.count() > 0
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        spark.sql("DROP TABLE IF EXISTS t_orders_b")
-        spark.sql("DROP TABLE IF EXISTS t_lineitem_b")
-
-
-def test_write_sharded_controls_file_count(spark, tmp_path):
-    import glob
-
-    from pipe_s_spark.sources.layout import write_sharded
-
-    li = load_table(spark, SF, "lineitem")
-    out = str(tmp_path / "shards")
-    # tiny target forces multiple shards even at sf0.001
-    shards = write_sharded(li, out, target_file_mb=1)
-    files = glob.glob(f"{out}/part-*.parquet")
-    assert shards >= 1 and len(files) == shards
-    got = spark.read.parquet(out)
-    assert got.count() == li.count()
 
 
 def test_zorder_clustered_write_gives_disjoint_key_ranges(spark, tmp_path):

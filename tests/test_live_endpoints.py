@@ -130,43 +130,6 @@ def test_mysql_upsert_roundtrip_and_idempotency(spark):
         con.close()
 
 
-@pytest.mark.skipif(not MYSQL_URL, reason="SPARK_GRAFT_MYSQL_URL not set")
-def test_mysql_jdbc_partitioned_scan(spark):
-    """jdbc_scan against a live MySQL: partitioned read returns every
-    row exactly once. Skips if the MySQL JDBC driver jar is not on the
-    Spark classpath (add spark.jars=mysql-connector-j-<ver>.jar)."""
-    pytest.importorskip("pymysql", reason="no DB-API MySQL driver available")
-    from py4j.protocol import Py4JJavaError
-
-    from pipe_s_spark.sources.readers import jdbc_scan
-
-    u = urlparse(MYSQL_URL)
-    table = f"pipe_s_scan_{uuid.uuid4().hex[:12]}"
-    con = _mysql_connect()
-    cur = con.cursor()
-    cur.execute(f"CREATE TABLE `{table}` (id BIGINT PRIMARY KEY, v VARCHAR(32))")
-    try:
-        cur.executemany(
-            f"INSERT INTO `{table}` VALUES (%s, %s)", [(i, f"v{i}") for i in range(100)]
-        )
-        jdbc_url = (
-            f"jdbc:mysql://{u.hostname}:{u.port or 3306}{u.path}"
-            f"?user={u.username}&password={u.password}"
-        )
-        try:
-            df = jdbc_scan(spark, jdbc_url, table, "id", 0, 99, num_partitions=4)
-            assert df.count() == 100
-            assert df.agg(F.countDistinct("id")).collect()[0][0] == 100
-        except Py4JJavaError as err:
-            if "ClassNotFoundException" in str(err):
-                pytest.skip("MySQL JDBC driver jar not on the Spark classpath")
-            raise
-    finally:
-        cur.execute(f"DROP TABLE IF EXISTS `{table}`")
-        cur.close()
-        con.close()
-
-
 @pytest.mark.skipif(not KAFKA_BOOTSTRAP, reason="SPARK_GRAFT_KAFKA_BOOTSTRAP not set")
 def test_kafka_stream_roundtrip(spark, tmp_path):
     """write_kafka_stream -> real broker -> batch Kafka read-back.

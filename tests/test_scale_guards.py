@@ -100,19 +100,6 @@ def test_pack_assign_semantics(spark):
     assert not multi_doc_over
 
 
-def test_recommended_planes_grows_log2():
-    from pipe_s_spark.functions.similarity import LSH_PLANES, recommended_planes
-
-    assert recommended_planes(1_000) == LSH_PLANES  # never below test scale
-    assert recommended_planes(1 << 20) == max(LSH_PLANES, 10)
-    # 10^10 docs / 1024-per-bucket ≈ 2^23.2 buckets → 24 planes
-    assert recommended_planes(10_000_000_000) == 24
-    assert recommended_planes(1 << 62) == 30  # int32-safe cap
-    # monotone in n
-    vals = [recommended_planes(10**k) for k in range(3, 14)]
-    assert vals == sorted(vals)
-
-
 def test_countmin_overestimates_and_is_exact_without_collisions(spark):
     from pipe_s_spark.functions import sketches as K
 
@@ -345,12 +332,13 @@ def test_global_shuffle_is_a_permutation(spark, tmp_path):
 
 @pytest.mark.parametrize("seed", [7, 23, 99])
 def test_jaccard_pairs_matches_bruteforce_random_corpus(spark, seed):
-    """jaccard_pairs (df-capped inverted-index formulation) equals the
+    """jaccard_from_counts over pair_counts (the df-capped
+    inverted-index composition dedup_jaccard_pairs runs) equals the
     naive all-pairs set-Jaccard when the cap doesn't bite — on random
     corpora, not just the fixed testdata."""
     import random
 
-    from pipe_s_spark.functions.dedup import jaccard_pairs, shingles
+    from pipe_s_spark.functions.dedup import jaccard_from_counts, pair_counts, shingles
 
     rng = random.Random(seed)
     vocab = [f"w{i}" for i in range(30)]
@@ -366,7 +354,7 @@ def test_jaccard_pairs_matches_bruteforce_random_corpus(spark, seed):
     sh = shingles(df, "doc_id", "text", k=3)
     got = {
         (r["d1"], r["d2"]): r["jaccard"]
-        for r in jaccard_pairs(sh, df_cap=10_000, threshold=0.0).collect()
+        for r in jaccard_from_counts(pair_counts(sh, df_cap=10_000), threshold=0.0).collect()
     }
 
     def shingle_set(text):

@@ -1,12 +1,9 @@
-"""Tests for JDBC upsert SQL generation, Kafka frame shaping, and
-stateful streaming operators."""
+"""Tests for JDBC upsert SQL generation and Kafka frame shaping."""
 
 from __future__ import annotations
 
 import json
 import os
-
-from pyspark.sql import functions as F
 
 from pipe_s_spark.sinks import build_upsert_statements, jdbc_upsert_writer, kafka_sink_frame
 from pipe_s_spark.sources import load_table
@@ -82,81 +79,6 @@ def test_kafka_frame_null_key_roundrobin(spark):
     df = spark.createDataFrame([(1,)], "a long")
     rows = kafka_sink_frame(df).collect()
     assert rows[0].key is None  # null key -> round-robin partitioner
-
-
-def _stream_changelog(spark, tmp_path):
-    from pipe_s_spark.model import changelog_from_events
-    from pipe_s_spark.streaming.merge_apply import FLAT_CHANGELOG_SCHEMA
-
-    cl = changelog_from_events(load_table(spark, SF, "events")).orderBy("seq")
-    d = tmp_path / "cl"
-    d.mkdir()
-    rows = [r.asDict() for r in cl.collect()]
-    per = (len(rows) + 3) // 4
-    for i in range(4):
-        with open(d / f"p{i}.json", "w") as f:
-            for r in rows[i * per : (i + 1) * per]:
-                f.write(json.dumps(r) + "\n")
-        # the file source takes files in modification-time order; files
-        # written in the same millisecond tie, and the directory listing
-        # then decides. One second apart, p0..p3 is the batch order.
-        t = 1_700_000_000 + i
-        os.utime(d / f"p{i}.json", (t, t))
-    return spark.readStream.schema(FLAT_CHANGELOG_SCHEMA).option(
-        "maxFilesPerTrigger", 1
-    ).json(str(d))
-
-
-def test_streaming_dedup_first_wins(spark, tmp_path):
-    from pipe_s_spark.streaming.stateful import apply_streaming_dedup
-
-    stream = _stream_changelog(spark, tmp_path).select("table_name", "pk", "seq", "op")
-    deduped = apply_streaming_dedup(stream, ["table_name", "pk"])
-    q = (
-        deduped.writeStream.format("memory")
-        .queryName("dedup_out")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .start()
-    )
-    q.awaitTermination(120)
-    got = spark.sql("SELECT * FROM dedup_out")
-    n_keys = got.select("table_name", "pk").distinct().count()
-    assert got.count() == n_keys, "exactly one row per key"
-    # first-wins: emitted seq must be the min seq of its key within its batch order
-    cl = spark.read.json(str(tmp_path / "cl"))
-    mins = cl.groupBy("table_name", "pk").agg(F.min("seq").alias("min_seq"))
-    joined = got.join(mins, ["table_name", "pk"]).filter(F.col("seq") != F.col("min_seq"))
-    assert joined.count() == 0
-
-
-def test_streaming_last_state(spark, tmp_path):
-    from pipe_s_spark.streaming.stateful import apply_streaming_last_state
-
-    stream = _stream_changelog(spark, tmp_path).select("table_name", "pk", "seq", "k")
-    latest = apply_streaming_last_state(stream, ["table_name", "pk"])
-    q = (
-        latest.writeStream.format("memory")
-        .queryName("last_out")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", str(tmp_path / "ck2"))
-        .start()
-    )
-    q.awaitTermination(120)
-    got = spark.sql("SELECT * FROM last_out")
-    # final emitted row per key must be the overall max-seq row
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("table_name", "pk").orderBy(F.desc("seq"))
-    final = got.withColumn("rn", F.row_number().over(w)).filter("rn = 1").drop("rn")
-    cl = spark.read.json(str(tmp_path / "cl"))
-    expect = (
-        cl.withColumn("rn", F.row_number().over(w)).filter("rn = 1").select("table_name", "pk", "seq", "k")
-    )
-    assert final.select("table_name", "pk", "seq", "k").exceptAll(expect).count() == 0
-    assert expect.exceptAll(final.select("table_name", "pk", "seq", "k")).count() == 0
 
 
 def test_upsert_param_batches_templates_and_params():

@@ -492,40 +492,6 @@ def test_streaming_windowed_agg_memory_sink(spark, tmp_path):
     assert 0 < got <= batch.count()
 
 
-def test_incremental_agg_view_matches_recompute(spark, changelog_files, tmp_path):
-    """The incrementally-maintained aggregate equals a full recompute
-    over the final target after streaming the whole changelog."""
-    from pipe_s_spark.streaming.incremental_agg import IncrementalAggView
-
-    target = MergeApplyTarget(str(tmp_path / "target"))
-    view = IncrementalAggView(target, str(tmp_path / "view"))
-    changes = stream_changelog_json(spark, changelog_files, max_files_per_trigger=1)
-    q = (
-        changes.writeStream.foreachBatch(view.apply_batch)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-    want = {
-        (r["table_name"], r["n"], round(r["s"], 2))
-        for r in target.read_current(spark)
-        .groupBy("table_name")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("s"),
-        )
-        .collect()
-    }
-    got = {
-        (r["table_name"], r["n_rows"], round(r["sum_value"], 2))
-        for r in view.current(spark).collect()
-    }
-    assert got == want and len(got) > 0
-
-
 def test_watermark_drops_late_rows(spark, tmp_path):
     """Late-data handling: a row arriving after the watermark passed its
     window is dropped — the window is never re-emitted or merged. Two
@@ -579,92 +545,6 @@ def test_watermark_drops_late_rows(spark, tmp_path):
     w1 = base - base % 60  # window containing ts base+5 AND late base+10
     assert rows[w1] == (1, 1.0), rows  # late v=100 row dropped, not merged
     assert all(s < 100.0 for _, s in rows.values()), rows
-
-
-def test_incremental_agg_view_replay_idempotent(spark, tmp_path):
-    """Epoch replays around either crash window fold exactly once:
-    (a) full replay of an applied epoch is a no-op; (b) a crash between
-    the view fold and the target apply (view fenced, target not) must
-    still apply the target on replay."""
-    from pipe_s_spark.streaming.commit import write_atomic
-    from pipe_s_spark.streaming.incremental_agg import IncrementalAggView
-
-    target = MergeApplyTarget(str(tmp_path / "t"))
-    view = IncrementalAggView(target, str(tmp_path / "v"))
-    b0 = _mk_changes(spark, [(i, "t1", "insert", i, 1, 10.0) for i in range(5)])
-    view.apply_batch(b0, 0)
-    view.apply_batch(b0, 0)  # (a) full replay
-    got = view.current(spark).collect()[0]
-    assert (got["n_rows"], got["sum_value"]) == (5, 50.0)
-    assert target.read_current(spark).count() == 5
-
-    # (b) crash window: fold epoch 1 into the view state manually while
-    # leaving the target at epoch 0, then replay through apply_batch
-    b1 = _mk_changes(spark, [(10, "t1", "update", 0, 1, 99.0)])
-    st = view._read_state()
-    st["epoch"] = 1
-    st["groups"][view._key({"table_name": "t1"})] = [5, "139.00"]  # 50 - 10 + 99
-    write_atomic(view._state_file(), json.dumps(st))
-    view.apply_batch(b1, 1)  # replay: view skips, target must apply
-    got = view.current(spark).collect()[0]
-    assert (got["n_rows"], got["sum_value"]) == (5, 139.0)
-    vals = {r["pk"]: r["value"] for r in target.read_current(spark).collect()}
-    assert vals[0] == 99.0
-
-
-def test_incremental_agg_view_zombie_writer_cannot_regress(spark, tmp_path):
-    """A zombie callback — an orphaned apply of an OLD epoch that read
-    view state before a newer incarnation advanced it — must abort at
-    the under-lock re-check instead of overwriting state.json with
-    stale groups (which would permanently lose the newer folds)."""
-    from pipe_s_spark.streaming.incremental_agg import IncrementalAggView
-
-    target = MergeApplyTarget(str(tmp_path / "t"))
-    view = IncrementalAggView(target, str(tmp_path / "v"))
-    b0 = _mk_changes(spark, [(i, "t1", "insert", i, 1, 10.0) for i in range(5)])
-    view.apply_batch(b0, 0)
-    b1 = _mk_changes(spark, [(10, "t1", "update", 0, 1, 99.0)])
-    view.apply_batch(b1, 1)
-    want = {(r["table_name"], r["n_rows"], r["sum_value"]) for r in view.current(spark).collect()}
-    assert view._read_state()["epoch"] == 1
-
-    # simulate the zombie: its ENTRY read happened before epoch 0
-    # committed (stale fence), so it sails past the entry skip and must
-    # be stopped by the re-check under the target lock
-    real_read = view._read_state
-    calls = {"n": 0}
-
-    def stale_first_read():
-        calls["n"] += 1
-        return {"epoch": -1, "groups": {}} if calls["n"] == 1 else real_read()
-
-    view._read_state = stale_first_read
-    try:
-        view.apply_batch(b0, 0)  # zombie commit attempt for epoch 0
-    finally:
-        view._read_state = real_read
-    assert calls["n"] >= 2, "under-lock re-check must re-read state"
-    assert view._read_state()["epoch"] == 1, "zombie must not regress the fence"
-    got = {(r["table_name"], r["n_rows"], r["sum_value"]) for r in view.current(spark).collect()}
-    assert got == want, "zombie must not alter folded groups"
-
-
-def test_incremental_agg_view_group_cap_fails_fast(spark, tmp_path):
-    """group_cols with more distinct values than max_groups must raise
-    (the view is driver-held; unbounded cardinality would be a silent
-    driver-side blowup) and must NOT fence the epoch as applied."""
-    import pytest as _pytest
-
-    from pipe_s_spark.streaming.incremental_agg import IncrementalAggView
-
-    target = MergeApplyTarget(str(tmp_path / "t"))
-    view = IncrementalAggView(
-        target, str(tmp_path / "v"), group_cols=("pk",), max_groups=3
-    )
-    b = _mk_changes(spark, [(i, "t1", "insert", i, 1, 1.0) for i in range(5)])
-    with _pytest.raises(ValueError, match="max_groups"):
-        view.apply_batch(b, 0)
-    assert view._read_state()["epoch"] == -1
 
 
 def test_streaming_exact_dedup_matches_batch(spark, tmp_path):
@@ -784,486 +664,6 @@ def test_streaming_session_window_agg(spark, tmp_path):
     # every emitted session must exactly match the batch computation
     assert got.items() <= batch.items()
     assert len(got) >= len(batch) // 2  # watermark withholds only the tail
-
-
-def test_streaming_scd2_fold_matches_batch(spark, changelog_files, tmp_path):
-    """Incremental SCD2 maintenance in a real stream: each micro-batch
-    folds into the versioned-history table via scd2_apply (staging-dir
-    swap, the MergeApplyTarget pattern); the final history must equal
-    the one-shot batch rebuild over the whole changelog."""
-    import shutil
-
-    from pipe_s_spark.operators.history import scd2_apply, scd2_history
-    from pipe_s_spark.streaming.merge_apply import FLAT_CHANGELOG_SCHEMA
-
-    hist_dir = str(tmp_path / "scd2_hist")
-    stage_dir = str(tmp_path / "scd2_stage")
-
-    def fold(batch, epoch_id):
-        s = batch.sparkSession
-        hist = s.read.parquet(hist_dir) if os.path.isdir(hist_dir) else None
-        new = scd2_apply(hist, batch)
-        new.write.mode("overwrite").parquet(stage_dir)
-        if os.path.isdir(hist_dir):
-            shutil.rmtree(hist_dir)
-        os.replace(stage_dir, hist_dir)
-
-    changes = stream_changelog_json(spark, changelog_files, max_files_per_trigger=1)
-    q = changes.writeStream.foreachBatch(fold).option(
-        "checkpointLocation", str(tmp_path / "ckpt_scd2")
-    ).trigger(availableNow=True).start()
-    q.awaitTermination(120)
-
-    full = spark.read.schema(FLAT_CHANGELOG_SCHEMA).json(changelog_files)
-    want = sorted(tuple(r) for r in scd2_history(full).collect())
-    got = sorted(tuple(r) for r in spark.read.parquet(hist_dir).collect())
-    assert got == want and len(got) > 0
-
-
-def test_streaming_hll_matches_batch_after_each_prefix(spark, tmp_path):
-    """Streaming HLL: the 64 registers live in the state store and
-    merge by MAX across batches. With two files delivered one per
-    batch, the emissions must include (a) the batch hll_estimate over
-    file 1 alone (the prefix view after batch 1) and (b) the batch
-    hll_estimate over both files (the final view) — the mergeable-
-    sketch property observed end-to-end through a real checkpointed
-    stream."""
-    from pipe_s_spark.functions.sketches import hll_estimate
-    from pipe_s_spark.streaming.stateful import apply_streaming_hll
-
-    ev = spark.read.parquet(f"{SF}/events.parquet").select("event_id", "event_type", "user_id")
-    d = tmp_path / "ev_stream"
-    d.mkdir()
-    f1 = ev.filter(F.col("event_id") % 2 == 0)
-    f2 = ev.filter(F.col("event_id") % 2 == 1)
-    f1.coalesce(1).write.parquet(str(d / "f1"))
-    f2.coalesce(1).write.parquet(str(d / "f2"))
-    # flatten into one glob dir with deterministic arrival order
-    import glob
-    import shutil
-
-    (d / "in").mkdir()
-    for i, sub in enumerate(("f1", "f2")):
-        src = glob.glob(str(d / sub / "part-*.parquet"))[0]
-        shutil.copy(src, d / "in" / f"{i:02d}.parquet")
-
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(d / "in"))
-    )
-    out = apply_streaming_hll(stream, ["event_type"], "user_id")
-    q = (
-        out.writeStream.outputMode("update")
-        .format("memory")
-        .queryName("hll_out")
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    emitted = {
-        (r["event_type"], r["n_zero_registers"], r["est_distinct"])
-        for r in spark.sql("SELECT * FROM hll_out").collect()
-    }
-    want_prefix = {
-        (r["event_type"], r["n_zero_registers"], r["est_distinct"])
-        for r in hll_estimate(f1, "user_id", ["event_type"]).collect()
-    }
-    want_final = {
-        (r["event_type"], r["n_zero_registers"], r["est_distinct"])
-        for r in hll_estimate(ev, "user_id", ["event_type"]).collect()
-    }
-    assert want_prefix <= emitted
-    assert want_final <= emitted
-
-
-def test_streaming_topk_transform_with_state(spark, tmp_path):
-    """transformWithStateInPandas top-k (Spark 4 arbitrary-state API):
-    events streamed file-by-file (two micro-batches so state genuinely
-    carries across batches); the last emission per key must equal the
-    batch window top-3 by value. Runs on the RocksDB state store
-    provider, which transformWithState requires.
-
-    Env-gated: transformWithState's Python driver worker needs
-    ``google.protobuf`` (state-server protocol), which this container
-    does not ship — skipped here, runs wherever protobuf is installed
-    (it is a stock dependency of any real PySpark deployment)."""
-    pytest.importorskip("google.protobuf")
-    import pandas as pd
-
-    from pipe_s_spark.streaming.stateful import apply_streaming_topk
-
-    ev = load_table(spark, SF, "events").select("event_id", "event_type", "value")
-    d = tmp_path / "tws_in"
-    d.mkdir()
-    half = ev.count() // 2
-    pdf = ev.orderBy("event_id").toPandas()
-    pdf.iloc[:half].to_parquet(d / "a.parquet", index=False)
-    pdf.iloc[half:].to_parquet(d / "b.parquet", index=False)
-    os.utime(d / "a.parquet", (1_600_000_000, 1_600_000_000))
-    os.utime(d / "b.parquet", (1_600_000_100, 1_600_000_100))
-
-    prev_provider = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    results: list = []
-    try:
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(d))
-        )
-        out = apply_streaming_topk(stream, "event_type", "event_id", "value", k=3)
-        q = (
-            out.writeStream.foreachBatch(
-                lambda df, bid: results.append(df.toPandas().assign(bid=bid))
-            )
-            .outputMode("update")
-            .option("checkpointLocation", str(tmp_path / "tws_ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-    finally:
-        if prev_provider is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev_provider
-            )
-
-    allr = pd.concat([r for r in results if len(r)], ignore_index=True)
-    assert allr["bid"].nunique() >= 2, "expected at least two micro-batches"
-    last = allr[allr.groupby("event_type")["bid"].transform("max") == allr["bid"]]
-    got = {
-        (r.event_type, r.rk): (r.event_id, round(r.value, 6))
-        for r in last.itertuples()
-    }
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("event_type").orderBy(F.desc("value"), "event_id")
-    want = {
-        (r["event_type"], r["rk"]): (r["event_id"], round(r["value"], 6))
-        for r in ev.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 3)
-        .collect()
-    }
-    assert got == want
-
-
-def test_streaming_topk_legacy_matches_batch(spark, tmp_path):
-    """applyInPandasWithState top-k e2e (runs in this container): two
-    micro-batches via maxFilesPerTrigger=1, last emission per key must
-    equal the batch window top-3 — the same semantics the
-    transformWithState variant implements behind the protobuf gate."""
-    import pandas as pd
-
-    from pipe_s_spark.streaming.stateful import apply_streaming_topk_legacy
-
-    ev = load_table(spark, SF, "events").select("event_id", "event_type", "value")
-    d = tmp_path / "tws_legacy_in"
-    d.mkdir()
-    half = ev.count() // 2
-    pdf = ev.orderBy("event_id").toPandas()
-    pdf.iloc[:half].to_parquet(d / "a.parquet", index=False)
-    pdf.iloc[half:].to_parquet(d / "b.parquet", index=False)
-    os.utime(d / "a.parquet", (1_600_000_000, 1_600_000_000))
-    os.utime(d / "b.parquet", (1_600_000_100, 1_600_000_100))
-
-    results: list = []
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(d))
-    )
-    out = apply_streaming_topk_legacy(stream, "event_type", "event_id", "value", k=3)
-    q = (
-        out.writeStream.foreachBatch(
-            lambda df, bid: results.append(df.toPandas().assign(bid=bid))
-        )
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "tws_legacy_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-
-    allr = pd.concat([r for r in results if len(r)], ignore_index=True)
-    assert allr["bid"].nunique() >= 2, "expected at least two micro-batches"
-    last = allr[allr.groupby("event_type")["bid"].transform("max") == allr["bid"]]
-    got = {
-        (r.event_type, r.rk): (r.event_id, round(r.value, 6))
-        for r in last.itertuples()
-    }
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("event_type").orderBy(F.desc("value"), "event_id")
-    want = {
-        (r["event_type"], r["rk"]): (r["event_id"], round(r["value"], 6))
-        for r in ev.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 3)
-        .collect()
-    }
-    assert got == want
-
-
-def test_round6_half_up_matches_engine_round_for_negatives(spark):
-    """The histogram sketch's rounding helper must match Spark ROUND
-    half-up-away-from-zero on BOTH signs (a plain floor(x*1e6+0.5)
-    rounds negatives toward +inf)."""
-    from pipe_s_spark.streaming.stateful import _round6_half_up
-
-    vals = [1.2345675, -1.2345675, -0.0000005, 0.0000005, -1.9999995, 2.5e-7]
-    got = [_round6_half_up(v) for v in vals]
-    rows = spark.createDataFrame([(v,) for v in vals], "x double").selectExpr(
-        "round(x, 6) AS r"
-    )
-    want = [r["r"] for r in rows.collect()]
-    assert got == want, (got, want)
-
-
-def test_streaming_histogram_matches_batch_sketch(spark, tmp_path):
-    """Streaming histogram sketch: two micro-batches of events, final
-    per-key emission must equal the BATCH histogram_quantiles sketch
-    over the full table — cellwise state merge is exactly the sketch's
-    mergeability contract."""
-    import pandas as pd
-
-    from pipe_s_spark.functions.sketches import histogram_quantiles
-    from pipe_s_spark.streaming.stateful import apply_streaming_histogram
-
-    ev = load_table(spark, SF, "events").select("event_id", "event_type", "value")
-    d = tmp_path / "hist_in"
-    d.mkdir()
-    half = ev.count() // 2
-    pdf = ev.orderBy("event_id").toPandas()
-    pdf.iloc[:half].to_parquet(d / "a.parquet", index=False)
-    pdf.iloc[half:].to_parquet(d / "b.parquet", index=False)
-    os.utime(d / "a.parquet", (1_600_000_000, 1_600_000_000))
-    os.utime(d / "b.parquet", (1_600_000_100, 1_600_000_100))
-
-    results: list = []
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(d))
-    )
-    out = apply_streaming_histogram(
-        stream, ["event_type"], "value", bin_width=10.0, quantiles=(0.5, 0.95)
-    )
-    q = (
-        out.writeStream.foreachBatch(
-            lambda df, bid: results.append(df.toPandas().assign(bid=bid))
-        )
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "hist_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-
-    allr = pd.concat([r for r in results if len(r)], ignore_index=True)
-    assert allr["bid"].nunique() >= 2
-    last = allr[allr.groupby("event_type")["bid"].transform("max") == allr["bid"]]
-    got = {
-        r.event_type: (r.n_rows, r.p50_est, r.p95_est) for r in last.itertuples()
-    }
-    want = {
-        r["event_type"]: (r["n_rows"], r["p50_est"], r["p95_est"])
-        for r in histogram_quantiles(
-            ev, "value", ["event_type"], bin_width=10.0, quantiles=(0.5, 0.95)
-        ).collect()
-    }
-    assert got == want
-
-
-def test_streaming_countmin_matches_batch_sketch(spark, tmp_path):
-    """Streaming count-min: per-event-type cell matrices merge
-    cellwise across two micro-batches; the final point estimates must
-    equal the BATCH cms_build+cms_estimate over each key's full rows
-    (identical md5 hash family on both paths)."""
-    import pandas as pd
-
-    from pipe_s_spark.functions.sketches import cms_build, cms_estimate
-    from pipe_s_spark.streaming.stateful import apply_streaming_countmin
-
-    ev = load_table(spark, SF, "events").select("event_id", "event_type", "user_id")
-    probe_items = [r["user_id"] for r in ev.select("user_id").distinct().limit(5).collect()]
-    d = tmp_path / "cms_in"
-    d.mkdir()
-    half = ev.count() // 2
-    pdf = ev.orderBy("event_id").toPandas()
-    pdf.iloc[:half].to_parquet(d / "a.parquet", index=False)
-    pdf.iloc[half:].to_parquet(d / "b.parquet", index=False)
-    os.utime(d / "a.parquet", (1_600_000_000, 1_600_000_000))
-    os.utime(d / "b.parquet", (1_600_000_100, 1_600_000_100))
-
-    results: list = []
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(d))
-    )
-    out = apply_streaming_countmin(stream, ["event_type"], "user_id", probe_items)
-    q = (
-        out.writeStream.foreachBatch(
-            lambda df, bid: results.append(df.toPandas().assign(bid=bid))
-        )
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "cms_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-
-    allr = pd.concat([r for r in results if len(r)], ignore_index=True)
-    assert allr["bid"].nunique() >= 2
-    last = allr[allr.groupby("event_type")["bid"].transform("max") == allr["bid"]]
-    got = {
-        (r.event_type, r.item): r.est_count for r in last.itertuples()
-    }
-    want = {}
-    for et in [r["event_type"] for r in ev.select("event_type").distinct().collect()]:
-        sub = ev.filter(F.col("event_type") == et)
-        sketch = cms_build(sub, "user_id")
-        keys = spark.createDataFrame([(i,) for i in probe_items], "user_id long")
-        for r in cms_estimate(keys, sketch, "user_id").collect():
-            # unseen keys address empty cells: batch join finds no row
-            # (no estimate) while streaming reports 0 — both mean zero
-            want[(et, str(r["user_id"]))] = r["est_cnt"]
-    for k, v in want.items():
-        assert got[k] == v, (k, got[k], v)
-    for k, v in got.items():
-        assert want.get(k, 0) == v, (k, v)
-
-
-def test_stream_stream_interval_join_matches_batch(spark, tmp_path):
-    """Stream-stream event-time interval join: purchases attributed to
-    same-user clicks within the preceding hour, fed as two 2-file
-    streams — the union of all emitted batches must equal the batch
-    join over the full tables (generous watermark: nothing evicted
-    before its partner can arrive)."""
-    import pandas as pd
-
-    from pipe_s_spark.streaming.joins import stream_stream_interval_join
-
-    ev = load_table(spark, SF, "events")
-    # watermarks require TIMESTAMP (session pins UTC, so the NTZ cast
-    # is stable)
-    ts = F.col("ts").cast("timestamp")
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("p_id"), F.col("user_id").alias("uid"), ts.alias("p_ts")
-    )
-    clicks = ev.filter(F.col("event_type") == "click").select(
-        F.col("event_id").alias("c_id"), F.col("user_id").alias("uid"), ts.alias("c_ts")
-    )
-
-    want = {
-        (r["p_id"], r["c_id"])
-        for r in purchases.join(clicks, "uid")
-        .filter(
-            (F.col("c_ts") >= F.expr("p_ts - INTERVAL 3600 SECONDS"))
-            & (F.col("c_ts") <= F.col("p_ts"))
-        )
-        .collect()
-    }
-    assert want  # sanity: the synthetic stream does produce matches
-
-    def _spool(df, name):
-        d = tmp_path / name
-        d.mkdir()
-        pdf = df.toPandas()
-        for c in pdf.columns:  # tz-aware so pyarrow writes TIMESTAMP
-            if pdf[c].dtype.kind == "M":  # (isAdjustedToUTC), matching
-                pdf[c] = pdf[c].dt.tz_localize("UTC")  # the stream schema
-        half = len(pdf) // 2
-        pdf.iloc[:half].to_parquet(
-            d / "a.parquet", index=False, coerce_timestamps="us"
-        )
-        pdf.iloc[half:].to_parquet(
-            d / "b.parquet", index=False, coerce_timestamps="us"
-        )
-        os.utime(d / "a.parquet", (1_600_000_000, 1_600_000_000))
-        os.utime(d / "b.parquet", (1_600_000_100, 1_600_000_100))
-        return (
-            spark.readStream.schema(df.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(d))
-        )
-
-    ps = _spool(purchases, "purch")
-    cs = _spool(clicks, "click")
-    joined = stream_stream_interval_join(
-        ps,
-        cs,
-        on="uid",
-        left_ts="p_ts",
-        right_ts="c_ts",
-        lower_s=-3600,
-        upper_s=0,
-        watermark_s=100 * 24 * 3600,
-    )
-    results: list = []
-    q = (
-        joined.writeStream.foreachBatch(
-            lambda df, bid: results.append(df.toPandas())
-        )
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ssj_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    allr = pd.concat([r for r in results if len(r)], ignore_index=True)
-    got = {(r.p_id, r.c_id) for r in allr.itertuples()}
-    assert got == want
-    # exactly-once per pair: no batch emitted a duplicate
-    assert len(allr) == len(got)
-
-
-def test_dedup_within_watermark_drops_replayed_rows(spark, tmp_path):
-    """dropDuplicatesWithinWatermark wrapper: a second file replaying
-    the same rows (an at-least-once retry burst) must be fully
-    suppressed — output equals the distinct of the first file."""
-    import pandas as pd
-
-    from pipe_s_spark.streaming.joins import dedup_within_watermark
-
-    ev = (
-        load_table(spark, SF, "events")
-        .select("event_id", F.col("ts").cast("timestamp").alias("ts"), "user_id", "event_type")
-        .limit(200)
-    )
-    d = tmp_path / "dedup_in"
-    d.mkdir()
-    pdf = ev.toPandas()
-    pdf["ts"] = pdf["ts"].dt.tz_localize("UTC")
-    pdf.to_parquet(d / "a.parquet", index=False, coerce_timestamps="us")
-    pdf.to_parquet(d / "b.parquet", index=False, coerce_timestamps="us")  # exact replay
-    os.utime(d / "a.parquet", (1_600_000_000, 1_600_000_000))
-    os.utime(d / "b.parquet", (1_600_000_100, 1_600_000_100))
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(d))
-    )
-    out = dedup_within_watermark(
-        stream, ["event_id"], "ts", watermark_s=100 * 24 * 3600
-    )
-    results: list = []
-    q = (
-        out.writeStream.foreachBatch(lambda df, bid: results.append(df.toPandas()))
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "dd_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    allr = pd.concat([r for r in results if len(r)], ignore_index=True)
-    assert sorted(allr["event_id"]) == sorted(pdf["event_id"].unique())
 
 
 def test_merge_target_composite_custom_key(spark, tmp_path):

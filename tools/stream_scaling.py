@@ -48,8 +48,10 @@ def _run(rows: int, corpus: str) -> dict:
 
 def _alpha(t1: float, t10: float, factor: float) -> float | None:
     """log-ratio growth exponent; None when either 2-decimal-rounded
-    leg time is 0 (the ratio is meaningless, not infinite work)."""
-    if t1 <= 0 or t10 <= 0:
+    leg time is 0 (the ratio is meaningless, not infinite work) or
+    when both scales ran the same row count (factor 1: no growth to
+    measure against)."""
+    if t1 <= 0 or t10 <= 0 or factor == 1:
         return None
     return round(math.log(t10 / t1) / math.log(factor), 3)
 
