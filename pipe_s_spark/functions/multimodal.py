@@ -27,18 +27,6 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-#: Asset envelope: blob + scalar metadata (prunable without blob IO).
-ASSET_SCHEMA = T.StructType(
-    [
-        T.StructField("asset_id", T.LongType(), False),
-        T.StructField("modality", T.StringType(), False),  # image|audio|video
-        T.StructField("mime", T.StringType(), True),
-        T.StructField("n_bytes", T.LongType(), True),
-        T.StructField("content", T.BinaryType(), True),
-    ]
-)
 
 
 def synthesize_assets(docs: DataFrame, modality_mod: int = 3) -> DataFrame:

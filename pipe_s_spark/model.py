@@ -32,8 +32,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-OPERATIONS = ("insert", "update", "delete")
-
 #: Envelope for heterogeneous multi-table streams: payloads stay JSON
 #: strings until per-table fan-out applies a concrete schema.
 CHANGE_EVENT_JSON_SCHEMA = T.StructType(

@@ -1077,49 +1077,25 @@ FROM m
 
 
 QUERIES = {
-    "asof_join_purchase_click": q_asof_join_purchase_click,
-    "agg_salted_skew": q_agg_salted_skew,
-    "join_salted_skew": q_join_salted_skew,
-    "orders_market_basket": q_orders_market_basket,
-    "stats_benford": q_stats_benford,
-    "stats_brand_concentration": q_stats_brand_concentration,
-    "supplier_fulfillment_lag": q_supplier_fulfillment_lag,
-    "time_autocorr": q_time_autocorr,
-    "join_bloom_prune": q_join_bloom_prune,
-    "stats_column_profile": q_stats_column_profile,
-    "layout_zorder": q_layout_zorder,
-    "stats_key_skew": q_stats_key_skew,
-    "range_join_price_bands": q_range_join_price_bands,
-    "range_join_explode_quantity": q_range_join_explode_quantity,
-    "percentiles_exact": q_percentiles_exact,
-    "percentiles_distributed": q_percentiles_distributed,
-    "stats_median_profile": q_stats_median_profile,
-    "dq_expectations": q_dq_expectations,
-    "dq_corpus_integrity": q_dq_corpus_integrity,
-    "stats_agg": q_stats_agg,
-    "window_dist_funcs": q_window_dist_funcs,
-}
-
-ORACLES = {
-    "asof_join_purchase_click": SQL_ASOF,
-    "agg_salted_skew": SQL_AGG_SALTED_SKEW,
-    "join_salted_skew": SQL_JOIN_SALTED_SKEW,
-    "orders_market_basket": _sql_orders_market_basket(),
-    "stats_benford": _sql_stats_benford(),
-    "stats_brand_concentration": SQL_STATS_BRAND_CONCENTRATION,
-    "supplier_fulfillment_lag": SQL_SUPPLIER_FULFILLMENT_LAG,
-    "time_autocorr": SQL_TIME_AUTOCORR,
-    "join_bloom_prune": SQL_JOIN_BLOOM_PRUNE,
-    "stats_column_profile": _sql_stats_column_profile(),
-    "layout_zorder": SQL_LAYOUT_ZORDER,
-    "stats_key_skew": SQL_STATS_KEY_SKEW,
-    "range_join_price_bands": SQL_RANGE_BANDS,
-    "range_join_explode_quantity": SQL_RANGE_EXPLODE,
-    "percentiles_exact": SQL_PERCENTILES,
-    "percentiles_distributed": SQL_PERCENTILES_DISTRIBUTED,
-    "stats_median_profile": _sql_stats_median_profile(),
-    "dq_expectations": SQL_DQ_EXPECTATIONS,
-    "dq_corpus_integrity": SQL_DQ_CORPUS_INTEGRITY,
-    "stats_agg": SQL_STATS,
-    "window_dist_funcs": SQL_WINDOW_DIST,
+    q_asof_join_purchase_click: SQL_ASOF,
+    q_agg_salted_skew: SQL_AGG_SALTED_SKEW,
+    q_join_salted_skew: SQL_JOIN_SALTED_SKEW,
+    q_orders_market_basket: _sql_orders_market_basket(),
+    q_stats_benford: _sql_stats_benford(),
+    q_stats_brand_concentration: SQL_STATS_BRAND_CONCENTRATION,
+    q_supplier_fulfillment_lag: SQL_SUPPLIER_FULFILLMENT_LAG,
+    q_time_autocorr: SQL_TIME_AUTOCORR,
+    q_join_bloom_prune: SQL_JOIN_BLOOM_PRUNE,
+    q_stats_column_profile: _sql_stats_column_profile(),
+    q_layout_zorder: SQL_LAYOUT_ZORDER,
+    q_stats_key_skew: SQL_STATS_KEY_SKEW,
+    q_range_join_price_bands: SQL_RANGE_BANDS,
+    q_range_join_explode_quantity: SQL_RANGE_EXPLODE,
+    q_percentiles_exact: SQL_PERCENTILES,
+    q_percentiles_distributed: SQL_PERCENTILES_DISTRIBUTED,
+    q_stats_median_profile: _sql_stats_median_profile(),
+    q_dq_expectations: SQL_DQ_EXPECTATIONS,
+    q_dq_corpus_integrity: SQL_DQ_CORPUS_INTEGRITY,
+    q_stats_agg: SQL_STATS,
+    q_window_dist_funcs: SQL_WINDOW_DIST,
 }

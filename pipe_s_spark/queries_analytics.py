@@ -1799,93 +1799,47 @@ GROUP BY li.l_returnflag
 
 
 QUERIES = {
-    "q1_pricing_summary": q_q1_pricing_summary,
-    "orders_gap_detection": q_orders_gap_detection,
-    "customer_segment_value": q_customer_segment_value,
-    "nation_share_of_region": q_nation_share_of_region,
-    "customer_balance_profile": q_customer_balance_profile,
-    "part_markup_by_brand": q_part_markup_by_brand,
-    "lineitem_iqr_outliers": q_lineitem_iqr_outliers,
-    "orders_priority_trend": q_orders_priority_trend,
-    "orders_rfm_segments": q_orders_rfm_segments,
-    "orders_cohort_ltv": q_orders_cohort_ltv,
-    "lineitem_discount_response": q_lineitem_discount_response,
-    "orders_shipment_spread": q_orders_shipment_spread,
-    "customer_pareto": q_customer_pareto,
-    "stats_regression": q_stats_regression,
-    "join_existence_semi": q_join_existence_semi,
-    "window_first_last": q_window_first_last,
-    "time_user_rolling_median": q_time_user_rolling_median,
-    "q3_shipping_priority": q_q3_shipping_priority,
-    "q5_local_supplier": q_q5_local_supplier,
-    "q6_revenue_forecast": q_q6_revenue_forecast,
-    "q10_returned_items": q_q10_returned_items,
-    "agg_rollup": q_agg_rollup,
-    "agg_cube": q_agg_cube,
-    "agg_grouping_sets": q_agg_grouping_sets,
-    "window_topk_per_group": q_window_topk_per_group,
-    "window_running_total": q_window_running_total,
-    "window_lag_lead": q_window_lag_lead,
-    "topk_global": q_topk_global,
-    "set_ops": q_set_ops,
-    "distinct_agg": q_distinct_agg,
-    "scalar_funcs": q_scalar_funcs,
-    "json_funcs": q_json_funcs,
-    "date_funcs": q_date_funcs,
-    "pivot_event_types": q_pivot_event_types,
-    "time_tumbling": q_time_tumbling,
-    "time_sliding": q_time_sliding,
-    "time_session": q_time_session,
-    "time_rollup_hour_day": q_time_rollup_hour_day,
-    "time_gap_fill": q_time_gap_fill,
-    "unpivot_lineitem_charges": q_unpivot_lineitem_charges,
-    "full_outer_balances": q_full_outer_balances,
-    "window_range_frame": q_window_range_frame,
-    "array_funcs": q_array_funcs,
-}
-
-ORACLES = {
-    "q1_pricing_summary": SQL_Q1,
-    "orders_rfm_segments": SQL_ORDERS_RFM_SEGMENTS,
-    "orders_cohort_ltv": SQL_ORDERS_COHORT_LTV,
-    "lineitem_discount_response": SQL_LINEITEM_DISCOUNT_RESPONSE,
-    "orders_shipment_spread": SQL_ORDERS_SHIPMENT_SPREAD,
-    "customer_pareto": SQL_CUSTOMER_PARETO,
-    "orders_priority_trend": SQL_ORDERS_PRIORITY_TREND,
-    "orders_gap_detection": SQL_ORDERS_GAP_DETECTION,
-    "customer_segment_value": SQL_CUSTOMER_SEGMENT_VALUE,
-    "nation_share_of_region": SQL_NATION_SHARE_OF_REGION,
-    "customer_balance_profile": SQL_CUSTOMER_BALANCE_PROFILE,
-    "part_markup_by_brand": SQL_PART_MARKUP_BY_BRAND,
-    "lineitem_iqr_outliers": SQL_LINEITEM_IQR_OUTLIERS,
-    "stats_regression": SQL_STATS_REGRESSION,
-    "join_existence_semi": SQL_JOIN_EXISTENCE_SEMI,
-    "window_first_last": SQL_WINDOW_FIRST_LAST,
-    "time_user_rolling_median": SQL_TIME_USER_ROLLING_MEDIAN,
-    "q3_shipping_priority": SQL_Q3,
-    "q5_local_supplier": SQL_Q5,
-    "q6_revenue_forecast": SQL_Q6,
-    "q10_returned_items": SQL_Q10,
-    "agg_rollup": SQL_AGG_ROLLUP,
-    "agg_cube": SQL_AGG_CUBE,
-    "agg_grouping_sets": SQL_AGG_GROUPING_SETS,
-    "window_topk_per_group": SQL_WINDOW_TOPK,
-    "window_running_total": SQL_WINDOW_RUNNING,
-    "window_lag_lead": SQL_WINDOW_LAG,
-    "topk_global": SQL_TOPK_GLOBAL,
-    "set_ops": SQL_SET_OPS,
-    "distinct_agg": SQL_DISTINCT_AGG,
-    "scalar_funcs": SQL_SCALAR_FUNCS,
-    "json_funcs": SQL_JSON_FUNCS,
-    "date_funcs": SQL_DATE_FUNCS,
-    "pivot_event_types": SQL_PIVOT,
-    "time_tumbling": SQL_TIME_TUMBLING,
-    "time_sliding": SQL_TIME_SLIDING,
-    "time_session": SQL_TIME_SESSION,
-    "time_rollup_hour_day": SQL_TIME_ROLLUP,
-    "time_gap_fill": SQL_TIME_GAP_FILL,
-    "unpivot_lineitem_charges": SQL_UNPIVOT,
-    "full_outer_balances": SQL_FULL_OUTER,
-    "window_range_frame": SQL_WINDOW_RANGE,
-    "array_funcs": SQL_ARRAY_FUNCS,
+    q_q1_pricing_summary: SQL_Q1,
+    q_orders_gap_detection: SQL_ORDERS_GAP_DETECTION,
+    q_customer_segment_value: SQL_CUSTOMER_SEGMENT_VALUE,
+    q_nation_share_of_region: SQL_NATION_SHARE_OF_REGION,
+    q_customer_balance_profile: SQL_CUSTOMER_BALANCE_PROFILE,
+    q_part_markup_by_brand: SQL_PART_MARKUP_BY_BRAND,
+    q_lineitem_iqr_outliers: SQL_LINEITEM_IQR_OUTLIERS,
+    q_orders_priority_trend: SQL_ORDERS_PRIORITY_TREND,
+    q_orders_rfm_segments: SQL_ORDERS_RFM_SEGMENTS,
+    q_orders_cohort_ltv: SQL_ORDERS_COHORT_LTV,
+    q_lineitem_discount_response: SQL_LINEITEM_DISCOUNT_RESPONSE,
+    q_orders_shipment_spread: SQL_ORDERS_SHIPMENT_SPREAD,
+    q_customer_pareto: SQL_CUSTOMER_PARETO,
+    q_stats_regression: SQL_STATS_REGRESSION,
+    q_join_existence_semi: SQL_JOIN_EXISTENCE_SEMI,
+    q_window_first_last: SQL_WINDOW_FIRST_LAST,
+    q_time_user_rolling_median: SQL_TIME_USER_ROLLING_MEDIAN,
+    q_q3_shipping_priority: SQL_Q3,
+    q_q5_local_supplier: SQL_Q5,
+    q_q6_revenue_forecast: SQL_Q6,
+    q_q10_returned_items: SQL_Q10,
+    q_agg_rollup: SQL_AGG_ROLLUP,
+    q_agg_cube: SQL_AGG_CUBE,
+    q_agg_grouping_sets: SQL_AGG_GROUPING_SETS,
+    q_window_topk_per_group: SQL_WINDOW_TOPK,
+    q_window_running_total: SQL_WINDOW_RUNNING,
+    q_window_lag_lead: SQL_WINDOW_LAG,
+    q_topk_global: SQL_TOPK_GLOBAL,
+    q_set_ops: SQL_SET_OPS,
+    q_distinct_agg: SQL_DISTINCT_AGG,
+    q_scalar_funcs: SQL_SCALAR_FUNCS,
+    q_json_funcs: SQL_JSON_FUNCS,
+    q_date_funcs: SQL_DATE_FUNCS,
+    q_pivot_event_types: SQL_PIVOT,
+    q_time_tumbling: SQL_TIME_TUMBLING,
+    q_time_sliding: SQL_TIME_SLIDING,
+    q_time_session: SQL_TIME_SESSION,
+    q_time_rollup_hour_day: SQL_TIME_ROLLUP,
+    q_time_gap_fill: SQL_TIME_GAP_FILL,
+    q_unpivot_lineitem_charges: SQL_UNPIVOT,
+    q_full_outer_balances: SQL_FULL_OUTER,
+    q_window_range_frame: SQL_WINDOW_RANGE,
+    q_array_funcs: SQL_ARRAY_FUNCS,
 }

@@ -574,41 +574,21 @@ GROUP BY table_name, d
 
 
 QUERIES = {
-    "cdc_filter": q_cdc_filter,
-    "cdc_schema_evolution": q_cdc_schema_evolution,
-    "cdc_op_trend": q_cdc_op_trend,
-    "cdc_validate": q_cdc_validate,
-    "cdc_convert": q_cdc_convert,
-    "cdc_map_names": q_cdc_map_names,
-    "cdc_map_actions": q_cdc_map_actions,
-    "cdc_catch_names": q_cdc_catch_names,
-    "cdc_column_value": q_cdc_column_value,
-    "cdc_value_map": q_cdc_value_map,
-    "cdc_marshal_roundtrip": q_cdc_marshal_roundtrip,
-    "cdc_compact": q_cdc_compact,
-    "cdc_merge_apply": q_cdc_merge_apply,
-    "cdc_check": q_cdc_check,
-    "cdc_scd2": q_cdc_scd2,
-    "cdc_snapshot_asof": q_cdc_snapshot_asof,
-    "cdc_lag_metrics": q_cdc_lag_metrics,
-}
-
-ORACLES = {
-    "cdc_filter": SQL_CDC_FILTER,
-    "cdc_schema_evolution": SQL_CDC_SCHEMA_EVOLUTION,
-    "cdc_op_trend": SQL_CDC_OP_TREND,
-    "cdc_validate": SQL_CDC_VALIDATE,
-    "cdc_convert": SQL_CDC_CONVERT,
-    "cdc_map_names": SQL_CDC_MAP_NAMES,
-    "cdc_map_actions": SQL_CDC_MAP_ACTIONS,
-    "cdc_catch_names": SQL_CDC_CATCH_NAMES,
-    "cdc_column_value": SQL_CDC_COLUMN_VALUE,
-    "cdc_value_map": SQL_CDC_VALUE_MAP,
-    "cdc_marshal_roundtrip": SQL_CDC_MARSHAL_ROUNDTRIP,
-    "cdc_compact": SQL_CDC_COMPACT,
-    "cdc_merge_apply": SQL_CDC_MERGE_APPLY,
-    "cdc_check": SQL_CDC_CHECK,
-    "cdc_scd2": SQL_CDC_SCD2,
-    "cdc_snapshot_asof": SQL_CDC_SNAPSHOT_ASOF,
-    "cdc_lag_metrics": SQL_CDC_LAG_METRICS,
+    q_cdc_filter: SQL_CDC_FILTER,
+    q_cdc_schema_evolution: SQL_CDC_SCHEMA_EVOLUTION,
+    q_cdc_op_trend: SQL_CDC_OP_TREND,
+    q_cdc_validate: SQL_CDC_VALIDATE,
+    q_cdc_convert: SQL_CDC_CONVERT,
+    q_cdc_map_names: SQL_CDC_MAP_NAMES,
+    q_cdc_map_actions: SQL_CDC_MAP_ACTIONS,
+    q_cdc_catch_names: SQL_CDC_CATCH_NAMES,
+    q_cdc_column_value: SQL_CDC_COLUMN_VALUE,
+    q_cdc_value_map: SQL_CDC_VALUE_MAP,
+    q_cdc_marshal_roundtrip: SQL_CDC_MARSHAL_ROUNDTRIP,
+    q_cdc_compact: SQL_CDC_COMPACT,
+    q_cdc_merge_apply: SQL_CDC_MERGE_APPLY,
+    q_cdc_check: SQL_CDC_CHECK,
+    q_cdc_scd2: SQL_CDC_SCD2,
+    q_cdc_snapshot_asof: SQL_CDC_SNAPSHOT_ASOF,
+    q_cdc_lag_metrics: SQL_CDC_LAG_METRICS,
 }

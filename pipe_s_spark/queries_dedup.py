@@ -2,14 +2,11 @@
 
 from __future__ import annotations
 
-from collections import OrderedDict
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from pipe_s_spark.functions import dedup as D
-from pipe_s_spark.functions import exact as E
 from pipe_s_spark.functions import shared as SH
 from pipe_s_spark.functions import similarity as S
 from pipe_s_spark.functions import text as X
@@ -946,49 +943,25 @@ FROM joined
 
 
 QUERIES = {
-    "dedup_est_calibration": q_dedup_est_calibration,
-    "dedup_exact": q_dedup_exact,
-    "dedup_normalized": q_dedup_normalized,
-    "dedup_jaccard_pairs": q_dedup_jaccard_pairs,
-    "dedup_tfidf_cosine": q_dedup_tfidf_cosine,
-    "dedup_containment": q_dedup_containment,
-    "dedup_minhash_lsh": q_dedup_minhash_lsh,
-    "dedup_threshold_sweep": q_dedup_threshold_sweep,
-    "dedup_incremental": q_dedup_incremental,
-    "dedup_cross_corpus": q_dedup_cross_corpus,
-    "dedup_clusters": q_dedup_clusters,
-    "dedup_keep_best": q_dedup_keep_best,
-    "dedup_simhash": q_dedup_simhash,
-    "dedup_simhash_pairs": q_dedup_simhash_pairs,
-    "dedup_embedding": q_dedup_embedding,
-    "dedup_edit_distance": q_dedup_edit_distance,
-    "dedup_ensemble": q_dedup_ensemble,
-    "dedup_topk_neighbors": q_dedup_topk_neighbors,
-    "graph_triangles": q_graph_triangles,
-    "dedup_cluster_stats": q_dedup_cluster_stats,
-    "graph_communities": q_graph_communities,
-}
-
-ORACLES = {
-    "dedup_est_calibration": SQL_DEDUP_EST_CALIBRATION,
-    "dedup_exact": SQL_DEDUP_EXACT,
-    "dedup_normalized": SQL_DEDUP_NORMALIZED,
-    "dedup_jaccard_pairs": SQL_DEDUP_JACCARD,
-    "dedup_tfidf_cosine": SQL_DEDUP_TFIDF_COSINE,
-    "dedup_containment": SQL_DEDUP_CONTAINMENT,
-    "dedup_minhash_lsh": SQL_DEDUP_MINHASH,
-    "dedup_threshold_sweep": _sql_dedup_threshold_sweep(),
-    "dedup_incremental": SQL_DEDUP_INCREMENTAL,
-    "dedup_cross_corpus": SQL_DEDUP_CROSS_CORPUS,
-    "dedup_clusters": SQL_DEDUP_CLUSTERS,
-    "dedup_keep_best": SQL_DEDUP_KEEP_BEST,
-    "dedup_simhash": SQL_DEDUP_SIMHASH,
-    "dedup_simhash_pairs": SQL_DEDUP_SIMHASH_PAIRS,
-    "dedup_embedding": SQL_DEDUP_EMBEDDING,
-    "dedup_edit_distance": SQL_DEDUP_EDIT_DISTANCE,
-    "dedup_ensemble": SQL_DEDUP_ENSEMBLE,
-    "dedup_topk_neighbors": SQL_DEDUP_TOPK_NEIGHBORS,
-    "graph_triangles": SQL_GRAPH_TRIANGLES,
-    "dedup_cluster_stats": SQL_DEDUP_CLUSTER_STATS,
-    "graph_communities": _sql_graph_communities(),
+    q_dedup_est_calibration: SQL_DEDUP_EST_CALIBRATION,
+    q_dedup_exact: SQL_DEDUP_EXACT,
+    q_dedup_normalized: SQL_DEDUP_NORMALIZED,
+    q_dedup_jaccard_pairs: SQL_DEDUP_JACCARD,
+    q_dedup_tfidf_cosine: SQL_DEDUP_TFIDF_COSINE,
+    q_dedup_containment: SQL_DEDUP_CONTAINMENT,
+    q_dedup_minhash_lsh: SQL_DEDUP_MINHASH,
+    q_dedup_threshold_sweep: _sql_dedup_threshold_sweep(),
+    q_dedup_incremental: SQL_DEDUP_INCREMENTAL,
+    q_dedup_cross_corpus: SQL_DEDUP_CROSS_CORPUS,
+    q_dedup_clusters: SQL_DEDUP_CLUSTERS,
+    q_dedup_keep_best: SQL_DEDUP_KEEP_BEST,
+    q_dedup_simhash: SQL_DEDUP_SIMHASH,
+    q_dedup_simhash_pairs: SQL_DEDUP_SIMHASH_PAIRS,
+    q_dedup_embedding: SQL_DEDUP_EMBEDDING,
+    q_dedup_edit_distance: SQL_DEDUP_EDIT_DISTANCE,
+    q_dedup_ensemble: SQL_DEDUP_ENSEMBLE,
+    q_dedup_topk_neighbors: SQL_DEDUP_TOPK_NEIGHBORS,
+    q_graph_triangles: SQL_GRAPH_TRIANGLES,
+    q_dedup_cluster_stats: SQL_DEDUP_CLUSTER_STATS,
+    q_graph_communities: _sql_graph_communities(),
 }

@@ -740,35 +740,18 @@ FROM terms GROUP BY wk
 
 
 QUERIES = {
-    "events_psi_drift": q_events_psi_drift,
-    "events_seasonal_residual": q_events_seasonal_residual,
-    "events_funnel": q_events_funnel,
-    "events_peak_hour": q_events_peak_hour,
-    "events_weekday_profile": q_events_weekday_profile,
-    "events_winsorized": q_events_winsorized,
-    "events_anomaly_mad": q_events_anomaly_mad,
-    "events_time_to_event": q_events_time_to_event,
-    "events_inter_arrival": q_events_inter_arrival,
-    "graph_pagerank": q_graph_pagerank,
-    "events_transitions": q_events_transitions,
-    "events_rolling_active": q_events_rolling_active,
-    "events_retention": q_events_retention,
-    "events_outliers": q_events_outliers,
-}
-
-ORACLES = {
-    "events_psi_drift": SQL_EVENTS_PSI_DRIFT,
-    "events_seasonal_residual": SQL_EVENTS_SEASONAL_RESIDUAL,
-    "events_funnel": SQL_EVENTS_FUNNEL,
-    "events_winsorized": SQL_EVENTS_WINSORIZED,
-    "events_anomaly_mad": SQL_EVENTS_ANOMALY_MAD,
-    "events_time_to_event": SQL_EVENTS_TIME_TO_EVENT,
-    "events_inter_arrival": SQL_EVENTS_INTER_ARRIVAL,
-    "events_weekday_profile": SQL_EVENTS_WEEKDAY_PROFILE,
-    "events_peak_hour": SQL_EVENTS_PEAK_HOUR,
-    "graph_pagerank": _sql_graph_pagerank(),
-    "events_transitions": SQL_EVENTS_TRANSITIONS,
-    "events_rolling_active": SQL_EVENTS_ROLLING_ACTIVE,
-    "events_retention": SQL_EVENTS_RETENTION,
-    "events_outliers": SQL_EVENTS_OUTLIERS,
+    q_events_psi_drift: SQL_EVENTS_PSI_DRIFT,
+    q_events_seasonal_residual: SQL_EVENTS_SEASONAL_RESIDUAL,
+    q_events_funnel: SQL_EVENTS_FUNNEL,
+    q_events_peak_hour: SQL_EVENTS_PEAK_HOUR,
+    q_events_weekday_profile: SQL_EVENTS_WEEKDAY_PROFILE,
+    q_events_winsorized: SQL_EVENTS_WINSORIZED,
+    q_events_anomaly_mad: SQL_EVENTS_ANOMALY_MAD,
+    q_events_time_to_event: SQL_EVENTS_TIME_TO_EVENT,
+    q_events_inter_arrival: SQL_EVENTS_INTER_ARRIVAL,
+    q_graph_pagerank: _sql_graph_pagerank(),
+    q_events_transitions: SQL_EVENTS_TRANSITIONS,
+    q_events_rolling_active: SQL_EVENTS_ROLLING_ACTIVE,
+    q_events_retention: SQL_EVENTS_RETENTION,
+    q_events_outliers: SQL_EVENTS_OUTLIERS,
 }

@@ -4,10 +4,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from pipe_s_spark.functions import dedup as D
-from pipe_s_spark.functions import exact as E
 from pipe_s_spark.functions import shared as SH
 from pipe_s_spark.functions import similarity as S
 from pipe_s_spark.functions import text as X

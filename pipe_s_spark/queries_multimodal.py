@@ -2,18 +2,9 @@
 
 from __future__ import annotations
 
-from collections import OrderedDict
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
-from pipe_s_spark.functions import dedup as D
-from pipe_s_spark.functions import exact as E
-from pipe_s_spark.functions import shared as SH
-from pipe_s_spark.functions import similarity as S
-from pipe_s_spark.functions import text as X
-from pipe_s_spark.functions.dedup import LSH_BAND_CAP
 from pipe_s_spark.sources import load_table
 
 from pipe_s_spark.queries_llm_shared import (
@@ -138,13 +129,7 @@ FROM d
 
 
 QUERIES = {
-    "multimodal_image_features": q_multimodal_image_features,
-    "multimodal_frame_digests": q_multimodal_frame_digests,
-    "multimodal_audio_features": q_multimodal_audio_features,
-}
-
-ORACLES = {
-    "multimodal_image_features": SQL_MULTIMODAL_IMAGE,
-    "multimodal_frame_digests": SQL_MULTIMODAL_FRAMES,
-    "multimodal_audio_features": SQL_MULTIMODAL_AUDIO,
+    q_multimodal_image_features: SQL_MULTIMODAL_IMAGE,
+    q_multimodal_frame_digests: SQL_MULTIMODAL_FRAMES,
+    q_multimodal_audio_features: SQL_MULTIMODAL_AUDIO,
 }

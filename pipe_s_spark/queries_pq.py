@@ -524,17 +524,9 @@ FROM dists GROUP BY sub, code
 """
 
 QUERIES = {
-    "sim_pq_topk": q_sim_pq_topk,
-    "sim_pq_recall": q_sim_pq_recall,
-    "sim_ivfpq_topk": q_sim_ivfpq_topk,
-    "sim_ivfpq_rerank_curve": q_sim_ivfpq_rerank_curve,
-    "sim_pq_distortion": q_sim_pq_distortion,
-}
-
-ORACLES = {
-    "sim_pq_topk": _sql_sim_pq_topk(),
-    "sim_pq_recall": _sql_sim_pq_recall(),
-    "sim_ivfpq_topk": _sql_sim_ivfpq_topk(),
-    "sim_ivfpq_rerank_curve": _sql_sim_ivfpq_rerank_curve(),
-    "sim_pq_distortion": _sql_sim_pq_distortion(),
+    q_sim_pq_topk: _sql_sim_pq_topk(),
+    q_sim_pq_recall: _sql_sim_pq_recall(),
+    q_sim_ivfpq_topk: _sql_sim_ivfpq_topk(),
+    q_sim_ivfpq_rerank_curve: _sql_sim_ivfpq_rerank_curve(),
+    q_sim_pq_distortion: _sql_sim_pq_distortion(),
 }

@@ -2,18 +2,11 @@
 
 from __future__ import annotations
 
-from collections import OrderedDict
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from pipe_s_spark.functions import dedup as D
-from pipe_s_spark.functions import exact as E
-from pipe_s_spark.functions import shared as SH
-from pipe_s_spark.functions import similarity as S
 from pipe_s_spark.functions import text as X
-from pipe_s_spark.functions.dedup import LSH_BAND_CAP
 from pipe_s_spark.sources import load_table
 
 from pipe_s_spark.queries_llm_shared import (
@@ -468,25 +461,13 @@ FROM arms CROSS JOIN tot
 
 
 QUERIES = {
-    "text_split_assign": q_text_split_assign,
-    "text_pack_assign": q_text_pack_assign,
-    "text_weighted_sample": q_text_weighted_sample,
-    "text_stratified_sample": q_text_stratified_sample,
-    "text_chunk_windows": q_text_chunk_windows,
-    "text_mix_sample": q_text_mix_sample,
-    "text_global_shuffle": q_text_global_shuffle,
-    "text_chunk_dedup": q_text_chunk_dedup,
-    "text_mix_weights": q_text_mix_weights,
-}
-
-ORACLES = {
-    "text_split_assign": SQL_TEXT_SPLIT,
-    "text_pack_assign": SQL_TEXT_PACK,
-    "text_weighted_sample": SQL_TEXT_WEIGHTED_SAMPLE,
-    "text_stratified_sample": SQL_TEXT_STRATIFIED_SAMPLE,
-    "text_chunk_windows": SQL_TEXT_CHUNKS,
-    "text_mix_sample": SQL_TEXT_MIX_SAMPLE,
-    "text_global_shuffle": SQL_TEXT_GLOBAL_SHUFFLE,
-    "text_chunk_dedup": SQL_TEXT_CHUNK_DEDUP,
-    "text_mix_weights": SQL_TEXT_MIX_WEIGHTS,
+    q_text_split_assign: SQL_TEXT_SPLIT,
+    q_text_pack_assign: SQL_TEXT_PACK,
+    q_text_weighted_sample: SQL_TEXT_WEIGHTED_SAMPLE,
+    q_text_stratified_sample: SQL_TEXT_STRATIFIED_SAMPLE,
+    q_text_chunk_windows: SQL_TEXT_CHUNKS,
+    q_text_mix_sample: SQL_TEXT_MIX_SAMPLE,
+    q_text_global_shuffle: SQL_TEXT_GLOBAL_SHUFFLE,
+    q_text_chunk_dedup: SQL_TEXT_CHUNK_DEDUP,
+    q_text_mix_weights: SQL_TEXT_MIX_WEIGHTS,
 }

@@ -7,17 +7,13 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from pipe_s_spark.functions import dedup as D
-from pipe_s_spark.functions import exact as E
 from pipe_s_spark.functions import shared as SH
 from pipe_s_spark.functions import similarity as S
-from pipe_s_spark.functions import text as X
-from pipe_s_spark.functions.dedup import LSH_BAND_CAP
 from pipe_s_spark.sources import load_table
 
 from pipe_s_spark.queries_llm_shared import (
     SIM_BUCKET_CAP,
     SQ8_CAND_K,
-    _label_centroids_cached,
     _semantic_pairs_cached,
 )
 
@@ -2011,59 +2007,30 @@ FROM (
 
 
 QUERIES = {
-    "sim_ivf_kmeans": q_sim_ivf_kmeans,
-    "sim_kmeans_cells": q_sim_kmeans_cells,
-    "sim_cell_pairs": q_sim_cell_pairs,
-    "sim_ivf_trained": q_sim_ivf_trained,
-    "sim_cosine_topk": q_sim_cosine_topk,
-    "sim_threshold_pairs": q_sim_threshold_pairs,
-    "sim_lsh_buckets": q_sim_lsh_buckets,
-    "sim_lsh_buckets_auto": q_sim_lsh_buckets_auto,
-    "sim_ivf_topk": q_sim_ivf_topk,
-    "sim_knn_graph": q_sim_knn_graph,
-    "sim_knn_graph_lsh": q_sim_knn_graph_lsh,
-    "sim_graph_recall": q_sim_graph_recall,
-    "sim_triplets_blocked": q_sim_triplets_blocked,
-    "sim_centroid_confusion": q_sim_centroid_confusion,
-    "sim_pair_label_agreement": q_sim_pair_label_agreement,
-    "sim_hard_negatives": q_sim_hard_negatives,
-    "sim_triplets": q_sim_triplets,
-    "sim_domain_drift": q_sim_domain_drift,
-    "sim_embedding_profile": q_sim_embedding_profile,
-    "sim_dimension_stats": q_sim_dimension_stats,
-    "sim_lsh_recall": q_sim_lsh_recall,
-    "sim_ivf_recall": q_sim_ivf_recall,
-    "sim_ivf_nprobe_curve": q_sim_ivf_nprobe_curve,
-    "sim_sq8_recall": q_sim_sq8_recall,
-    "sim_sq8_topk": q_sim_sq8_topk,
-    "sim_pair_histogram": q_sim_pair_histogram,
-}
-
-ORACLES = {
-    "sim_ivf_kmeans": _sql_sim_ivf_kmeans(),
-    "sim_kmeans_cells": _sql_sim_kmeans_cells(),
-    "sim_cell_pairs": _sql_sim_cell_pairs(),
-    "sim_ivf_trained": _sql_sim_ivf_trained(),
-    "sim_cosine_topk": SQL_SIM_TOPK,
-    "sim_threshold_pairs": SQL_SIM_THRESHOLD,
-    "sim_lsh_buckets": SQL_SIM_LSH,
-    "sim_lsh_buckets_auto": _sql_sim_lsh_buckets_auto(),
-    "sim_ivf_topk": SQL_SIM_IVF,
-    "sim_knn_graph": SQL_SIM_KNN,
-    "sim_knn_graph_lsh": _sql_sim_knn_graph_lsh(),
-    "sim_graph_recall": _sql_sim_graph_recall(),
-    "sim_triplets_blocked": _sql_sim_triplets_blocked(),
-    "sim_centroid_confusion": _sql_sim_centroid_confusion(),
-    "sim_pair_label_agreement": _sql_sim_pair_label_agreement(),
-    "sim_hard_negatives": _sql_sim_hard_negatives(),
-    "sim_triplets": _sql_sim_triplets(),
-    "sim_domain_drift": SQL_SIM_DOMAIN_DRIFT,
-    "sim_embedding_profile": SQL_SIM_EMBEDDING_PROFILE,
-    "sim_dimension_stats": SQL_SIM_DIMENSION_STATS,
-    "sim_lsh_recall": SQL_SIM_LSH_RECALL,
-    "sim_ivf_recall": SQL_SIM_IVF_RECALL,
-    "sim_ivf_nprobe_curve": _sql_sim_ivf_nprobe_curve(),
-    "sim_sq8_recall": SQL_SIM_SQ8_RECALL,
-    "sim_sq8_topk": SQL_SIM_SQ8_TOPK,
-    "sim_pair_histogram": _sql_sim_pair_histogram(),
+    q_sim_ivf_kmeans: _sql_sim_ivf_kmeans(),
+    q_sim_kmeans_cells: _sql_sim_kmeans_cells(),
+    q_sim_cell_pairs: _sql_sim_cell_pairs(),
+    q_sim_ivf_trained: _sql_sim_ivf_trained(),
+    q_sim_cosine_topk: SQL_SIM_TOPK,
+    q_sim_threshold_pairs: SQL_SIM_THRESHOLD,
+    q_sim_lsh_buckets: SQL_SIM_LSH,
+    q_sim_lsh_buckets_auto: _sql_sim_lsh_buckets_auto(),
+    q_sim_ivf_topk: SQL_SIM_IVF,
+    q_sim_knn_graph: SQL_SIM_KNN,
+    q_sim_knn_graph_lsh: _sql_sim_knn_graph_lsh(),
+    q_sim_graph_recall: _sql_sim_graph_recall(),
+    q_sim_triplets_blocked: _sql_sim_triplets_blocked(),
+    q_sim_centroid_confusion: _sql_sim_centroid_confusion(),
+    q_sim_pair_label_agreement: _sql_sim_pair_label_agreement(),
+    q_sim_hard_negatives: _sql_sim_hard_negatives(),
+    q_sim_triplets: _sql_sim_triplets(),
+    q_sim_domain_drift: SQL_SIM_DOMAIN_DRIFT,
+    q_sim_embedding_profile: SQL_SIM_EMBEDDING_PROFILE,
+    q_sim_dimension_stats: SQL_SIM_DIMENSION_STATS,
+    q_sim_lsh_recall: SQL_SIM_LSH_RECALL,
+    q_sim_ivf_recall: SQL_SIM_IVF_RECALL,
+    q_sim_ivf_nprobe_curve: _sql_sim_ivf_nprobe_curve(),
+    q_sim_sq8_recall: SQL_SIM_SQ8_RECALL,
+    q_sim_sq8_topk: SQL_SIM_SQ8_TOPK,
+    q_sim_pair_histogram: _sql_sim_pair_histogram(),
 }

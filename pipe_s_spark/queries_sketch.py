@@ -2,18 +2,10 @@
 
 from __future__ import annotations
 
-from collections import OrderedDict
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from pipe_s_spark.functions import dedup as D
-from pipe_s_spark.functions import exact as E
-from pipe_s_spark.functions import shared as SH
-from pipe_s_spark.functions import similarity as S
-from pipe_s_spark.functions import text as X
-from pipe_s_spark.functions.dedup import LSH_BAND_CAP
 from pipe_s_spark.sources import load_table
 
 from pipe_s_spark.queries_llm_shared import (
@@ -406,21 +398,11 @@ FROM h2 GROUP BY o_orderstatus
 
 
 QUERIES = {
-    "sketch_kmv_distinct": q_sketch_kmv_distinct,
-    "sketch_countmin": q_sketch_countmin,
-    "sketch_bloom": q_sketch_bloom,
-    "sketch_histogram_quantiles": q_sketch_histogram_quantiles,
-    "sketch_hll_distinct": q_sketch_hll_distinct,
-    "sketch_kmv_setops": q_sketch_kmv_setops,
-    "sketch_histogram_merge": q_sketch_histogram_merge,
-}
-
-ORACLES = {
-    "sketch_kmv_distinct": _sql_sketch_kmv(),
-    "sketch_countmin": _sql_sketch_countmin(),
-    "sketch_bloom": _sql_sketch_bloom(),
-    "sketch_histogram_quantiles": _sql_sketch_histogram(),
-    "sketch_hll_distinct": _sql_sketch_hll(),
-    "sketch_kmv_setops": _sql_sketch_kmv_setops(),
-    "sketch_histogram_merge": SQL_SKETCH_HISTOGRAM_MERGE,
+    q_sketch_kmv_distinct: _sql_sketch_kmv(),
+    q_sketch_countmin: _sql_sketch_countmin(),
+    q_sketch_bloom: _sql_sketch_bloom(),
+    q_sketch_histogram_quantiles: _sql_sketch_histogram(),
+    q_sketch_hll_distinct: _sql_sketch_hll(),
+    q_sketch_kmv_setops: _sql_sketch_kmv_setops(),
+    q_sketch_histogram_merge: SQL_SKETCH_HISTOGRAM_MERGE,
 }

@@ -2,8 +2,6 @@
 
 from __future__ import annotations
 
-from collections import OrderedDict
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -11,15 +9,11 @@ from pyspark.sql.window import Window
 from pipe_s_spark.functions import dedup as D
 from pipe_s_spark.functions import exact as E
 from pipe_s_spark.functions import shared as SH
-from pipe_s_spark.functions import similarity as S
 from pipe_s_spark.functions import text as X
-from pipe_s_spark.functions.dedup import LSH_BAND_CAP
 from pipe_s_spark.sources import load_table
 
 from pipe_s_spark.queries_sampling import SQL_TEXT_CHUNKS, q_text_chunk_dedup
 from pipe_s_spark.queries_llm_shared import (
-    CHUNK_LEN,
-    CHUNK_STRIDE,
     CLUSTER_EDGE_MIN,
     DUP_NGRAM_K,
     ENSEMBLE_MIN_STOPWORD_X1M,
@@ -29,23 +23,15 @@ from pipe_s_spark.queries_llm_shared import (
     HH_K,
     INVINDEX_POSTING_CAP,
     KN_DISCOUNT,
-    MIX_TARGET_X1M,
-    PACK_SHARDS,
     PIPELINE_CAP,
     PMI_MIN_COUNT,
     PMI_TOP_K,
-    SHUFFLE_DOCS_PER_FILE,
-    SHUFFLE_SALT,
     SQL_SHINGLES,
     SQL_SHINGLES5,
     SQL_SHINGLES8,
-    STRATUM_SAMPLE_K,
     TOKS_SQL,
     VOCAB_COVERAGE_KS,
-    WEIGHTED_SAMPLE_K,
     _MINHASH_SIMS_CTES,
-    _MIX_SPEC_SQL,
-    _doc_shard,
     _minhash_pairs_cached,
     _vocab_tf,
     q_dedup_clusters,
@@ -1560,69 +1546,35 @@ GROUP BY doc_id
 
 
 QUERIES = {
-    "text_stats": q_text_stats,
-    "text_surprisal": q_text_surprisal,
-    "text_lang_summary": q_text_lang_summary,
-    "text_fingerprint": q_text_fingerprint,
-    "text_quality_filter": q_text_quality_filter,
-    "text_quality_calibrated": q_text_quality_calibrated,
-    "text_length_histogram": q_text_length_histogram,
-    "text_top_trigrams": q_text_top_trigrams,
-    "corpus_snapshot_diff": q_corpus_snapshot_diff,
-    "text_heavy_tokens": q_text_heavy_tokens,
-    "text_contamination": q_text_contamination,
-    "text_dup_ngrams": q_text_dup_ngrams,
-    "text_langid_eval": q_text_langid_eval,
-    "text_curation_pipeline": q_text_curation_pipeline,
-    "text_curation_funnel": q_text_curation_funnel,
-    "text_ngram_novelty": q_text_ngram_novelty,
-    "text_repetition": q_text_repetition,
-    "text_pii_scrub": q_text_pii_scrub,
-    "text_tfidf_topterms": q_text_tfidf_topterms,
-    "text_domain_divergence": q_text_domain_divergence,
-    "text_inverted_index": q_text_inverted_index,
-    "text_domain_stats": q_text_domain_stats,
-    "text_quality_dup_link": q_text_quality_dup_link,
-    "text_kn_bigram_score": q_text_kn_bigram_score,
-    "text_collocations": q_text_collocations,
-    "text_quality_ensemble": q_text_quality_ensemble,
-    "text_hapax_ratio": q_text_hapax_ratio,
-    "text_corpus_health": q_text_corpus_health,
-    "text_source_diversity": q_text_source_diversity,
-    "text_vocab_coverage": q_text_vocab_coverage,
-    "text_bpe_first_merges": q_text_bpe_first_merges,
-}
-
-ORACLES = {
-    "text_stats": SQL_TEXT_STATS,
-    "text_surprisal": SQL_TEXT_SURPRISAL,
-    "text_lang_summary": SQL_TEXT_LANG_SUMMARY,
-    "text_fingerprint": SQL_TEXT_FINGERPRINT,
-    "text_quality_filter": SQL_TEXT_QUALITY_FILTER,
-    "text_quality_calibrated": SQL_TEXT_QUALITY_CALIBRATED,
-    "text_length_histogram": SQL_TEXT_LENGTH_HIST,
-    "text_top_trigrams": SQL_TEXT_TOP_TRIGRAMS,
-    "corpus_snapshot_diff": SQL_CORPUS_SNAPSHOT_DIFF,
-    "text_heavy_tokens": SQL_TEXT_HEAVY_TOKENS,
-    "text_contamination": SQL_TEXT_CONTAMINATION,
-    "text_dup_ngrams": SQL_TEXT_DUP_NGRAMS,
-    "text_langid_eval": SQL_TEXT_LANGID_EVAL,
-    "text_curation_pipeline": SQL_TEXT_CURATION_PIPELINE,
-    "text_curation_funnel": SQL_TEXT_CURATION_FUNNEL,
-    "text_ngram_novelty": SQL_TEXT_NGRAM_NOVELTY,
-    "text_repetition": SQL_TEXT_REPETITION,
-    "text_pii_scrub": SQL_TEXT_PII_SCRUB,
-    "text_tfidf_topterms": SQL_TEXT_TFIDF,
-    "text_domain_divergence": SQL_TEXT_DOMAIN_DIVERGENCE,
-    "text_inverted_index": SQL_TEXT_INVINDEX,
-    "text_domain_stats": SQL_TEXT_DOMAIN_STATS,
-    "text_quality_dup_link": _sql_text_quality_dup_link(),
-    "text_kn_bigram_score": _sql_text_kn_bigram_score(),
-    "text_collocations": SQL_TEXT_COLLOCATIONS,
-    "text_quality_ensemble": _sql_text_quality_ensemble(),
-    "text_hapax_ratio": SQL_TEXT_HAPAX_RATIO,
-    "text_corpus_health": SQL_TEXT_CORPUS_HEALTH,
-    "text_source_diversity": SQL_TEXT_SOURCE_DIVERSITY,
-    "text_vocab_coverage": _sql_text_vocab_coverage(),
-    "text_bpe_first_merges": SQL_TEXT_BPE_FIRST_MERGES,
+    q_text_stats: SQL_TEXT_STATS,
+    q_text_surprisal: SQL_TEXT_SURPRISAL,
+    q_text_lang_summary: SQL_TEXT_LANG_SUMMARY,
+    q_text_fingerprint: SQL_TEXT_FINGERPRINT,
+    q_text_quality_filter: SQL_TEXT_QUALITY_FILTER,
+    q_text_quality_calibrated: SQL_TEXT_QUALITY_CALIBRATED,
+    q_text_length_histogram: SQL_TEXT_LENGTH_HIST,
+    q_text_top_trigrams: SQL_TEXT_TOP_TRIGRAMS,
+    q_corpus_snapshot_diff: SQL_CORPUS_SNAPSHOT_DIFF,
+    q_text_heavy_tokens: SQL_TEXT_HEAVY_TOKENS,
+    q_text_contamination: SQL_TEXT_CONTAMINATION,
+    q_text_dup_ngrams: SQL_TEXT_DUP_NGRAMS,
+    q_text_langid_eval: SQL_TEXT_LANGID_EVAL,
+    q_text_curation_pipeline: SQL_TEXT_CURATION_PIPELINE,
+    q_text_curation_funnel: SQL_TEXT_CURATION_FUNNEL,
+    q_text_ngram_novelty: SQL_TEXT_NGRAM_NOVELTY,
+    q_text_repetition: SQL_TEXT_REPETITION,
+    q_text_pii_scrub: SQL_TEXT_PII_SCRUB,
+    q_text_tfidf_topterms: SQL_TEXT_TFIDF,
+    q_text_domain_divergence: SQL_TEXT_DOMAIN_DIVERGENCE,
+    q_text_inverted_index: SQL_TEXT_INVINDEX,
+    q_text_domain_stats: SQL_TEXT_DOMAIN_STATS,
+    q_text_quality_dup_link: _sql_text_quality_dup_link(),
+    q_text_kn_bigram_score: _sql_text_kn_bigram_score(),
+    q_text_collocations: SQL_TEXT_COLLOCATIONS,
+    q_text_quality_ensemble: _sql_text_quality_ensemble(),
+    q_text_hapax_ratio: SQL_TEXT_HAPAX_RATIO,
+    q_text_corpus_health: SQL_TEXT_CORPUS_HEALTH,
+    q_text_source_diversity: SQL_TEXT_SOURCE_DIVERSITY,
+    q_text_vocab_coverage: _sql_text_vocab_coverage(),
+    q_text_bpe_first_merges: SQL_TEXT_BPE_FIRST_MERGES,
 }

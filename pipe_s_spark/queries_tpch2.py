@@ -324,27 +324,14 @@ GROUP BY c_nationkey
 
 
 QUERIES = {
-    "q4_order_priority": q_q4_order_priority,
-    "q7_nation_volume": q_q7_nation_volume,
-    "q8_market_share": q_q8_market_share,
-    "q13_order_distribution": q_q13_order_distribution,
-    "q14_promo_ratio": q_q14_promo_ratio,
-    "parts_without_sales": q_parts_without_sales,
-    "q17_small_quantity": q_q17_small_quantity,
-    "q18_large_orders": q_q18_large_orders,
-    "q19_or_predicates": q_q19_or_predicates,
-    "q22_idle_customers": q_q22_idle_customers,
-}
-
-ORACLES = {
-    "q4_order_priority": SQL_Q4,
-    "q7_nation_volume": SQL_Q7,
-    "q8_market_share": SQL_Q8,
-    "q13_order_distribution": SQL_Q13,
-    "q14_promo_ratio": SQL_Q14,
-    "parts_without_sales": SQL_PARTS_WITHOUT_SALES,
-    "q17_small_quantity": SQL_Q17,
-    "q18_large_orders": SQL_Q18,
-    "q19_or_predicates": SQL_Q19,
-    "q22_idle_customers": SQL_Q22,
+    q_q4_order_priority: SQL_Q4,
+    q_q7_nation_volume: SQL_Q7,
+    q_q8_market_share: SQL_Q8,
+    q_q13_order_distribution: SQL_Q13,
+    q_q14_promo_ratio: SQL_Q14,
+    q_parts_without_sales: SQL_PARTS_WITHOUT_SALES,
+    q_q17_small_quantity: SQL_Q17,
+    q_q18_large_orders: SQL_Q18,
+    q_q19_or_predicates: SQL_Q19,
+    q_q22_idle_customers: SQL_Q22,
 }

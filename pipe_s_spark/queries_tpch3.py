@@ -406,23 +406,12 @@ LIMIT 100
 
 
 QUERIES = {
-    "q2_min_cost_supplier": q_q2_min_cost_supplier,
-    "q9_product_profit": q_q9_product_profit,
-    "q11_important_parts": q_q11_important_parts,
-    "q12_priority_by_flag": q_q12_priority_by_flag,
-    "q15_top_supplier": q_q15_top_supplier,
-    "q16_part_supplier_counts": q_q16_part_supplier_counts,
-    "q20_significant_suppliers": q_q20_significant_suppliers,
-    "q21_waiting_suppliers": q_q21_waiting_suppliers,
-}
-
-ORACLES = {
-    "q2_min_cost_supplier": SQL_Q2,
-    "q9_product_profit": SQL_Q9,
-    "q11_important_parts": SQL_Q11,
-    "q12_priority_by_flag": SQL_Q12,
-    "q15_top_supplier": SQL_Q15,
-    "q16_part_supplier_counts": SQL_Q16,
-    "q20_significant_suppliers": SQL_Q20,
-    "q21_waiting_suppliers": SQL_Q21,
+    q_q2_min_cost_supplier: SQL_Q2,
+    q_q9_product_profit: SQL_Q9,
+    q_q11_important_parts: SQL_Q11,
+    q_q12_priority_by_flag: SQL_Q12,
+    q_q15_top_supplier: SQL_Q15,
+    q_q16_part_supplier_counts: SQL_Q16,
+    q_q20_significant_suppliers: SQL_Q20,
+    q_q21_waiting_suppliers: SQL_Q21,
 }

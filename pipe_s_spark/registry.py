@@ -2,6 +2,11 @@
 driver contract in ``__spark_entry__.py`` (which delegates here), and
 what the JSON runner's "query" input resolves names against.
 
+Each ``queries_*`` module lists its queries once, in one table
+``QUERIES = {q_fn: oracle_sql}``: a query cannot be registered without
+its DuckDB oracle. A query's name is its function's name without the
+``q_`` prefix.
+
 Parity note: this is the analytics-surface extension of the reference's
 component registry idea (componentbuilder.go:170-234) — one flat
 namespace of runnable, named computations.
@@ -9,78 +14,32 @@ namespace of runnable, named computations.
 
 from __future__ import annotations
 
-from collections.abc import Callable
+import importlib
+from collections.abc import Callable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
+#: the query modules, ``pipe_s_spark.queries_<suffix>``, in registry order
+_MODULES = (
+    "cdc", "events", "analytics", "text", "sampling", "dedup", "sim", "pq",
+    "sketch", "multimodal", "advanced", "tpch2", "tpch3",
+)
+
+
+def _registered() -> Iterator[tuple[str, QueryFn, str]]:
+    for suffix in _MODULES:
+        table = importlib.import_module(f"pipe_s_spark.queries_{suffix}").QUERIES
+        for fn, sql in table.items():
+            yield fn.__name__.removeprefix("q_"), fn, sql
+
 
 def all_queries() -> dict[str, QueryFn]:
     """Every registered query: name -> (spark, sf_dir) -> DataFrame."""
-    from pipe_s_spark import (
-        queries_advanced,
-        queries_analytics,
-        queries_cdc,
-        queries_dedup,
-        queries_events,
-        queries_multimodal,
-        queries_pq,
-        queries_sampling,
-        queries_sim,
-        queries_sketch,
-        queries_text,
-        queries_tpch2,
-        queries_tpch3,
-    )
-
-    out: dict[str, QueryFn] = {}
-    out.update(queries_cdc.QUERIES)
-    out.update(queries_events.QUERIES)
-    out.update(queries_analytics.QUERIES)
-    out.update(queries_text.QUERIES)
-    out.update(queries_sampling.QUERIES)
-    out.update(queries_dedup.QUERIES)
-    out.update(queries_sim.QUERIES)
-    out.update(queries_pq.QUERIES)
-    out.update(queries_sketch.QUERIES)
-    out.update(queries_multimodal.QUERIES)
-    out.update(queries_advanced.QUERIES)
-    out.update(queries_tpch2.QUERIES)
-    out.update(queries_tpch3.QUERIES)
-    return out
+    return {name: fn for name, fn, _ in _registered()}
 
 
 def all_oracles() -> dict[str, str]:
     """Every DuckDB oracle SQL string, keyed like :func:`all_queries`."""
-    from pipe_s_spark import (
-        queries_advanced,
-        queries_analytics,
-        queries_cdc,
-        queries_dedup,
-        queries_events,
-        queries_multimodal,
-        queries_pq,
-        queries_sampling,
-        queries_sim,
-        queries_sketch,
-        queries_text,
-        queries_tpch2,
-        queries_tpch3,
-    )
-
-    out: dict[str, str] = {}
-    out.update(queries_cdc.ORACLES)
-    out.update(queries_events.ORACLES)
-    out.update(queries_analytics.ORACLES)
-    out.update(queries_text.ORACLES)
-    out.update(queries_sampling.ORACLES)
-    out.update(queries_dedup.ORACLES)
-    out.update(queries_sim.ORACLES)
-    out.update(queries_pq.ORACLES)
-    out.update(queries_sketch.ORACLES)
-    out.update(queries_multimodal.ORACLES)
-    out.update(queries_advanced.ORACLES)
-    out.update(queries_tpch2.ORACLES)
-    out.update(queries_tpch3.ORACLES)
-    return out
+    return {name: sql for name, _, sql in _registered()}

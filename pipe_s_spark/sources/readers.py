@@ -52,8 +52,7 @@ TABLES = (
 #: full), which is exactly the metadata reuse ``spark.table()`` gets
 #: from a catalog in production. Keyed by (applicationId, path, file
 #: mtime+size) so a different session, a rewritten fixture file, or a
-#: regenerated testdata dir all take the fresh-read path; set
-#: PIPE_S_NO_TABLE_CACHE=1 to disable outright.
+#: regenerated testdata dir all take the fresh-read path.
 _TABLE_CACHE: dict[tuple, DataFrame] = {}
 _TABLE_CACHE_MAX = 64
 
@@ -88,8 +87,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.ansi.enabled", "false")
     path = os.path.join(sf_dir, f"{name}.parquet")
-    if os.environ.get("PIPE_S_NO_TABLE_CACHE") == "1":
-        return _read_table(spark, path, name)
     key = (spark.sparkContext.applicationId, path, *_file_stamp(path))
     df = _TABLE_CACHE.get(key)
     if df is None:

@@ -36,11 +36,9 @@ def test_correctness_artifact_rows_are_green():
     with open(ARTIFACT) as f:
         data = json.load(f)
     data.pop("_meta")
-    def green(row: dict) -> bool:
-        if row["hash_match"] is None:
-            # rows-only check (no oracle registered): green = it ran
-            return row["err"] is None and row["spark_rows"] is not None
-        return bool(row["rows_match"] and row["schema_match"] and row["hash_match"])
-
-    bad = {name for name, row in data.items() if not green(row)}
+    bad = {
+        name
+        for name, row in data.items()
+        if not (row["rows_match"] and row["schema_match"] and row["hash_match"])
+    }
     assert not bad, f"non-green artifact rows: {sorted(bad)}"

@@ -9,12 +9,18 @@ word in a string of an ``examples/*.json`` config. Whatever is left
 is reached by tests alone, and must be on ``ALLOWED`` with a reason.
 The scan is by bare name, so a def that shares its name with
 something reached passes; it never flags live code.
+
+The same walk checks two smaller things: every name a library module
+imports at top level is used there (``REEXPORTS`` lists the exceptions),
+and every ``q_*`` query def sits in exactly one ``QUERIES`` table, so
+the registry loses none to a clash of names.
 """
 
 from __future__ import annotations
 
 import ast
 import collections
+import importlib
 import pathlib
 import re
 
@@ -45,6 +51,13 @@ ALLOWED = {
     "functions/similarity.py::lsh_candidates_multi": (
         "reference that the kNN graph's grouped fast path must match "
         "(test_grouped_knn_candidates_match_all_pairs_flow)"
+    ),
+}
+
+#: top-level imports a module keeps for other code to reach through it
+REEXPORTS = {
+    "streaming/merge_apply.py::compact_changelog": (
+        "perfbench/worker.py wraps merge_apply.compact_changelog by name"
     ),
 }
 
@@ -109,3 +122,52 @@ def test_only_allowed_defs_are_reached_by_tests_alone():
     assert not ALLOWED.keys() - unreached, (
         f"ALLOWED entries that are now reached or gone: {sorted(ALLOWED.keys() - unreached)}"
     )
+
+
+def _unused_imports() -> set[str]:
+    out: set[str] = set()
+    for f in sorted(LIB.rglob("*.py")):
+        if f.name == "__init__.py":
+            continue
+        tree = ast.parse(f.read_text())
+        used = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+        for node in tree.body:
+            if isinstance(node, ast.ImportFrom) and node.module == "__future__":
+                continue
+            if isinstance(node, (ast.Import, ast.ImportFrom)):
+                for a in node.names:
+                    name = a.asname or a.name.split(".")[0]
+                    if name not in used:
+                        out.add(f"{f.relative_to(LIB).as_posix()}::{name}")
+    return out
+
+
+def test_every_top_level_import_is_used():
+    unused = _unused_imports()
+    assert unused == REEXPORTS.keys(), (
+        f"unused imports: {sorted(unused - REEXPORTS.keys())}; "
+        f"REEXPORTS entries now used or gone: {sorted(REEXPORTS.keys() - unused)}"
+    )
+
+
+def test_every_query_def_is_registered_once():
+    from pipe_s_spark.registry import all_queries
+
+    files = sorted(LIB.glob("queries_*.py"))
+    modules = [importlib.import_module(f"pipe_s_spark.{f.stem}") for f in files]
+    tables = [m.QUERIES for m in modules if hasattr(m, "QUERIES")]
+    registered = collections.Counter(
+        f"{fn.__module__}.{fn.__name__}" for table in tables for fn in table
+    )
+    defined = {
+        f"pipe_s_spark.{f.stem}.{node.name}"
+        for f in files
+        for node in ast.parse(f.read_text()).body
+        if isinstance(node, ast.FunctionDef) and node.name.startswith("q_")
+    }
+    assert set(registered) == defined, (
+        f"unregistered: {sorted(defined - set(registered))}; "
+        f"registered but defined elsewhere: {sorted(set(registered) - defined)}"
+    )
+    assert max(registered.values()) == 1, [k for k, v in registered.items() if v > 1]
+    assert len(all_queries()) == sum(map(len, tables)) == 215

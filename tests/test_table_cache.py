@@ -3,18 +3,15 @@
 The cache must (a) return the same immutable handle for repeated loads
 of an unchanged file in one session — skipping the per-call parquet
 schema-inference job, (b) take a fresh read when the underlying file
-changes (fixture rewrites, regenerated testdata), (c) be disableable
-via PIPE_S_NO_TABLE_CACHE=1, and (d) never change what a query
-computes — the handle is an unresolved plan; every action still scans
-the parquet input.
+changes (fixture rewrites, regenerated testdata), and (c) never change
+what a query computes — the handle is an unresolved plan; every action
+still scans the parquet input.
 """
 
 from __future__ import annotations
 
 import os
 import shutil
-
-import pytest
 
 from pipe_s_spark.sources import load_table
 from pipe_s_spark.sources import readers as R
@@ -53,14 +50,6 @@ def test_rewritten_file_takes_fresh_read(spark, tmp_path):
     b = load_table(spark, dst_dir, "nation")
     assert b is not a
     assert b.count() == 3 != n_a
-
-
-def test_env_disable(spark, monkeypatch):
-    monkeypatch.setenv("PIPE_S_NO_TABLE_CACHE", "1")
-    a = load_table(spark, SF_SMOKE, "region")
-    b = load_table(spark, SF_SMOKE, "region")
-    assert a is not b
-    assert a.count() == b.count()
 
 
 def test_events_ts_normalization_survives_cache(spark):

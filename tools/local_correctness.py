@@ -83,29 +83,17 @@ def main() -> None:
         t0 = time.time()
         try:
             df = queries[name](spark, sf_dir)
-            if name in oracles:
-                n = df.count()
-                compare(df, con, oracles[name])
-                results[name] = "pass"
-                artifact[name] = {
-                    "rows_match": True,
-                    "schema_match": True,
-                    "hash_match": True,
-                    "spark_rows": n,
-                    "oracle_rows": n,
-                    "err": None,
-                }
-            else:
-                n = df.count()
-                results[name] = f"rows-only ({n})"
-                artifact[name] = {
-                    "rows_match": None,
-                    "schema_match": None,
-                    "hash_match": None,
-                    "spark_rows": n,
-                    "oracle_rows": None,
-                    "err": None,
-                }
+            n = df.count()
+            compare(df, con, oracles[name])
+            results[name] = "pass"
+            artifact[name] = {
+                "rows_match": True,
+                "schema_match": True,
+                "hash_match": True,
+                "spark_rows": n,
+                "oracle_rows": n,
+                "err": None,
+            }
         except AssertionError as e:
             results[name] = f"MISMATCH: {e}"
             artifact[name] = _row_from_error(str(e), None)
@@ -120,14 +108,13 @@ def main() -> None:
                 "err": f"{type(e).__name__}: {str(e)[:300]}",
             }
         print(f"{name:32s} {time.time() - t0:6.2f}s  {results[name][:160]}", flush=True)
-    bad = {k: v for k, v in results.items() if v != "pass" and not v.startswith("rows-only")}
+    bad = {k: v for k, v in results.items() if v != "pass"}
     if not only:
         meta = {
             "_meta": {
                 "sf_dir": sf_dir,
                 "queries": len(artifact),
                 "pass": sum(1 for v in results.values() if v == "pass"),
-                "rows_only": sum(1 for v in results.values() if v.startswith("rows-only")),
                 "bad": len(bad),
                 "elapsed_sec": round(time.time() - t_start, 1),
             }
